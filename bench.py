@@ -24,17 +24,17 @@ runtime growth factor per query — sub-linear-in-pairs growth is the
 evidence that the LSH/inverted-index shapes (not quadratic ones) are on
 the data path. Skip with SPARK_GRAFT_NO_STRESS=1.
 
-Each query is materialized via a count-style action (no driver collect of
-payload rows). One warm-up pass of the flagship amortizes JVM startup;
-each query then runs twice and reports the best (whole-stage-codegen
-compilation of big join plans costs ~2x on first execution and is not a
-property of the plan).
+Every timing here and in tools/ goes through ``measure``: a count-style
+action (no driver collect of payload rows), best of two runs. One
+warm-up run of the first benched query amortizes JVM startup.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
+import subprocess
 import sys
 import time
 
@@ -147,20 +147,14 @@ HEADLINE_QUERIES = STRESS_QUERIES + (
 DETAIL_PATH = "/tmp/spark_graft_bench_full.json"
 
 
-def _load_baseline() -> dict[str, float]:
+def _load_baseline() -> tuple[dict[str, float], str]:
+    """(per-query anchor seconds, anchor sf) from bench_baseline.json."""
     try:
         with open(os.path.join(REPO, "bench_baseline.json")) as f:
-            return json.load(f)["queries"]
+            b = json.load(f)
+        return b["queries"], str(b.get("sf", "0.1"))
     except Exception:
-        return {}
-
-
-def _load_baseline_sf() -> str:
-    try:
-        with open(os.path.join(REPO, "bench_baseline.json")) as f:
-            return str(json.load(f).get("sf", "0.1"))
-    except Exception:
-        return "0.1"
+        return {}, "0.1"
 
 
 def _build_stress_dir(spark, sf_dir: str, factor: int) -> str:
@@ -181,11 +175,8 @@ def _build_stress_dir(spark, sf_dir: str, factor: int) -> str:
     # events) so stale replicated parquet doesn't accumulate under /tmp —
     # unconditionally, not only when the current layout still needs
     # building (r7 + r8 ADVICE; tests/test_bench_reclaim.py).
-    import shutil
-
     for old in (base, f"{base}_v2"):
-        if os.path.isdir(old):
-            shutil.rmtree(old, ignore_errors=True)
+        shutil.rmtree(old, ignore_errors=True)
     if not os.path.exists(marker):
         os.makedirs(stress, exist_ok=True)
         for table, id_col in (
@@ -213,88 +204,67 @@ def _build_stress_dir(spark, sf_dir: str, factor: int) -> str:
     return stress
 
 
-def _fresh_process_best(name: str, sf_dir: str, repeats: int = 2) -> float | None:
+def measure(spark, build, sf_dir: str, repeats: int = 2) -> tuple[float, int]:
+    """Best-of-``repeats`` seconds of ``build(spark, sf_dir).count()`` and
+    the last row count — the one timing path of this runner and tools/.
+    ``build`` is any ``(spark, sf_dir) -> DataFrame``, rebuilt inside every
+    timed repeat."""
+    # best-of-N: the first execution of a multi-join plan pays one-time
+    # whole-stage-codegen compilation (~2x on the 6-join TPC-H shapes),
+    # which is not a property of the plan
+    best, rows = float("inf"), 0
+    for _ in range(repeats):
+        t0 = time.perf_counter()
+        rows = build(spark, sf_dir).count()
+        best = min(best, time.perf_counter() - t0)
+    return best, rows
+
+
+def _fresh_process_best(name: str, sf_dir: str, repeats: int = 2) -> float:
     """Best-of-``repeats`` in a truly fresh PROCESS (cold JVM via
     tools/time_queries.py). r15 measurement-bug fix (documented in
-    OPTIMIZATION_r15.md): the recheck used to reuse the same JVM
-    (spark.stop() + getOrCreate), so a degraded JVM/machine could
-    CONFIRM false >2x breaches on untouched sub-second queries. Returns
-    None on any failure so the caller falls back to the in-process
-    session recheck (the conservative pre-r15 behavior)."""
-    import subprocess
-
+    OPTIMIZATION_r15.md): a recheck inside the same JVM let a degraded
+    JVM/machine CONFIRM false >2x breaches on untouched sub-second
+    queries. Raises on any failure (nonzero exit, timeout, unparsable
+    output)."""
     env = dict(
         os.environ, SPARK_GRAFT_SF_DIR=sf_dir, SPARK_GRAFT_REPEATS=str(repeats)
     )
-    try:
-        out = subprocess.run(
-            [sys.executable, os.path.join(REPO, "tools", "time_queries.py"), name],
-            env=env,
-            capture_output=True,
-            text=True,
-            timeout=600,
+    out = subprocess.run(
+        [sys.executable, os.path.join(REPO, "tools", "time_queries.py"), name],
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    if out.returncode != 0:
+        raise RuntimeError(
+            f"time_queries.py exited {out.returncode}: {out.stderr.strip()[-200:]}"
         )
-        if out.returncode != 0:
-            return None
-        return float(json.loads(out.stdout.strip().splitlines()[-1])[name])
-    except Exception:
-        return None
+    return float(json.loads(out.stdout.strip().splitlines()[-1])[name])
 
 
 def _confirm_regressions(
-    spark,
-    registry,
     candidates: list[str],
     baseline: dict[str, float],
     timings: dict[str, float],
     vs_baseline: dict[str, float],
     recheck: dict[str, dict],
-    sf_dir: str | None = None,
+    sf_dir: str = SF_DIR,
 ) -> list[str]:
-    """Fresh confirmation of would-be 2x gate breaches: only a breach
-    that REPRODUCES outside the warm session counts. Since r15 the
-    recheck runs in a fresh PROCESS (cold JVM) when a live session is
-    passed (``spark is not None``); on any subprocess failure it falls
-    back to the in-(re)started-session loop, which is also the path the
-    methodology tests drive directly. The fresh best-of-2 replaces the
-    in-context timing/ratio and both values are recorded in ``recheck``
-    for provenance; returns the confirmed subset. Tested in
-    tests/test_bench_reclaim.py."""
-    sf_dir = sf_dir or SF_DIR
+    """Fresh-process confirmation of would-be 2x gate breaches: only a
+    breach that REPRODUCES outside the warm session counts. The fresh
+    best-of-2 replaces the in-context timing/ratio and both values are
+    recorded in ``recheck`` for provenance; returns the confirmed subset.
+    Tested in tests/test_bench_reclaim.py."""
     confirmed = []
     for name in candidates:
-        if spark is not None:
-            fresh = _fresh_process_best(name, sf_dir)
-            if fresh is not None:
-                ratio = fresh / baseline[name]
-                recheck[name] = {
-                    "in_context_sec": timings[name],
-                    "fresh_sec": round(fresh, 3),
-                    "vs_baseline": round(ratio, 2),
-                    "fresh_process": True,
-                }
-                timings[name] = round(fresh, 3)
-                vs_baseline[name] = round(ratio, 2)
-                if ratio > 2.0:
-                    confirmed.append(name)
-                print(
-                    f"# recheck {name}: fresh-process {fresh:.3f}s vs anchor ratio"
-                    f" {ratio:.3f}"
-                    f" ({'CONFIRMED regression' if ratio > 2.0 else 'in-context noise'})",
-                    file=sys.stderr,
-                )
-                continue
-        # A recheck crash (transient Spark failure, OOM) must not sink the
-        # bench line (r10 ADVICE): keep the in-context breach as confirmed
-        # — the conservative reading — and record the error for triage.
         try:
-            best = None
-            for _ in range(2):
-                t0 = time.time()
-                registry[name].build(spark, sf_dir).count()
-                sec = time.time() - t0
-                best = sec if best is None else min(best, sec)
+            fresh = _fresh_process_best(name, sf_dir)
         except Exception as e:
+            # A recheck crash (transient Spark failure, OOM) must not sink
+            # the bench line (r10 ADVICE): keep the in-context breach as
+            # confirmed — the conservative reading — and record the error.
             recheck[name] = {
                 "in_context_sec": timings[name],
                 "error": f"{type(e).__name__}: {e}"[:300],
@@ -304,18 +274,19 @@ def _confirm_regressions(
             continue
         # gate on the UNROUNDED ratio (r10 ADVICE: 2.0049 must not pass a
         # 2.0 gate); round only the recorded artifact values
-        ratio = best / baseline[name]
+        ratio = fresh / baseline[name]
         recheck[name] = {
             "in_context_sec": timings[name],
-            "fresh_sec": round(best, 3),
+            "fresh_sec": round(fresh, 3),
             "vs_baseline": round(ratio, 2),
+            "fresh_process": True,
         }
-        timings[name] = round(best, 3)
+        timings[name] = round(fresh, 3)
         vs_baseline[name] = round(ratio, 2)
         if ratio > 2.0:
             confirmed.append(name)
         print(
-            f"# recheck {name}: fresh {best:.3f}s vs anchor ratio {ratio:.3f}"
+            f"# recheck {name}: fresh-process {fresh:.3f}s vs anchor ratio {ratio:.3f}"
             f" ({'CONFIRMED regression' if ratio > 2.0 else 'in-context noise'})",
             file=sys.stderr,
         )
@@ -333,24 +304,18 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     # Warm-up: JVM + codegen + parquet footer caches.
-    bench_queries[next(iter(bench_queries))].build(spark, SF_DIR).count()
+    measure(spark, bench_queries[next(iter(bench_queries))].build, SF_DIR, repeats=1)
 
-    # best-of-2 per query: the first execution of a multi-join plan pays
-    # one-time whole-stage-codegen compilation (measured ~2x on the 6-join
-    # TPC-H shapes); the gate targets steady-state plan cost, not the
-    # codegen lottery, so each query runs twice and keeps the minimum.
     timings: dict[str, float] = {}
     for name in sorted(bench_queries):
-        best, n = None, 0
-        for _ in range(2):
-            t0 = time.time()
-            n = bench_queries[name].build(spark, SF_DIR).count()
-            sec = time.time() - t0
-            best = sec if best is None else min(best, sec)
+        best, n = measure(spark, bench_queries[name].build, SF_DIR)
         timings[name] = round(best, 3)
         print(f"# {name}: {timings[name]:.3f}s rows={n}", file=sys.stderr)
+    # Neither the recheck subprocess nor the stress phase uses this
+    # session; an idle JVM beside them would only contend for memory.
+    spark.stop()
 
-    baseline = _load_baseline()
+    baseline, baseline_sf = _load_baseline()
     # gate on UNROUNDED ratios (r10 ADVICE: a true 2.0049 must not slip a
     # 2.0 gate via display rounding); vs_baseline keeps 2-decimal artifact
     # values for the committed JSON.
@@ -364,12 +329,12 @@ def main() -> None:
     # per-job overhead dominates sub-second queries and the ratio is
     # meaningless, so the 2x gate only binds when run-sf == anchor-sf.
     sf_str = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
-    gate_active = sf_str == str(_load_baseline_sf())
+    gate_active = sf_str == baseline_sf
     regressions = (
         sorted(n for n, r in ratios.items() if r > 2.0) if gate_active else []
     )
 
-    # Fresh-session confirmation of gate breaches: the ~190-query main
+    # Fresh-process confirmation of gate breaches: the ~190-query main
     # loop accumulates session state that can slow compute-heavy
     # queries 2-3x late in the run with NO plan change (same effect the
     # stress phase hit at ~100 queries — cluster_aware_split_leakage
@@ -377,15 +342,12 @@ def main() -> None:
     # fresh-session base inside the SAME runs was 4.6-4.9s, at anchor;
     # a forced System.gc() between queries does not cure it). The 2x
     # gate is about plan shape, so a breach only counts if a fresh
-    # session reproduces it; the recheck value replaces the in-context
+    # process reproduces it; the recheck value replaces the in-context
     # one and is recorded under "recheck" for provenance.
     recheck: dict[str, dict] = {}
     if regressions:
-        spark.stop()
-        spark = get_spark("bench-recheck")
-        spark.sparkContext.setLogLevel("ERROR")
         regressions = _confirm_regressions(
-            spark, registry, regressions, baseline, timings, vs_baseline, recheck
+            regressions, baseline, timings, vs_baseline, recheck
         )
 
     stress: dict = {}
@@ -400,46 +362,30 @@ def main() -> None:
             # 12-heavy-query prefix does NOT reproduce it — accumulated
             # session state, not the plan). Growth curves are evidence
             # about plan SHAPE, so both sides of each ratio are measured
-            # inside the same fresh session: base_sec at SF_DIR first,
-            # then the replicated runs.
-            spark.stop()
+            # inside the same fresh session. Best-of-2 like the main loop:
+            # the first stress execution pays cold codegen + cold
+            # stress-dir file cache, which previously made growth curves
+            # cold-vs-warm noise (a 30x point measuring FASTER than its
+            # 10x point).
             spark = get_spark("bench-stress")
             spark.sparkContext.setLogLevel("ERROR")
             stress_base: dict[str, float] = {}
 
-            def fresh_base(name: str) -> float:
+            def stress_run(name: str, factor: int) -> dict:
+                build = registry[name].build
+                sec, n = measure(spark, build, _build_stress_dir(spark, SF_DIR, factor))
+                sec = round(sec, 3)
                 if name not in stress_base:
-                    best = None
-                    for _ in range(2):
-                        t0 = time.time()
-                        registry[name].build(spark, SF_DIR).count()
-                        sec = time.time() - t0
-                        best = sec if best is None else min(best, sec)
-                    stress_base[name] = round(best, 3)
-                return stress_base[name]
-
-            # best-of-2 like the main loop: the first stress execution pays
-            # cold codegen + cold stress-dir file cache, which previously
-            # made growth curves cold-vs-warm noise (a 30x point measuring
-            # FASTER than its 10x point).
-            def stress_run(name: str, factor: int, vs_10x_key: str | None = None):
-                sdir = _build_stress_dir(spark, SF_DIR, factor)
-                best, n = None, 0
-                for _ in range(2):
-                    t0 = time.time()
-                    n = registry[name].build(spark, sdir).count()
-                    sec = time.time() - t0
-                    best = sec if best is None else min(best, sec)
-                sec = round(best, 3)
-                base = fresh_base(name)
+                    stress_base[name] = round(measure(spark, build, SF_DIR)[0], 3)
+                base = stress_base[name]
                 rec = {
                     "sec": sec,
                     "rows": n,
                     "base_sec": base,
                     "growth_x": round(sec / base, 2) if base else None,
                 }
-                if vs_10x_key is not None and vs_10x_key in stress:
-                    rec["growth_vs_10x"] = round(sec / stress[vs_10x_key]["sec"], 2)
+                if factor == STRESS_FACTOR_DEEP and name in stress:
+                    rec["growth_vs_10x"] = round(sec / stress[name]["sec"], 2)
                 print(
                     f"# stress[{factor}x] {name}: {sec:.3f}s rows={n} "
                     f"growth={rec['growth_x']}x",
@@ -454,7 +400,7 @@ def main() -> None:
             for name in STRESS_QUERIES_DEEP:
                 if name in registry:
                     stress[f"{name}@{STRESS_FACTOR_DEEP}x"] = stress_run(
-                        name, STRESS_FACTOR_DEEP, vs_10x_key=name
+                        name, STRESS_FACTOR_DEEP
                     )
         except Exception as e:  # stress must never sink the bench line
             stress = {"error": f"{type(e).__name__}: {e}"}
@@ -471,8 +417,7 @@ def main() -> None:
         pass
     repeat_offenders = sorted(prior_forgiven & set(recheck))
 
-    sf = sf_str
-    sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
+    sf_val = float(sf_str) if sf_str.replace(".", "").isdigit() else sf_str
     summary = {
         "n_queries": len(timings),
         "median_vs_baseline": (

@@ -25,6 +25,12 @@ if ! python -m pytest tests/ -x -q; then
 fi
 
 if [ "$MODE" = "full" ]; then
+  echo "== gate 1b: benchmark harness self-test (no timed action drops an output column) =="
+  if ! python -m pytest perfbench -q -p no:cacheprovider; then
+    echo "GATE FAIL: perfbench self-test" >&2
+    fail=1
+  fi
+
   echo "== gate 2: oracle parity (driver replica, sf0.01) =="
   # SELFCHECK.json is the committed full-catalog twin of the driver's
   # CORRECTNESS_r{N}.json — the driver's own window covers only a

@@ -116,6 +116,16 @@ def collapse_identical_sets(
     stage should run first: downstream quadratic work then scales with
     DISTINCT sets, and duplicate-heavy corpora (the 100 TB norm)
     re-expand only at output time.
+
+    Precondition (r15 ADVICE): every ``set_col`` value must be a
+    non-empty array with no NULL elements. ``concat_ws`` skips NULLs and
+    joins ``[]`` and ``['']`` to the same empty string, so a NULL set, an
+    empty set and ``['']`` share one key, as do arrays that differ only
+    in NULL elements; the collapse would then emit phantom within-group
+    pairs. Every in-repo caller filters ``size(set_col) > 0`` (or a
+    stricter minimum length) before collapsing, and its sets come from
+    tokenizers that never emit NULL elements
+    (tests/test_collapse_equivalence.py pins the filter).
     """
     enc = F.col(set_col) if ordered else F.sort_array(set_col)
     keyed = sets_df.withColumn(

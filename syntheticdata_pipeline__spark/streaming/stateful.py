@@ -36,22 +36,32 @@ _STATE_SCHEMA = StructType(
 def running_user_totals(events: DataFrame) -> DataFrame:
     """Per-user running (count, Σvalue) maintained in keyed group state —
     the progress-counter semantics (test_kimono.py:63-74) as a custom
-    stateful operator. Value sums accumulate in integer micro-units so
-    state merges are order-independent (same determinism rule as the
-    decimal aggregates).
+    stateful operator. Each value becomes integer micro-units on its own
+    row, rounded half away from zero like the batch twin's
+    ``F.round(value * 1_000_000)``, and only integers are summed, so
+    state merges are order-independent and a chunked stream equals the
+    one-shot sum (same determinism rule as the decimal aggregates).
+    ``n_events`` counts every event; NULL, NaN and ±inf values add
+    nothing to the sum (the batch twins' decimal cast maps them to NULL,
+    which F.sum skips).
     """
 
     def update(
         key: tuple, pdf_iter: Iterator, state: GroupState
     ) -> Iterator:
+        import numpy as np
         import pandas as pd
 
         (user_id,) = key
         n, sv = state.get if state.exists else (0, 0)
         for pdf in pdf_iter:
             n += len(pdf)
-            # micro-units: int arithmetic, associative across batches
-            sv += int(round(float(pdf["value"].sum()) * 1_000_000))
+            v = pdf["value"].to_numpy(dtype="float64", na_value=np.nan)
+            v = v[np.isfinite(v)] * 1_000_000
+            # half away from zero on the exact double: v - trunc(v) is exact
+            whole = np.trunc(v)
+            micros = whole + np.sign(v) * (np.abs(v - whole) >= 0.5)
+            sv += sum(int(m) for m in micros)
         state.update((n, sv))
         yield pd.DataFrame(
             {"user_id": [user_id], "n_events": [n], "sum_value_micros": [sv]}

@@ -1,8 +1,8 @@
-"""Regression pin for the r8 ADVICE fix (bench.py): the superseded v1
-stress layout must be reclaimed even when the v2 layout is already
-READY — the original guard only removed v1 while v2 still needed
+"""bench.py pins: the superseded stress layouts are reclaimed (r8
+ADVICE: the original guard only removed v1 while v2 still needed
 building, so on a machine with a READY v2 the stale replicated parquet
-under /tmp lived forever."""
+under /tmp lived forever), ``bench.measure`` is a best-of-N, and the
+>2x recheck confirms only breaches a fresh process reproduces."""
 
 from __future__ import annotations
 
@@ -42,49 +42,76 @@ def test_superseded_stress_dirs_reclaimed_even_when_current_ready(tmp_path):
 
 
 class _FakeClock:
-    """time.time() stub: returns the next value from a queue."""
+    """time.perf_counter() stub: returns the next value from a queue."""
 
     def __init__(self, values):
         self._values = list(values)
 
-    def time(self):
+    def perf_counter(self):
         return self._values.pop(0)
 
 
 class _FakeDF:
+    def __init__(self, rows):
+        self._rows = rows
+
     def count(self):
-        return 1
+        return self._rows
 
 
-class _FakeSpec:
-    def build(self, spark, sf_dir):
-        return _FakeDF()
+def test_measure_returns_min_over_repeats_and_last_row_count(monkeypatch):
+    """bench.measure is the one timing path: it rebuilds the DataFrame
+    inside every timed repeat, keeps the fastest repeat and reports the
+    row count of the last one."""
+    import bench
+
+    calls = []
+
+    def build(spark, sf_dir):
+        calls.append((spark, sf_dir))
+        return _FakeDF(10 + len(calls))
+
+    # three (t0, t1) pairs: 2.0s, 0.5s, 1.25s
+    monkeypatch.setattr(bench, "time", _FakeClock([0.0, 2.0, 5.0, 5.5, 9.0, 10.25]))
+
+    best, rows = bench.measure("spark", build, "/sf", repeats=3)
+
+    assert best == 0.5
+    assert rows == 13
+    assert calls == [("spark", "/sf")] * 3
+
+
+def _fake_fresh(values):
+    """_fresh_process_best stub: a float is the fresh best-of-2, an
+    exception instance is raised as the subprocess failure."""
+
+    def fresh(name, sf_dir, repeats=2):
+        v = values[name]
+        if isinstance(v, Exception):
+            raise v
+        return v
+
+    return fresh
 
 
 def test_fresh_session_recheck_confirms_only_reproduced_breaches(monkeypatch):
     """r10 methodology pin: an in-context >2x reading only counts as a
-    regression when a fresh-session best-of-2 reproduces it; the fresh
+    regression when a fresh-process best-of-2 reproduces it; the fresh
     value replaces the in-context one and both land in `recheck`."""
     import bench
 
-    registry = {"slow_q": _FakeSpec(), "noisy_q": _FakeSpec()}
     baseline = {"slow_q": 1.0, "noisy_q": 1.0}
     # in-context both read as 3x their anchor
     timings = {"slow_q": 3.0, "noisy_q": 3.0}
     vs_baseline = {"slow_q": 3.0, "noisy_q": 3.0}
     recheck: dict = {}
-
-    # per query, best-of-2 = two (t0, t1) pairs; slow_q reproduces at
-    # 2.5s, noisy_q comes back at 0.5s (in-context session-state noise)
+    # slow_q reproduces at 2.5s, noisy_q comes back at 0.5s (in-context
+    # session-state noise)
     monkeypatch.setattr(
-        bench,
-        "time",
-        _FakeClock([0.0, 2.5, 10.0, 12.6, 20.0, 20.5, 30.0, 30.6]),
+        bench, "_fresh_process_best", _fake_fresh({"slow_q": 2.5, "noisy_q": 0.5})
     )
 
     confirmed = bench._confirm_regressions(
-        spark=None,
-        registry=registry,
         candidates=["slow_q", "noisy_q"],
         baseline=baseline,
         timings=timings,
@@ -98,6 +125,7 @@ def test_fresh_session_recheck_confirms_only_reproduced_breaches(monkeypatch):
         "in_context_sec": 3.0,
         "fresh_sec": 2.5,
         "vs_baseline": 2.5,
+        "fresh_process": True,
     }
     assert recheck["noisy_q"]["in_context_sec"] == 3.0
     assert recheck["noisy_q"]["fresh_sec"] == 0.5
@@ -106,28 +134,23 @@ def test_fresh_session_recheck_confirms_only_reproduced_breaches(monkeypatch):
     assert vs_baseline == {"slow_q": 2.5, "noisy_q": 0.5}
 
 
-class _CrashSpec:
-    def build(self, spark, sf_dir):
-        raise RuntimeError("executor lost")
-
-
 def test_recheck_error_keeps_breach_and_records_it(monkeypatch):
     """r10 ADVICE: a recheck crash must not sink the bench line — the
     in-context breach stays confirmed (conservative) and the error is
     recorded under recheck[name] for triage."""
     import bench
 
-    registry = {"crash_q": _CrashSpec(), "noisy_q": _FakeSpec()}
     baseline = {"crash_q": 1.0, "noisy_q": 1.0}
     timings = {"crash_q": 3.0, "noisy_q": 3.0}
     vs_baseline = {"crash_q": 3.0, "noisy_q": 3.0}
     recheck: dict = {}
-    # crash_q consumes one t0 before raising; noisy_q then runs best-of-2
-    monkeypatch.setattr(bench, "time", _FakeClock([0.0, 1.0, 1.5, 10.0, 10.6]))
+    monkeypatch.setattr(
+        bench,
+        "_fresh_process_best",
+        _fake_fresh({"crash_q": RuntimeError("executor lost"), "noisy_q": 0.5}),
+    )
 
     confirmed = bench._confirm_regressions(
-        spark=None,
-        registry=registry,
         candidates=["crash_q", "noisy_q"],
         baseline=baseline,
         timings=timings,
@@ -137,10 +160,13 @@ def test_recheck_error_keeps_breach_and_records_it(monkeypatch):
     )
 
     assert confirmed == ["crash_q"]
-    assert recheck["crash_q"]["in_context_sec"] == 3.0
-    assert "RuntimeError" in recheck["crash_q"]["error"]
+    assert recheck["crash_q"] == {
+        "in_context_sec": 3.0,
+        "error": "RuntimeError: executor lost",
+    }
     # the crashed query's in-context reading is NOT replaced
     assert timings["crash_q"] == 3.0
+    assert vs_baseline["crash_q"] == 3.0
     # the healthy candidate still rechecks normally after the crash
     assert recheck["noisy_q"]["fresh_sec"] == 0.5
 
@@ -151,18 +177,15 @@ def test_gate_compares_unrounded_ratio(monkeypatch):
     2.00x, i.e. the effective gate threshold was 2.005x)."""
     import bench
 
-    registry = {"edge_q": _FakeSpec()}
     baseline = {"edge_q": 1.0}
     timings = {"edge_q": 3.0}
     vs_baseline = {"edge_q": 3.0}
     recheck: dict = {}
-    # fresh best-of-2 = 2.004s against a 1.0s anchor: rounds to 2.00 but
+    # fresh best-of-2 = 2.0049s against a 1.0s anchor: rounds to 2.00 but
     # the unrounded ratio breaches
-    monkeypatch.setattr(bench, "time", _FakeClock([0.0, 2.004, 10.0, 12.5]))
+    monkeypatch.setattr(bench, "_fresh_process_best", _fake_fresh({"edge_q": 2.0049}))
 
     confirmed = bench._confirm_regressions(
-        spark=None,
-        registry=registry,
         candidates=["edge_q"],
         baseline=baseline,
         timings=timings,
@@ -175,30 +198,28 @@ def test_gate_compares_unrounded_ratio(monkeypatch):
     assert recheck["edge_q"]["vs_baseline"] == 2.0  # display value rounds
 
 
-def test_recheck_prefers_fresh_process_and_falls_back(monkeypatch):
-    """r15: with a live session the recheck times the offender in a
-    truly fresh PROCESS (cold JVM); if the subprocess fails it falls
-    back to the in-process loop (pre-r15 behavior)."""
+def test_failed_fresh_process_keeps_breach_and_records_error(monkeypatch):
+    """A recheck subprocess that exits nonzero leaves no in-process
+    fallback: the breach stays confirmed, the in-context reading stays,
+    and the exit code plus the stderr tail land in recheck[name]."""
+    import subprocess
+
     import bench
 
-    registry = {"proc_q": _FakeSpec(), "fallback_q": _FakeSpec()}
-    baseline = {"proc_q": 1.0, "fallback_q": 1.0}
-    timings = {"proc_q": 3.0, "fallback_q": 3.0}
-    vs_baseline = {"proc_q": 3.0, "fallback_q": 3.0}
+    seen = {}
+
+    def fake_run(cmd, env, **kwargs):
+        seen["cmd"], seen["env"] = cmd, env
+        return subprocess.CompletedProcess(cmd, 1, stdout="", stderr="boom: OOM\n")
+
+    monkeypatch.setattr(subprocess, "run", fake_run)
+    timings = {"proc_q": 3.0}
+    vs_baseline = {"proc_q": 3.0}
     recheck: dict = {}
 
-    def fake_fresh(name, sf_dir, repeats=2):
-        return 2.4 if name == "proc_q" else None  # fallback_q: subprocess fails
-
-    monkeypatch.setattr(bench, "_fresh_process_best", fake_fresh)
-    # fallback_q's in-process best-of-2 comes back at 0.5s
-    monkeypatch.setattr(bench, "time", _FakeClock([0.0, 0.5, 10.0, 10.7]))
-
     confirmed = bench._confirm_regressions(
-        spark=object(),  # non-None: the fresh-process path is eligible
-        registry=registry,
-        candidates=["proc_q", "fallback_q"],
-        baseline=baseline,
+        candidates=["proc_q"],
+        baseline={"proc_q": 1.0},
         timings=timings,
         vs_baseline=vs_baseline,
         recheck=recheck,
@@ -206,13 +227,14 @@ def test_recheck_prefers_fresh_process_and_falls_back(monkeypatch):
     )
 
     assert confirmed == ["proc_q"]
+    assert seen["cmd"][-2:] == [
+        os.path.join(bench.REPO, "tools", "time_queries.py"),
+        "proc_q",
+    ]
+    assert seen["env"]["SPARK_GRAFT_SF_DIR"] == "/nonexistent"
     assert recheck["proc_q"] == {
         "in_context_sec": 3.0,
-        "fresh_sec": 2.4,
-        "vs_baseline": 2.4,
-        "fresh_process": True,
+        "error": "RuntimeError: time_queries.py exited 1: boom: OOM",
     }
-    assert timings["proc_q"] == 2.4
-    # the fallback path ran in-process and cleared the breach
-    assert recheck["fallback_q"]["fresh_sec"] == 0.5
-    assert "fresh_process" not in recheck["fallback_q"]
+    assert timings == {"proc_q": 3.0}
+    assert vs_baseline == {"proc_q": 3.0}

@@ -1,5 +1,5 @@
 """applyInPandasWithState: state survives across micro-batches and final
-totals equal the batch aggregation."""
+totals (count and integer-micro value sum) equal the batch aggregation."""
 
 from __future__ import annotations
 
@@ -14,7 +14,13 @@ def _prepare_chunked_source(spark, tmp_path, n_chunks=3):
     """Split events into n parquet files so maxFilesPerTrigger=1 forces
     multiple micro-batches (state must carry across them)."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    ev = spark.read.parquet(f"{SF_SMOKE}/events.parquet")
+    # value/7 with every third sign flipped: sub-micro fractions of both
+    # signs, so per-row micro rounding is actually exercised
+    ev = spark.read.parquet(f"{SF_SMOKE}/events.parquet").withColumn(
+        "value",
+        F.when(F.col("event_id") % 3 == 0, -F.col("value")).otherwise(F.col("value"))
+        / 7,
+    )
     src = str(tmp_path / "chunks")
     for i in range(n_chunks):
         ev.filter(F.col("event_id") % n_chunks == i).coalesce(1).write.mode(
@@ -59,8 +65,8 @@ def test_state_carries_across_microbatches(spark, tmp_path):
         F2.count("*").alias("n_events"),
         F2.sum(F2.round(F2.col("value") * 1_000_000).cast("bigint")).alias("sv_ref"),
     )
-    got = {r.user_id: r.n_events for r in final.collect()}
-    want = {r.user_id: r.n_events for r in expect.collect()}
+    got = {r.user_id: (r.n_events, r.sum_value_micros) for r in final.collect()}
+    want = {r.user_id: (r.n_events, r.sv_ref) for r in expect.collect()}
     assert got == want
 
 

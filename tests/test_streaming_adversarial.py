@@ -14,9 +14,9 @@ reference's in-memory seen-sets and JSON progress flushes have none of
 these behaviors to pin; the Spark rebuild must define them.
 
 Find log (r14 first run):
-- running_user_totals CRASHES on a non-finite value (int(round(inf))
-  overflows) — pinned red-to-flip below, DIVERGENCES "Queued fix:
-  running_user_totals must skip non-finite values".
+- running_user_totals CRASHED on a non-finite value (int(round(inf))
+  overflowed) — DIVERGENCES "Queued fix: running_user_totals must skip
+  non-finite values"; fixed, and the pin below now asserts the skip.
 - everything else pinned GREEN (behavior verified consistent with the
   batch twins / documented Spark semantics).
 """
@@ -340,24 +340,30 @@ def test_running_totals_skip_null_and_nan_values(spark, tmp_path):
     assert final == {2: (1, 0), 3: (2, 1_500_000)}
 
 
-def test_running_totals_nonfinite_value_crashes_pinned_red(spark, tmp_path):
-    """PINNED RED (r14 battery find → flip when the r15 queued fix
-    lands): an INFINITE value crashes the whole streaming query —
-    int(round(inf)) overflows inside the state-update UDF
-    (streaming/stateful.py::running_user_totals). The batch twins
+def test_running_totals_skip_infinite_values(spark, tmp_path):
+    """r14 battery find, fixed: an INFINITE value used to crash the whole
+    streaming query — int(round(inf)) overflowed inside the state-update
+    UDF (streaming/stateful.py::running_user_totals), and the poison row
+    replayed from the checkpoint on every restart. The batch twins
     survive the same row (cast(inf as decimal) → NULL → skipped by
-    F.sum), so one skewed sensor reading killing the query is a
-    robustness divergence, not a semantics choice. Queued fix: sum only
-    finite values (matching the decimal-cast contract); DIVERGENCES.md
+    F.sum), so the stream now does the same: ±inf adds nothing to the
+    sum while n_events still counts the event. DIVERGENCES.md
     'Queued fix: running_user_totals must skip non-finite values'."""
-    from pyspark.errors.exceptions.captured import StreamingQueryException
-
     from syntheticdata_pipeline__spark.streaming.stateful import running_user_totals
 
     src = str(tmp_path / "src")
-    _write_chunk(spark, src, [_ev(1, BASE, 1, value=float("inf"))])
-    with pytest.raises(StreamingQueryException):
-        _run(running_user_totals(_stream(spark, src, per_file=False)), "update")
+    _write_chunk(
+        spark,
+        src,
+        [
+            _ev(1, BASE, 1, value=float("inf")),
+            _ev(2, BASE, 4, value=float("-inf")),
+            _ev(3, BASE, 4, value=-2.25),
+        ],
+    )
+    out = _run(running_user_totals(_stream(spark, src, per_file=False)), "update")
+    final = {r.user_id: (r.n_events, r.sum_value_micros) for r in out.collect()}
+    assert final == {1: (1, 0), 4: (2, -2_250_000)}
 
 
 def test_keyed_state_recovers_across_query_restarts(spark, tmp_path):

@@ -1,5 +1,6 @@
 """Time individual catalog queries with the bench methodology (warm
-session, best-of-2 ``.count()``) for fast optimization iteration.
+session, ``bench.measure``: best-of-2 ``.count()``) for fast optimization
+iteration.
 
 Usage::
 
@@ -16,11 +17,11 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+import bench  # noqa: E402  (the shared timing path + SF_DIR)
+
 REPEATS = int(os.environ.get("SPARK_GRAFT_REPEATS", "2"))
 
 
@@ -36,17 +37,11 @@ def main() -> None:
     spark = get_spark("time-queries")
     spark.sparkContext.setLogLevel("ERROR")
     # Warm-up: JVM + codegen + parquet footer caches (same as bench.py).
-    registry[names[0]].build(spark, SF_DIR).count()
+    bench.measure(spark, registry[names[0]].build, bench.SF_DIR, repeats=1)
 
     out: dict[str, float] = {}
     for name in names:
-        spec = registry[name]
-        best, n = None, 0
-        for _ in range(REPEATS):
-            t0 = time.time()
-            n = spec.build(spark, SF_DIR).count()
-            sec = time.time() - t0
-            best = sec if best is None else min(best, sec)
+        best, n = bench.measure(spark, registry[name].build, bench.SF_DIR, REPEATS)
         out[name] = round(best, 3)
         print(f"# {name}: {best:.3f}s rows={n}", file=sys.stderr)
     print(json.dumps(out))
