@@ -3,7 +3,7 @@
 # that cannot produce its JSON line (rounds 3-4 shipped rc=1 benches).
 #
 #   ./run_gates.sh          # full: pytest + oracle gate + sf0.1 bench
-#   ./run_gates.sh quick    # smoke: pytest -x + sf0.001 bench
+#   ./run_gates.sh quick    # smoke: pytest -x + perfbench self-test + sf0.001 bench
 #
 # Exit nonzero on ANY gate failure.
 set -uo pipefail
@@ -24,13 +24,13 @@ if ! python -m pytest tests/ -x -q; then
   fail=1
 fi
 
-if [ "$MODE" = "full" ]; then
-  echo "== gate 1b: benchmark harness self-test (no timed action drops an output column) =="
-  if ! python -m pytest perfbench -q -p no:cacheprovider; then
-    echo "GATE FAIL: perfbench self-test" >&2
-    fail=1
-  fi
+echo "== gate 1b: benchmark harness self-test (no timed action drops an output column) =="
+if ! python -m pytest perfbench -q -p no:cacheprovider; then
+  echo "GATE FAIL: perfbench self-test" >&2
+  fail=1
+fi
 
+if [ "$MODE" = "full" ]; then
   echo "== gate 2: oracle parity (driver replica, sf0.01) =="
   # SELFCHECK.json is the committed full-catalog twin of the driver's
   # CORRECTNESS_r{N}.json — the driver's own window covers only a

@@ -8,8 +8,10 @@ of relying on builder-time configuration.
 from __future__ import annotations
 
 import os
+import stat
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 # Runtime-settable confs every query depends on for deterministic,
 # oracle-comparable output.
@@ -49,6 +51,7 @@ def get_spark(
     """
     cpus = str(cpus or os.environ.get("SPARK_GRAFT_CPUS", "32"))
     shuffle = str(shuffle_partitions or int(cpus))
+    driver_mem = os.environ.get("SPARK_DRIVER_MEM") or _default_driver_mem()
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
@@ -56,11 +59,26 @@ def get_spark(
         .config("spark.default.parallelism", cpus)
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", driver_mem)
         .config("spark.ui.enabled", "false")
+        .config("spark.ui.showConsoleProgress", "false")
+        # Whole-stage codegen cache (a static conf; Spark's default is 100
+        # entries). At 100, every warm pass of the benchmark recompiled
+        # all it ran: ~550 classes per dedup pass, ~275 per ingest pass.
+        # 1024 holds either pass with headroom; a repeat pass then
+        # compiles 0-14. A session the caller built itself keeps the
+        # size it was started with.
+        .config("spark.sql.codegen.cache.maxEntries", "1024")
         .config("spark.sql.parquet.filterPushdown", "true")
     )
     return ensure_runtime_confs(builder.getOrCreate())
+
+
+def _default_driver_mem() -> str:
+    """24g, or three quarters of the host's RAM (MemTotal) when that is
+    smaller, so the default heap never exceeds the machine."""
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{min(24 * 1024, ram_mb * 3 // 4)}m"
 
 
 TABLES = (
@@ -77,6 +95,48 @@ TABLES = (
 )
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str):
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one driver-generated parquet table (TESTDATA.md)."""
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    return read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
+
+
+# Confs that change the schema Spark infers from a parquet footer.
+_PARQUET_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+)
+# (applicationId, absolute path) -> (file stamp + inference confs, schema);
+# a rewritten file replaces its entry, so the memo holds one per file.
+_SCHEMAS: dict[tuple[str, str], tuple[tuple, StructType]] = {}
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers a file's schema once per
+    session.
+
+    Inferring a parquet schema runs a Spark job that reads the footer,
+    and a catalog pass loads the same few files again and again. The
+    schema Spark inferred is kept per application and path, with the
+    file's mtime and size and the inference confs it was read under;
+    while those match, a read passes it with ``.schema()``. Each read
+    still gets a fresh relation; only the footer job is skipped.
+    Directories, and paths ``os.stat`` cannot see, read exactly as
+    ``spark.read.parquet`` does.
+    """
+    try:
+        st = os.stat(path)
+    except OSError:
+        return spark.read.parquet(path)
+    if not stat.S_ISREG(st.st_mode):
+        return spark.read.parquet(path)
+    key = (spark.sparkContext.applicationId, os.path.abspath(path))
+    confs = tuple(spark.conf.get(k) for k in _PARQUET_INFERENCE_CONFS)
+    stamp = (st.st_mtime_ns, st.st_size, confs)
+    hit = _SCHEMAS.get(key)
+    if hit is not None and hit[0] == stamp:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[key] = (stamp, df.schema)
+    return df

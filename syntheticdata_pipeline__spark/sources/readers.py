@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from ..schemas import PROMPT_JSONL
+from ..session import read_parquet
 
 
 def read_jsonl_tolerant(
@@ -128,7 +129,7 @@ def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
       take ``unix_micros``.
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+    df = read_parquet(spark, os.path.join(sf_dir, "events.parquet"))
     ts_type = dict(df.dtypes)["ts"]
     if ts_type == "bigint":
         return (

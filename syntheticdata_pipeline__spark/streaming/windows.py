@@ -21,6 +21,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import read_parquet
+
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the events parquet (R1: incremental source
@@ -32,7 +34,7 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     static read and branch, same contract as sources.readers.load_events.
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    static = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+    static = read_parquet(spark, os.path.join(sf_dir, "events.parquet"))
     ts_type = dict(static.dtypes)["ts"]
     schema = (
         f"event_id long, ts {ts_type}, user_id long, "
