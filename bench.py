@@ -334,16 +334,16 @@ def main() -> None:
         sorted(n for n, r in ratios.items() if r > 2.0) if gate_active else []
     )
 
-    # Fresh-process confirmation of gate breaches: the ~190-query main
-    # loop accumulates session state that can slow compute-heavy
-    # queries 2-3x late in the run with NO plan change (same effect the
-    # stress phase hit at ~100 queries — cluster_aware_split_leakage
-    # measured 15-17s in-context across two full runs while its
-    # fresh-session base inside the SAME runs was 4.6-4.9s, at anchor;
-    # a forced System.gc() between queries does not cure it). The 2x
-    # gate is about plan shape, so a breach only counts if a fresh
-    # process reproduces it; the recheck value replaces the in-context
-    # one and is recorded under "recheck" for provenance.
+    # Fresh-process confirmation of gate breaches: late in the ~190-query
+    # main loop, compute-heavy queries have measured 2-3x their fresh-
+    # session time with NO plan change. That slowdown was first blamed
+    # on accumulated session state; the r15 session-state probe found no
+    # block accumulation and negligible GC and closed it as host noise
+    # (plans/r15/evidence/README.md, ROADMAP "Recent"). The 2x gate is
+    # about plan shape, so a breach only counts if a fresh process
+    # reproduces it; the recheck value replaces the in-context one and
+    # is recorded under "recheck" for provenance. ROADMAP open item 1
+    # owns this recheck protocol (a cold recheck against warm anchors).
     recheck: dict[str, dict] = {}
     if regressions:
         regressions = _confirm_regressions(
@@ -358,11 +358,11 @@ def main() -> None:
             # stress entries measured 4-7x slower best-of-2 at identical
             # output rows than the same query in a fresh session
             # (minhash@10x 17.5-26.7 s in-context vs 3.9-4.2 s solo,
-            # reproduced across two full-run contexts 2026-08-15; a
-            # 12-heavy-query prefix does NOT reproduce it — accumulated
-            # session state, not the plan). Growth curves are evidence
-            # about plan SHAPE, so both sides of each ratio are measured
-            # inside the same fresh session. Best-of-2 like the main loop:
+            # 2026-08-15). The r15 probe traced such slowdowns to host
+            # noise, not session state (plans/r15/evidence/README.md;
+            # ROADMAP open item 1). Growth curves are evidence about plan
+            # SHAPE, so both sides of each ratio are measured inside the
+            # same session, close together. Best-of-2 like the main loop:
             # the first stress execution pays cold codegen + cold
             # stress-dir file cache, which previously made growth curves
             # cold-vs-warm noise (a 30x point measuring FASTER than its
@@ -407,8 +407,8 @@ def main() -> None:
 
     # A query the fresh-session recheck forgives in CONSECUTIVE committed
     # runs is a repeat offender (r10 ADVICE): a plan regression that only
-    # manifests under accumulated session state would be silently forgiven
-    # forever, so surface the overlap with the previously committed run.
+    # shows up late in a long run would be silently forgiven forever, so
+    # surface the overlap with the previously committed run.
     prior_forgiven: set[str] = set()
     try:
         with open(os.path.join(REPO, "BENCH_local.json")) as f:

@@ -11,8 +11,8 @@ Near-dup graphs are short-diameter (clusters are cliques-ish), so this
 beats the large-star/small-star alternation in practice while staying
 fully distributed: each round is one equi-join + partial-agg min, keyed
 on node — no driver-side graph, no quadratic step. Lineage is truncated
-per round with localCheckpoint (otherwise the plan doubles each
-iteration); the convergence probe is a count() action per round, which is
+per round with a pin (otherwise the plan doubles each iteration); the
+convergence probe is a count() action per round, which is
 how iterative DataFrame algorithms are driven (cf. GraphFrames).
 """
 
@@ -20,6 +20,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..session import pin
 
 
 def connected_components(
@@ -50,23 +52,18 @@ def connected_components(
             # unrefined identity labels (the documented zero-round form;
             # <= keeps the pre-r14 empty-range-loop behavior for negative
             # out-of-contract values too — r14 ADVICE)
-            return (
-                sym.select("node")
-                .distinct()
-                .withColumn("lab", F.col("node"))
-                .localCheckpoint(eager=True)
-            )
+            return sym.select("node").distinct().withColumn("lab", F.col("node"))
         # r14: ROUND 1 FOLDED INTO ONE AGGREGATE — from identity labels
         # the first propagation is exactly lab = min(node, min(nbr)), so
         # the old init job (distinct + eager checkpoint) and the first
-        # join round collapse into a single groupBy (~1 job saved per CC
-        # call; the fold counts as iteration 1 toward max_iters, keeping
-        # the bounded-refinement semantics of test_max_iters_bound).
-        labels = (
+        # join round collapse into a single groupBy (the fold counts as
+        # iteration 1 toward max_iters, keeping the bounded-refinement
+        # semantics of test_max_iters_bound). The pin is lazy: round 2's
+        # count materializes it, so the fold adds no job of its own.
+        labels = pin(
             sym.groupBy("node")
             .agg(F.min("nbr").alias("__mn"))
             .select("node", F.least(F.col("node"), F.col("__mn")).alias("lab"))
-            .localCheckpoint(eager=True)
         )
         for _ in range(max_iters - 1):
             nbr_lab = labels.select(
@@ -81,9 +78,8 @@ def connected_components(
             # (``moved``) instead of a separate labels-vs-new join — one
             # job per round (the count materializes the lazy checkpoint)
             # in place of the old three (eager checkpoint + join + count).
-            new = (
-                labels.join(nbr_min, "node", "left")
-                .select(
+            new = pin(
+                labels.join(nbr_min, "node", "left").select(
                     "node",
                     F.least(F.col("lab"), F.coalesce(F.col("nlab"), F.col("lab"))).alias(
                         "lab"
@@ -92,7 +88,6 @@ def connected_components(
                         "moved"
                     ),
                 )
-                .localCheckpoint(eager=False)
             )
             changed = new.filter(F.col("moved")).count()
             labels = new.select("node", "lab")
@@ -155,7 +150,7 @@ def kmeans_fixed_iters(
     # scale — and in the 100 TB form (train_vecs = a seeded sample)
     # this pins only the sample, never the full corpus, whose single
     # assignment pass below stays a streaming scan.
-    train = train.localCheckpoint(eager=False)
+    train = pin(train)
     cents = (
         train.orderBy(unit_rand(F.col(id_col), salt), id_col)
         .limit(k)
@@ -201,15 +196,13 @@ def kmeans_fixed_iters(
         # full-corpus assignment), and without truncation each reference
         # re-embeds the whole Lloyd lineage (scan count grew per
         # iteration). Broadcast is explicit at every use site, so the
-        # stats-stripping counter-lesson (PERF log #7) does not apply.
-        new_cents = (
-            means.groupBy("cid")
-            .agg(
+        # pin's stats loss does not bite.
+        new_cents = pin(
+            means.groupBy("cid").agg(
                 F.expr(
                     "transform(array_sort(collect_list(struct(dim, mv))), s -> s.mv)"
                 ).alias("cv")
             )
-            .localCheckpoint(eager=False)
         )
         assigned = assign(train, new_cents)
         cents = new_cents

@@ -21,6 +21,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import tokens, tokens_sql
+from ..session import pin
 
 
 def word_shingles(text_col: Column, n: int = 3) -> Column:
@@ -278,7 +279,7 @@ def minhash_pairs_from_sets(
     # (an extra Exchange under the BroadcastExchange, and a
     # REPARTITION_BY_COL the broadcast probe side doesn't need). Dropped;
     # EnsureRequirements inserts the join-key exchanges itself whenever
-    # the planner picks SMJ/SHJ at scale. (A localCheckpoint pin on the
+    # the planner picks SMJ/SHJ at scale. (A pin on the
     # banded rows was also A/B'd to stop the signature chain computing
     # once per join side — solo best-of-3 LOST, 3.3 s vs 3.0 s on
     # minhash_lsh_candidates and 5.1 s vs 3.4 s on corpus_dedup_pipeline:
@@ -373,11 +374,10 @@ def jaccard_pairs_inverted(
         # r14 (guide §5): groups feeds the postings explode plus up to
         # four expand/eligibility branches — without the pin each branch
         # re-ran the whole scan+shingle+collapse subtree (the before-plan
-        # carried 5 parquet scans; 18 with the df-cap). localCheckpoint
-        # truncates the lineage so the subtree computes once per run.
-        groups = collapse_identical_sets(
-            sh, id_col="id", set_col="sh", group_cols=("blk",)
-        ).localCheckpoint(eager=False)
+        # carried 5 parquet scans; 18 with the df-cap).
+        groups = pin(
+            collapse_identical_sets(sh, id_col="id", set_col="sh", group_cols=("blk",))
+        )
         base = groups.select("blk", "id", "sh")
     else:
         base = sh
@@ -398,11 +398,9 @@ def jaccard_pairs_inverted(
         from pyspark.sql import Window
 
         # r14 (guide §5): the capped postings feed both self-join sides
-        # plus the eligibility semi-join — pin so the df-count anti-join
-        # + recount window run once, not three times.
-        ex = ex.withColumn(
-            "n", F.count("*").over(Window.partitionBy("blk", "id"))
-        ).localCheckpoint(eager=False)
+        # plus the eligibility semi-join — the df-count anti-join +
+        # recount window run once, not three times.
+        ex = pin(ex.withColumn("n", F.count("*").over(Window.partitionBy("blk", "id"))))
     else:
         ex = base.select(
             "blk", "id", F.size("sh").alias("n"), F.explode("sh").alias("shingle")
@@ -681,13 +679,14 @@ def simhash_hamming_rep_pairs(
         # level 2: identical signature → one band-join row per distinct
         # signature (≤ 2**n_bits rows, corpus-size-independent); member
         # lists merge, the representative id is the min over the union
-        groups = tsigs.groupBy("sig").agg(
-            F.min("id").alias("id"),
-            F.flatten(F.collect_list("members")).alias("members"),
-        ).localCheckpoint(eager=False)
         # pinned (≤ 2**n_bits rows): groups feeds the band join AND three
-        # branches of expand_collapsed_pairs — without the pin the whole
-        # signature lineage is re-evaluated per branch
+        # branches of expand_collapsed_pairs
+        groups = pin(
+            tsigs.groupBy("sig").agg(
+                F.min("id").alias("id"),
+                F.flatten(F.collect_list("members")).alias("members"),
+            )
+        )
         sigs = groups.select("id", "sig").repartition("id")
     else:
         sigs = simhash_sig_agg(
@@ -840,12 +839,9 @@ def incremental_minhash_dedup(
     sig_key = F.md5(F.concat_ws("|", "sig"))
     wmin = Window.partitionBy("__sk")
     # r14 (guide §5): keyed feeds both the collapse-dup filter and the
-    # representative filter — pin so the signature stage + group-min
-    # window run once, not once per consumer.
-    keyed = (
-        sigs.withColumn("__sk", sig_key)
-        .withColumn("__gmin", F.min("id").over(wmin))
-        .localCheckpoint(eager=False)
+    # representative filter
+    keyed = pin(
+        sigs.withColumn("__sk", sig_key).withColumn("__gmin", F.min("id").over(wmin))
     )
     collapse_dups = keyed.filter(sig_ok & (F.col("id") > F.col("__gmin"))).select("id")
     reps = keyed.filter(sig_ok & (F.col("id") == F.col("__gmin"))).select("id", "sig")

@@ -156,9 +156,9 @@ def gopher_flags(df: DataFrame, text_col: str = "text", toks_col: str | None = N
     ``toks_col`` (r13, queued fix #9): the rule expressions reference
     the token array five times, and projection collapse re-inlines the
     fold+regex tokenizer into each — the expensive codegen stage run
-    5× per row. Callers that pin a pre-tokenized array (the shared
-    localCheckpoint token base the other token-heavy plans use) pass
-    its column name here and the flags become cheap array reads."""
+    5× per row. Callers that pin a pre-tokenized array
+    (``session.pin``) pass its column name here and the flags become
+    cheap array reads."""
     toks = F.col(toks_col) if toks_col else tokens(F.col(text_col))
     n_words = F.size(toks)
     sum_len = F.aggregate(toks, F.lit(0), lambda a, t: a + F.length(t))

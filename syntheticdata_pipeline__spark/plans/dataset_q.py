@@ -16,6 +16,7 @@ from ..operators.datasetprep import (
     pack_sequences,
     sample_k_per_group,
 )
+from ..session import pin
 from . import register
 from .common import T
 
@@ -355,9 +356,11 @@ def source_sqrt_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     it both the rows and the normalizing total re-derive from the raw scan
     (verified: two Scan parquet nodes in the un-checkpointed plan)."""
     d = T(spark, sf_dir, "documents")
-    tt = d.groupBy("source").agg(
-        F.sum(F.size(tokens(F.col("text")))).cast("bigint").alias("total_tokens")
-    ).localCheckpoint(eager=True)
+    tt = pin(
+        d.groupBy("source").agg(
+            F.sum(F.size(tokens(F.col("text")))).cast("bigint").alias("total_tokens")
+        )
+    )
     s = tt.withColumn(
         "sq",
         F.round(F.sqrt(F.col("total_tokens").cast("double")), 6).cast("decimal(18,6)"),
@@ -613,14 +616,13 @@ def cluster_aware_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.clusters import connected_components
     from .docs_q import minhash_lsh_candidates
 
-    # pin the pair list and labels: both feed the per-doc AND per-cluster
-    # policies below, and without truncation each reference re-runs the
-    # whole LSH pipeline (the plan carried 20 document scans).
-    pairs = (
+    # pin the pair list: it feeds the per-doc AND per-cluster policies
+    # below, and without truncation each reference re-runs the whole LSH
+    # pipeline (the plan carried 20 document scans).
+    pairs = pin(
         minhash_lsh_candidates(spark, sf_dir)
         .filter(F.col("jac") >= _CLUSTER_JAC)
         .select("id_a", "id_b")
-        .localCheckpoint(eager=False)
     )
     labels = connected_components(pairs, src="id_a", dst="id_b").withColumnRenamed(
         "node", "doc_id"
@@ -638,13 +640,15 @@ def cluster_aware_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
         return expr
 
     # r14 (guide §5): asg feeds both pair-join sides AND the split-count
-    # agg — pin so the documents scan + label join + md5 split draws run
-    # once, not three times.
-    asg = lab.select(
-        "doc_id",
-        split_expr(F.col("doc_id")).alias("split_doc"),
-        split_expr(F.col("lab")).alias("split_cluster"),
-    ).localCheckpoint(eager=False)
+    # agg — the documents scan + label join + md5 split draws run once,
+    # not three times.
+    asg = pin(
+        lab.select(
+            "doc_id",
+            split_expr(F.col("doc_id")).alias("split_doc"),
+            split_expr(F.col("lab")).alias("split_cluster"),
+        )
+    )
     px = pairs.join(
         asg.select(
             F.col("doc_id").alias("id_a"),
@@ -1038,15 +1042,17 @@ def dataset_version_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     repeat offender); the pinned base is ~fixed-width rows, so the
     three derivations are cheap column picks."""
     d = T(spark, sf_dir, "documents")
-    base = d.select(
-        "doc_id",
-        F.md5("text").alias("ck"),
-        F.md5(F.concat(F.col("text"), F.lit("|v2"))).alias("ck_mod"),
-        F.md5(F.concat(F.col("text"), F.lit("|new"))).alias("ck_new"),
-        unit_rand(F.col("doc_id"), "v2drop").alias("r_drop"),
-        unit_rand(F.col("doc_id"), "v2mod").alias("r_mod"),
-        unit_rand(F.col("doc_id"), "v2add").alias("r_add"),
-    ).localCheckpoint(eager=False)
+    base = pin(
+        d.select(
+            "doc_id",
+            F.md5("text").alias("ck"),
+            F.md5(F.concat(F.col("text"), F.lit("|v2"))).alias("ck_mod"),
+            F.md5(F.concat(F.col("text"), F.lit("|new"))).alias("ck_new"),
+            unit_rand(F.col("doc_id"), "v2drop").alias("r_drop"),
+            unit_rand(F.col("doc_id"), "v2mod").alias("r_mod"),
+            unit_rand(F.col("doc_id"), "v2add").alias("r_add"),
+        )
+    )
     v1 = base.select("doc_id", "ck")
     survivors = base.filter(F.col("r_drop") >= _VDIFF_DROP).select(
         "doc_id",

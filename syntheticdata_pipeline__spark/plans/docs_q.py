@@ -36,8 +36,19 @@ from ..operators.textops import (
     quality_score,
     token_stats,
 )
+from ..session import pin
 from . import register
 from .common import T
+
+
+def _token_arrays(d: DataFrame, *keep: str) -> DataFrame:
+    """``keep`` columns plus the folded token array ``t``, pinned: the
+    fold+regex tokenize is the expensive codegen stage since the
+    WS_CLASS/fold_case contracts, and every caller reads the arrays
+    more than once (measured 2.5x at sf0.1 unpinned, r11). The arrays
+    are ~text-sized and replaying an explode over them is cheap."""
+    return pin(d.select(*keep, tokens(fold_case(F.col("text"))).alias("t")))
+
 
 # --------------------------------------------------------------------------
 # Exact dedup: md5 of normalized text, lowest doc_id wins.
@@ -242,9 +253,7 @@ def minhash_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r14 (guide §5): groups feeds the banding, BOTH verification-join
     # sides and three expand branches — the before-plan re-ran the
     # scan+shingle+collapse subtree 7 times; the pin computes it once.
-    groups = collapse_identical_sets(shingled, id_col="id", set_col="sh").localCheckpoint(
-        eager=False
-    )
+    groups = pin(collapse_identical_sets(shingled, id_col="id", set_col="sh"))
     reps = groups.select("id", "sh")
     cand = minhash_pairs_from_sets(reps, num_hashes=_MH_HASHES, bands=_MH_BANDS)
     ver = (
@@ -301,6 +310,42 @@ FROM scored s JOIN q1 q ON s.lang = q.lang
 """
 
 
+def _unigram_scores(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The corpus-trained unigram LM score shared by the perplexity gate
+    and the CCNet buckets: ``scored`` (doc_id, lang, logprob), the
+    per-lang score-value histogram CDF ``cdf`` (lang, logprob, cnt, cum)
+    and the per-lang doc count ``n`` (lang, n_docs)."""
+    from pyspark.sql import Window
+
+    toks = _token_arrays(T(spark, sf_dir, "documents"), "doc_id", "lang").select(
+        "doc_id", "lang", F.explode("t").alias("token")
+    )
+    # vocabulary-sized LM table, read by the totals and the scoring join
+    lm = pin(toks.groupBy("lang", "token").agg(F.count("*").alias("cnt")))
+    tot = lm.groupBy("lang").agg(F.sum("cnt").alias("total"))
+    scored = (
+        toks.join(lm, ["lang", "token"])
+        .join(F.broadcast(tot), "lang")
+        .groupBy("doc_id", "lang")
+        .agg(
+            F.round(
+                F.avg(F.log(F.col("cnt").cast("double") / F.col("total"))), 6
+            ).alias("logprob")
+        )
+    )
+    hist = scored.groupBy("lang", "logprob").agg(F.count("*").alias("cnt"))
+    wcdf = (
+        Window.partitionBy("lang")
+        .orderBy("logprob")
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
+    cdf = hist.withColumn("cum", F.sum("cnt").over(wcdf))
+    n = scored.groupBy("lang").agg(F.count("*").alias("n_docs"))
+    return scored, cdf, n
+
+
 @register("unigram_perplexity_gate", oracle=_PPL_ORACLE, bench=True, tags=("text-analysis", "F4"))
 def unigram_perplexity_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Perplexity-proxy quality gate: per-language unigram LM trained on
@@ -320,42 +365,7 @@ def unigram_perplexity_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-lang threshold (one row per lang) then broadcasts into a map-side
     keep flag. tests/test_quantile_deskew.py proves this equal to the
     per-doc cume_dist window form at oracle scale."""
-    d = T(spark, sf_dir, "documents")
-    # The token ARRAYS feed two consumers (LM training + the scoring
-    # join): pin the pre-explode form once — the fold+regex tokenize is
-    # the expensive codegen stage since the WS_CLASS/fold_case
-    # contracts, the array form is ~text-sized, and replaying the
-    # explode is cheap (r11 hoist; same call as pmi_collocations).
-    arrs = d.select(
-        "doc_id", "lang", tokens(fold_case(F.col("text"))).alias("t")
-    ).localCheckpoint(eager=False)
-    toks = arrs.select("doc_id", "lang", F.explode("t").alias("token"))
-    # vocabulary-sized LM table, referenced twice (totals + the scoring
-    # join): pin it so the token explode underneath runs once for it.
-    lm = toks.groupBy("lang", "token").agg(F.count("*").alias("cnt")).localCheckpoint(
-        eager=False
-    )
-    tot = lm.groupBy("lang").agg(F.sum("cnt").alias("total"))
-    scored = (
-        toks.join(lm, ["lang", "token"])
-        .join(F.broadcast(tot), "lang")
-        .groupBy("doc_id", "lang")
-        .agg(
-            F.round(
-                F.avg(F.log(F.col("cnt").cast("double") / F.col("total"))), 6
-            ).alias("logprob")
-        )
-    )
-    from pyspark.sql import Window
-
-    hist = scored.groupBy("lang", "logprob").agg(F.count("*").alias("cnt"))
-    wcdf = (
-        Window.partitionBy("lang")
-        .orderBy("logprob")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    cdf = hist.withColumn("cum", F.sum("cnt").over(wcdf))
-    n = scored.groupBy("lang").agg(F.count("*").alias("n_docs"))
+    scored, cdf, n = _unigram_scores(spark, sf_dir)
     # cum is integral, so cum >= 0.25*n ⟺ cum >= ceil(0.25*n): the P25
     # threshold is the smallest score value whose CDF reaches a quarter.
     q1 = (
@@ -422,9 +432,9 @@ def substring_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # r14 (guide §5): groups feeds the postings explode + three expand
     # branches — pin so the scan+8-gram-shingle+collapse runs once.
-    groups = collapse_identical_sets(
-        sh8, id_col="id", set_col="sh", group_cols=("blk",)
-    ).localCheckpoint(eager=False)
+    groups = pin(
+        collapse_identical_sets(sh8, id_col="id", set_col="sh", group_cols=("blk",))
+    )
     ex = groups.select("blk", "id", F.explode("sh").alias("gram"))
     a = ex.select("blk", F.col("id").alias("id_a"), "gram")
     b = ex.select("blk", F.col("id").alias("id_b"), "gram")
@@ -797,20 +807,15 @@ def corpus_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ReuseExchange, which the differently-projected consumers defeated
     # (the before-plan carried 6 scan+dedup-window evaluations) — pin the
     # lineage so the exact-dedup window runs once per run.
-    survivors = (
-        first_wins(keyed, ["ck"], [F.col("doc_id")])
-        .select("doc_id", "lang", "text")
-        .localCheckpoint(eager=False)
+    survivors = pin(
+        first_wins(keyed, ["ck"], [F.col("doc_id")]).select("doc_id", "lang", "text")
     )
 
     cand = minhash_lsh_pairs(
         survivors, id_col="doc_id", text_col="text", num_hashes=_MH_HASHES, bands=_MH_BANDS
     )
-    # shingle sets feed BOTH verification-join sides — pin (same as the
-    # minhash_lsh_candidates groups pin) so shingling runs once.
-    sh = survivors.select(
-        "doc_id", word_shingles(F.col("text")).alias("shingles")
-    ).localCheckpoint(eager=False)
+    # shingle sets feed BOTH verification-join sides
+    sh = pin(survivors.select("doc_id", word_shingles(F.col("text")).alias("shingles")))
     verified = (
         cand.join(sh.withColumnRenamed("doc_id", "id_a").withColumnRenamed("shingles", "sh_a"), "id_a")
         .join(sh.withColumnRenamed("doc_id", "id_b").withColumnRenamed("shingles", "sh_b"), "id_b")
@@ -1148,12 +1153,8 @@ def bm25_topk_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     window over the surviving ≤k rows. At 100 TB every executor
     contributes a k-row heap; only 10 rows ever see the global window."""
     d = T(spark, sf_dir, "documents")
-    # token arrays pinned once for the doc-length and postings consumers
-    # (r11 hoist; see pmi_collocations)
-    arrs = d.select(
-        "doc_id", tokens(fold_case(F.col("text"))).alias("t")
-    ).localCheckpoint(eager=False)
-    toks = arrs.select("doc_id", F.explode("t").alias("token"))
+    # token arrays: the doc-length and postings consumers
+    toks = _token_arrays(d, "doc_id").select("doc_id", F.explode("t").alias("token"))
     dl = toks.groupBy("doc_id").agg(F.count("*").alias("dl"))
     stats = dl.groupBy().agg(
         F.count("*").alias("n_docs"),
@@ -1241,9 +1242,9 @@ def token_overlap_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter((F.size("bt") > 0) & F.col("source").isNotNull())
         .repartition("doc_id")
     )
-    groups = collapse_identical_sets(
-        sets, id_col="doc_id", set_col="bt", group_cols=("source",)
-    ).localCheckpoint(eager=False)
+    groups = pin(
+        collapse_identical_sets(sets, id_col="doc_id", set_col="bt", group_cols=("source",))
+    )
     posts = groups.select(
         "source", F.col("doc_id").alias("id"), F.explode("bt").alias("token")
     ).repartition("source", "token")
@@ -1499,12 +1500,10 @@ def bigram_perplexity_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     The per-transition log-probability is folded into the (lang, w1, w2)
     LM table FIRST (all the count joins run at vocabulary size), so the
     fat transitions relation is joined exactly once. The token arrays
-    feed three consumers (unigrams, transitions twice) — pinned once
-    via localCheckpoint (r11 hoist; see pmi_collocations)."""
+    feed three consumers (unigrams, transitions twice) and are pinned
+    once."""
     d = T(spark, sf_dir, "documents")
-    toks = d.select(
-        "doc_id", "lang", tokens(fold_case(F.col("text"))).alias("t")
-    ).localCheckpoint(eager=False)
+    toks = _token_arrays(d, "doc_id", "lang")
     uni = (
         toks.select("lang", F.explode("t").alias("token"))
         .groupBy("lang", "token")
@@ -1525,9 +1524,7 @@ def bigram_perplexity_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("doc_id", "lang", F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"))
     )
-    bi = trans.groupBy("lang", "w1", "w2").agg(F.count("*").alias("bcnt")).localCheckpoint(
-        eager=False
-    )
+    bi = pin(trans.groupBy("lang", "w1", "w2").agg(F.count("*").alias("bcnt")))
     w1tot = bi.groupBy("lang", "w1").agg(F.sum("bcnt").alias("w1cnt"))
     lm = (
         bi.join(w1tot, ["lang", "w1"])
@@ -1612,11 +1609,8 @@ def ngram_diversity_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     COUNT(DISTINCT) shuffles, which Spark expands to a two-stage exact
     distinct — vocabulary-bounded, not corpus-bounded."""
     d = T(spark, sf_dir, "documents")
-    # token arrays pinned once for the uni + bi consumers (r11 hoist;
-    # see pmi_collocations)
-    toks = d.select(
-        "doc_id", "source", tokens(fold_case(F.col("text"))).alias("t")
-    ).localCheckpoint(eager=False)
+    # token arrays: the uni + bi consumers
+    toks = _token_arrays(d, "doc_id", "source")
     uni = toks.select("source", F.explode("t").alias("g"))
     bi = toks.filter(F.size("t") >= 2).select(
         "source",
@@ -1966,12 +1960,10 @@ def cross_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     this query's 1.93× driver-context reading (r12's closest shave to
     the 2× gate)."""
     d = T(spark, sf_dir, "documents")
-    g = (
+    g = pin(
         d.select(
             "source", F.explode(word_shingles(F.col("text"), _XSRC_N)).alias("gram")
-        )
-        .distinct()
-        .localCheckpoint(eager=False)
+        ).distinct()
     )
     src = g.groupBy("source").agg(F.count("*").alias("n_grams"))
     a = g.select(F.col("source").alias("source_a"), "gram")
@@ -2147,9 +2139,7 @@ def ngram_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = d.select("doc_id", "lang", word_shingles(F.col("text")).alias("sh")).repartition(
         "doc_id"
     )
-    ex = src.select("doc_id", "lang", F.explode("sh").alias("shingle")).localCheckpoint(
-        eager=False
-    )
+    ex = pin(src.select("doc_id", "lang", F.explode("sh").alias("shingle")))
     sz = ex.groupBy("doc_id").agg(F.count("*").alias("n"))
     a = ex.select(F.col("doc_id").alias("id_a"), "lang", "shingle")
     b = ex.select(F.col("doc_id").alias("id_b"), "lang", "shingle")
@@ -2295,42 +2285,7 @@ def ccnet_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-lang score-value histogram (grid-capped, corpus-size
     independent); the two threshold rows per language broadcast into a
     map-side CASE. No per-doc ranking window anywhere."""
-    d = T(spark, sf_dir, "documents")
-    # The token ARRAYS feed two consumers (LM training + the scoring
-    # join): pin the pre-explode form once — the fold+regex tokenize is
-    # the expensive codegen stage since the WS_CLASS/fold_case
-    # contracts, the array form is ~text-sized, and replaying the
-    # explode is cheap (r11 hoist; same call as pmi_collocations).
-    arrs = d.select(
-        "doc_id", "lang", tokens(fold_case(F.col("text"))).alias("t")
-    ).localCheckpoint(eager=False)
-    toks = arrs.select("doc_id", "lang", F.explode("t").alias("token"))
-    # vocabulary-sized LM table, referenced twice (totals + the scoring
-    # join): pin it so the token explode underneath runs once for it.
-    lm = toks.groupBy("lang", "token").agg(F.count("*").alias("cnt")).localCheckpoint(
-        eager=False
-    )
-    tot = lm.groupBy("lang").agg(F.sum("cnt").alias("total"))
-    scored = (
-        toks.join(lm, ["lang", "token"])
-        .join(F.broadcast(tot), "lang")
-        .groupBy("doc_id", "lang")
-        .agg(
-            F.round(
-                F.avg(F.log(F.col("cnt").cast("double") / F.col("total"))), 6
-            ).alias("logprob")
-        )
-    )
-    from pyspark.sql import Window
-
-    hist = scored.groupBy("lang", "logprob").agg(F.count("*").alias("cnt"))
-    wcdf = (
-        Window.partitionBy("lang")
-        .orderBy("logprob")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    cdf = hist.withColumn("cum", F.sum("cnt").over(wcdf))
-    n = scored.groupBy("lang").agg(F.count("*").alias("n_docs"))
+    scored, cdf, n = _unigram_scores(spark, sf_dir)
 
     # threshold arithmetic must be BIT-identical to the oracle's
     # "cum >= k * n_docs / 3.0" (not (k/3)*n_docs — a 1-ulp difference
@@ -2431,23 +2386,21 @@ def lsh_band_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the shingling+collapse subtree computes once, not once per config
     # (same fix as the two-pass median; without it the final plan carried
     # 20 document scans).
-    sizes = groups.select(
-        "id", F.size("members").cast("bigint").alias("m")
-    ).localCheckpoint(eager=False)
+    sizes = pin(groups.select("id", F.size("members").cast("bigint").alias("m")))
     # coalesce to 0 (not NULL): on an empty corpus the oracle's pair
     # count is 0 and the n_candidate_pairs sum must not go NULL.
-    within = sizes.agg(
-        F.coalesce(F.sum(F.expr("m * (m - 1) DIV 2")), F.lit(0))
-        .cast("bigint")
-        .alias("within_pairs")
-    ).localCheckpoint(eager=False)
+    within = pin(
+        sizes.agg(
+            F.coalesce(F.sum(F.expr("m * (m - 1) DIV 2")), F.lit(0))
+            .cast("bigint")
+            .alias("within_pairs")
+        )
+    )
     # HOF form deliberately kept here (r14): the signature runs ONCE on
     # the already-collapsed groups straight into this checkpoint, so the
     # explode+aggregate kernel's extra exchange costs more than the
     # interpreted mins save (A/B solo-measured 3.63s vs 4.11s at sf0.1).
-    sigs = groups.select(
-        "id", minhash_signature(F.col("sh"), _MH_HASHES).alias("sig")
-    ).localCheckpoint(eager=False)
+    sigs = pin(groups.select("id", minhash_signature(F.col("sh"), _MH_HASHES).alias("sig")))
     # r14 (guide §2.4): ONE shared band join for all four configs instead
     # of four parallel (join → distinct → agg) chains — every config's
     # band rows carry a cfg key into a single equi-join on
@@ -2575,13 +2528,10 @@ def heaps_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     the corpus. Regression sums are trunc-scaled BIGINTs over 5 points
     (exact, order-free); ln() slop absorbed by round(·,6)."""
     d = T(spark, sf_dir, "documents")
-    # token arrays pinned once for the two partial aggs (r11 hoist; see
-    # pmi_collocations — the docstring's 'one scan' promise was only
-    # true before the fold/WS contracts made re-tokenizing expensive)
-    arrs = d.select(
-        "doc_id", tokens(fold_case(F.col("text"))).alias("t")
-    ).localCheckpoint(eager=False)
-    toks = arrs.select("doc_id", F.explode("t").alias("token"))
+    # token arrays: the two partial aggs (the docstring's 'one scan'
+    # promise was only true before the fold/WS contracts made
+    # re-tokenizing expensive)
+    toks = _token_arrays(d, "doc_id").select("doc_id", F.explode("t").alias("token"))
     first = toks.groupBy("token").agg(F.min("doc_id").alias("first_seen"))
     dl = toks.groupBy("doc_id").agg(F.count("*").alias("n_toks"))
     nd = d.agg(F.count("*").alias("n_docs"))
@@ -2697,16 +2647,8 @@ def pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     pushes the rank limit into the per-partition sort)."""
     from ..operators.dedup import top_k_per_group
 
-    d = T(spark, sf_dir, "documents")
-    # toks feeds BOTH the unigram and the bigram pass: pin it once
-    # (localCheckpoint) or the fold+regex tokenize — the expensive
-    # codegen stage since the WS_CLASS/fold_case contracts — runs twice
-    # over the corpus (measured 2.5x at sf0.1, r11). Same materialize-
-    # vs-recompute call as `bi` below; the token arrays are ~text-sized,
-    # the honest cost of a two-consumer tokenize at any scale.
-    toks = d.select("lang", tokens(fold_case(F.col("text"))).alias("t")).localCheckpoint(
-        eager=False
-    )
+    # toks feeds BOTH the unigram and the bigram pass
+    toks = _token_arrays(T(spark, sf_dir, "documents"), "lang")
     uni = (
         toks.select("lang", F.explode("t").alias("token"))
         .groupBy("lang", "token")
@@ -2726,9 +2668,7 @@ def pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("lang", F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"))
     )
-    bi = trans.groupBy("lang", "w1", "w2").agg(F.count("*").alias("bcnt")).localCheckpoint(
-        eager=False
-    )
+    bi = pin(trans.groupBy("lang", "w1", "w2").agg(F.count("*").alias("bcnt")))
     btot = bi.groupBy("lang").agg(F.sum("bcnt").alias("n2"))
     scored = (
         bi.filter(F.col("bcnt") >= _PMI_MIN_COUNT)
@@ -2809,12 +2749,11 @@ def doc_continuation_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundary width for natural text); no
     window, no quadratic stage, linear in the corpus."""
     d = T(spark, sf_dir, "documents")
-    # token arrays pinned once for the tails + heads consumers (r11
-    # hoist; see pmi_collocations)
-    toks = (
-        d.select("doc_id", "lang", tokens(fold_case(F.col("text"))).alias("t"))
-        .filter(F.size("t") >= _CONT_M)
-        .localCheckpoint(eager=False)
+    # token arrays: the tails + heads consumers
+    toks = pin(
+        d.select("doc_id", "lang", tokens(fold_case(F.col("text"))).alias("t")).filter(
+            F.size("t") >= _CONT_M
+        )
     )
     tails = toks.select(
         F.col("doc_id").alias("id_prev"),
@@ -3224,11 +3163,10 @@ def quality_duplication_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..operators.textops import quality_score
 
-    pairs = (
+    pairs = pin(
         minhash_lsh_candidates(spark, sf_dir)
         .filter(F.col("jac") >= _CLUSTER_JAC)
         .select("id_a", "id_b")
-        .localCheckpoint(eager=False)
     )
     members = (
         pairs.select(F.col("id_a").alias("m"))
@@ -3236,15 +3174,17 @@ def quality_duplication_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     # r14 (guide §5): q feeds the histogram, the doc count AND the final
-    # labeled join — pin so the scan + tokenize/regex quality score runs
-    # once instead of three times.
-    q = quality_score(T(spark, sf_dir, "documents")).select(
-        "doc_id",
-        # IEEE floor-grid, NOT F.round(·,4) — see _LIFT_QUALITY_EXPR
-        F.floor(F.col("quality") * F.lit(10000.0) + F.lit(0.5))
-        .cast("bigint")
-        .alias("qv"),
-    ).localCheckpoint(eager=False)
+    # labeled join — the scan + tokenize/regex quality score runs once
+    # instead of three times.
+    q = pin(
+        quality_score(T(spark, sf_dir, "documents")).select(
+            "doc_id",
+            # IEEE floor-grid, NOT F.round(·,4) — see _LIFT_QUALITY_EXPR
+            F.floor(F.col("quality") * F.lit(10000.0) + F.lit(0.5))
+            .cast("bigint")
+            .alias("qv"),
+        )
+    )
     hist = q.groupBy("qv").agg(F.count("*").alias("c"))
     wc = Window.orderBy("qv").rowsBetween(Window.unboundedPreceding, 0)
     cdf = hist.withColumn("cum_lt", F.sum("c").over(wc) - F.col("c"))

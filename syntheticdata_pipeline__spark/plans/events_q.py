@@ -24,6 +24,7 @@ from ..functions.determinism import (
     floor_bucket_start_sql,
     unit_rand_sql,
 )
+from ..session import pin
 from . import register
 from .common import T
 
@@ -936,10 +937,9 @@ def exact_median_two_pass(spark: SparkSession, sf_dir: str) -> DataFrame:
     # histogram rows) but their lineage re-embeds the fact scan; without
     # truncation every downstream reference re-expands it and the final
     # plan re-scans the fact combinatorially (the connected_components
-    # precedent). localCheckpoint pins each tiny table after one
-    # computation, so the fact table is scanned O(passes) times, not
-    # O(references).
-    k = (
+    # precedent). Pinning each tiny table after one computation scans
+    # the fact table O(passes) times, not O(references).
+    k = pin(
         ev.groupBy("event_type")
         .agg(
             F.count("*").alias("n"),
@@ -947,7 +947,6 @@ def exact_median_two_pass(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("value").alias("mx"),
         )
         .withColumn("k", F.expr("(n + 1) DIV 2"))
-        .localCheckpoint(eager=False)
     )
     b = _MED_B
 
@@ -979,11 +978,7 @@ def exact_median_two_pass(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.max("cum").alias("before1"))
     )
     # before1 is absent when the target is the first bucket
-    t1full = (
-        t1.join(o1, "event_type", "left")
-        .na.fill({"before1": 0})
-        .localCheckpoint(eager=False)
-    )
+    t1full = pin(t1.join(o1, "event_type", "left").na.fill({"before1": 0}))
     b2 = (
         b1.join(F.broadcast(t1full), "event_type")
         .filter(F.col("bkt") == F.col("tb"))
@@ -1024,11 +1019,7 @@ def exact_median_two_pass(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type")
         .agg(F.max("cum").alias("before2"))
     )
-    t2full = (
-        t2.join(o2, "event_type", "left")
-        .na.fill({"before2": 0})
-        .localCheckpoint(eager=False)
-    )
+    t2full = t2.join(o2, "event_type", "left").na.fill({"before2": 0})
     wfin = Window.partitionBy("event_type").orderBy("value")
     fin = (
         b2.join(F.broadcast(t2full), "event_type")

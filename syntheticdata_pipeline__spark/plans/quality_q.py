@@ -25,6 +25,7 @@ from ..operators.textops import (
     gopher_flags,
     quality_score,
 )
+from ..session import pin
 from . import register
 from .common import T
 
@@ -79,13 +80,11 @@ def gopher_quality_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher/C4-style rule battery rolled up per lang. One scan, all
     rules evaluated JVM-side, partial-agg shuffle on ~languages keys —
     a pure map-side pass at any scale. The token array is pinned ONCE
-    via the shared localCheckpoint token base (r13 hoist, queued fix
-    #9): the five rule expressions used to re-inline the fold+regex
-    tokenizer under projection collapse, running it 5× per row."""
+    (r13 hoist, queued fix #9) as a barrier, not for reuse: the five
+    rule expressions used to re-inline the fold+regex tokenizer under
+    projection collapse, running it 5× per row."""
     d = T(spark, sf_dir, "documents")
-    arrs = d.select("lang", tokens(F.col("text")).alias("__toks")).localCheckpoint(
-        eager=False
-    )
+    arrs = pin(d.select("lang", tokens(F.col("text")).alias("__toks")))
     f = gopher_flags(arrs, toks_col="__toks").select(
         "lang", "flag_short", "flag_wordlen", "flag_lowstop"
     )

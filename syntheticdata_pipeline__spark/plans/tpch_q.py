@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.determinism import davg, davg_sql, dsum, dsum_sql
+from ..session import pin
 from . import register
 from .common import T
 
@@ -800,12 +801,11 @@ def tpch_q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = T(spark, sf_dir, "part").filter(
         (F.col("p_type") == "SMALL") & F.col("p_size").between(10, 30)
     )
-    # cand feeds both the per-part MIN and the final equality join; pin
-    # it so the fact-table aggregation underneath runs once.
-    cand = (
-        ps.join(F.broadcast(p), F.col("pk") == F.col("p_partkey"))
-        .join(F.broadcast(eu), F.col("sk") == F.col("s_suppkey"))
-        .localCheckpoint(eager=False)
+    # cand feeds both the per-part MIN and the final equality join
+    cand = pin(
+        ps.join(F.broadcast(p), F.col("pk") == F.col("p_partkey")).join(
+            F.broadcast(eu), F.col("sk") == F.col("s_suppkey")
+        )
     )
     mn = cand.groupBy(F.col("p_partkey").alias("mpk")).agg(
         F.min("supplycost").alias("min_cost")

@@ -27,6 +27,7 @@ from ..operators.similarity import (
     lsh_bucket_sql,
     lsh_bucketed_topk,
 )
+from ..session import pin
 from . import register
 from .common import T
 
@@ -366,20 +367,13 @@ def ann_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     three registered ANN plans; the intersection join is on (query_id,
     neighbor_id) — query-sized, broadcastable at any corpus scale."""
     # The filtered corpus feeds all THREE arms (each reads it twice:
-    # corpus + query side) — pin it so the parquet scan and the
-    # valid-vector forall run once, not six times (the arms' internal
-    # broadcasts are all explicit F.broadcast, so the stats loss from
-    # lineage truncation is harmless here — the multi-referenced-subtree
-    # rule, PERF.md optimization log #7).
-    e = _valid_vecs(spark, sf_dir).localCheckpoint(eager=False)
-    # brute feeds the hit join AND the truth total — pin it so the exact
-    # search runs once. lsh/ivf are each referenced once; pinning them
-    # would only add materialization jobs.
-    brute = (
-        _ann_brute_kernel(e)
-        .select("query_id", "neighbor_id")
-        .localCheckpoint(eager=False)
-    )
+    # corpus + query side) — the parquet scan and the valid-vector forall
+    # run once, not six times (the arms' internal broadcasts are all
+    # explicit F.broadcast, so the pin's stats loss is harmless here).
+    e = pin(_valid_vecs(spark, sf_dir))
+    # brute feeds the hit join AND the truth total; lsh/ivf are each
+    # referenced once and stay unpinned.
+    brute = pin(_ann_brute_kernel(e).select("query_id", "neighbor_id"))
     lsh = _ann_lsh_kernel(e).select(
         F.lit("lsh").alias("method"), "query_id", "neighbor_id"
     )
@@ -1469,12 +1463,9 @@ def ann_dim_truncation_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = e.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("cv"))
     from pyspark.sql import Window
 
-    # base feeds the truth pass plus one pass per truncation dim:
-    # truncate its lineage so the scored cross join computes once.
-    base = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .localCheckpoint(eager=False)
+    # base feeds the truth pass plus one pass per truncation dim
+    base = pin(
+        c.crossJoin(F.broadcast(q)).filter(F.col("neighbor_id") != F.col("query_id"))
     )
     w = lambda s: Window.partitionBy("query_id").orderBy(F.col(s).desc(), "neighbor_id")  # noqa: E731
     truth = (

@@ -74,6 +74,23 @@ def get_spark(
     return ensure_runtime_confs(builder.getOrCreate())
 
 
+def pin(df: DataFrame) -> DataFrame:
+    """Compute ``df`` once for every reference to it in the final plan.
+
+    Pin a DataFrame only when it is (a) small relative to its lineage and
+    (b) referenced more than once (PERF.md log #7). A pin truncates the
+    lineage, so each reference re-reads the pinned rows instead of
+    re-expanding the whole upstream plan; it also strips the optimizer's
+    statistics (a pinned side no longer auto-broadcasts) and runs the
+    input's shuffle stages when the plan is built. Pinning a
+    single-reference table pays both costs for nothing.
+    ``tests/test_plan_contracts.py`` checks rule (b) at every call site.
+
+    The pin is lazy: the first action that reads it materializes it.
+    """
+    return df.localCheckpoint(eager=False)
+
+
 def _default_driver_mem() -> str:
     """24g, or three quarters of the host's RAM (MemTotal) when that is
     smaller, so the default heap never exceeds the machine."""

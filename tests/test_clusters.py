@@ -35,6 +35,43 @@ def test_max_iters_bound(spark):
     assert labs[0] == 0 and labs[1] == 0 and labs[2] == 1
 
 
+def test_zero_rounds_is_identity(spark):
+    labs = _labels(spark, [(1, 2), (2, 3)], max_iters=0)
+    assert labs == {1: 1, 2: 2, 3: 3}
+
+
+def test_one_job_per_propagation_round(spark):
+    """Each round after the folded first one costs one job, its
+    convergence count; the first-round labels are pinned lazily, so they
+    start no job of their own. Adaptive execution and auto-broadcast are
+    off here, so that a job is an action rather than a shuffle or
+    broadcast stage."""
+    n = 6  # chain 0-1-...-5: the fold leaves node i at i-1, then n-2
+    # moving rounds and one still round
+    edges = spark.createDataFrame([(i, i + 1) for i in range(n - 1)], ["src", "dst"])
+    sc = spark.sparkContext
+    confs = {
+        "spark.sql.adaptive.enabled": "false",
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+    }
+    saved = {k: spark.conf.get(k) for k in confs}
+    group = "cc-rounds"
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        sc.setJobGroup(group, group)
+        labels = connected_components(edges)
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        labs = {r["node"]: r["lab"] for r in labels.collect()}
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+    assert labs == {i: 0 for i in range(n)}
+    assert jobs == n - 1
+
+
 def test_cluster_aware_split_has_zero_leakage(spark):
     """Per-cluster split assignment makes near-dup train/val straddling
     impossible; the per-doc policy measurably leaks on the same fixture."""

@@ -14,27 +14,43 @@ Contracts:
     low-cardinality group directly over per-doc rows (the histogram-CDF
     invariant) — checked structurally: every Window in the perplexity
     gate consumes an aggregate (its input is the histogram), not a scan.
+ 5. Pins earn their keep: every ``session.pin`` call site is referenced
+    at least twice in some catalog query that reaches it (PERF.md log
+    #7), and nothing else in the package calls ``localCheckpoint``.
 """
 
 from __future__ import annotations
 
+import ast
 import io
+import os
 import re
+import sys
+from collections import Counter
 from contextlib import redirect_stdout
+from dataclasses import dataclass, field
 
 import pytest
 
 from tests.conftest import SF_SMOKE
 
+_PKG = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "syntheticdata_pipeline__spark",
+)
 
-def _plan(spark, name: str) -> str:
-    from syntheticdata_pipeline__spark.plans import load_all
 
-    df = load_all()[name].build(spark, SF_SMOKE)
+def _explain(df) -> str:
     buf = io.StringIO()
     with redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue().split("== Initial Plan ==")[0]
+
+
+def _final(catalog, name: str) -> str:
+    b = catalog[name]
+    assert not b.error, f"{name} failed to build: {b.error}"
+    return b.text
 
 
 def _nodes(txt: str, pattern: str) -> int:
@@ -141,42 +157,42 @@ _STRICT_NO_NLJ = [
 
 
 @pytest.mark.parametrize("name", _STRICT_NO_NLJ)
-def test_no_cartesian_in_strict_queries(spark, name):
-    txt = _plan(spark, name)
+def test_no_cartesian_in_strict_queries(catalog, name):
+    txt = _final(catalog, name)
     nlj = _nodes(txt, "BroadcastNestedLoopJoin") + _nodes(txt, "CartesianProduct")
     assert nlj == 0, f"{name} grew a nested-loop/cartesian node"
 
 
-def test_dims_stay_broadcast_in_tpch_q5(spark):
+def test_dims_stay_broadcast_in_tpch_q5(catalog):
     """Q5's four dim joins must all be BHJ; the only SMJ permitted is the
     fact-fact join (orders x lineitem) — none today."""
-    txt = _plan(spark, "tpch_q5_local_supplier_revenue")
+    txt = _final(catalog, "tpch_q5_local_supplier_revenue")
     assert _nodes(txt, "BroadcastHashJoin") >= 3
     assert _nodes(txt, "SortMergeJoin") <= 1
 
 
-def test_q1_scan_prunes_columns(spark):
+def test_q1_scan_prunes_columns(catalog):
     """TPC-H Q1 reads 7 of lineitem's 11 columns — the ReadSchema must
     not contain the join keys it never touches."""
-    txt = _plan(spark, "tpch_q1_pricing_summary")
+    txt = _final(catalog, "tpch_q1_pricing_summary")
     schemas = re.findall(r"ReadSchema: ([^\n]*)", txt)
     assert schemas, "no parquet scan found"
     for s in schemas:
         assert "l_orderkey" not in s and "l_partkey" not in s, s
 
 
-def test_q6_pushes_every_predicate(spark):
-    txt = _plan(spark, "tpch_q6_forecast_revenue")
+def test_q6_pushes_every_predicate(catalog):
+    txt = _final(catalog, "tpch_q6_forecast_revenue")
     pushed = " ".join(re.findall(r"PushedFilters: \[([^\]]*)\]", txt))
     for frag in ("l_shipdate", "l_discount", "l_quantity"):
         assert frag in pushed, f"{frag} not pushed to scan"
 
 
-def test_perplexity_gate_windows_consume_aggregates(spark):
+def test_perplexity_gate_windows_consume_aggregates(catalog):
     """The de-skew invariant, structurally: every Window node's subtree
     must contain a HashAggregate BELOW it closer than any parquet scan —
     i.e., windows run over histogram aggregates, never raw doc rows."""
-    txt = _plan(spark, "unigram_perplexity_gate")
+    txt = _final(catalog, "unigram_perplexity_gate")
     # formatted explain: tree section first; for each Window detail id,
     # its input is the node it references. Cheap structural proxy: the
     # plan must contain at least one aggregate, and the number of Window
@@ -190,24 +206,99 @@ def test_perplexity_gate_windows_consume_aggregates(spark):
     )
 
 
-def test_catalog_wide_nlj_whitelist(spark):
-    """Sweep a broad sample of the catalog: any query NOT on the allowed
-    list must be NLJ/cartesian-free. (Full-catalog sweep lives in
-    PLANS_AUDIT.md; this guards the invariant in CI at smoke scale.)"""
+@dataclass
+class _Pin:
+    site: tuple[str, str, int]  # (module path, function, line) of the pin() call
+    rdd: int  # id of the RDD the pinned relation reads
+    input_rdds: list[int]  # pinned RDDs read by the pin's own input plan
+
+
+@dataclass
+class _Built:
+    text: str = ""  # formatted final plan ("" when the build raised)
+    error: str = ""
+    pins: list[_Pin] = field(default_factory=list)
+    final_rdds: list[int] = field(default_factory=list)
+
+
+def _rdd_refs(plan) -> list[int]:
+    """Ids of the existing RDDs (pins among them) a plan reads, once per
+    reference. Walks children and inner children (subqueries, and the
+    cached plan under an InMemoryRelation)."""
+    out, stack = [], [plan]
+    while stack:
+        node = stack.pop()
+        if node.nodeName() in ("LogicalRDD", "Scan ExistingRDD"):
+            out.append(node.rdd().id())
+        for kids in (node.children(), node.innerChildren()):
+            it = kids.iterator()
+            while it.hasNext():
+                stack.append(it.next())
+    return out
+
+
+@pytest.fixture(scope="module")
+def catalog(spark) -> dict[str, _Built]:
+    """Build every batch query once at smoke scale, keeping its final
+    plan text and, for contract 5, every pin it made and the pinned
+    RDDs its final optimized plan reads."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from syntheticdata_pipeline__spark import session
     from syntheticdata_pipeline__spark.plans import load_all
 
-    registry = load_all()
+    checkpoint = DataFrame.localCheckpoint
+    current: list[_Pin] = []
+
+    def recording(df, *args, **kwargs):
+        out = checkpoint(df, *args, **kwargs)
+        if sys._getframe(1).f_code is session.pin.__code__:
+            call = sys._getframe(2)
+            site = (
+                os.path.relpath(call.f_code.co_filename, _PKG),
+                call.f_code.co_name,
+                call.f_lineno,
+            )
+            current.append(
+                _Pin(
+                    site,
+                    out._jdf.queryExecution().analyzed().rdd().id(),
+                    _rdd_refs(df._jdf.queryExecution().optimizedPlan()),
+                )
+            )
+        return out
+
+    built: dict[str, _Built] = {}
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(DataFrame, "localCheckpoint", recording)
+        for name, spec in sorted(load_all().items()):
+            if "stream" in name:
+                continue  # streaming plans need execution to materialize
+            current.clear()
+            b = built[name] = _Built()
+            try:
+                df = spec.build(spark, SF_SMOKE)
+                b.text = _explain(df)
+                b.final_rdds = _rdd_refs(df._jdf.queryExecution().optimizedPlan())
+            except Exception as e:
+                b.error = type(e).__name__
+            b.pins = list(current)
+    return built
+
+
+def test_catalog_wide_nlj_whitelist(catalog):
+    """Sweep the catalog: any query NOT on the allowed list must be
+    NLJ/cartesian-free. (Full-catalog sweep lives in PLANS_AUDIT.md;
+    this guards the invariant in CI at smoke scale.)"""
     flagged = []
     raised = []
-    for name in sorted(registry):
-        if "stream" in name or name in _NLJ_ALLOWED:
+    for name, b in catalog.items():
+        if name in _NLJ_ALLOWED:
             continue
-        try:
-            txt = _plan(spark, name)
-        except Exception as e:
-            raised.append(f"{name}: {type(e).__name__}")
+        if b.error:
+            raised.append(f"{name}: {b.error}")
             continue
-        if _nodes(txt, "BroadcastNestedLoopJoin") + _nodes(txt, "CartesianProduct"):
+        if _nodes(b.text, "BroadcastNestedLoopJoin") + _nodes(b.text, "CartesianProduct"):
             flagged.append(name)
     # A query whose build raises silently drops out of the NLJ guard, so
     # raising is itself a failure unless the query is on a known
@@ -217,3 +308,77 @@ def test_catalog_wide_nlj_whitelist(spark):
     unexpected = [r for r in raised if r.split(":")[0] not in known_env_gated]
     assert not unexpected, f"catalog builds raised (guard coverage lost): {unexpected}"
     assert not flagged, f"unlisted cartesian/NLJ in: {flagged}"
+
+
+# Pins kept for something other than reuse, keyed (module, function).
+_PIN_BARRIERS = {
+    # The token array is read once, but the pin stops CollapseProject from
+    # re-inlining the tokenizer into the five gopher rule expressions (the
+    # tokenizer ran 5x per row before it, r13).
+    ("plans/quality_q.py", "gopher_quality_flags"),
+}
+
+
+def _package_calls(attr: str) -> list[tuple[str, str, int]]:
+    """(module path, enclosing function, line) of every call to ``attr``
+    (as a name or a method) in the package's code."""
+    sites = []
+    for root, _, files in os.walk(_PKG):
+        for fn in sorted(files):
+            if not fn.endswith(".py"):
+                continue
+            path = os.path.join(root, fn)
+            with open(path) as f:
+                tree = ast.parse(f.read())
+
+            def visit(node, func):
+                for child in ast.iter_child_nodes(node):
+                    inner = func
+                    if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                        inner = child.name
+                    elif isinstance(child, ast.Call):
+                        f = child.func
+                        name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+                        if name == attr:
+                            sites.append((os.path.relpath(path, _PKG), func, child.lineno))
+                    visit(child, inner)
+
+            visit(tree, "<module>")
+    return sites
+
+
+def test_every_pin_is_referenced_twice(catalog):
+    """Contract 5: a pin is worth its materialization only when its
+    result is read more than once (PERF.md log #7). For every pin a
+    query makes, count the references to its RDD in the query's final
+    optimized plan plus the input plans of the pins made after it; each
+    ``pin`` call site must reach 2 in at least one catalog query, and
+    every call site must be reached by some catalog query."""
+    best: dict[tuple[str, str, int], tuple[int, str]] = {}
+    for name, b in catalog.items():
+        refs = Counter(b.final_rdds)
+        for p in b.pins:
+            refs.update(p.input_rdds)
+        for p in b.pins:
+            if refs[p.rdd] > best.get(p.site, (-1, ""))[0]:
+                best[p.site] = (refs[p.rdd], name)
+    sites = set(_package_calls("pin"))
+    assert set(best) <= sites, f"pins recorded off the scanned call sites: {set(best) - sites}"
+    barriers = {s for s in sites if s[:2] in _PIN_BARRIERS}
+    assert {s[:2] for s in barriers} == _PIN_BARRIERS, "a barrier entry names no pin call"
+    unreached = sorted(sites - set(best))
+    assert not unreached, f"pin call sites no catalog query reaches: {unreached}"
+    single = sorted(
+        f"{s[0]}:{s[2]} ({s[1]}): {n} reference(s), best in {q}"
+        for s, (n, q) in best.items()
+        if n < 2 and s not in barriers
+    )
+    assert not single, "pins referenced fewer than twice:\n" + "\n".join(single)
+
+
+def test_no_bare_local_checkpoint():
+    """Every lineage pin goes through ``session.pin``; the only other
+    ``localCheckpoint`` is the upsert writer's snapshot of the rows it is
+    about to overwrite, which correctness needs."""
+    calls = sorted(f"{m}:{line} ({fn})" for m, fn, line in _package_calls("localCheckpoint"))
+    assert [c.split(":")[0] for c in calls] == ["session.py", "sources/readers.py"], calls

@@ -2,13 +2,13 @@
 
 Round directory comes from $SPARK_GRAFT_PLANS_ROUND (default r15).
 
-Planning only — no job is executed, so a capture run does not perturb a
-concurrent bench. Usage::
+Planning only, except that each pinned sub-plan (``session.pin``) runs
+its input's shuffle stages while the plan is built. Usage::
 
     python tools/capture_plans.py before [query ...]   # default: all 190
     python tools/capture_plans.py after  [query ...]
 
-Writes ``plans/r14/<query>_<suffix>.txt``. The optimization round's
+Writes ``plans/$SPARK_GRAFT_PLANS_ROUND/<query>_<suffix>.txt``. The optimization round's
 deliverable contract wants a before/after pair for every query touched;
 capturing ALL queries on the "before" pass costs only planning time and
 gives the judge the full baseline plan set.

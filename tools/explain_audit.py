@@ -45,8 +45,7 @@ def audit(name: str, txt: str) -> dict:
     ]
     return {
         "name": name,
-        "cached": "InMemoryRelation" in txt or "InMemoryTableScan" in txt,
-        # localCheckpoint(eager=False) truncates lineage: the parquet scans
+        # a pin (session.pin) truncates lineage: the parquet scans
         # execute inside the checkpointed stages and the FINAL plan starts
         # from "Scan ExistingRDD ... localCheckpoint" — report those so a
         # scans=0 row reads as "pinned base", not "scans nothing"
@@ -91,21 +90,6 @@ def main() -> None:
             print(f"| {name} | ERROR {exc} | | | | | |")
             continue
         a = audit(name, txt)
-        if a["cached"]:
-            # A builder that pins a shared base (.cache()) hides its scans
-            # behind InMemoryRelation, so the audit would show scans=0 and
-            # empty pushdown (r10 ADVICE). Re-explain with the cache
-            # cleared to recover the scan evidence, and keep the cached
-            # row annotated — the executed plan DOES read the cache.
-            try:
-                spark.catalog.clearCache()
-                a2 = audit(name, plan_text(registry[name].build(spark, SF_DIR)))
-                for k in ("scans", "pushed", "readschema"):
-                    a[k] = a2[k]
-            except Exception:  # noqa: BLE001
-                pass  # keep the cached-plan row; annotation below flags it
-        # never let one query's pinned base leak into the next plan
-        spark.catalog.clearCache()
         print(
             f"| {a['name']} | {a['exchanges']} | {a['bhj']} | {a['smj']} | {a['nlj']} "
             f"| {a['wscg']} | {a['scans']} |"
@@ -115,9 +99,7 @@ def main() -> None:
     for name, a in details:
         interesting = [p for p in a["pushed"] if p.strip()]
         note = ""
-        if a["cached"]:
-            note = " (scans recovered from uncached re-explain; executed plan reads a pinned cache)"
-        elif a["rdd_scans"] and not a["scans"]:
+        if a["rdd_scans"] and not a["scans"]:
             note = (
                 f" (lineage truncated by localCheckpoint: {a['rdd_scans']} pinned-base"
                 " RDD scan(s); parquet pushdown happens inside the checkpointed stages)"
