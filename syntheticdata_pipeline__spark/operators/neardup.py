@@ -10,9 +10,11 @@ Scale design:
 - Shingling + signatures are map-side only (one corpus scan).
 - LSH banding turns the quadratic all-pairs problem into a groupBy on
   (band_id, band_hash) — candidate pairs come from a self-join *within
-  buckets*, which is the standard 100 TB-safe plan. Bucket skew (a
-  boilerplate shingle shared by millions of docs) is handled by AQE skew
-  join + an optional bucket-size cap.
+  buckets*, which is the standard 100 TB-safe plan. Band keys come only
+  from :func:`band_key` / :func:`band_key_sql` and band rows only from
+  :func:`_band_rows`. Bucket skew is left to AQE skew join; LSH buckets
+  have no size cap (the one cap in this module is
+  :func:`jaccard_pairs_inverted`'s ``df_cap`` on shingle postings).
 """
 
 from __future__ import annotations
@@ -194,32 +196,33 @@ def expand_collapsed_pairs(
     return cross.unionByName(within)
 
 
-def minhash_lsh_pairs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 12,
-    bands: int = 4,
-    shingle_n: int = 3,
-) -> DataFrame:
-    """Candidate near-dup pairs: docs sharing ≥1 LSH band.
+def band_key(sig: Column | list[Column], band: int, rows: int) -> Column:
+    """LSH band key: signature entries ``band*rows`` … ``band*rows+rows-1``
+    concatenated. ``sig`` is an array column or a list of the per-hash
+    columns (``sig[i]`` indexes either, so the ``h*`` columns of
+    :func:`minhash_mins_agg` band without being packed into an array).
+    NULL when any entry is NULL: a NULL-text doc (all-NULL signature)
+    lands in no bucket, which :func:`incremental_minhash_dedup`'s
+    NULL-text rule relies on."""
+    return F.concat(*[sig[band * rows + r] for r in range(rows)])
 
-    rows-per-band = num_hashes/bands; a pair collides on a band iff that
-    slice of the signature matches exactly. Returns (id_a, id_b, n_bands)
-    with id_a < id_b.
-    """
-    # Stage 1: shingle once. The explode+aggregate min-hash kernel
-    # references the shingle expression exactly once (a generator input),
-    # so the old anti-CollapseProject barrier exchange (which existed to
-    # stop the 12 HOF lambdas each re-evaluating split/slice/md5 —
-    # measured 60s→2s at sf0.1) is no longer needed; dropping it removes
-    # a full shuffle of the shingle arrays (r14, guide §2.4).
-    shingled = (
-        docs.select(F.col(id_col).alias("id"), F.col(text_col).alias("__txt"))
-        .repartition("id")  # parallelize raw rows (single input split otherwise)
-        .select("id", word_shingles(F.col("__txt"), shingle_n).alias("sh"))
-    )
-    return minhash_pairs_from_sets(shingled, num_hashes=num_hashes, bands=bands)
+
+def band_key_sql(sig_sql: str, band: int, rows: int) -> str:
+    """DuckDB twin of :func:`band_key` (1-based slice). Equal to it on
+    signatures without NULL entries; ``array_to_string`` skips NULLs."""
+    return f"array_to_string({sig_sql}[{band * rows + 1}:{(band + 1) * rows}], '')"
+
+
+def _band_keys(sig: Column | list[Column], num_hashes: int, bands: int) -> list[Column]:
+    rows = num_hashes // bands
+    return [band_key(sig, b, rows) for b in range(bands)]
+
+
+def _band_rows(df: DataFrame, keep: list[str], keys: list[Column], key_col: str = "bh") -> DataFrame:
+    """One row per (input row, band): ``keep`` plus (band, ``key_col``)
+    with band b keyed by ``keys[b]`` — the stack every band join reads."""
+    pairs = [c for b, key in enumerate(keys) for c in (F.lit(b), key)]
+    return df.select(*keep, F.stack(F.lit(len(keys)), *pairs).alias("band", key_col))
 
 
 def minhash_mins_agg(
@@ -263,14 +266,18 @@ def minhash_pairs_from_sets(
     num_hashes: int = 12,
     bands: int = 4,
 ) -> DataFrame:
-    """Banding stage of :func:`minhash_lsh_pairs`, taking pre-computed
-    shingle sets (columns ``id``, ``sh``) — split out so callers can
-    collapse identical sets first and band only the representatives."""
-    rows_per_band = num_hashes // bands
-    # Stage 2: min-hashes via the explode+aggregate kernel (r14, guide
-    # §4.1) — value-identical to the 12 interpreted HOF columns.
+    """Candidate near-dup pairs: sets sharing ≥1 LSH band. Takes
+    pre-computed shingle sets (columns ``id``, ``sh``), so callers can
+    collapse identical sets first and band only the representatives, and
+    shingle once for banding and verification alike.
+
+    rows-per-band = num_hashes/bands; a pair collides on a band iff that
+    slice of the signature matches exactly. Returns (id_a, id_b, n_bands)
+    with id_a < id_b."""
+    # Min-hashes via the explode+aggregate kernel (r14, guide §4.1) —
+    # value-identical to the 12 interpreted HOF columns.
     mins = minhash_mins_agg(shingled, num_hashes)
-    # Stage 3: band rows via stack. r15: the old explicit
+    # Band rows straight off the h* columns. r15: the old explicit
     # .repartition("band", "bh") ("pre-partition so the self-join reuses
     # ONE exchange for both sides") was FALSIFIED by the committed r14
     # plan dump: the planner broadcasts one join side, so the sides are a
@@ -286,11 +293,8 @@ def minhash_pairs_from_sets(
     # the materialization costs more than the duplicated ~2k-distinct-doc
     # signature aggregate saves at sf0.1 — same verdict class as the r14
     # lsh_band_sweep kernel revert.)
-    stack_args = ", ".join(
-        f"{b}, concat({', '.join(f'h{b * rows_per_band + r}' for r in range(rows_per_band))})"
-        for b in range(bands)
-    )
-    banded = mins.selectExpr("id", f"stack({bands}, {stack_args}) AS (band, bh)")
+    hashes = [F.col(f"h{i}") for i in range(num_hashes)]
+    banded = _band_rows(mins, ["id"], _band_keys(hashes, num_hashes, bands))
     left = banded.alias("l")
     right = banded.alias("r")
     return (
@@ -464,19 +468,16 @@ def jaccard_sql(a: str, b: str) -> str:
     )
 
 
-def simhash16(text_col: Column, salt: str = "sh") -> Column:
-    """16-bit SimHash over whitespace tokens.
-
-    Bit b is 1 iff Σ_tokens (±1 by bit b of md5(token)) > 0. Bits come from
-    hex nibbles of the md5 (nibble b > 7 ⇒ bit set) — portable to DuckDB.
-    16 bits keeps the expression tree (and the oracle) tractable while
-    exercising the real SimHash plan shape; widen to 64 by raising
-    ``n_bits`` in :func:`simhash_bits`.
-    """
-    return simhash_bits(text_col, 16, salt)
+# Width of every SimHash signature the pair path bands and compares:
+# hamming16 counts exactly these bits, so it is not a parameter there.
+SIMHASH_BITS = 16
 
 
 def simhash_bits(text_col: Column, n_bits: int, salt: str) -> Column:
+    """``n_bits``-bit SimHash over whitespace tokens (expression form).
+
+    Bit b is 1 iff Σ_tokens (±1 by bit b of md5(token)) > 0. Bits come from
+    hex nibbles of the md5 (nibble b > 7 ⇒ bit set) — portable to DuckDB."""
     toks = tokens(text_col)
 
     def bit_vote(b: int):
@@ -512,7 +513,7 @@ def simhash_sig_agg(
     df: DataFrame,
     id_col: str = "id",
     text_col: str = "__txt",
-    n_bits: int = 16,
+    n_bits: int = SIMHASH_BITS,
     salt: str = "sh",
     sig_col: str = "sig",
 ) -> DataFrame:
@@ -562,7 +563,10 @@ def hamming16(a: Column, b: Column) -> Column:
     (expression form; portable)."""
     x = a.bitwiseXOR(b)
     return sum(
-        [F.when(x.bitwiseAND(F.lit(1 << b)) != 0, F.lit(1)).otherwise(F.lit(0)) for b in range(16)],
+        [
+            F.when(x.bitwiseAND(F.lit(1 << b)) != 0, F.lit(1)).otherwise(F.lit(0))
+            for b in range(SIMHASH_BITS)
+        ],
         F.lit(0),
     )
 
@@ -570,7 +574,8 @@ def hamming16(a: Column, b: Column) -> Column:
 def hamming16_sql(a: str, b: str) -> str:
     # NB: loop variable must not shadow the operand names
     terms = [
-        f"CASE WHEN xor({a}, {b}) & {1 << bit} != 0 THEN 1 ELSE 0 END" for bit in range(16)
+        f"CASE WHEN xor({a}, {b}) & {1 << bit} != 0 THEN 1 ELSE 0 END"
+        for bit in range(SIMHASH_BITS)
     ]
     return "(" + " + ".join(terms) + ")"
 
@@ -579,7 +584,6 @@ def simhash_hamming_pairs(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    n_bits: int = 16,
     bands: int = 4,
     max_hamming: int = 3,
     salt: str = "sh",
@@ -596,12 +600,12 @@ def simhash_hamming_pairs(
     for the Hamming metric (the classic Google near-dup crawl design).
 
     Collapse (r13): the band join runs over DISTINCT SIGNATURES, not
-    docs. An n_bits signature has at most 2**n_bits values (65,536 at 16
-    bits), so the quadratic stage is bounded by that CONSTANT regardless
-    of corpus size — without it, a 4-bit band value has only 16 buckets
+    docs. A SIMHASH_BITS signature has at most 2**16 = 65,536 values, so
+    the quadratic stage is bounded by that CONSTANT regardless of corpus
+    size — without it, a 4-bit band value has only 16 buckets
     and every bucket grows O(n), making the join quadratic in the corpus
     at 100 TB. Two-level: identical TEXT collapses first (cheap md5 key,
-    so byte-replicas never recompute the expensive n_bits-aggregate
+    so byte-replicas never recompute the expensive 16-vote aggregate
     signature), then identical signatures merge across text groups.
     Hamming depends only on the signature, so the expansion back to
     member pairs is output-identical (within-group pairs are distance 0;
@@ -613,7 +617,6 @@ def simhash_hamming_pairs(
         docs,
         id_col=id_col,
         text_col=text_col,
-        n_bits=n_bits,
         bands=bands,
         max_hamming=max_hamming,
         salt=salt,
@@ -631,7 +634,6 @@ def simhash_hamming_rep_pairs(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    n_bits: int = 16,
     bands: int = 4,
     max_hamming: int = 3,
     salt: str = "sh",
@@ -640,7 +642,7 @@ def simhash_hamming_rep_pairs(
     """Stages 1-3 of :func:`simhash_hamming_pairs` — collapse, band
     join, Hamming verify — WITHOUT the member-pair expansion: returns
     ``(rep_pairs, groups)`` (groups is None with ``collapse_identical``
-    off, and the pairs are then final). Split out (r14) so the 2**n_bits
+    off, and the pairs are then final). Split out (r14) so the 2**16
     band-stage bound is measurable in isolation: on a replica-laced
     corpus the full query's output is quadratic in replica-group size BY
     CONTRACT (every member pair is emitted), which swamps any wall-clock
@@ -652,7 +654,7 @@ def simhash_hamming_rep_pairs(
         raise ValueError(
             f"banding is only exact for max_hamming < bands (got {max_hamming} >= {bands})"
         )
-    bits_per_band = n_bits // bands
+    bits_per_band = SIMHASH_BITS // bands
     mask = (1 << bits_per_band) - 1
     src = docs.select(F.col(id_col).alias("id"), F.col(text_col).alias("__txt")).repartition(
         "id"
@@ -671,15 +673,14 @@ def simhash_hamming_rep_pairs(
         # member lists on the (co-partitioned) group id
         tsigs = tgroups.select("id", "members").join(
             simhash_sig_agg(
-                tgroups.select("id", "__txt"), id_col="id", text_col="__txt",
-                n_bits=n_bits, salt=salt,
+                tgroups.select("id", "__txt"), id_col="id", text_col="__txt", salt=salt
             ),
             "id",
         )
         # level 2: identical signature → one band-join row per distinct
-        # signature (≤ 2**n_bits rows, corpus-size-independent); member
+        # signature (≤ 2**16 rows, corpus-size-independent); member
         # lists merge, the representative id is the min over the union
-        # pinned (≤ 2**n_bits rows): groups feeds the band join AND three
+        # pinned (≤ 2**16 rows): groups feeds the band join AND three
         # branches of expand_collapsed_pairs
         groups = pin(
             tsigs.groupBy("sig").agg(
@@ -689,15 +690,11 @@ def simhash_hamming_rep_pairs(
         )
         sigs = groups.select("id", "sig").repartition("id")
     else:
-        sigs = simhash_sig_agg(
-            src, id_col="id", text_col="__txt", n_bits=n_bits, salt=salt
-        ).repartition("id")
-    stack_args = ", ".join(
-        f"{b}, shiftright(sig, {b * bits_per_band}) & {mask}" for b in range(bands)
-    )
-    banded = sigs.selectExpr(
-        "id", "sig", f"stack({bands}, {stack_args}) AS (band, bv)"
-    ).repartition("band", "bv")
+        sigs = simhash_sig_agg(src, id_col="id", text_col="__txt", salt=salt).repartition("id")
+    slices = [
+        F.shiftright("sig", b * bits_per_band).bitwiseAND(F.lit(mask)) for b in range(bands)
+    ]
+    banded = _band_rows(sigs, ["id", "sig"], slices, "bv").repartition("band", "bv")
     # explicit renames (not .alias views): a self-join on the same lineage
     # silently resolves l.sig/r.sig to one side, making xor(sig,sig)=0
     left = banded.select(
@@ -757,15 +754,6 @@ def estimated_jaccard(sig_a: Column, sig_b: Column) -> Column:
         lambda acc, x: acc + x,
     )
     return agree.cast("double") / F.size(sig_a).cast("double")
-
-
-def _sig_band_rows(sigs: DataFrame, num_hashes: int, bands: int) -> DataFrame:
-    rows_per_band = num_hashes // bands
-    stack_args = ", ".join(
-        f"{b}, concat({', '.join(f'sig[{b * rows_per_band + r}]' for r in range(rows_per_band))})"
-        for b in range(bands)
-    )
-    return sigs.selectExpr("id", "sig", f"stack({bands}, {stack_args}) AS (band, bh)")
 
 
 def incremental_minhash_dedup(
@@ -845,21 +833,13 @@ def incremental_minhash_dedup(
     )
     collapse_dups = keyed.filter(sig_ok & (F.col("id") > F.col("__gmin"))).select("id")
     reps = keyed.filter(sig_ok & (F.col("id") == F.col("__gmin"))).select("id", "sig")
-    new_bands = _sig_band_rows(reps, num_hashes, bands).repartition("band", "bh")
 
-    # within-batch: earlier batch doc wins
-    l = new_bands.select(
-        F.col("id").alias("id_a"), F.col("sig").alias("sig_a"), "band", "bh"
-    )
-    r = new_bands.select(
-        F.col("id").alias("id_b"), F.col("sig").alias("sig_b"), "band", "bh"
-    )
-    cand = (
-        l.join(r, ["band", "bh"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "sig_a", "sig_b")
-        .distinct()
-    )
+    def band_rows(df: DataFrame) -> DataFrame:
+        keys = _band_keys(F.col("sig"), num_hashes, bands)
+        return _band_rows(df, ["id", "sig"], keys).repartition("band", "bh")
+
+    new_bands = band_rows(reps)
+    earlier = new_bands
     if state_sigs is not None:
         # prior side collapses the same way: "∃ prior doc of signature S
         # with lower id" ⟺ "the min-id prior doc of S has lower id"
@@ -875,24 +855,30 @@ def incremental_minhash_dedup(
         prior_reps = prior_keyed.filter(sig_ok & (F.col("id") == F.col("__gmin"))).select(
             "id", "sig"
         )
-        prior_bands = _sig_band_rows(prior_reps, num_hashes, bands).repartition("band", "bh")
-        p = prior_bands.select(
-            F.col("id").alias("id_a"), F.col("sig").alias("sig_a"), "band", "bh"
-        )
-        # id_a < id_b re-asserts the "ids monotone across batches"
-        # precondition at runtime: a state row with a HIGHER id than a
-        # batch doc is NOT an earlier doc, and silently counting it as
-        # one would drop docs a one-shot run keeps (breaking the
-        # associativity guarantee above). With monotone ids the filter
-        # passes everything; with violated ids it degrades to the
-        # correct earlier-wins rule instead of corrupting the output.
-        vs_prior = (
-            p.join(r, ["band", "bh"])
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b", "sig_a", "sig_b")
-            .distinct()
-        )
-        cand = cand.unionByName(vs_prior)
+        earlier = new_bands.unionByName(band_rows(prior_reps))
+
+    # ONE band join: (batch ∪ prior) band rows against the batch's. Union
+    # distributes over the join, so this is the within-batch join plus the
+    # vs-prior join. id_a < id_b makes the earlier doc win inside the
+    # batch, and against the prior side it re-asserts the "ids monotone
+    # across batches" precondition at runtime: a state row with a HIGHER
+    # id than a batch doc is NOT an earlier doc, and silently counting it
+    # as one would drop docs a one-shot run keeps (breaking the
+    # associativity guarantee above). With monotone ids the filter
+    # passes every vs-prior pair; with violated ids it degrades to the
+    # correct earlier-wins rule instead of corrupting the output.
+    l = earlier.select(
+        F.col("id").alias("id_a"), F.col("sig").alias("sig_a"), "band", "bh"
+    )
+    r = new_bands.select(
+        F.col("id").alias("id_b"), F.col("sig").alias("sig_b"), "band", "bh"
+    )
+    cand = (
+        l.join(r, ["band", "bh"])
+        .filter(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b", "sig_a", "sig_b")
+        .distinct()
+    )
 
     dup_ids = (
         cand.filter(estimated_jaccard(F.col("sig_a"), F.col("sig_b")) >= est_threshold)

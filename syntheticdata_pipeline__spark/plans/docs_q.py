@@ -18,6 +18,8 @@ from ..functions.text import (
     ws_normalize_sql,
 )
 from ..operators.neardup import (
+    band_key,
+    band_key_sql,
     hamming16_sql,
     jaccard,
     jaccard_sql,
@@ -186,12 +188,14 @@ def ngram_jaccard_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
 _MH_HASHES = 12
 _MH_BANDS = 6  # 2 rows per band → generous candidate recall
 
+# The oracles' band chain: banded AS (SELECT doc_id, {_bands_select} FROM
+# sigs) holds one key column per band, and long_bands AS ({_bands_union})
+# reads it back as (doc_id, band, bh) rows.
 _bands_select = ", ".join(
-    f"array_to_string(sig[{b * (_MH_HASHES // _MH_BANDS) + 1}:{(b + 1) * (_MH_HASHES // _MH_BANDS)}], '') AS bh{b}"
-    for b in range(_MH_BANDS)
+    f"{band_key_sql('sig', b, _MH_HASHES // _MH_BANDS)} AS bh{b}" for b in range(_MH_BANDS)
 )
 _bands_union = " UNION ALL ".join(
-    f"SELECT doc_id, {b} AS band, bh{b} AS bh FROM sigs" for b in range(_MH_BANDS)
+    f"SELECT doc_id, {b} AS band, bh{b} AS bh FROM banded" for b in range(_MH_BANDS)
 )
 
 _MINHASH_ORACLE = f"""
@@ -201,7 +205,7 @@ sigs AS (
   SELECT doc_id, {minhash_signature_sql('shingles', _MH_HASHES)} AS sig, shingles FROM sh),
 banded AS (
   SELECT doc_id, {_bands_select} FROM sigs),
-long_bands AS ({_bands_union.replace('FROM sigs', 'FROM banded')}),
+long_bands AS ({_bands_union}),
 cand AS (
   SELECT l.doc_id AS id_a, r.doc_id AS id_b, COUNT(*) AS n_bands
   FROM long_bands l JOIN long_bands r
@@ -698,7 +702,7 @@ WITH sh AS (
 sigs AS (
   SELECT doc_id, lang, {minhash_signature_sql('shingles', _MH_HASHES)} AS sig FROM sh),
 banded AS (SELECT doc_id, sig, {_bands_select} FROM sigs),
-long_bands AS ({_bands_union.replace('FROM sigs', 'FROM banded')}),
+long_bands AS ({_bands_union}),
 cand AS (
   SELECT DISTINCT l0.doc_id AS id_a, r0.doc_id AS id_b
   FROM long_bands l0 JOIN long_bands r0
@@ -747,12 +751,6 @@ def incremental_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
 _DP_JAC = 0.5
 
 _sig12 = minhash_signature_sql("shingles", _MH_HASHES)
-_dp_bands_select = ", ".join(
-    f"array_to_string(sig[{b * 2 + 1}:{(b + 1) * 2}], '') AS bh{b}" for b in range(_MH_BANDS)
-)
-_dp_bands_union = " UNION ALL ".join(
-    f"SELECT doc_id, {b} AS band, bh{b} AS bh FROM banded" for b in range(_MH_BANDS)
-)
 
 _DEDUP_PIPE_ORACLE = f"""
 WITH keyed AS (
@@ -765,8 +763,8 @@ exact_survivors AS (
   WHERE rn = 1),
 sh AS (SELECT doc_id, lang, {word_shingles_sql('text')} AS shingles FROM exact_survivors),
 sigs AS (SELECT doc_id, {_sig12} AS sig, shingles FROM sh),
-banded AS (SELECT doc_id, {_dp_bands_select} FROM sigs),
-long_bands AS ({_dp_bands_union}),
+banded AS (SELECT doc_id, {_bands_select} FROM sigs),
+long_bands AS ({_bands_union}),
 cand AS (
   SELECT l.doc_id AS id_a, r.doc_id AS id_b
   FROM long_bands l JOIN long_bands r
@@ -793,7 +791,7 @@ def corpus_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     → per-lang survivor counts. The chained plan a 100 TB corpus dedup
     actually runs (each stage shrinks the next stage's input)."""
     from ..operators.dedup import anti_join_state, first_wins
-    from ..operators.neardup import minhash_lsh_pairs
+    from ..operators.neardup import minhash_pairs_from_sets
 
     d = T(spark, sf_dir, "documents")
     keyed = d.select(
@@ -811,11 +809,14 @@ def corpus_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         first_wins(keyed, ["ck"], [F.col("doc_id")]).select("doc_id", "lang", "text")
     )
 
-    cand = minhash_lsh_pairs(
-        survivors, id_col="doc_id", text_col="text", num_hashes=_MH_HASHES, bands=_MH_BANDS
-    )
-    # shingle sets feed BOTH verification-join sides
+    # shingled once: the sets feed the banding AND both verification-join
+    # sides
     sh = pin(survivors.select("doc_id", word_shingles(F.col("text")).alias("shingles")))
+    cand = minhash_pairs_from_sets(
+        sh.select(F.col("doc_id").alias("id"), F.col("shingles").alias("sh")),
+        num_hashes=_MH_HASHES,
+        bands=_MH_BANDS,
+    )
     verified = (
         cand.join(sh.withColumnRenamed("doc_id", "id_a").withColumnRenamed("shingles", "sh_a"), "id_a")
         .join(sh.withColumnRenamed("doc_id", "id_b").withColumnRenamed("shingles", "sh_b"), "id_b")
@@ -884,7 +885,7 @@ def simhash_hamming_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.neardup import simhash_hamming_pairs
 
     d = T(spark, sf_dir, "documents")
-    return simhash_hamming_pairs(d, n_bits=16, bands=4, max_hamming=3)
+    return simhash_hamming_pairs(d, bands=4, max_hamming=3)
 
 
 # --------------------------------------------------------------------------
@@ -2330,7 +2331,7 @@ def _sweep_oracle() -> str:
     cfgs = []
     for b, r in _SWEEP_CONFIGS:
         union = " UNION ALL ".join(
-            f"SELECT doc_id, {j} AS band, array_to_string(sig[{j * r + 1}:{(j + 1) * r}], '') AS bh FROM sigs"
+            f"SELECT doc_id, {j} AS band, {band_key_sql('sig', j, r)} AS bh FROM sigs"
             for j in range(b)
         )
         thr = (1.0 / b) ** (1.0 / r)
@@ -2416,7 +2417,7 @@ def lsh_band_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
                         F.struct(
                             F.lit(ci).alias("cfg"),
                             F.lit(j).alias("band"),
-                            F.concat_ws("", F.slice("sig", j * r + 1, r)).alias("bh"),
+                            band_key(F.col("sig"), j, r).alias("bh"),
                         )
                         for j in range(b)
                     ]

@@ -194,26 +194,9 @@ def stream_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     NULL; the BATCH tumbling twin instead keeps a NULL bucket per GROUP
     BY semantics) — and window.start is the FLOOR bucket for pre-epoch
     timestamps, which the oracle's `//` truncation used to get wrong."""
-    from ..streaming.windows import read_events_stream, run_to_memory
+    from ..streaming.windows import read_events_stream, run_to_memory, tumbling_counts
 
-    ev = read_events_stream(spark, sf_dir)
-    agg = (
-        ev.withWatermark("ts", "10 minutes")
-        .groupBy(F.window("ts", "5 minutes"), "event_type")
-        .agg(
-            F.count("*").cast("bigint").alias("n_events"),
-            F.sum(finite_or_null(F.col("value")).cast("decimal(28,12)"))
-            .cast("double")
-            .alias("sum_value"),
-        )
-        .select(
-            F.unix_micros(F.col("window.start")).alias("window_start_us"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
-    )
-    return run_to_memory(agg)
+    return run_to_memory(tumbling_counts(read_events_stream(spark, sf_dir)))
 
 
 # --------------------------------------------------------------------------

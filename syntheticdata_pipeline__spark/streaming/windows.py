@@ -21,6 +21,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.determinism import finite_or_null
 from ..session import read_parquet
 
 
@@ -51,13 +52,18 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def tumbling_counts(events: DataFrame, width: str = "5 minutes", watermark: str = "10 minutes") -> DataFrame:
-    """R7: windowed telemetry aggregation with late-data watermark."""
+    """R7: windowed telemetry aggregation with late-data watermark.
+
+    ``sum_value`` skips NaN/±inf like NULL (finite_or_null contract, r9),
+    as the oracle of the ``stream_tumbling_counts`` catalog query does."""
     return (
         events.withWatermark("ts", watermark)
         .groupBy(F.window("ts", width), F.col("event_type"))
         .agg(
             F.count("*").cast("bigint").alias("n_events"),
-            F.sum(F.col("value").cast("decimal(28,12)")).cast("double").alias("sum_value"),
+            F.sum(finite_or_null(F.col("value")).cast("decimal(28,12)"))
+            .cast("double")
+            .alias("sum_value"),
         )
         .select(
             F.unix_micros(F.col("window.start")).alias("window_start_us"),

@@ -177,7 +177,7 @@ def test_simhash_hamming_pairs_pigeonhole_complete(spark):
     d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     banded = {
         (r.id_a, r.id_b): r.hamming
-        for r in simhash_hamming_pairs(d, n_bits=16, bands=4, max_hamming=3).collect()
+        for r in simhash_hamming_pairs(d, bands=4, max_hamming=3).collect()
     }
     sigs = d.select(F.col("doc_id").alias("id"), simhash_bits(F.col("text"), 16, "sh").alias("sig"))
     a = sigs.select(F.col("id").alias("id_a"), F.col("sig").alias("sa"))

@@ -17,6 +17,8 @@ Contracts:
  5. Pins earn their keep: every ``session.pin`` call site is referenced
     at least twice in some catalog query that reaches it (PERF.md log
     #7), and nothing else in the package calls ``localCheckpoint``.
+ 6. One banding path: LSH band keys and band rows are built only by
+    the helpers in ``operators/neardup.py`` (a source-text check).
 """
 
 from __future__ import annotations
@@ -382,3 +384,39 @@ def test_no_bare_local_checkpoint():
     about to overwrite, which correctness needs."""
     calls = sorted(f"{m}:{line} ({fn})" for m, fn, line in _package_calls("localCheckpoint"))
     assert [c.split(":")[0] for c in calls] == ["session.py", "sources/readers.py"], calls
+
+
+# How a signature becomes LSH band rows, written as source text: the
+# Spark stack of band rows, a Spark slice-join band key, and the DuckDB
+# slice-join band key. Each may appear only in its one helper.
+_BAND_HELPERS = {
+    r"\bstack\(": {("operators/neardup.py", "_band_rows")},
+    r'concat_ws\(""\s*,\s*F\.slice\(': set(),
+    r"array_to_string\([^(),]*\[[^\]]*\], ''\)": {("operators/neardup.py", "band_key_sql")},
+}
+
+
+def test_band_keys_have_one_home():
+    """LSH band keys come only from ``neardup.band_key``/``band_key_sql``
+    and band rows only from ``neardup._band_rows`` (one banding decision,
+    not one copy per query)."""
+    found: dict[str, set[tuple[str, str]]] = {p: set() for p in _BAND_HELPERS}
+    for root, _, files in os.walk(_PKG):
+        for fn in sorted(files):
+            if not fn.endswith(".py"):
+                continue
+            path = os.path.join(root, fn)
+            with open(path) as f:
+                src = f.read()
+            funcs = [
+                (n.lineno, n.end_lineno, n.name)
+                for n in ast.walk(ast.parse(src))
+                if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+            ]
+            for lineno, line in enumerate(src.splitlines(), 1):
+                for pattern in _BAND_HELPERS:
+                    if re.search(pattern, line):
+                        inner = [f for f in funcs if f[0] <= lineno <= f[1]]
+                        name = max(inner)[2] if inner else "<module>"
+                        found[pattern].add((os.path.relpath(path, _PKG), name))
+    assert found == _BAND_HELPERS
