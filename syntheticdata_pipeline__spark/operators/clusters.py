@@ -14,6 +14,10 @@ on node — no driver-side graph, no quadratic step. Lineage is truncated
 per round with a pin (otherwise the plan doubles each iteration); the
 convergence probe is a count() action per round, which is
 how iterative DataFrame algorithms are driven (cf. GraphFrames).
+
+The DuckDB oracles get the same (node, lab) relation from
+``connected_components_sql``: an exact recursive transitive closure,
+affordable at oracle scale.
 """
 
 from __future__ import annotations
@@ -96,6 +100,29 @@ def connected_components(
     finally:
         sym.unpersist()
     return labels
+
+
+def connected_components_sql(edges: str, src: str, dst: str) -> str:
+    """DuckDB twin of ``connected_components``: the CTE list of the exact
+    transitive closure over relation ``edges`` (undirected, columns
+    ``src``/``dst``), ending in ``labels(node, lab)`` with ``lab`` the MIN
+    node id of the component. Splice it into a ``WITH RECURSIVE`` after
+    the CTE that defines ``edges``.
+
+    The symmetric edge table is MATERIALIZED: the recursion reads it once
+    per step, and an inlined edge source (the whole MinHash pair
+    pipeline, for the near-dup oracles) would re-run at every read. The
+    closure has no round bound, so it agrees with the Spark labels
+    wherever the graph diameter stays under ``max_iters``."""
+    return f"""cc_sym AS MATERIALIZED (
+  SELECT {src} AS a, {dst} AS b FROM {edges}
+  UNION ALL
+  SELECT {dst} AS a, {src} AS b FROM {edges}),
+reach(node, dst) AS (
+  SELECT DISTINCT a, a FROM cc_sym
+  UNION
+  SELECT reach.node, e.b FROM reach JOIN cc_sym e ON reach.dst = e.a),
+labels AS (SELECT node, MIN(dst) AS lab FROM reach GROUP BY node)"""
 
 
 def kmeans_fixed_iters(

@@ -551,7 +551,8 @@ def weighted_sample_no_replacement(spark: SparkSession, sf_dir: str) -> DataFram
 # side by side: leaked near-dup pairs + split sizes per method.
 # --------------------------------------------------------------------------
 
-from .docs_q import _CLUSTER_JAC, _MINHASH_ORACLE  # noqa: E402
+from ..operators.clusters import connected_components, connected_components_sql  # noqa: E402
+from .docs_q import _NEAR_DUP_EDGES_ORACLE, _near_dup_edges  # noqa: E402
 
 
 def _split_case_sql(key_sql: str) -> str:
@@ -561,25 +562,18 @@ def _split_case_sql(key_sql: str) -> str:
 
 
 _LEAK_ORACLE = f"""
-WITH RECURSIVE pairs AS ({_MINHASH_ORACLE}),
-e AS (SELECT id_a, id_b FROM pairs WHERE jac >= {_CLUSTER_JAC}),
-edges AS (SELECT id_a AS a, id_b AS b FROM e UNION ALL SELECT id_b AS a, id_a AS b FROM e),
-nodes AS (SELECT DISTINCT a AS node FROM edges),
-reach(src, dst) AS (
-  SELECT node, node FROM nodes
-  UNION
-  SELECT reach.src, ed.b FROM reach JOIN edges ed ON reach.dst = ed.a),
-lab0 AS (SELECT src AS doc_id, MIN(dst) AS lab FROM reach GROUP BY src),
+WITH RECURSIVE {_NEAR_DUP_EDGES_ORACLE},
+{connected_components_sql('near_dup_edges', 'id_a', 'id_b')},
 lab AS (
   SELECT d.doc_id, COALESCE(l.lab, d.doc_id) AS lab
-  FROM documents d LEFT JOIN lab0 l ON d.doc_id = l.doc_id),
+  FROM documents d LEFT JOIN labels l ON d.doc_id = l.node),
 asg AS (
   SELECT doc_id,
          {_split_case_sql('doc_id')} AS split_doc,
          {_split_case_sql('lab')} AS split_cluster
   FROM lab)
 SELECT 'by_doc' AS method,
-  (SELECT CAST(COUNT(*) AS BIGINT) FROM e
+  (SELECT CAST(COUNT(*) AS BIGINT) FROM near_dup_edges e
      JOIN asg x ON e.id_a = x.doc_id JOIN asg y ON e.id_b = y.doc_id
    WHERE x.split_doc != y.split_doc) AS leaked_pairs,
   CAST(SUM(CASE WHEN split_doc = 'train' THEN 1 ELSE 0 END) AS BIGINT) AS n_train,
@@ -588,7 +582,7 @@ SELECT 'by_doc' AS method,
 FROM asg
 UNION ALL
 SELECT 'by_cluster' AS method,
-  (SELECT CAST(COUNT(*) AS BIGINT) FROM e
+  (SELECT CAST(COUNT(*) AS BIGINT) FROM near_dup_edges e
      JOIN asg x ON e.id_a = x.doc_id JOIN asg y ON e.id_b = y.doc_id
    WHERE x.split_cluster != y.split_cluster) AS leaked_pairs,
   CAST(SUM(CASE WHEN split_cluster = 'train' THEN 1 ELSE 0 END) AS BIGINT) AS n_train,
@@ -613,17 +607,10 @@ def cluster_aware_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     md5 draw of dataset_split_counts, just keyed on the label. At 100 TB
     the label join is the dedup pipeline's existing output — leakage-safe
     splitting costs one extra broadcast-joined column."""
-    from ..operators.clusters import connected_components
-    from .docs_q import minhash_lsh_candidates
-
     # pin the pair list: it feeds the per-doc AND per-cluster policies
     # below, and without truncation each reference re-runs the whole LSH
     # pipeline (the plan carried 20 document scans).
-    pairs = pin(
-        minhash_lsh_candidates(spark, sf_dir)
-        .filter(F.col("jac") >= _CLUSTER_JAC)
-        .select("id_a", "id_b")
-    )
+    pairs = pin(_near_dup_edges(spark, sf_dir))
     labels = connected_components(pairs, src="id_a", dst="id_b").withColumnRenamed(
         "node", "doc_id"
     )

@@ -17,6 +17,7 @@ from ..functions.text import (
     ws_normalize,
     ws_normalize_sql,
 )
+from ..operators.clusters import connected_components, connected_components_sql
 from ..operators.neardup import (
     band_key,
     band_key_sql,
@@ -201,7 +202,7 @@ _bands_union = " UNION ALL ".join(
 _MINHASH_ORACLE = f"""
 WITH sh AS (
   SELECT doc_id, {word_shingles_sql('text')} AS shingles FROM documents),
-sigs AS (
+sigs AS MATERIALIZED (
   SELECT doc_id, {minhash_signature_sql('shingles', _MH_HASHES)} AS sig, shingles FROM sh),
 banded AS (
   SELECT doc_id, {_bands_select} FROM sigs),
@@ -1267,28 +1268,37 @@ def token_overlap_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # Near-dup CLUSTERS: connected components over the verified LSH pairs —
 # candidate pairs are only half the dedup story; survivors are picked per
-# transitive component. Oracle computes the same components with a
-# recursive transitive-closure CTE (exact at oracle scale).
+# transitive component. Oracles compute the same components with the
+# exact closure of operators.clusters.connected_components_sql.
 # --------------------------------------------------------------------------
 
+# The near-dup edge rule, once per engine: a verified LSH pair is a
+# cluster edge when its Jaccard reaches _CLUSTER_JAC. The oracle side is
+# a CTE list ending in near_dup_edges(id_a, id_b); its pair list is
+# MATERIALIZED, so DuckDB runs the MinHash pipeline once however often
+# the edges are read.
 _CLUSTER_JAC = 0.2
 
+_NEAR_DUP_EDGES_ORACLE = f"""pairs AS MATERIALIZED ({_MINHASH_ORACLE}),
+near_dup_edges AS (SELECT id_a, id_b FROM pairs WHERE jac >= {_CLUSTER_JAC})"""
+
+
+def _near_dup_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Near-dup edges (id_a, id_b): the verified LSH pairs at the cluster
+    threshold. Unpinned — a caller that reads the edges twice pins them."""
+    return (
+        minhash_lsh_candidates(spark, sf_dir)
+        .filter(F.col("jac") >= _CLUSTER_JAC)
+        .select("id_a", "id_b")
+    )
+
+
 _CLUSTERS_ORACLE = f"""
-WITH RECURSIVE pairs AS ({_MINHASH_ORACLE}),
-edges AS (
-  SELECT id_a AS a, id_b AS b FROM pairs WHERE jac >= {_CLUSTER_JAC}
-  UNION ALL
-  SELECT id_b AS a, id_a AS b FROM pairs WHERE jac >= {_CLUSTER_JAC}),
-nodes AS (SELECT DISTINCT a AS node FROM edges),
-reach(src, dst) AS (
-  SELECT node, node FROM nodes
-  UNION
-  SELECT reach.src, e.b FROM reach JOIN edges e ON reach.dst = e.a),
-lab AS (
-  SELECT src AS doc_id, MIN(dst) AS cluster_rep FROM reach GROUP BY src)
-SELECT doc_id, cluster_rep,
-       COUNT(*) OVER (PARTITION BY cluster_rep) AS cluster_size
-FROM lab
+WITH RECURSIVE {_NEAR_DUP_EDGES_ORACLE},
+{connected_components_sql('near_dup_edges', 'id_a', 'id_b')}
+SELECT node AS doc_id, lab AS cluster_rep,
+       COUNT(*) OVER (PARTITION BY lab) AS cluster_size
+FROM labels
 """
 
 
@@ -1299,11 +1309,7 @@ def neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     sizes. Each round is one node-keyed equi-join + partial-agg min —
     distributed end-to-end, O(diameter) rounds, lineage truncated per
     round. The quadratic closure exists only in the DuckDB oracle."""
-    from ..operators.clusters import connected_components
-
-    pairs = minhash_lsh_candidates(spark, sf_dir)
-    edges = pairs.filter(F.col("jac") >= _CLUSTER_JAC).select("id_a", "id_b")
-    labels = connected_components(edges, src="id_a", dst="id_b")
+    labels = connected_components(_near_dup_edges(spark, sf_dir), src="id_a", dst="id_b")
     sizes = labels.groupBy("lab").agg(F.count("*").alias("cluster_size"))
     return (
         labels.join(sizes, "lab")
@@ -1316,19 +1322,9 @@ def neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _CLUSTER_DEDUP_ORACLE = f"""
-WITH RECURSIVE pairs AS ({_MINHASH_ORACLE}),
-edges AS (
-  SELECT id_a AS a, id_b AS b FROM pairs WHERE jac >= {_CLUSTER_JAC}
-  UNION ALL
-  SELECT id_b AS a, id_a AS b FROM pairs WHERE jac >= {_CLUSTER_JAC}),
-nodes AS (SELECT DISTINCT a AS node FROM edges),
-reach(src, dst) AS (
-  SELECT node, node FROM nodes
-  UNION
-  SELECT reach.src, e.b FROM reach JOIN edges e ON reach.dst = e.a),
-lab AS (
-  SELECT src AS doc_id, MIN(dst) AS rep FROM reach GROUP BY src),
-dropped AS (SELECT doc_id FROM lab WHERE doc_id != rep)
+WITH RECURSIVE {_NEAR_DUP_EDGES_ORACLE},
+{connected_components_sql('near_dup_edges', 'id_a', 'id_b')},
+dropped AS (SELECT node AS doc_id FROM labels WHERE node != lab)
 SELECT d.lang,
   COUNT(*) AS n_docs,
   CAST(SUM(CASE WHEN dr.doc_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_dropped,
@@ -1345,11 +1341,7 @@ def cluster_dedup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     dropped counts. The drop set is component-members-minus-reps (tiny),
     broadcast into a left join against the corpus — the full corpus is
     never shuffled."""
-    from ..operators.clusters import connected_components
-
-    pairs = minhash_lsh_candidates(spark, sf_dir)
-    edges = pairs.filter(F.col("jac") >= _CLUSTER_JAC).select("id_a", "id_b")
-    labels = connected_components(edges, src="id_a", dst="id_b")
+    labels = connected_components(_near_dup_edges(spark, sf_dir), src="id_a", dst="id_b")
     dropped = labels.filter(F.col("node") != F.col("lab")).select(
         F.col("node").alias("doc_id"), F.lit(True).alias("is_dup")
     )
@@ -1371,22 +1363,12 @@ def cluster_dedup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 _BEST_SURV_ORACLE = f"""
-WITH RECURSIVE pairs AS ({_MINHASH_ORACLE}),
-edges AS (
-  SELECT id_a AS a, id_b AS b FROM pairs WHERE jac >= {_CLUSTER_JAC}
-  UNION ALL
-  SELECT id_b AS a, id_a AS b FROM pairs WHERE jac >= {_CLUSTER_JAC}),
-nodes AS (SELECT DISTINCT a AS node FROM edges),
-reach(src, dst) AS (
-  SELECT node, node FROM nodes
-  UNION
-  SELECT reach.src, e.b FROM reach JOIN edges e ON reach.dst = e.a),
-lab AS (
-  SELECT src AS doc_id, MIN(dst) AS rep FROM reach GROUP BY src),
+WITH RECURSIVE {_NEAR_DUP_EDGES_ORACLE},
+{connected_components_sql('near_dup_edges', 'id_a', 'id_b')},
 qual AS ({_QUALITY_ORACLE}),
 scored AS (
-  SELECT l.doc_id, l.rep, q.quality
-  FROM lab l JOIN qual q ON l.doc_id = q.doc_id),
+  SELECT l.node AS doc_id, l.lab AS rep, q.quality
+  FROM labels l JOIN qual q ON l.node = q.doc_id),
 ranked AS (
   SELECT *,
          row_number() OVER (PARTITION BY rep ORDER BY quality DESC, doc_id) rn,
@@ -1408,12 +1390,9 @@ def cluster_best_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     lexicographic (quality, −doc_id) struct makes the argmax total and
     deterministic at any parallelism. The quadratic closure exists only
     in the DuckDB oracle (min-label propagation on Spark)."""
-    from ..operators.clusters import connected_components
     from ..operators.textops import quality_score
 
-    pairs = minhash_lsh_candidates(spark, sf_dir)
-    edges = pairs.filter(F.col("jac") >= _CLUSTER_JAC).select("id_a", "id_b")
-    labels = connected_components(edges, src="id_a", dst="id_b")
+    labels = connected_components(_near_dup_edges(spark, sf_dir), src="id_a", dst="id_b")
     q = quality_score(T(spark, sf_dir, "documents")).select(
         F.col("doc_id").alias("node"), "quality"
     )
@@ -3115,12 +3094,12 @@ def _lift_oracle() -> str:
 
     qexpr = _LIFT_QUALITY_EXPR.format(stops=repr(list(LANG_STOPWORDS["en"])))
     return f"""
-WITH pairs AS ({_MINHASH_ORACLE}),
+WITH {_NEAR_DUP_EDGES_ORACLE},
 members AS (
   SELECT DISTINCT m FROM (
-    SELECT id_a AS m FROM pairs WHERE jac >= {_CLUSTER_JAC}
+    SELECT id_a AS m FROM near_dup_edges
     UNION ALL
-    SELECT id_b AS m FROM pairs WHERE jac >= {_CLUSTER_JAC})),
+    SELECT id_b AS m FROM near_dup_edges)),
 q AS (
   SELECT doc_id, {qexpr} AS qv
   FROM (SELECT doc_id, text, {tokens_sql('text')} AS toks FROM documents)),
@@ -3164,11 +3143,7 @@ def quality_duplication_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..operators.textops import quality_score
 
-    pairs = pin(
-        minhash_lsh_candidates(spark, sf_dir)
-        .filter(F.col("jac") >= _CLUSTER_JAC)
-        .select("id_a", "id_b")
-    )
+    pairs = pin(_near_dup_edges(spark, sf_dir))
     members = (
         pairs.select(F.col("id_a").alias("m"))
         .unionByName(pairs.select(F.col("id_b").alias("m")))

@@ -20,6 +20,7 @@ from ..functions.determinism import (
     hash_bucket_sql,
 )
 from ..operators.aggregates import max_by_deterministic, split_mean, status_pivot
+from ..operators.clusters import connected_components, connected_components_sql
 from ..operators.dedup import anti_join_state, first_wins, top_k_per_group
 from ..operators.joins import cross_pair_budget, merge_with_precedence
 from . import register
@@ -894,16 +895,10 @@ e0 AS (
   SELECT a.p_partkey AS s, b.p_partkey AS d
   FROM p a JOIN p b ON a.noun = b.noun AND a.p_partkey < b.p_partkey
   WHERE levenshtein(a.p_name, b.p_name) <= {_ER_LEV}),
-edges AS (SELECT s, d FROM e0 UNION ALL SELECT d, s FROM e0),
-nodes AS (SELECT DISTINCT s AS node FROM edges),
-reach(src, dst) AS (
-  SELECT node, node FROM nodes
-  UNION
-  SELECT reach.src, e.d FROM reach JOIN edges e ON reach.dst = e.s),
-lab AS (SELECT src, MIN(dst) AS rep FROM reach GROUP BY src),
+{connected_components_sql('e0', 's', 'd')},
 labeled AS (
-  SELECT a.p_partkey, COALESCE(l.rep, a.p_partkey) AS canonical_id
-  FROM p a LEFT JOIN lab l ON a.p_partkey = l.src)
+  SELECT a.p_partkey, COALESCE(l.lab, a.p_partkey) AS canonical_id
+  FROM p a LEFT JOIN labels l ON a.p_partkey = l.node)
 SELECT x.p_partkey, x.canonical_id, n.p_name AS canonical_name,
        COUNT(*) OVER (PARTITION BY x.canonical_id) AS cluster_size
 FROM labeled x JOIN p n ON x.canonical_id = n.p_partkey
@@ -925,8 +920,6 @@ def entity_resolution_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     the DuckDB oracle); canonical names arrive through one broadcastable
     rep-keyed join; the only window counts rows per already-computed
     cluster id."""
-    from ..operators.clusters import connected_components
-
     p = (
         T(spark, sf_dir, "part")
         .filter(F.col("p_partkey") < _FUZZY_CAP)

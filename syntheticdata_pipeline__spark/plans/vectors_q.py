@@ -21,6 +21,7 @@ from ..functions.vectors import (
     psnr_sql,
     sqdist_sql,
 )
+from ..operators.clusters import connected_components, connected_components_sql
 from ..operators.similarity import (
     brute_force_topk,
     hyperplanes,
@@ -675,17 +676,8 @@ pairs AS (
   SELECT a.vec_id AS id_a, b2.vec_id AS id_b
   FROM b a JOIN b b2 ON a.bucket = b2.bucket AND a.vec_id < b2.vec_id
   WHERE {dot_sql('a.embedding', 'b2.embedding')} >= {_COS_THRESH}),
-edges AS (
-  SELECT id_a AS a, id_b AS b FROM pairs
-  UNION ALL
-  SELECT id_b AS a, id_a AS b FROM pairs),
-nodes AS (SELECT DISTINCT a AS node FROM edges),
-reach(src, dst) AS (
-  SELECT node, node FROM nodes
-  UNION
-  SELECT reach.src, e.b FROM reach JOIN edges e ON reach.dst = e.a),
-lab AS (SELECT src AS vec_id, MIN(dst) AS rep FROM reach GROUP BY src),
-dropped AS (SELECT vec_id FROM lab WHERE vec_id != rep)
+{connected_components_sql('pairs', 'id_a', 'id_b')},
+dropped AS (SELECT node AS vec_id FROM labels WHERE node != lab)
 SELECT e.label,
   COUNT(*) AS n_vecs,
   CAST(SUM(CASE WHEN dr.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_dropped,
@@ -704,7 +696,6 @@ def semantic_dedup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical meaning collapses even when the text differs. The drop set
     (members minus reps) is tiny and broadcast; the corpus is never
     reshuffled."""
-    from ..operators.clusters import connected_components
     from ..operators.similarity import lsh_neardup_pairs
 
     e = _E(spark, sf_dir)

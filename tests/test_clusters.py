@@ -2,30 +2,68 @@
 
 from __future__ import annotations
 
-from syntheticdata_pipeline__spark.operators.clusters import connected_components
+import pytest
+
+from syntheticdata_pipeline__spark.operators.clusters import (
+    connected_components,
+    connected_components_sql,
+)
+
+# Every graph's diameter stays <= 24: connected_components stops after
+# max_iters=25 rounds while the SQL closure is exact, so only graphs
+# inside that bound must agree.
+_GRAPHS = {
+    # chain 1-2-3 plus pair 10-11: two components, min-id reps.
+    "two_components": [(1, 2), (2, 3), (10, 11)],
+    # 0-1-2-...-9: diameter 9, needs multiple propagation rounds.
+    "chain10": [(i, i + 1) for i in range(9)],
+    # same component regardless of (src, dst) orientation.
+    "mixed_orientation": [(5, 2), (2, 9), (9, 5)],
+    "duplicate_edges": [(1, 2), (1, 2), (2, 1), (2, 3), (3, 2)],
+    "self_loop": [(4, 4), (4, 5), (7, 7)],
+    "empty": [],
+}
+
+
+def _edges(spark, edges):
+    return spark.createDataFrame(edges, "src bigint, dst bigint")
 
 
 def _labels(spark, edges, **kw):
-    df = spark.createDataFrame(edges, ["src", "dst"])
-    return {r["node"]: r["lab"] for r in connected_components(df, **kw).collect()}
+    return {r["node"]: r["lab"] for r in connected_components(_edges(spark, edges), **kw).collect()}
 
 
 def test_two_components(spark):
-    # chain 1-2-3 plus pair 10-11: two components, min-id reps.
-    labs = _labels(spark, [(1, 2), (2, 3), (10, 11)])
+    labs = _labels(spark, _GRAPHS["two_components"])
     assert labs == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
 
 
 def test_long_chain_converges(spark):
-    # 0-1-2-...-9: diameter 9, needs multiple propagation rounds.
-    labs = _labels(spark, [(i, i + 1) for i in range(9)])
+    labs = _labels(spark, _GRAPHS["chain10"])
     assert labs == {i: 0 for i in range(10)}
 
 
 def test_edge_direction_irrelevant(spark):
-    # same component regardless of (src, dst) orientation.
-    labs = _labels(spark, [(5, 2), (2, 9), (9, 5)])
+    labs = _labels(spark, _GRAPHS["mixed_orientation"])
     assert labs == {2: 2, 5: 2, 9: 2}
+
+
+@pytest.mark.parametrize("graph", sorted(_GRAPHS))
+def test_sql_twin_matches_spark(spark, graph):
+    """connected_components_sql labels the same rows with the same
+    (node, lab) pairs as connected_components, DuckDB over the same edges."""
+    import duckdb
+
+    edges = _GRAPHS[graph]
+    con = duckdb.connect()
+    con.execute("CREATE TABLE g (src BIGINT, dst BIGINT)")
+    if edges:
+        con.executemany("INSERT INTO g VALUES (?, ?)", edges)
+    got = con.execute(
+        f"WITH RECURSIVE {connected_components_sql('g', 'src', 'dst')} SELECT node, lab FROM labels"
+    ).fetchall()
+    want = connected_components(_edges(spark, edges)).collect()
+    assert sorted(got) == sorted((r["node"], r["lab"]) for r in want)
 
 
 def test_max_iters_bound(spark):

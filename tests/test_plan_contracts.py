@@ -19,6 +19,9 @@ Contracts:
     #7), and nothing else in the package calls ``localCheckpoint``.
  6. One banding path: LSH band keys and band rows are built only by
     the helpers in ``operators/neardup.py`` (a source-text check).
+ 7. One closure path: oracle connected components come only from
+    ``clusters.connected_components_sql`` and the near-dup edge rule
+    only from its docs_q pair (a source-text check).
 """
 
 from __future__ import annotations
@@ -396,11 +399,21 @@ _BAND_HELPERS = {
 }
 
 
-def test_band_keys_have_one_home():
-    """LSH band keys come only from ``neardup.band_key``/``band_key_sql``
-    and band rows only from ``neardup._band_rows`` (one banding decision,
-    not one copy per query)."""
-    found: dict[str, set[tuple[str, str]]] = {p: set() for p in _BAND_HELPERS}
+# The recursive closure (the ``reach`` CTE and its recursive step) and
+# the near-dup edge rule, in either engine's spelling.
+_CLUSTER_HELPERS = {
+    r"\breach\s*\(|\bFROM reach\b": {("operators/clusters.py", "connected_components_sql")},
+    r"jac\"?\)?\s*>=\s*\{?_CLUSTER_JAC\b": {
+        ("plans/docs_q.py", "_near_dup_edges"),
+        ("plans/docs_q.py", "_NEAR_DUP_EDGES_ORACLE"),
+    },
+}
+
+
+def _source_sites(patterns) -> dict[str, set[tuple[str, str]]]:
+    """Where each regex matches a package source line: the (file, name)
+    of the innermost enclosing function or module-level assignment."""
+    found: dict[str, set[tuple[str, str]]] = {p: set() for p in patterns}
     for root, _, files in os.walk(_PKG):
         for fn in sorted(files):
             if not fn.endswith(".py"):
@@ -408,15 +421,35 @@ def test_band_keys_have_one_home():
             path = os.path.join(root, fn)
             with open(path) as f:
                 src = f.read()
-            funcs = [
+            tree = ast.parse(src)
+            scopes = [
                 (n.lineno, n.end_lineno, n.name)
-                for n in ast.walk(ast.parse(src))
+                for n in ast.walk(tree)
                 if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+            ] + [
+                (n.lineno, n.end_lineno, n.targets[0].id)
+                for n in tree.body
+                if isinstance(n, ast.Assign) and isinstance(n.targets[0], ast.Name)
             ]
             for lineno, line in enumerate(src.splitlines(), 1):
-                for pattern in _BAND_HELPERS:
+                for pattern in patterns:
                     if re.search(pattern, line):
-                        inner = [f for f in funcs if f[0] <= lineno <= f[1]]
+                        inner = [f for f in scopes if f[0] <= lineno <= f[1]]
                         name = max(inner)[2] if inner else "<module>"
                         found[pattern].add((os.path.relpath(path, _PKG), name))
-    assert found == _BAND_HELPERS
+    return found
+
+
+def test_band_keys_have_one_home():
+    """LSH band keys come only from ``neardup.band_key``/``band_key_sql``
+    and band rows only from ``neardup._band_rows`` (one banding decision,
+    not one copy per query)."""
+    assert _source_sites(_BAND_HELPERS) == _BAND_HELPERS
+
+
+def test_cluster_closure_has_one_home():
+    """Oracle transitive closures come only from
+    ``clusters.connected_components_sql``, and the near-dup edge rule
+    (verified pair with jac >= _CLUSTER_JAC) only from docs_q's engine
+    pair ``_near_dup_edges`` / ``_NEAR_DUP_EDGES_ORACLE``."""
+    assert _source_sites(_CLUSTER_HELPERS) == _CLUSTER_HELPERS

@@ -109,7 +109,8 @@ def duck_connect(sf_dir: str = SF_DIR):
 
 def compare_one(spark, con, name: str, qs, oracles, sf_dir: str = SF_DIR, record=None):
     """Run one query on Spark and its oracle on DuckDB; print the driver's
-    verdict line. Returns True on PASS, None on rows-only SKIP. When
+    verdict line, which times the Spark and DuckDB sides separately.
+    Returns True on PASS, None on rows-only SKIP. When
     ``record`` is a dict, a CORRECTNESS-shaped row is stored under
     ``name`` (same keys the external driver emits)."""
 
@@ -130,19 +131,22 @@ def compare_one(spark, con, name: str, qs, oracles, sf_dir: str = SF_DIR, record
         scols = sdf.columns
         srows = [tuple(r) for r in sdf.collect()]
         shash, sn = frame_hash(scols, srows)
+        spark_s = time.time() - t0
     except Exception as e:
         print(f"FAIL {name}: SPARK ERROR")
         traceback.print_exc(limit=4)
         rec(err=f"spark: {e!r}"[:300])
         return False
     if name not in oracles:
-        print(f"SKIP {name}: no oracle (rows={sn}) [{time.time()-t0:.1f}s]")
+        print(f"SKIP {name}: no oracle (rows={sn}) [spark {spark_s:.1f}s]")
         rec(rows_match=sn >= 0, spark_rows=sn, err="rows-only (no oracle)")
         return None
+    t1 = time.time()
     try:
         res = con.execute(oracles[name])
         dcols, drows, dtypes = fetch_duck(res)
         dhash, dn = frame_hash(dcols, drows)
+        duck_s = time.time() - t1
     except Exception as e:
         print(f"FAIL {name}: DUCKDB ERROR")
         traceback.print_exc(limit=4)
@@ -166,7 +170,10 @@ def compare_one(spark, con, name: str, qs, oracles, sf_dir: str = SF_DIR, record
             extra = f" rows spark={sn} duck={dn}"
         else:
             extra = f" hash spark={shash} duck={dhash} (rows={sn})"
-    print(f"{'PASS' if ok else 'FAIL'} {name}: rows={sn} [{time.time()-t0:.1f}s]{extra}")
+    print(
+        f"{'PASS' if ok else 'FAIL'} {name}: rows={sn} "
+        f"[spark {spark_s:.1f}s, duckdb {duck_s:.1f}s]{extra}"
+    )
     rec(
         rows_match=sn == dn,
         schema_match=ok_cols and not type_mism,
