@@ -1,4 +1,4 @@
-"""Benchmark runner: executes every benched catalog query at
+"""Benchmark runner: executes every catalog query at
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
 local[$SPARK_GRAFT_CPUS] and prints ONE compact JSON line:
 {"queries": {<headline subset>: sec, ...}, "detail": "BENCH_local.json",
@@ -298,17 +298,16 @@ def main() -> None:
     from syntheticdata_pipeline__spark.session import get_spark
 
     registry = load_all()
-    bench_queries = {n: s for n, s in registry.items() if s.bench}
 
     spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
 
     # Warm-up: JVM + codegen + parquet footer caches.
-    measure(spark, bench_queries[next(iter(bench_queries))].build, SF_DIR, repeats=1)
+    measure(spark, registry[next(iter(registry))].build, SF_DIR, repeats=1)
 
     timings: dict[str, float] = {}
-    for name in sorted(bench_queries):
-        best, n = measure(spark, bench_queries[name].build, SF_DIR)
+    for name in sorted(registry):
+        best, n = measure(spark, registry[name].build, SF_DIR)
         timings[name] = round(best, 3)
         print(f"# {name}: {timings[name]:.3f}s rows={n}", file=sys.stderr)
     # Neither the recheck subprocess nor the stress phase uses this

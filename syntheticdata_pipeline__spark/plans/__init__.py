@@ -2,8 +2,8 @@
 DuckDB oracle SQL) pair, keyed by query name.
 
 ``__spark_entry__.py`` exposes this registry to the correctness driver;
-``bench.py`` runs the ``bench=True`` subset. Import order of the content
-modules populates REGISTRY via the @register decorator.
+``bench.py`` times every entry. Import order of the content modules
+populates REGISTRY via the @register decorator.
 """
 
 from __future__ import annotations
@@ -19,10 +19,6 @@ class QuerySpec:
     name: str
     build: Callable[[SparkSession, str], DataFrame]
     oracle: str | None = None
-    # The whole catalog is benched as of round 10 (190/190 anchored in
-    # bench_baseline.json under the two-context anchor policy); the flag
-    # survives so a future genuinely-unbenchable entry can opt out.
-    bench: bool = True
     doc: str = ""
     tags: tuple[str, ...] = field(default_factory=tuple)
 
@@ -33,14 +29,13 @@ REGISTRY: dict[str, QuerySpec] = {}
 def register(
     name: str,
     oracle: str | None = None,
-    bench: bool = True,
     tags: tuple[str, ...] = (),
 ):
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
         if name in REGISTRY:
             raise ValueError(f"duplicate query name: {name}")
         REGISTRY[name] = QuerySpec(
-            name=name, build=fn, oracle=oracle, bench=bench, doc=fn.__doc__ or "", tags=tags
+            name=name, build=fn, oracle=oracle, doc=fn.__doc__ or "", tags=tags
         )
         return fn
 

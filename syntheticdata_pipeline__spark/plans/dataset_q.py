@@ -96,7 +96,7 @@ FROM packed GROUP BY lang, bin_id
 """
 
 
-@register("pack_token_bins", oracle=_PACK_ORACLE, bench=True, tags=("dataset-prep",))
+@register("pack_token_bins", oracle=_PACK_ORACLE, tags=("dataset-prep",))
 def pack_token_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pack documents (doc_id order per language) into 512-token bins via
     one window cumsum — the packed-example layout step."""
@@ -144,7 +144,7 @@ GROUP BY lang
 """
 
 
-@register("decontaminate_train", oracle=_DECON_ORACLE, bench=True, tags=("dataset-prep", "dedup-exact"))
+@register("decontaminate_train", oracle=_DECON_ORACLE, tags=("dataset-prep", "dedup-exact"))
 def decontaminate_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benchmark decontamination: training docs sharing any word-5-gram
     with the test split are flagged. Plan: the test side's distinct grams
@@ -595,7 +595,6 @@ FROM asg
 @register(
     "cluster_aware_split_leakage",
     oracle=_LEAK_ORACLE,
-    bench=True,
     tags=("dataset-prep", "dedup-minhash", "clusters"),
 )
 def cluster_aware_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -725,7 +724,7 @@ FROM freq GROUP BY lang
 """
 
 
-@register("chunk_level_dedup_stats", oracle=_CHUNK_DEDUP_ORACLE, bench=True, tags=("dataset-prep", "dedup-exact", "M12"))
+@register("chunk_level_dedup_stats", oracle=_CHUNK_DEDUP_ORACLE, tags=("dataset-prep", "dedup-exact", "M12"))
 def chunk_level_dedup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-doc duplicate-chunk stats per lang: every sliding chunk (32
     tokens, stride 24 — identical to chunk_documents) is fingerprinted
@@ -815,7 +814,7 @@ FROM top
 """
 
 
-@register("dsir_importance_resample", oracle=_DSIR_ORACLE, bench=True, tags=("dataset-prep", "M4"))
+@register("dsir_importance_resample", oracle=_DSIR_ORACLE, tags=("dataset-prep", "M4"))
 def dsir_importance_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DSIR data selection (Xie et al. 2023): hashed-bigram features
     (256 buckets), add-one-smoothed target (curated sources src0-src2) vs
@@ -904,7 +903,7 @@ GROUP BY lang
 """
 
 
-@register("bloom_decontaminate", oracle=_BLOOM_ORACLE, bench=True, tags=("dataset-prep", "dedup-exact"))
+@register("bloom_decontaminate", oracle=_BLOOM_ORACLE, tags=("dataset-prep", "dedup-exact"))
 def bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bloom-pre-filtered benchmark decontamination (m = 2^17 bits,
     k = 3 md5-derived hash functions) with an exact verify pass:
@@ -1011,7 +1010,7 @@ FROM classed GROUP BY change_class
 """
 
 
-@register("dataset_version_diff", oracle=_VDIFF_ORACLE, bench=True, tags=("dataset-prep", "D5"))
+@register("dataset_version_diff", oracle=_VDIFF_ORACLE, tags=("dataset-prep", "D5"))
 def dataset_version_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reconcile two corpus snapshots by doc id + content key: counts of
     added / removed / modified / unchanged documents (v2 is derived from
@@ -1115,7 +1114,7 @@ CROSS JOIN n
 """
 
 
-@register("rank_normalized_quality", oracle=_RANKBLEND_ORACLE, bench=True, tags=("dataset-prep", "F4"))
+@register("rank_normalized_quality", oracle=_RANKBLEND_ORACLE, tags=("dataset-prep", "F4"))
 def rank_normalized_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Blend two incomparable per-doc signals — the heuristic quality
     score and raw document length — by mapping each onto its empirical

@@ -74,7 +74,7 @@ GROUP BY lang
 """
 
 
-@register("exact_dedup_docs", oracle=_EXACT_DEDUP_ORACLE, bench=True, tags=("dedup-exact", "D1"))
+@register("exact_dedup_docs", oracle=_EXACT_DEDUP_ORACLE, tags=("dedup-exact", "D1"))
 def exact_dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact content dedup (hash-groupBy): survivors + dropped counts per
     lang. One shuffle on a uniform 128-bit key at any scale."""
@@ -117,7 +117,7 @@ WHERE {jaccard_sql('a.sh', 'b.sh')} >= {_JACCARD_THRESHOLD}
 """
 
 
-@register("ngram_jaccard_pairs", oracle=_JACCARD_ORACLE, bench=True, tags=("dedup-jaccard",))
+@register("ngram_jaccard_pairs", oracle=_JACCARD_ORACLE, tags=("dedup-jaccard",))
 def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Word-3-gram Jaccard over same-language pairs, via the inverted
     shingle index (operators.neardup.jaccard_pairs_inverted): |∩| comes
@@ -161,7 +161,7 @@ WHERE {jaccard_sql('a.sh', 'b.sh')} >= {_JACCARD_THRESHOLD}
 """
 
 
-@register("ngram_jaccard_pruned", oracle=_JACCARD_PRUNED_ORACLE, bench=True, tags=("dedup-jaccard",))
+@register("ngram_jaccard_pruned", oracle=_JACCARD_PRUNED_ORACLE, tags=("dedup-jaccard",))
 def ngram_jaccard_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Jaccard near-dup pairs after dropping boilerplate shingles (doc
     frequency > 4 within a language). A shingle shared by millions of
@@ -219,7 +219,7 @@ JOIN sigs sb ON sb.doc_id = c.id_b
 """
 
 
-@register("minhash_lsh_candidates", oracle=_MINHASH_ORACLE, bench=True, tags=("dedup-minhash",))
+@register("minhash_lsh_candidates", oracle=_MINHASH_ORACLE, tags=("dedup-minhash",))
 def minhash_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash(12) signatures → 6 bands × 2 rows → bucket-join candidates →
     exact Jaccard verification. The LSH plan replaces the all-pairs cross
@@ -287,8 +287,10 @@ def minhash_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _PPL_KEEP_FRAC = 0.75
 
-_PPL_ORACLE = f"""
-WITH toks AS (
+# DuckDB twin of ``_unigram_scores``: the CTE list ending in ``scored``
+# (doc_id, lang, logprob), its per-lang histogram CDF ``cdf`` (lang,
+# logprob, cum) and the per-lang doc count ``n`` (lang, n_docs).
+_UNIGRAM_SCORES_ORACLE = f"""toks AS (
   SELECT doc_id, lang, unnest({tokens_sql(fold_case_sql('text'))}) AS token FROM documents),
 lm AS (
   SELECT lang, token, COUNT(*) AS cnt FROM toks GROUP BY 1, 2),
@@ -304,7 +306,10 @@ hist AS (SELECT lang, logprob, COUNT(*) AS cnt FROM scored GROUP BY 1, 2),
 cdf AS (
   SELECT lang, logprob, SUM(cnt) OVER (PARTITION BY lang ORDER BY logprob) AS cum
   FROM hist),
-n AS (SELECT lang, COUNT(*) AS n_docs FROM scored GROUP BY 1),
+n AS (SELECT lang, COUNT(*) AS n_docs FROM scored GROUP BY 1)"""
+
+_PPL_ORACLE = f"""
+WITH {_UNIGRAM_SCORES_ORACLE},
 q1 AS (
   SELECT c.lang, MIN(c.logprob) AS q1
   FROM cdf c JOIN n ON c.lang = n.lang
@@ -351,7 +356,7 @@ def _unigram_scores(
     return scored, cdf, n
 
 
-@register("unigram_perplexity_gate", oracle=_PPL_ORACLE, bench=True, tags=("text-analysis", "F4"))
+@register("unigram_perplexity_gate", oracle=_PPL_ORACLE, tags=("text-analysis", "F4"))
 def unigram_perplexity_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Perplexity-proxy quality gate: per-language unigram LM trained on
     the corpus itself (two partial-agg counts), each doc scored by mean
@@ -411,7 +416,7 @@ FROM pairs
 """
 
 
-@register("substring_dup_pairs", oracle=_SUBSTR_ORACLE, bench=True, tags=("dedup-jaccard", "D3"))
+@register("substring_dup_pairs", oracle=_SUBSTR_ORACLE, tags=("dedup-jaccard", "D3"))
 def substring_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same-language doc pairs sharing ≥1 verbatim 8-token span, with the
     shared-span count. Inverted 8-gram index (explode → equi-join →
@@ -491,7 +496,7 @@ FROM spans GROUP BY 1, 2
 """
 
 
-@register("substring_max_span", oracle=_MAXSPAN_ORACLE, bench=True, tags=("dedup-jaccard", "D3"))
+@register("substring_max_span", oracle=_MAXSPAN_ORACLE, tags=("dedup-jaccard", "D3"))
 def substring_max_span(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Maximal shared verbatim span per same-language doc pair: positional
     8-gram postings equi-join → matches grouped per (pair, diagonal =
@@ -615,7 +620,7 @@ GROUP BY d.lang
 """
 
 
-@register("substring_dup_removal", oracle=_REMOVAL_ORACLE, bench=True, tags=("dedup-jaccard", "D3"))
+@register("substring_dup_removal", oracle=_REMOVAL_ORACLE, tags=("dedup-jaccard", "D3"))
 def substring_dup_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-lang token-removal stats for first-wins substring dedup: a
     token is removed iff it lies inside an 8-gram that some earlier
@@ -721,7 +726,7 @@ GROUP BY s.lang
 """
 
 
-@register("incremental_dedup_survivors", oracle=_INC_DEDUP_ORACLE, bench=True, tags=("dedup-minhash", "R2"))
+@register("incremental_dedup_survivors", oracle=_INC_DEDUP_ORACLE, tags=("dedup-minhash", "R2"))
 def incremental_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-shot form of the incremental ingestion dedup: per-lang survivor
     counts under the earlier-doc-wins estimated-Jaccard rule. The rule
@@ -785,7 +790,7 @@ FROM final_survivors f GROUP BY lang
 """
 
 
-@register("corpus_dedup_pipeline", oracle=_DEDUP_PIPE_ORACLE, bench=True, tags=("dedup-pipeline", "E2E"))
+@register("corpus_dedup_pipeline", oracle=_DEDUP_PIPE_ORACLE, tags=("dedup-pipeline", "E2E"))
 def corpus_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-hash dedup → MinHash-LSH candidates on the survivors →
     Jaccard ≥ 0.5 verification → drop the higher id of each verified pair
@@ -877,7 +882,7 @@ SELECT id_a, id_b, hamming FROM cand WHERE hamming <= 3
 """
 
 
-@register("simhash_hamming_pairs_q", oracle=_SH_PAIRS_ORACLE, bench=True, tags=("dedup-simhash", "lsh"))
+@register("simhash_hamming_pairs_q", oracle=_SH_PAIRS_ORACLE, tags=("dedup-simhash", "lsh"))
 def simhash_hamming_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Banded-SimHash near-dup pairs (Hamming ≤ 3 over 16 bits, 4 bands):
     band equi-join → exact popcount(xor) verify. Exact by pigeonhole for
@@ -908,7 +913,7 @@ FROM s GROUP BY source
 """
 
 
-@register("doc_token_stats", oracle=_TOKSTATS_ORACLE, bench=True, tags=("text-analysis",))
+@register("doc_token_stats", oracle=_TOKSTATS_ORACLE, tags=("text-analysis",))
 def doc_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Whitespace + BPE-ish token counting rolled up per source."""
     d = token_stats(T(spark, sf_dir, "documents"))
@@ -1012,7 +1017,7 @@ FROM ranked WHERE rn <= 10
 """
 
 
-@register("top_tokens_per_lang", oracle=_TOPTOK_ORACLE, bench=True, tags=("text-analysis", "D8"))
+@register("top_tokens_per_lang", oracle=_TOPTOK_ORACLE, tags=("text-analysis", "D8"))
 def top_tokens_per_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Term-frequency top-10 per language: explode → two-level aggregation
     (partial map-side combine makes the token shuffle carry counts, not
@@ -1054,7 +1059,7 @@ FROM ranked WHERE rn <= {_TFIDF_K}
 """
 
 
-@register("tfidf_top_terms", oracle=_TFIDF_ORACLE, bench=True, tags=("text-analysis", "D8"))
+@register("tfidf_top_terms", oracle=_TFIDF_ORACLE, tags=("text-analysis", "D8"))
 def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 TF-IDF terms per doc. tf and df are two partial-aggregated
     counts (the token shuffle carries counts, not tokens); the tf↔df join
@@ -1144,7 +1149,7 @@ FROM ranked WHERE rn <= {_BM25_TOPK}
 """
 
 
-@register("bm25_topk_docs", oracle=_BM25_ORACLE, bench=True, tags=("text-analysis", "D8"))
+@register("bm25_topk_docs", oracle=_BM25_ORACLE, tags=("text-analysis", "D8"))
 def bm25_topk_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 top-10 docs for a fixed query (k1=1.2, b=0.75). Only postings
     of the query's terms survive the first filter, so every later stage is
@@ -1205,7 +1210,7 @@ WHERE len(list_intersect(a.big_toks, b.big_toks)) > 0
 """
 
 
-@register("token_overlap_pairs", oracle=_OVERLAP_ORACLE, bench=True, tags=("F5",))
+@register("token_overlap_pairs", oracle=_OVERLAP_ORACLE, tags=("F5",))
 def token_overlap_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same-source doc pairs sharing at least one >3-char token (the
     filename/handle token-match predicate F5).
@@ -1302,7 +1307,7 @@ FROM labels
 """
 
 
-@register("neardup_clusters", oracle=_CLUSTERS_ORACLE, bench=True, tags=("dedup-minhash", "clusters"))
+@register("neardup_clusters", oracle=_CLUSTERS_ORACLE, tags=("dedup-minhash", "clusters"))
 def neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Transitive near-dup clusters: verified LSH pairs → min-label
     propagation (operators.clusters.connected_components) → per-component
@@ -1463,7 +1468,7 @@ FROM scored s JOIN q1 q ON s.lang = q.lang
 """
 
 
-@register("bigram_perplexity_gate", oracle=_BIGRAM_PPL_ORACLE, bench=True, tags=("text-analysis", "F4"))
+@register("bigram_perplexity_gate", oracle=_BIGRAM_PPL_ORACLE, tags=("text-analysis", "F4"))
 def bigram_perplexity_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Interpolated bigram-LM quality gate: per-language
     p(w2|w1) = 0.7·(c(w1,w2)/c(w1·)) + 0.3·(c(w2)/c(·)), each doc scored
@@ -1578,7 +1583,7 @@ FROM u JOIN b USING (source)
 """
 
 
-@register("ngram_diversity_by_source", oracle=_DIVERSITY_ORACLE, bench=True, tags=("text-analysis",))
+@register("ngram_diversity_by_source", oracle=_DIVERSITY_ORACLE, tags=("text-analysis",))
 def ngram_diversity_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """distinct-1 / distinct-2 per source (Li et al. 2016 dialog-diversity
     metrics): unique-to-total n-gram ratios — the cheap first check that a
@@ -1750,7 +1755,7 @@ FROM sel GROUP BY doc_id, lang
 """
 
 
-@register("winnowing_fingerprints", oracle=_WINNOW_ORACLE, bench=True, tags=("text-analysis", "X4", "dedup-jaccard"))
+@register("winnowing_fingerprints", oracle=_WINNOW_ORACLE, tags=("text-analysis", "X4", "dedup-jaccard"))
 def winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winnowing fingerprint selection per document (the MOSS local
     plagiarism-detection scheme, Schleimer et al. SIGMOD 2003): the
@@ -1856,7 +1861,7 @@ FROM tot t JOIN cov c ON t.lang = c.lang
 """
 
 
-@register("vocab_coverage_oov", oracle=_VOCAB_ORACLE, bench=True, tags=("text-analysis", "X4"))
+@register("vocab_coverage_oov", oracle=_VOCAB_ORACLE, tags=("text-analysis", "X4"))
 def vocab_coverage_oov(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-V vocabulary coverage and OOV rate per language (V = 50): the
     fraction of the token stream covered by the V most frequent tokens
@@ -1918,7 +1923,7 @@ GROUP BY a.source, b.source, sa.n_grams, sb.n_grams
 """
 
 
-@register("cross_source_overlap", oracle=_XSRC_ORACLE, bench=True, tags=("dedup-jaccard", "X1"))
+@register("cross_source_overlap", oracle=_XSRC_ORACLE, tags=("dedup-jaccard", "X1"))
 def cross_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairwise source-overlap matrix: distinct verbatim word-8-grams
     shared between every pair of sources, plus the gram-set Jaccard —
@@ -2015,7 +2020,7 @@ FROM spans GROUP BY doc_id, lang
 """
 
 
-@register("intradoc_repeated_span", oracle=_INTRA_ORACLE, bench=True, tags=("dedup-jaccard", "X4", "D3"))
+@register("intradoc_repeated_span", oracle=_INTRA_ORACLE, tags=("dedup-jaccard", "X4", "D3"))
 def intradoc_repeated_span(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Longest token span repeated WITHIN a document: positional 3-gram
     self-join per doc (earlier-pos vs later-pos), matches grouped per
@@ -2095,7 +2100,7 @@ WHERE greatest(CAST(shared AS DOUBLE) / sa.n,
 """
 
 
-@register("ngram_containment_pairs", oracle=_CONTAIN_ORACLE, bench=True, tags=("dedup-jaccard", "X1"))
+@register("ngram_containment_pairs", oracle=_CONTAIN_ORACLE, tags=("dedup-jaccard", "X1"))
 def ngram_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Asymmetric shingle containment per same-language pair:
     contain_a = |A∩B|/|A| (how much of A lives inside B) and the mirror,
@@ -2166,7 +2171,7 @@ FROM terms GROUP BY source
 """
 
 
-@register("token_entropy_by_source", oracle=_ENTROPY_ORACLE, bench=True, tags=("text-analysis", "X4"))
+@register("token_entropy_by_source", oracle=_ENTROPY_ORACLE, tags=("text-analysis", "X4"))
 def token_entropy_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shannon entropy of the token distribution per source, plus the
     vocabulary-normalized form H/ln(V) ∈ (0, 1] — ≈1 means tokens are
@@ -2213,23 +2218,7 @@ def token_entropy_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 _CCNET_ORACLE = f"""
-WITH toks AS (
-  SELECT doc_id, lang, unnest({tokens_sql(fold_case_sql('text'))}) AS token FROM documents),
-lm AS (
-  SELECT lang, token, COUNT(*) AS cnt FROM toks GROUP BY 1, 2),
-tot AS (SELECT lang, SUM(cnt) AS total FROM lm GROUP BY 1),
-scored AS (
-  SELECT t.doc_id, t.lang,
-         round(AVG(ln(CAST(l.cnt AS DOUBLE) / tt.total)), 6) AS logprob
-  FROM toks t
-  JOIN lm l ON t.lang = l.lang AND t.token = l.token
-  JOIN tot tt ON t.lang = tt.lang
-  GROUP BY 1, 2),
-hist AS (SELECT lang, logprob, COUNT(*) AS cnt FROM scored GROUP BY 1, 2),
-cdf AS (
-  SELECT lang, logprob, SUM(cnt) OVER (PARTITION BY lang ORDER BY logprob) AS cum
-  FROM hist),
-n AS (SELECT lang, COUNT(*) AS n_docs FROM scored GROUP BY 1),
+WITH {_UNIGRAM_SCORES_ORACLE},
 t1 AS (
   SELECT c.lang, MIN(c.logprob) AS t1
   FROM cdf c JOIN n ON c.lang = n.lang
@@ -2251,7 +2240,7 @@ GROUP BY 1, 2
 """
 
 
-@register("ccnet_perplexity_buckets", oracle=_CCNET_ORACLE, bench=True, tags=("text-analysis", "F4"))
+@register("ccnet_perplexity_buckets", oracle=_CCNET_ORACLE, tags=("text-analysis", "F4"))
 def ccnet_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet-style head/middle/tail partition per language: the
     corpus-trained unigram log-prob score (same LM as
@@ -2326,13 +2315,13 @@ def _sweep_oracle() -> str:
     return f"""
 WITH sh AS (
   SELECT doc_id, {word_shingles_sql('text')} AS shingles FROM documents),
-sigs AS (
+sigs AS MATERIALIZED (
   SELECT doc_id, {minhash_signature_sql('shingles', _MH_HASHES)} AS sig FROM sh)
 {body}
 """
 
 
-@register("lsh_band_sweep", oracle=_sweep_oracle(), bench=True, tags=("dedup-minhash", "tuning"))
+@register("lsh_band_sweep", oracle=_sweep_oracle(), tags=("dedup-minhash", "tuning"))
 def lsh_band_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Candidate-pair volume for four (bands × rows) splits of the same
     12-hash MinHash signature, with each config's ~50%-collision
@@ -2494,7 +2483,7 @@ FROM pts p CROSS JOIN s
 """
 
 
-@register("heaps_vocab_growth", oracle=_HEAPS_ORACLE, bench=True, tags=("text-analysis", "tuning"))
+@register("heaps_vocab_growth", oracle=_HEAPS_ORACLE, tags=("text-analysis", "tuning"))
 def heaps_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vocabulary size at five nested corpus prefixes (20%…100% of docs)
     with the fitted Heaps exponent β from log-log least squares — natural
@@ -2612,7 +2601,7 @@ FROM ranked WHERE rnk <= {_PMI_TOPK}
 """
 
 
-@register("pmi_collocations", oracle=_PMI_ORACLE, bench=True, tags=("text-analysis",))
+@register("pmi_collocations", oracle=_PMI_ORACLE, tags=("text-analysis",))
 def pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-20 pointwise-mutual-information bigrams per language (count
     floor 5): PMI = ln(p(w1,w2) / p(w1)p(w2)) finds phrases glued
@@ -2715,7 +2704,7 @@ FROM tails t JOIN heads h
 """
 
 
-@register("doc_continuation_pairs", oracle=_CONT_ORACLE, bench=True, tags=("dedup-exact", "T6"))
+@register("doc_continuation_pairs", oracle=_CONT_ORACLE, tags=("dedup-exact", "T6"))
 def doc_continuation_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Document pairs where one doc's last 3 tokens verbatim equal
     another's first 3 — the signal that a source document was split
@@ -2773,7 +2762,7 @@ FROM pairs WHERE jac >= {_PF_TAU}
 """
 
 
-@register("jaccard_prefix_filter_join", oracle=_PF_ORACLE, bench=True, tags=("dedup-jaccard", "D1"))
+@register("jaccard_prefix_filter_join", oracle=_PF_ORACLE, tags=("dedup-jaccard", "D1"))
 def jaccard_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All document pairs with 3-gram-shingle-set Jaccard ≥ 0.6, found by
     PREFIX FILTERING (AllPairs/PPJoin, Bayardo et al. 2007): order each
@@ -2927,7 +2916,7 @@ FROM est e CROSS JOIN truth t
 """
 
 
-@register("dup_rate_estimate", oracle=_DUPEST_ORACLE, bench=True, tags=("dedup-exact", "tuning", "M4"))
+@register("dup_rate_estimate", oracle=_DUPEST_ORACLE, tags=("dedup-exact", "tuning", "M4"))
 def dup_rate_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Verbatim 8-gram repetition rate (the Lee et al. 2021 duplication
     measure) estimated from a seeded 20% document sample with its Wilson
@@ -3021,7 +3010,7 @@ FROM j CROSS JOIN best b
 """
 
 
-@register("lsh_param_chooser", oracle=_chooser_oracle(), bench=True, tags=("dedup-minhash", "tuning"))
+@register("lsh_param_chooser", oracle=_chooser_oracle(), tags=("dedup-minhash", "tuning"))
 def lsh_param_chooser(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Close the LSH tuning loop: for each (bands × rows) split of the
     12-hash signature, the analytic collision probability
@@ -3124,7 +3113,7 @@ FROM labeled GROUP BY tile
 """
 
 
-@register("quality_duplication_lift", oracle=_lift_oracle(), bench=True, tags=("quality", "dedup-minhash", "tuning"))
+@register("quality_duplication_lift", oracle=_lift_oracle(), tags=("quality", "dedup-minhash", "tuning"))
 def quality_duplication_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup membership rate per quality quartile: docs bucket into
     value-based quartiles of the 4-dp quality grid (IEEE floor-grid

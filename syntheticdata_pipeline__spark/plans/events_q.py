@@ -49,7 +49,7 @@ FROM events GROUP BY 1
 """
 
 
-@register("tumbling_event_stats", oracle=_TUMBLING_ORACLE, bench=True, tags=("R7", "R1"))
+@register("tumbling_event_stats", oracle=_TUMBLING_ORACLE, tags=("R7", "R1"))
 def tumbling_event_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """5-minute buckets, FLOOR-aligned for every timestamp including
     pre-epoch (hostile-ts sweep, round 11): Spark's native window()
@@ -102,7 +102,7 @@ FROM sessioned GROUP BY user_id, session_no
 """
 
 
-@register("session_windows_batch", oracle=_SESSION_ORACLE, bench=True, tags=("R1", "R7"))
+@register("session_windows_batch", oracle=_SESSION_ORACLE, tags=("R1", "R7"))
 def session_windows_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-based sessionization (30 min): lag → new-session marker →
     running sum as session id. Same semantics as session_window(); one
@@ -387,7 +387,7 @@ GROUP BY c.w0, u.week - c.w0
 """
 
 
-@register("weekly_retention_cohorts", oracle=_RETENTION_ORACLE, bench=True, tags=("A4", "M1"))
+@register("weekly_retention_cohorts", oracle=_RETENTION_ORACLE, tags=("A4", "M1"))
 def weekly_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Retention triangle: distinct (user, week) → per-user first week →
     join back + offset rollup. Both aggregates and the join share the
@@ -487,7 +487,7 @@ FROM stages
 """
 
 
-@register("funnel_conversion_ordered", oracle=_FUNNEL_ORACLE, bench=True, tags=("A1", "R7"))
+@register("funnel_conversion_ordered", oracle=_FUNNEL_ORACLE, tags=("A1", "R7"))
 def funnel_conversion_ordered(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ordered three-stage funnel: users whose first click follows their
     first view and whose first purchase follows that click, with
@@ -582,7 +582,7 @@ FROM rates r LEFT JOIN drawn d ON r.event_type = d.event_type
 """
 
 
-@register("neyman_allocation_sample", oracle=_NEYMAN_ORACLE, bench=True, tags=("M4", "A7", "dataset-prep"))
+@register("neyman_allocation_sample", oracle=_NEYMAN_ORACLE, tags=("M4", "A7", "dataset-prep"))
 def neyman_allocation_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Neyman (minimum-variance) allocation of a 1000-row sample budget
     over event-type strata — n_h ∝ N_h·σ_h — followed by the draw itself
@@ -659,7 +659,7 @@ FROM top t CROSS JOIN tot x
 """
 
 
-@register("key_skew_profile", oracle=_SKEW_ORACLE, bench=True, tags=("A1", "D8", "skew"))
+@register("key_skew_profile", oracle=_SKEW_ORACLE, tags=("A1", "D8", "skew"))
 def key_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heavy-key profile of the event stream: the top-10 user keys by row
     count, each with its share of the total, plus the global distinct-key
@@ -752,7 +752,7 @@ FROM pairs p JOIN tot t ON p.from_type = t.from_type
 """
 
 
-@register("event_transition_matrix", oracle=_TRANS_ORACLE, bench=True, tags=("A2", "windows"))
+@register("event_transition_matrix", oracle=_TRANS_ORACLE, tags=("A2", "windows"))
 def event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First-order Markov transition matrix of event types: for each
     consecutive (prev → next) pair inside a user's time-ordered stream,
@@ -883,7 +883,7 @@ WHERE f.rn = f.want
 """
 
 
-@register("exact_median_two_pass", oracle=_median_oracle(), bench=True, tags=("A7", "skew"))
+@register("exact_median_two_pass", oracle=_median_oracle(), tags=("A7", "skew"))
 def exact_median_two_pass(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT per-type median of a continuous double column by two-level
     histogram refinement — the distributed selection algorithm: bucket
@@ -1179,7 +1179,7 @@ WHERE r.rnk <= {_TRIGRAM_TOPK}
 """
 
 
-@register("top_event_trigrams", oracle=_SEQ3_ORACLE, bench=True, tags=("A2", "windows"))
+@register("top_event_trigrams", oracle=_SEQ3_ORACLE, tags=("A2", "windows"))
 def top_event_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-10 three-step event-type sequences across all user streams,
     with each trigram's share of all observed trigrams — the sequence-
@@ -1329,7 +1329,7 @@ FROM q JOIN n ON q.event_type = n.event_type
 """
 
 
-@register("interarrival_percentiles", oracle=_LAT_ORACLE, bench=True, tags=("R7", "A7", "windows"))
+@register("interarrival_percentiles", oracle=_LAT_ORACLE, tags=("R7", "A7", "windows"))
 def interarrival_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P50/P90/P99 of the per-user interarrival gap per event type — the
     telemetry latency report, computed the de-skewed way: gaps bucket to
@@ -1403,7 +1403,7 @@ JOIN mx m ON c.event_type = m.event_type
 """
 
 
-@register("hourly_profile_by_type", oracle=_HOURLY_ORACLE, bench=True, tags=("R7", "A2"))
+@register("hourly_profile_by_type", oracle=_HOURLY_ORACLE, tags=("R7", "A2"))
 def hourly_profile_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Diurnal activity profile: event share per UTC hour-of-day per
     type, with the peak hour(s) flagged — the first chart of capacity
@@ -1477,7 +1477,7 @@ JOIN ent e ON b.user_id = e.user_id
 """
 
 
-@register("user_behavior_features", oracle=_UBF_ORACLE, bench=True, tags=("R4", "A7", "windows"))
+@register("user_behavior_features", oracle=_UBF_ORACLE, tags=("R4", "A7", "windows"))
 def user_behavior_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user behavioral feature vector in one plan: peak 5-minute
     burst, total/mean dwell, and the Shannon entropy of the user's

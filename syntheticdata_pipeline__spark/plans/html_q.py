@@ -78,7 +78,7 @@ FROM documents
 """
 
 
-@register("html_selector_extract", oracle=_HTML_SEL_ORACLE, bench=True, tags=("T16", "S4", "F6", "U1"))
+@register("html_selector_extract", oracle=_HTML_SEL_ORACLE, tags=("T16", "S4", "F6", "U1"))
 def html_selector_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Real-DOM selector extraction: title ladder, gallery ``img[src*=]``
     harvest with CDN filter, ``[data-testid=]`` lookup, element counts and

@@ -89,7 +89,7 @@ GROUP BY tier, garment_type
 """
 
 
-@register("pipeline_end_to_end", oracle=_PIPE_ORACLE, bench=True, tags=("E2E", "S8", "T1", "J3", "F10", "U6", "A1"))
+@register("pipeline_end_to_end", oracle=_PIPE_ORACLE, tags=("E2E", "S8", "T1", "J3", "F10", "U6", "A1"))
 def pipeline_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full acquire→analyze→generate→index DAG as one Catalyst plan."""
     orders = T(spark, sf_dir, "orders")

@@ -75,7 +75,7 @@ FROM f GROUP BY lang
 """
 
 
-@register("gopher_quality_flags", oracle=_GOPHER_ORACLE, bench=True, tags=("quality", "F1"))
+@register("gopher_quality_flags", oracle=_GOPHER_ORACLE, tags=("quality", "F1"))
 def gopher_quality_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher/C4-style rule battery rolled up per lang. One scan, all
     rules evaluated JVM-side, partial-agg shuffle on ~languages keys —
@@ -134,7 +134,7 @@ FROM m
 """
 
 
-@register("repetition_top_bigram", oracle=_REPETITION_ORACLE, bench=True, tags=("quality", "dedup-exact"))
+@register("repetition_top_bigram", oracle=_REPETITION_ORACLE, tags=("quality", "dedup-exact"))
 def repetition_top_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-bigram repetition per doc: explode adjacent-token pairs (linear
     in tokens, never quadratic), count per (doc, bigram) with map-side
@@ -406,7 +406,7 @@ FROM packed GROUP BY lang
 """
 
 
-@register("curation_pipeline_end_to_end", oracle=_CURATION_ORACLE, bench=True, tags=("quality", "dataset-prep", "dedup-exact"))
+@register("curation_pipeline_end_to_end", oracle=_CURATION_ORACLE, tags=("quality", "dataset-prep", "dedup-exact"))
 def curation_pipeline_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality gate (map-side) → first-wins exact dedup (one md5-key
     shuffle) → sliding-window chunking (linear explode) → token-bin
@@ -512,7 +512,7 @@ GROUP BY d.lang
 """
 
 
-@register("repetition_dup_ngrams", oracle=_DUP_NGRAM_ORACLE, bench=True, tags=("quality", "dedup-exact"))
+@register("repetition_dup_ngrams", oracle=_DUP_NGRAM_ORACLE, tags=("quality", "dedup-exact"))
 def repetition_dup_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-lang duplicate-4-gram token-coverage stats (Gopher's duplicate
     n-gram char-fraction rule, token-denominated): docs whose repeated
@@ -613,7 +613,7 @@ GROUP BY s.source, n.ns
 """
 
 
-@register("ks_length_drift_by_source", oracle=_KS_ORACLE, bench=True, tags=("quality", "A7"))
+@register("ks_length_drift_by_source", oracle=_KS_ORACLE, tags=("quality", "A7"))
 def ks_length_drift_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-sample KS statistic (sup CDF gap) between each source's
     doc-length distribution and the whole corpus — drift detection for a
@@ -709,7 +709,7 @@ FROM resid r CROSS JOIN stat s
 """
 
 
-@register("lang_source_chi2", oracle=_CHI2_ORACLE, bench=True, tags=("quality", "A7"))
+@register("lang_source_chi2", oracle=_CHI2_ORACLE, tags=("quality", "A7"))
 def lang_source_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pearson chi-square independence check of the language × source
     contingency table, with each cell's standardized residual — the

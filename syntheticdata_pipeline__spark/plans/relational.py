@@ -47,7 +47,7 @@ GROUP BY o.o_orderpriority
 """
 
 
-@register("report_order_fulfillment", oracle=_REPORT_ORACLE, bench=True, tags=("A1", "A2", "A3", "J2"))
+@register("report_order_fulfillment", oracle=_REPORT_ORACLE, tags=("A1", "A2", "A3", "J2"))
 def report_order_fulfillment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Run-report aggregation: counters + derived rates per priority class.
 
@@ -213,7 +213,7 @@ FROM lineitem GROUP BY l_returnflag
 """
 
 
-@register("stats_quantity_by_returnflag", oracle=_STATS_ORACLE, bench=True, tags=("A7",))
+@register("stats_quantity_by_returnflag", oracle=_STATS_ORACLE, tags=("A7",))
 def stats_quantity_by_returnflag(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Order-independent avg/std (native stddev is sequence-dependent —
     see functions.determinism)."""
@@ -242,7 +242,7 @@ FROM (
 """
 
 
-@register("first_wins_dedup_parts", oracle=_FIRSTWINS_ORACLE, bench=True, tags=("D1", "D2"))
+@register("first_wins_dedup_parts", oracle=_FIRSTWINS_ORACLE, tags=("D1", "D2"))
 def first_wins_dedup_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First occurrence per part in shipdate order — the window-based
     order-preserving dedup (bare dropDuplicates is nondeterministic).
@@ -368,7 +368,7 @@ GROUP BY r.r_name
 """
 
 
-@register("dispatch_rollup_by_region", oracle=_DISPATCH_ORACLE, bench=True, tags=("J4", "J2", "A1"))
+@register("dispatch_rollup_by_region", oracle=_DISPATCH_ORACLE, tags=("J4", "J2", "A1"))
 def dispatch_rollup_by_region(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fact → chained broadcast dims (the site-config dispatch join shape,
     any_scraper.py:346-354): dims broadcast, fact never shuffles until the
@@ -461,7 +461,7 @@ WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate NULLS LAST, o_orderkey)
 """
 
 
-@register("running_order_totals", oracle=_RUNNING_ORACLE, bench=True, tags=("windows",))
+@register("running_order_totals", oracle=_RUNNING_ORACLE, tags=("windows",))
 def running_order_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-customer running order count + cumulative spend (decimal-exact
     prefix sums). NULL order dates sort last, explicitly on both sides
@@ -905,7 +905,7 @@ FROM labeled x JOIN p n ON x.canonical_id = n.p_partkey
 """
 
 
-@register("entity_resolution_parts", oracle=_ER_ORACLE, bench=True, tags=("dedup-jaccard", "clusters", "D1"))
+@register("entity_resolution_parts", oracle=_ER_ORACLE, tags=("dedup-jaccard", "clusters", "D1"))
 def entity_resolution_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Entity resolution end-to-end over part names: BLOCK on the head
     noun (no all-pairs), SCORE blocked pairs by edit distance ≤ 2,
@@ -988,7 +988,7 @@ FROM tot t CROSS JOIN topd d
 """
 
 
-@register("customer_revenue_concentration", oracle=_CONC_ORACLE, bench=True, tags=("A7", "quality"))
+@register("customer_revenue_concentration", oracle=_CONC_ORACLE, tags=("A7", "quality"))
 def customer_revenue_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """How concentrated is customer value: the revenue share of the top
     value decile (customers in histogram bins wholly above the 90th count

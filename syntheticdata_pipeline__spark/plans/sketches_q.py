@@ -31,7 +31,7 @@ FROM est e JOIN exact x USING (event_type)
 """
 
 
-@register("kmv_distinct_users", oracle=_KMV_ORACLE, bench=True, tags=("sketch", "A11"))
+@register("kmv_distinct_users", oracle=_KMV_ORACLE, tags=("sketch", "A11"))
 def kmv_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KMV(64) distinct-user estimate per event type, alongside the exact
     count — a reproducible (md5-hashed) alternative to HLL with fixed
@@ -74,7 +74,7 @@ GROUP BY j.user_id
 """
 
 
-@register("countmin_user_freq", oracle=_CM_ORACLE, bench=True, tags=("sketch", "A1"))
+@register("countmin_user_freq", oracle=_CM_ORACLE, tags=("sketch", "A1"))
 def countmin_user_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-Min(3×64) event-frequency estimates for 20 probe users,
     alongside exact counts — the CM tables are a tiny mergeable state
@@ -101,7 +101,7 @@ FROM est e JOIN exact x USING (event_type)
 """
 
 
-@register("hll_distinct_users", oracle=_HLL_ORACLE, bench=True, tags=("sketch", "A11"))
+@register("hll_distinct_users", oracle=_HLL_ORACLE, tags=("sketch", "A11"))
 def hll_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HyperLogLog(m=64) distinct-user estimate per event type alongside
     the exact count — the register-max sketch (Flajolet et al. 2007) in a
@@ -131,7 +131,7 @@ FROM est e JOIN exact x USING (event_type)
 """
 
 
-@register("hll_window_merge", oracle=_HLL_MERGE_ORACLE, bench=True, tags=("sketch", "A11", "R7"))
+@register("hll_window_merge", oracle=_HLL_MERGE_ORACLE, tags=("sketch", "A11", "R7"))
 def hll_window_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HLL mergeability proven against the one-shot oracle: the stream is
     cut into DAILY chunks, per-day register partials are computed
@@ -206,7 +206,7 @@ FROM est e CROSS JOIN exact x
 """
 
 
-@register("join_size_estimate_cm", oracle=_JS_ORACLE, bench=True, tags=("sketch", "tuning", "J2"))
+@register("join_size_estimate_cm", oracle=_JS_ORACLE, tags=("sketch", "tuning", "J2"))
 def join_size_estimate_cm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Predict an equi-join's output cardinality WITHOUT running it: the
     Count-Min inner product. |A ⋈_k B| = Σ_k a_k·b_k, and the inner
@@ -301,7 +301,7 @@ FROM est e CROSS JOIN ex x
 """
 
 
-@register("kmv_set_overlap", oracle=_KMVSET_ORACLE, bench=True, tags=("sketch", "A11", "tuning"))
+@register("kmv_set_overlap", oracle=_KMVSET_ORACLE, tags=("sketch", "A11", "tuning"))
 def kmv_set_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Set algebra on KMV sketches: union size, intersection size, and
     Jaccard between the 'view' and 'purchase' user sets estimated from

@@ -44,7 +44,7 @@ FROM views WHERE t IS NULL OR user_id IS NULL
 """
 
 
-@register("asof_view_purchase", oracle=_ASOF_ORACLE, bench=True, tags=("asof-join",))
+@register("asof_view_purchase", oracle=_ASOF_ORACLE, tags=("asof-join",))
 def asof_view_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Merge-as-of via tagged union + one window pass (single shuffle on
     user_id — no range explosion); DuckDB's native ASOF JOIN is the
@@ -145,7 +145,7 @@ FROM exploded GROUP BY resolution, bucket_start_us, event_type
 """
 
 
-@register("multi_resolution_rollup_q", oracle=_ROLLUP_ORACLE, bench=True, tags=("rollup", "R7"))
+@register("multi_resolution_rollup_q", oracle=_ROLLUP_ORACLE, tags=("rollup", "R7"))
 def multi_resolution_rollup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """5m/1h/1d rollups in one scan+shuffle (explode over resolution
     pairs) — the hypertable continuous-aggregate shape."""

@@ -75,7 +75,7 @@ FROM u
 """
 
 
-@register("extract_ids_from_urls", oracle=_IDS_ORACLE, bench=True, tags=("T1", "T5", "T6", "T7"))
+@register("extract_ids_from_urls", oracle=_IDS_ORACLE, tags=("T1", "T5", "T6", "T7"))
 def extract_ids_from_urls(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ASIN / .html-slug / /p/SKU / last-segment id extraction with md5
     fallback (any_scraper.py:161-196), plus host/path parse and pagination

@@ -43,7 +43,7 @@ GROUP BY l_returnflag, l_linestatus
 """
 
 
-@register("tpch_q1_pricing_summary", oracle=_Q1_ORACLE, bench=True, tags=("tpch", "A1", "A7"))
+@register("tpch_q1_pricing_summary", oracle=_Q1_ORACLE, tags=("tpch", "A1", "A7"))
 def tpch_q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1: one scan, pushed-down date predicate, partial-agg
     shuffle of 6 exact decimal accumulators."""
@@ -82,7 +82,7 @@ LIMIT 10
 """
 
 
-@register("tpch_q3_shipping_priority", oracle=_Q3_ORACLE, bench=True, tags=("tpch", "J2", "D8"))
+@register("tpch_q3_shipping_priority", oracle=_Q3_ORACLE, tags=("tpch", "J2", "D8"))
 def tpch_q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q3 shape: segment-filtered 3-way join, revenue per order,
     deterministic top-10 (exact decimal revenue ⇒ stable ordering)."""
@@ -122,7 +122,7 @@ GROUP BY n.n_name
 """
 
 
-@register("tpch_q5_local_supplier_revenue", oracle=_Q5_ORACLE, bench=True, tags=("tpch", "J2", "J4"))
+@register("tpch_q5_local_supplier_revenue", oracle=_Q5_ORACLE, tags=("tpch", "J2", "J4"))
 def tpch_q5_local_supplier_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q5 shape: 5-way join where supplier nation must equal
     customer nation — broadcast dims, one fact shuffle."""
@@ -160,7 +160,7 @@ GROUP BY o.o_orderpriority
 """
 
 
-@register("tpch_q4_order_priority", oracle=_Q4_ORACLE, bench=True, tags=("tpch", "J3", "A1"))
+@register("tpch_q4_order_priority", oracle=_Q4_ORACLE, tags=("tpch", "J3", "A1"))
 def tpch_q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q4 shape: orders with ≥1 item shipped >90 days after order —
     EXISTS as a left-semi join (adapted: no commit/receipt dates in the
@@ -191,7 +191,7 @@ WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
 """
 
 
-@register("tpch_q6_forecast_revenue", oracle=_Q6_ORACLE, bench=True, tags=("tpch", "F1"))
+@register("tpch_q6_forecast_revenue", oracle=_Q6_ORACLE, tags=("tpch", "F1"))
 def tpch_q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q6: every predicate pushes to the scan; one global decimal
     sum — the minimal scan-dominated query."""
@@ -224,7 +224,7 @@ JOIN customer c ON c.c_custkey = o.o_custkey
 """
 
 
-@register("tpch_q18_large_orders", oracle=_Q18_ORACLE, bench=True, tags=("tpch", "A1", "J2"))
+@register("tpch_q18_large_orders", oracle=_Q18_ORACLE, tags=("tpch", "A1", "J2"))
 def tpch_q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q18 shape: aggregate-filter (HAVING) then join the surviving
     keys back to the dims."""
@@ -264,7 +264,7 @@ LIMIT 20
 """
 
 
-@register("tpch_q10_returned_items", oracle=_Q10_ORACLE, bench=True, tags=("tpch", "J2", "A3"))
+@register("tpch_q10_returned_items", oracle=_Q10_ORACLE, tags=("tpch", "J2", "A3"))
 def tpch_q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q10 shape: customers who returned the most value — the
     'problem customers' report."""
@@ -301,7 +301,7 @@ GROUP BY l_linestatus
 """
 
 
-@register("tpch_q12_ship_priority_split", oracle=_Q12_ORACLE, bench=True, tags=("tpch", "J2", "A2"))
+@register("tpch_q12_ship_priority_split", oracle=_Q12_ORACLE, tags=("tpch", "J2", "A2"))
 def tpch_q12_ship_priority_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q12 shape (linestatus standing in for shipmode): big-big
     equi-join with the date range pushed into the lineitem scan, then a
@@ -340,7 +340,7 @@ WHERE l_shipdate >= TIMESTAMP '1996-03-01 00:00:00'
 """
 
 
-@register("tpch_q14_promo_revenue", oracle=_Q14_ORACLE, bench=True, tags=("tpch", "J4", "A3"))
+@register("tpch_q14_promo_revenue", oracle=_Q14_ORACLE, tags=("tpch", "J4", "A3"))
 def tpch_q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q14 shape: one-month lineitem scan (predicate pushed) with the
     part dim broadcast, then a single global ratio of two exact decimal
@@ -378,7 +378,7 @@ WHERE p_brand = 'Brand#23' AND l_quantity < 0.2 * avg_qty
 """
 
 
-@register("tpch_q17_small_qty_revenue", oracle=_Q17_ORACLE, bench=True, tags=("tpch", "J2", "A7"))
+@register("tpch_q17_small_qty_revenue", oracle=_Q17_ORACLE, tags=("tpch", "J2", "A7"))
 def tpch_q17_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q17 shape: the correlated AVG subquery decorrelated into a
     per-part aggregate joined back on the same key — the two lineitem
@@ -413,7 +413,7 @@ GROUP BY c_mktsegment
 """
 
 
-@register("tpch_q22_dormant_customers", oracle=_Q22_ORACLE, bench=True, tags=("tpch", "J3", "A7"))
+@register("tpch_q22_dormant_customers", oracle=_Q22_ORACLE, tags=("tpch", "J3", "A7"))
 def tpch_q22_dormant_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q22 shape: scalar subquery (global positive-balance average)
     broadcast as a 1-row cross join, then a left-anti join against recent
@@ -453,7 +453,7 @@ GROUP BY sn.n_name, cn.n_name, year(l_shipdate)
 """
 
 
-@register("tpch_q7_binational_volume", oracle=_Q7_ORACLE, bench=True, tags=("tpch", "J2", "J4"))
+@register("tpch_q7_binational_volume", oracle=_Q7_ORACLE, tags=("tpch", "J2", "J4"))
 def tpch_q7_binational_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q7 shape: the two big tables shuffle-join once on the order
     key; customer/supplier/nation dims all broadcast, and the bi-nation
@@ -497,7 +497,7 @@ WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 5 AND l_quantity BETWEEN 1 
 """
 
 
-@register("tpch_q19_disjunctive_revenue", oracle=_Q19_ORACLE, bench=True, tags=("tpch", "F4", "J4"))
+@register("tpch_q19_disjunctive_revenue", oracle=_Q19_ORACLE, tags=("tpch", "F4", "J4"))
 def tpch_q19_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q19 shape: OR-of-ANDs across both join sides. Catalyst
     extracts the common sub-predicates it can push (quantity/size bounds
@@ -546,7 +546,7 @@ GROUP BY year(o.o_orderdate)
 """
 
 
-@register("tpch_q8_market_share", oracle=_Q8_ORACLE, bench=True, tags=("tpch", "J2", "J4", "A3"))
+@register("tpch_q8_market_share", oracle=_Q8_ORACLE, tags=("tpch", "J2", "J4", "A3"))
 def tpch_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q8 shape: national market share — the fraction of a region's
     PROMO-part revenue supplied by one nation, per order year.
@@ -602,7 +602,7 @@ GROUP BY c_count
 """
 
 
-@register("tpch_q13_customer_distribution", oracle=_Q13_ORACLE, bench=True, tags=("tpch", "J2", "A2"))
+@register("tpch_q13_customer_distribution", oracle=_Q13_ORACLE, tags=("tpch", "J2", "A2"))
 def tpch_q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q13 shape: how many customers placed k orders — a LEFT OUTER
     join whose filter lives in the ON clause (customers with zero
@@ -642,7 +642,7 @@ WHERE r.total_revenue = (SELECT MAX(total_revenue) FROM rev)
 """
 
 
-@register("tpch_q15_top_supplier", oracle=_Q15_ORACLE, bench=True, tags=("tpch", "A6", "J4"))
+@register("tpch_q15_top_supplier", oracle=_Q15_ORACLE, tags=("tpch", "A6", "J4"))
 def tpch_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q15 shape: the supplier(s) whose quarterly revenue equals the
     global maximum. The revenue "view" is one partial-agg shuffle keyed by
@@ -687,7 +687,7 @@ LIMIT 20
 """
 
 
-@register("tpch_q21_waiting_suppliers", oracle=_Q21_ORACLE, bench=True, tags=("tpch", "J3", "D8"))
+@register("tpch_q21_waiting_suppliers", oracle=_Q21_ORACLE, tags=("tpch", "J3", "D8"))
 def tpch_q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q21 shape: suppliers in one nation who were the SOLE late
     supplier on a multi-supplier finished order (lateness adapted to
@@ -766,7 +766,7 @@ LIMIT 20
 """
 
 
-@register("tpch_q2_min_cost_supplier", oracle=_Q2_ORACLE, bench=True, tags=("tpch", "J2", "A6"))
+@register("tpch_q2_min_cost_supplier", oracle=_Q2_ORACLE, tags=("tpch", "J2", "A6"))
 def tpch_q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q2 shape: for each qualifying part, the European supplier(s)
     offering it at the minimum derived unit cost (correlated MIN subquery
@@ -845,7 +845,7 @@ GROUP BY n.n_name, year(o.o_orderdate)
 """
 
 
-@register("tpch_q9_product_profit", oracle=_Q9_ORACLE, bench=True, tags=("tpch", "J2", "J4", "A1"))
+@register("tpch_q9_product_profit", oracle=_Q9_ORACLE, tags=("tpch", "J2", "J4", "A1"))
 def tpch_q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q9 shape: profit on 'hot' parts by supplier nation and order
     year. Supply cost is derived as 60% of the part's retail price (the
@@ -898,7 +898,7 @@ WHERE n.val > {_Q11_FRACTION} * t.total
 """
 
 
-@register("tpch_q11_important_stock", oracle=_Q11_ORACLE, bench=True, tags=("tpch", "A1", "J4"))
+@register("tpch_q11_important_stock", oracle=_Q11_ORACLE, tags=("tpch", "A1", "J4"))
 def tpch_q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q11 shape: parts whose stocked value at one nation's
     suppliers exceeds a fixed fraction of that nation's total (value
@@ -952,7 +952,7 @@ GROUP BY p_brand, p_type, p_size
 """
 
 
-@register("tpch_q16_supplier_relationship", oracle=_Q16_ORACLE, bench=True, tags=("tpch", "J3", "A11"))
+@register("tpch_q16_supplier_relationship", oracle=_Q16_ORACLE, tags=("tpch", "J3", "A11"))
 def tpch_q16_supplier_relationship(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q16 shape: distinct supplier count per (brand, type, size)
     for qualifying parts, excluding 'complaint' suppliers (adapted: the
@@ -1003,7 +1003,7 @@ WHERE s.s_suppkey IN (SELECT l_suppkey FROM hoarders)
 """
 
 
-@register("tpch_q20_part_promotion", oracle=_Q20_ORACLE, bench=True, tags=("tpch", "J3", "A1"))
+@register("tpch_q20_part_promotion", oracle=_Q20_ORACLE, tags=("tpch", "J3", "A1"))
 def tpch_q20_part_promotion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q20 shape: suppliers in one nation holding excess stock of
     'small' parts (NATION_12 suppliers) — shipped some in 1997 but their all-time volume on

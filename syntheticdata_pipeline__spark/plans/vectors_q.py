@@ -162,7 +162,7 @@ def _ann_brute_kernel(e: DataFrame) -> DataFrame:
     return brute_force_topk(e, e.filter(F.col("vec_id") < _N_QUERIES), k=_K)
 
 
-@register("ann_brute_topk", oracle=_nonnull_vec_oracle(_BRUTE_ORACLE), bench=True, tags=("similarity", "J1"))
+@register("ann_brute_topk", oracle=_nonnull_vec_oracle(_BRUTE_ORACLE), tags=("similarity", "J1"))
 def ann_brute_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact cosine top-5 for 10 query vectors: broadcast queries × one
     corpus scan; sequential-fold dot products keep ranks bit-stable."""
@@ -359,7 +359,7 @@ FROM methods m LEFT JOIN hits h ON m.method = h.method CROSS JOIN tot t
 """
 
 
-@register("ann_recall_at_k", oracle=_nonnull_vec_oracle(_RECALL_ORACLE), bench=True, tags=("similarity", "lsh", "ivf"))
+@register("ann_recall_at_k", oracle=_nonnull_vec_oracle(_RECALL_ORACLE), tags=("similarity", "lsh", "ivf"))
 def ann_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@5 of the LSH-bucketed and IVF-cell ANN paths against the
     exact brute-force top-5 over the same 10 queries — ANN quality as a
@@ -644,7 +644,7 @@ SELECT id_a, id_b, cos_sim, same_label FROM p WHERE cos_sim >= {_COS_THRESH}
 """
 
 
-@register("cosine_neardup_lsh_probed", oracle=_NEARDUP_MP_ORACLE, bench=True, tags=("dedup-cosine", "lsh"))
+@register("cosine_neardup_lsh_probed", oracle=_NEARDUP_MP_ORACLE, tags=("dedup-cosine", "lsh"))
 def cosine_neardup_lsh_probed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-probe LSH cosine near-dup pairs: Hamming-1 bucket probing on
     one side lifts recall (near-threshold pairs usually flip exactly one
@@ -687,7 +687,7 @@ GROUP BY e.label
 """
 
 
-@register("semantic_dedup_stats", oracle=_SEMDEDUP_ORACLE, bench=True, tags=("dedup-cosine", "clusters"))
+@register("semantic_dedup_stats", oracle=_SEMDEDUP_ORACLE, tags=("dedup-cosine", "clusters"))
 def semantic_dedup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semantic (embedding-space) dedup end-to-end: LSH-bucketed cosine
     pairs → connected components (min-label propagation) → keep the min-id
@@ -716,7 +716,7 @@ def semantic_dedup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("cosine_neardup_lsh", oracle=_NEARDUP_LSH_ORACLE, bench=True, tags=("dedup-cosine", "lsh"))
+@register("cosine_neardup_lsh", oracle=_NEARDUP_LSH_ORACLE, tags=("dedup-cosine", "lsh"))
 def cosine_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH-bucketed cosine near-dup pairs: candidates restricted to shared
     sign-buckets (equi-join, one reused exchange), exact dot verification
@@ -941,7 +941,7 @@ SELECT cluster_id, n_members, round(inertia, 6) AS inertia FROM sizes"""
 _KMEANS_ORACLE = _km_oracle(_KM_K, _KM_ITERS)
 
 
-@register("kmeans_embedding_clusters", oracle=_KMEANS_ORACLE, bench=True, tags=("similarity", "ivf"))
+@register("kmeans_embedding_clusters", oracle=_KMEANS_ORACLE, tags=("similarity", "ivf"))
 def kmeans_embedding_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Seeded 8-cluster, 2-iteration Lloyd k-means over the embedding
     table: cluster sizes and inertia after the final assignment. The
@@ -1085,7 +1085,7 @@ WHERE i <= len(cv)"""
 _PC_ORACLE = _pc_oracle(_PC_ITERS)
 
 
-@register("embedding_top_pc_power", oracle=_PC_ORACLE, bench=True, tags=("similarity", "A8"))
+@register("embedding_top_pc_power", oracle=_PC_ORACLE, tags=("similarity", "A8"))
 def embedding_top_pc_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dominant principal component of the centered embedding cloud via
     3 matrix-free power iterations: v ← Σᵢ cᵢ·(xᵢ−μ) / ‖·‖ with
@@ -1222,7 +1222,7 @@ FROM hits h CROSS JOIN tot t"""
 _IVF_TRAINED_ORACLE = _ivf_trained_oracle()
 
 
-@register("ann_ivf_trained_topk", oracle=_nonnull_vec_oracle(_IVF_TRAINED_ORACLE), bench=True, tags=("similarity", "ivf"))
+@register("ann_ivf_trained_topk", oracle=_nonnull_vec_oracle(_IVF_TRAINED_ORACLE), tags=("similarity", "ivf"))
 def ann_ivf_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF over a SAMPLE-TRAINED codebook with multi-probe: Lloyd runs 2
     seeded iterations on a 30% md5-sampled training set, ONE full-corpus
@@ -1428,7 +1428,7 @@ GROUP BY t.dim
 """
 
 
-@register("ann_dim_truncation_recall", oracle=_nonnull_vec_oracle(_trunc_oracle()), bench=True, tags=("similarity", "tuning"))
+@register("ann_dim_truncation_recall", oracle=_nonnull_vec_oracle(_trunc_oracle()), tags=("similarity", "tuning"))
 def ann_dim_truncation_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@5 of brute-force retrieval scored on the first 8/16/32
     embedding dimensions against the full-dimension truth — the
@@ -1539,7 +1539,7 @@ SELECT vec_id, round(r, 6) AS pagerank FROM {prev}
 """
 
 
-@register("similarity_pagerank", oracle=_pagerank_oracle(), bench=True, tags=("similarity", "graph"))
+@register("similarity_pagerank", oracle=_pagerank_oracle(), tags=("similarity", "graph"))
 def similarity_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Three deterministic PageRank iterations over the similarity graph
     (edges: same-hash-bucket vector pairs with dot ≥ 0.1, undirected) —

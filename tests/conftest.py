@@ -46,10 +46,7 @@ def spark():
 
 @pytest.fixture(scope="session")
 def duck():
-    import duckdb
+    from tools.check_oracle import duck_connect
 
-    con = duckdb.connect()
-    tables = "region nation customer supplier part orders lineitem events documents embeddings"
-    for t in tables.split():
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_SMOKE}/{t}.parquet')")
-    return con
+    return duck_connect(SF_SMOKE)
+

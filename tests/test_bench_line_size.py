@@ -24,8 +24,6 @@ def test_headline_queries_exist_in_registry():
     registry = load_all()
     missing = [n for n in bench.HEADLINE_QUERIES if n not in registry]
     assert not missing, f"HEADLINE_QUERIES not in registry: {missing}"
-    benched = [n for n in bench.HEADLINE_QUERIES if not registry[n].bench]
-    assert not benched, f"HEADLINE_QUERIES not flagged bench=True: {benched}"
 
 
 def test_stdout_line_fits_driver_capture():

@@ -29,58 +29,22 @@ rule — not an engine accident.
 
 from __future__ import annotations
 
-import os
-import shutil
-
 import pytest
 
-_SRC = "/root/testdata/sf0.001"
-
-from tests.test_embeddings_adversarial import _members, _run_one  # noqa: E402
+from tests.sweep_membership import striped_fixture
+from tests.test_embeddings_adversarial import _members
+from tools.check_oracle import oracle_verdict
 
 pytestmark = pytest.mark.slow  # deep battery: default run skips;
 # SPARK_GRAFT_FULL_TESTS=1 (run_gates.sh full) runs it (r15 suite split)
 
 
-def _make_degenerate_fixture(tmp: str) -> str:
-    import duckdb
-
-    os.makedirs(tmp, exist_ok=True)
-    con = duckdb.connect()
-    con.execute(
-        f"""COPY (SELECT * REPLACE (
-            CASE
-              WHEN vec_id % 17 = 0 THEN
-                list_transform(embedding, x -> CAST(0.0 AS FLOAT))
-              WHEN vec_id % 13 = 0 THEN CAST([] AS FLOAT[])
-              WHEN vec_id % 19 = 0 THEN embedding[1:32]
-              WHEN vec_id % 23 = 0 THEN
-                list_concat(embedding, embedding[1:32])
-              WHEN vec_id % 29 = 0 THEN
-                list_transform(embedding, x -> CAST(1e-30 AS FLOAT))
-              ELSE embedding
-            END AS embedding)
-            FROM read_parquet('{_SRC}/embeddings.parquet'))
-            TO '{tmp}/embeddings.parquet' (FORMAT PARQUET)"""
-    )
-    con.close()
-    for t in "region nation customer supplier part orders lineitem events documents".split():
-        src = os.path.join(_SRC, f"{t}.parquet")
-        if os.path.exists(src):
-            os.symlink(src, os.path.join(tmp, f"{t}.parquet"))
-    return tmp
-
-
-@pytest.fixture(scope="module")
-def degenerate_sf_dir(tmp_path_factory):
-    tmp = _make_degenerate_fixture(str(tmp_path_factory.mktemp("emb_degen")))
-    yield tmp
-    shutil.rmtree(tmp, ignore_errors=True)
+degenerate_sf_dir = striped_fixture("degenerate(embeddings)")
 
 
 @pytest.mark.parametrize("name", _members())
 def test_degenerate_vectors_match_oracle(spark, degenerate_sf_dir, name):
-    _run_one(spark, degenerate_sf_dir, name)
+    assert oracle_verdict(spark, degenerate_sf_dir, name) is not False
 
 
 def test_fixture_has_all_five_degeneracies(degenerate_sf_dir):

@@ -33,15 +33,10 @@ fix #1 is in.
 
 from __future__ import annotations
 
-import os
-import shutil
-
 import pytest
 
-_SRC = "/root/testdata/sf0.001"
-
-
-from tests.sweep_membership import sweep_members
+from tests.sweep_membership import striped_fixture, sweep_members
+from tools.check_oracle import oracle_verdict
 
 pytestmark = pytest.mark.slow  # deep battery: default run skips;
 # SPARK_GRAFT_FULL_TESTS=1 (run_gates.sh full) runs it (r15 suite split)
@@ -54,77 +49,18 @@ def _members():
     return sweep_members(("embeddings",), extra_src_markers=("_E(spark",), floor=22)
 
 
-def _make_fixture(tmp: str, mode: str) -> str:
-    import duckdb
-
-    os.makedirs(tmp, exist_ok=True)
-    con = duckdb.connect()
-    if mode == "nulls":
-        # %17: whole-NULL vector; %19: one NULL COMPONENT (position varies
-        # by row) — under the valid-vector rule a NULL element nullifies
-        # the vector at load on BOTH engines (r9 ADVICE #1: DuckDB's bare
-        # bool_and skipped NULL elements while Spark's forall went
-        # three-valued, a latent asymmetry no fixture exercised).
-        con.execute(
-            f"""COPY (SELECT * REPLACE (
-                CASE WHEN vec_id % 17 = 0 THEN NULL
-                     WHEN vec_id % 19 = 0 THEN list_transform(
-                         embedding, (x, i) -> CASE WHEN i = vec_id % 64 + 1 THEN NULL ELSE x END)
-                     ELSE embedding END AS embedding,
-                CASE WHEN vec_id % 13 = 0 THEN NULL ELSE label END AS label)
-                FROM read_parquet('{_SRC}/embeddings.parquet'))
-                TO '{tmp}/embeddings.parquet' (FORMAT PARQUET)"""
-        )
-    else:
-        con.execute(
-            f"""COPY (SELECT * FROM read_parquet('{_SRC}/embeddings.parquet') WHERE 1=0)
-                TO '{tmp}/embeddings.parquet' (FORMAT PARQUET)"""
-        )
-    con.close()
-    for t in "region nation customer supplier part orders lineitem events documents".split():
-        src = os.path.join(_SRC, f"{t}.parquet")
-        if os.path.exists(src):
-            os.symlink(src, os.path.join(tmp, f"{t}.parquet"))
-    return tmp
-
-
-@pytest.fixture(scope="module")
-def nulls_sf_dir(tmp_path_factory):
-    tmp = _make_fixture(str(tmp_path_factory.mktemp("emb_nulls")), "nulls")
-    yield tmp
-    shutil.rmtree(tmp, ignore_errors=True)
-
-
-@pytest.fixture(scope="module")
-def empty_sf_dir(tmp_path_factory):
-    tmp = _make_fixture(str(tmp_path_factory.mktemp("emb_empty")), "empty")
-    yield tmp
-    shutil.rmtree(tmp, ignore_errors=True)
-
-
-def _run_one(spark, sf_dir: str, name: str) -> None:
-    from tools.check_oracle import compare_one, duck_connect
-
-    from syntheticdata_pipeline__spark.plans import load_all
-
-    registry = load_all()
-    qs = {name: registry[name].build}
-    oracles = {name: registry[name].oracle} if registry[name].oracle else {}
-    con = duck_connect(sf_dir)
-    try:
-        assert compare_one(spark, con, name, qs, oracles, sf_dir) is not False
-    finally:
-        con.close()
+nulls_sf_dir = striped_fixture("nullvec(embeddings)")
+empty_sf_dir = striped_fixture("empty(embeddings)")
 
 
 @pytest.mark.parametrize("name", _members())
 def test_null_laced_embeddings_match_oracle(spark, nulls_sf_dir, name):
-    _run_one(spark, nulls_sf_dir, name)
+    assert oracle_verdict(spark, nulls_sf_dir, name) is not False
 
 
 @pytest.mark.parametrize("name", _members())
 def test_empty_embeddings_match_oracle(spark, empty_sf_dir, name):
-    _run_one(spark, empty_sf_dir, name)
+    assert oracle_verdict(spark, empty_sf_dir, name) is not False
 
 
 def test_ann_excludes_null_vectors(spark, nulls_sf_dir):

@@ -18,12 +18,11 @@ pinned here:
 
 from __future__ import annotations
 
-import os
-import shutil
-
 import pytest
 
-_SRC = "/root/testdata/sf0.001"
+from tests.sweep_membership import striped_fixture
+from tools.check_oracle import oracle_verdict
+
 _QUERIES = (
     "ann_ivf_trained_topk",
     "cluster_aware_split_leakage",
@@ -39,35 +38,9 @@ _QUERIES = (
 )
 
 
-@pytest.fixture(scope="module")
-def empty_sf_dir(tmp_path_factory):
-    import duckdb
-
-    tmp = str(tmp_path_factory.mktemp("empty_sf"))
-    con = duckdb.connect()
-    for t in ("documents", "embeddings"):
-        con.execute(
-            f"""COPY (SELECT * FROM read_parquet('{_SRC}/{t}.parquet') WHERE 1=0)
-                TO '{tmp}/{t}.parquet' (FORMAT PARQUET)"""
-        )
-    con.close()
-    for t in "region nation customer supplier part orders lineitem events".split():
-        os.symlink(os.path.join(_SRC, f"{t}.parquet"), os.path.join(tmp, f"{t}.parquet"))
-    yield tmp
-    shutil.rmtree(tmp, ignore_errors=True)
+empty_sf_dir = striped_fixture("empty(documents+embeddings)")
 
 
 @pytest.mark.parametrize("name", _QUERIES)
 def test_empty_corpus_matches_oracle(spark, empty_sf_dir, name):
-    from tools.check_oracle import compare_one, duck_connect
-
-    from syntheticdata_pipeline__spark.plans import load_all
-
-    registry = load_all()
-    qs = {name: registry[name].build}
-    oracles = {name: registry[name].oracle}
-    con = duck_connect(empty_sf_dir)
-    try:
-        assert compare_one(spark, con, name, qs, oracles, empty_sf_dir) is True
-    finally:
-        con.close()
+    assert oracle_verdict(spark, empty_sf_dir, name) is True

@@ -15,52 +15,19 @@ quoted-name matching that avoids the `"part"`-in-`repartition` trap).
 
 from __future__ import annotations
 
-import os
-import shutil
-
 import pytest
 
-_SRC = "/root/testdata/sf0.001"
-
-
-from tests.sweep_membership import sweep_members
+from tests.sweep_membership import striped_fixture, sweep_members
+from tools.check_oracle import oracle_verdict
 
 
 def _members():
     return sweep_members(("customer", "supplier", "part", "nation"), floor=44)
 
 
-@pytest.fixture(scope="module")
-def empty_dims_dir(tmp_path_factory):
-    import duckdb
-
-    tmp = str(tmp_path_factory.mktemp("empty_dims"))
-    con = duckdb.connect()
-    for t in ("customer", "supplier", "part", "nation"):
-        con.execute(
-            f"""COPY (SELECT * FROM read_parquet('{_SRC}/{t}.parquet') WHERE 1=0)
-                TO '{tmp}/{t}.parquet' (FORMAT PARQUET)"""
-        )
-    con.close()
-    for t in "region orders lineitem events documents embeddings".split():
-        src = os.path.join(_SRC, f"{t}.parquet")
-        if os.path.exists(src):
-            os.symlink(src, os.path.join(tmp, f"{t}.parquet"))
-    yield tmp
-    shutil.rmtree(tmp, ignore_errors=True)
+empty_dims_dir = striped_fixture("empty(customer+supplier+part+nation)")
 
 
 @pytest.mark.parametrize("name", _members())
 def test_empty_dim_tables_match_oracle(spark, empty_dims_dir, name):
-    from tools.check_oracle import compare_one, duck_connect
-
-    from syntheticdata_pipeline__spark.plans import load_all
-
-    registry = load_all()
-    qs = {name: registry[name].build}
-    oracles = {name: registry[name].oracle} if registry[name].oracle else {}
-    con = duck_connect(empty_dims_dir)
-    try:
-        assert compare_one(spark, con, name, qs, oracles, empty_dims_dir) is not False
-    finally:
-        con.close()
+    assert oracle_verdict(spark, empty_dims_dir, name) is not False

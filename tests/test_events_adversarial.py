@@ -37,15 +37,13 @@ the reference's scraping loop (any_scraper.py:85-116, test_kimono.py:
 
 from __future__ import annotations
 
-import os
-import shutil
-
 import pytest
+
+from tests.sweep_membership import striped_fixture
+from tools.check_oracle import oracle_verdict
 
 pytestmark = pytest.mark.slow  # deep battery: default run skips;
 # SPARK_GRAFT_FULL_TESTS=1 (run_gates.sh full) runs it (r15 suite split)
-
-_SRC = "/root/testdata/sf0.001"
 
 # Every registered query whose build reads the events table (grep over
 # plans/ for the events load; see test_member_list_is_current below).
@@ -90,75 +88,19 @@ EVENTS_QUERIES = (
 )
 
 
-def _make_fixture(tmp: str, mode: str) -> str:
-    import duckdb
-
-    os.makedirs(tmp, exist_ok=True)
-    con = duckdb.connect()
-    if mode == "nulls":
-        # Deterministic NULL stripes over the real sf0.001 events: the
-        # moduli are coprime so single- and multi-column-NULL rows both
-        # occur (event_id 0 hits all four).
-        con.execute(
-            f"""COPY (SELECT * REPLACE (
-                CASE WHEN event_id % 17 = 0 THEN NULL ELSE user_id END AS user_id,
-                CASE WHEN event_id % 13 = 0 THEN NULL ELSE value END AS value,
-                CASE WHEN event_id % 19 = 0 THEN NULL ELSE event_type END AS event_type,
-                CASE WHEN event_id % 23 = 0 THEN NULL ELSE props END AS props)
-                FROM read_parquet('{_SRC}/events.parquet'))
-                TO '{tmp}/events.parquet' (FORMAT PARQUET)"""
-        )
-    else:  # empty stream, schema preserved
-        con.execute(
-            f"""COPY (SELECT * FROM read_parquet('{_SRC}/events.parquet') WHERE 1=0)
-                TO '{tmp}/events.parquet' (FORMAT PARQUET)"""
-        )
-    con.close()
-    for t in "region nation customer supplier part orders lineitem documents embeddings".split():
-        src = os.path.join(_SRC, f"{t}.parquet")
-        if os.path.exists(src):
-            os.symlink(src, os.path.join(tmp, f"{t}.parquet"))
-    return tmp
-
-
-@pytest.fixture(scope="module")
-def nulls_sf_dir(tmp_path_factory):
-    tmp = _make_fixture(str(tmp_path_factory.mktemp("events_nulls")), "nulls")
-    yield tmp
-    shutil.rmtree(tmp, ignore_errors=True)
-
-
-@pytest.fixture(scope="module")
-def empty_sf_dir(tmp_path_factory):
-    tmp = _make_fixture(str(tmp_path_factory.mktemp("events_empty")), "empty")
-    yield tmp
-    shutil.rmtree(tmp, ignore_errors=True)
-
-
-def _run_one(spark, sf_dir: str, name: str) -> None:
-    from tools.check_oracle import compare_one, duck_connect
-
-    from syntheticdata_pipeline__spark.plans import load_all
-
-    registry = load_all()
-    qs = {name: registry[name].build}
-    oracles = {name: registry[name].oracle} if registry[name].oracle else {}
-    con = duck_connect(sf_dir)
-    try:
-        # True = PASS, None = rows-only (no oracle registered)
-        assert compare_one(spark, con, name, qs, oracles, sf_dir) is not False
-    finally:
-        con.close()
+nulls_sf_dir = striped_fixture("nullevents(events)")
+empty_sf_dir = striped_fixture("empty(events)")
 
 
 @pytest.mark.parametrize("name", EVENTS_QUERIES)
 def test_null_laced_events_match_oracle(spark, nulls_sf_dir, name):
-    _run_one(spark, nulls_sf_dir, name)
+    # True = PASS, None = rows-only (no oracle registered)
+    assert oracle_verdict(spark, nulls_sf_dir, name) is not False
 
 
 @pytest.mark.parametrize("name", EVENTS_QUERIES)
 def test_empty_events_match_oracle(spark, empty_sf_dir, name):
-    _run_one(spark, empty_sf_dir, name)
+    assert oracle_verdict(spark, empty_sf_dir, name) is not False
 
 
 def test_member_list_is_current():

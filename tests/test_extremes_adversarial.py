@@ -38,167 +38,27 @@ compares or symmetric-rejection assertions.
 
 from __future__ import annotations
 
-import os
-import shutil
-
 import pytest
+
+from tests.sweep_membership import striped_fixture
+from tools.check_oracle import duck_connect, oracle_verdict
 
 pytestmark = pytest.mark.slow  # deep battery: default run skips;
 # SPARK_GRAFT_FULL_TESTS=1 (run_gates.sh full) runs it (r15 suite split)
 
-_SRC = "/root/testdata/sf0.001"
-
-_MAX_I64 = 2**63 - 1
-
-
-def _symlink_rest(tmp: str, done: tuple[str, ...]) -> None:
-    for t in (
-        "region nation customer supplier part orders lineitem events documents embeddings"
-    ).split():
-        if t in done:
-            continue
-        src = os.path.join(_SRC, f"{t}.parquet")
-        if os.path.exists(src):
-            os.symlink(src, os.path.join(tmp, f"{t}.parquet"))
-
-
-@pytest.fixture(scope="module")
-def extreme_events_dir(tmp_path_factory):
-    """events with domain-edge stripes on coprime residues of event_id:
-    value %7 (signed zero / ±huge / subnormals), ts %11 (year-1 /
-    year-9999 / pre-epoch), user_id %13 (INT64_MAX). Residue 0 of each
-    stripe overlaps on event_id 0 (multi-extreme row)."""
-    import duckdb
-
-    tmp = str(tmp_path_factory.mktemp("extreme_events"))
-    con = duckdb.connect()
-    con.execute(
-        f"""COPY (SELECT * REPLACE (
-            CASE event_id % 7
-                 WHEN 0 THEN -0.0
-                 WHEN 1 THEN 1.7e308
-                 WHEN 2 THEN -1.7e308
-                 WHEN 3 THEN 5e-324
-                 WHEN 4 THEN 1e-310
-                 ELSE value END AS value,
-            CASE event_id % 11
-                 WHEN 0 THEN TIMESTAMP '0001-01-01 00:00:00'
-                 WHEN 1 THEN TIMESTAMP '9999-12-31 23:59:59.999999'
-                 WHEN 2 THEN TIMESTAMP '1969-12-31 23:59:59.000001'
-                 ELSE ts END AS ts,
-            CASE WHEN event_id % 13 = 0 THEN {_MAX_I64}
-                 ELSE user_id END AS user_id)
-            FROM read_parquet('{_SRC}/events.parquet'))
-            TO '{tmp}/events.parquet' (FORMAT PARQUET)"""
-    )
-    con.close()
-    _symlink_rest(tmp, ("events",))
-    yield tmp
-    shutil.rmtree(tmp, ignore_errors=True)
-
-
-@pytest.fixture(scope="module")
-def extreme_meta_dir(tmp_path_factory):
-    """documents with bigint-edge n_chars stripes (INT64_MAX / 0 / -1 on
-    doc_id %7); text/lang/source intact so the generator-twin HTML
-    oracles and lang/source groupings stay valid."""
-    import duckdb
-
-    tmp = str(tmp_path_factory.mktemp("extreme_meta"))
-    con = duckdb.connect()
-    con.execute(
-        f"""COPY (SELECT * REPLACE (
-            CASE doc_id % 7
-                 WHEN 0 THEN {_MAX_I64}
-                 WHEN 1 THEN 0
-                 WHEN 2 THEN -1
-                 ELSE n_chars END AS n_chars)
-            FROM read_parquet('{_SRC}/documents.parquet'))
-            TO '{tmp}/documents.parquet' (FORMAT PARQUET)"""
-    )
-    con.close()
-    _symlink_rest(tmp, ("documents",))
-    yield tmp
-    shutil.rmtree(tmp, ignore_errors=True)
-
-
-@pytest.fixture(scope="module")
-def extreme_facts_dir(tmp_path_factory):
-    """lineitem/orders with domain-edge stripes on coprime residues:
-    measures at ±huge / signed zero / subnormal, dates at the timestamp
-    range edges (year 1 / year 9999). The row keys mirror the NULL-facts
-    sweep (l_orderkey*10+l_linenumber; o_orderkey)."""
-    import duckdb
-
-    tmp = str(tmp_path_factory.mktemp("extreme_facts"))
-    con = duckdb.connect()
-    con.execute(
-        f"""COPY (SELECT * REPLACE (
-            CASE (l_orderkey*10+l_linenumber) % 41
-                 WHEN 0 THEN 1.7e308 WHEN 1 THEN -0.0 WHEN 2 THEN 5e-324
-                 ELSE l_quantity END AS l_quantity,
-            CASE (l_orderkey*10+l_linenumber) % 43
-                 WHEN 0 THEN 1.7e308 WHEN 1 THEN -1.7e308
-                 ELSE l_extendedprice END AS l_extendedprice,
-            CASE (l_orderkey*10+l_linenumber) % 47
-                 WHEN 0 THEN -0.0 WHEN 1 THEN 1e-310
-                 ELSE l_discount END AS l_discount,
-            CASE (l_orderkey*10+l_linenumber) % 53
-                 WHEN 0 THEN TIMESTAMP '9999-12-31 23:59:59'
-                 WHEN 1 THEN TIMESTAMP '0001-01-01 00:00:00'
-                 ELSE l_shipdate END AS l_shipdate)
-            FROM read_parquet('{_SRC}/lineitem.parquet'))
-            TO '{tmp}/lineitem.parquet' (FORMAT PARQUET)"""
-    )
-    con.execute(
-        f"""COPY (SELECT * REPLACE (
-            CASE o_orderkey % 17 WHEN 0 THEN 1.7e308 WHEN 1 THEN -0.0
-                 ELSE o_totalprice END AS o_totalprice,
-            CASE o_orderkey % 19
-                 WHEN 0 THEN TIMESTAMP '9999-12-31 23:59:59'
-                 WHEN 1 THEN TIMESTAMP '0001-01-01 00:00:00'
-                 ELSE o_orderdate END AS o_orderdate)
-            FROM read_parquet('{_SRC}/orders.parquet'))
-            TO '{tmp}/orders.parquet' (FORMAT PARQUET)"""
-    )
-    con.close()
-    _symlink_rest(tmp, ("lineitem", "orders"))
-    yield tmp
-    shutil.rmtree(tmp, ignore_errors=True)
-
-
-@pytest.fixture(scope="module")
-def extreme_embeddings_dir(tmp_path_factory):
-    """embeddings (FLOAT[], 64-dim) with FINITE domain-edge components —
-    the non-finite sweep already covers NaN/±Inf, and the valid-vector
-    rule keeps finite components, so these vectors stay searchable:
-    one ±3e38 component (float32 edge; squares/sums overflow any
-    DECIMAL(38,·) intermediate downstream), an all-subnormal vector
-    (1e-40: norms underflow), and a signed-zero component."""
-    import duckdb
-
-    tmp = str(tmp_path_factory.mktemp("extreme_embeddings"))
-    con = duckdb.connect()
-    con.execute(
-        f"""COPY (SELECT * REPLACE (
-            CASE vec_id % 23
-                 WHEN 0 THEN list_transform(list_zip(embedding,
-                        range(1, len(embedding)+1)),
-                        z -> CASE WHEN z[2]-1 = vec_id % 64
-                                  THEN 3.0e38::FLOAT ELSE z[1] END)
-                 WHEN 1 THEN list_transform(embedding, x -> 1e-40::FLOAT)
-                 WHEN 2 THEN list_transform(list_zip(embedding,
-                        range(1, len(embedding)+1)),
-                        z -> CASE WHEN z[2]-1 = vec_id % 64
-                                  THEN -0.0::FLOAT ELSE z[1] END)
-                 ELSE embedding END AS embedding)
-            FROM read_parquet('{_SRC}/embeddings.parquet'))
-            TO '{tmp}/embeddings.parquet' (FORMAT PARQUET)"""
-    )
-    con.close()
-    _symlink_rest(tmp, ("embeddings",))
-    yield tmp
-    shutil.rmtree(tmp, ignore_errors=True)
+# Domain-edge stripes on coprime residues (tests/sweep_membership.py):
+# events value %7 (signed zero / ±huge / subnormals), ts %11 (year-1 /
+# year-9999 / pre-epoch), user_id %13 (INT64_MAX); documents n_chars
+# on doc_id %7 (INT64_MAX / 0 / -1, other columns intact so the
+# generator-twin HTML oracles stay valid); lineitem/orders measures at
+# ±huge / signed zero / subnormal and dates at the timestamp range
+# edges; embeddings with FINITE edge components (one ±3e38 float32
+# component, an all-subnormal vector, a signed zero) that the
+# valid-vector rule keeps searchable.
+extreme_events_dir = striped_fixture("extreme(events)")
+extreme_meta_dir = striped_fixture("extreme(documents.n_chars)")
+extreme_facts_dir = striped_fixture("extreme(lineitem+orders)")
+extreme_embeddings_dir = striped_fixture("extreme(embeddings)")
 
 
 def _events_members():
@@ -350,8 +210,6 @@ def _assert_symmetric_rejection(spark, sf_dir: str, name: str) -> None:
     probe to ±1.7e308 / ±3e38 inputs)."""
     import duckdb
 
-    from tools.check_oracle import duck_connect
-
     from syntheticdata_pipeline__spark.plans import load_all
 
     spec = load_all()[name]
@@ -369,26 +227,11 @@ def _assert_symmetric_rejection(spark, sf_dir: str, name: str) -> None:
         con.close()
 
 
-def _run_one(spark, sf_dir: str, name: str) -> None:
-    from tools.check_oracle import compare_one, duck_connect
-
-    from syntheticdata_pipeline__spark.plans import load_all
-
-    registry = load_all()
-    qs = {name: registry[name].build}
-    oracles = {name: registry[name].oracle} if registry[name].oracle else {}
-    con = duck_connect(sf_dir)
-    try:
-        assert compare_one(spark, con, name, qs, oracles, sf_dir) is not False
-    finally:
-        con.close()
-
-
 @pytest.mark.parametrize(
     "name", _marked(_events_members(), _QUEUED_R11_EVENTS, _SYMMETRIC_EVENTS)
 )
 def test_extreme_events_match_oracle(spark, extreme_events_dir, name):
-    _run_one(spark, extreme_events_dir, name)
+    assert oracle_verdict(spark, extreme_events_dir, name) is not False
 
 
 @pytest.mark.parametrize("name", sorted(_SYMMETRIC_EVENTS))
@@ -398,14 +241,14 @@ def test_extreme_events_reject_symmetrically(spark, extreme_events_dir, name):
 
 @pytest.mark.parametrize("name", _marked(_n_chars_members(), _QUEUED_R11_NCHARS))
 def test_extreme_n_chars_match_oracle(spark, extreme_meta_dir, name):
-    _run_one(spark, extreme_meta_dir, name)
+    assert oracle_verdict(spark, extreme_meta_dir, name) is not False
 
 
 @pytest.mark.parametrize(
     "name", _marked(_facts_members(), _QUEUED_R11_FACTS, _SYMMETRIC_FACTS)
 )
 def test_extreme_facts_match_oracle(spark, extreme_facts_dir, name):
-    _run_one(spark, extreme_facts_dir, name)
+    assert oracle_verdict(spark, extreme_facts_dir, name) is not False
 
 
 @pytest.mark.parametrize("name", sorted(_SYMMETRIC_FACTS))
@@ -418,7 +261,7 @@ def test_extreme_facts_reject_symmetrically(spark, extreme_facts_dir, name):
     _marked(_embeddings_members(), _QUEUED_R11_EMBEDDINGS, _SYMMETRIC_EMBEDDINGS),
 )
 def test_extreme_embeddings_match_oracle(spark, extreme_embeddings_dir, name):
-    _run_one(spark, extreme_embeddings_dir, name)
+    assert oracle_verdict(spark, extreme_embeddings_dir, name) is not False
 
 
 @pytest.mark.parametrize("name", sorted(_SYMMETRIC_EMBEDDINGS))

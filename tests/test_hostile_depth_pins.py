@@ -27,48 +27,9 @@ committed sf0.001 batteries.
 
 from __future__ import annotations
 
-import os
-import shutil
-
-import pytest
-
-SF = "/root/testdata/sf0.01"
-ALL_TABLES = "region nation customer supplier part orders lineitem events documents embeddings"
-
-
-def _striped_dir(tmp_path, rewrites: dict[str, str]) -> str:
-    import duckdb
-
-    tmp = str(tmp_path)
-    con = duckdb.connect()
-    for table, replace_sql in rewrites.items():
-        con.execute(
-            f"COPY (SELECT * REPLACE ({replace_sql}) "
-            f"FROM read_parquet('{SF}/{table}.parquet')) "
-            f"TO '{tmp}/{table}.parquet' (FORMAT PARQUET)"
-        )
-    con.close()
-    for t in ALL_TABLES.split():
-        if t not in rewrites:
-            src = os.path.join(SF, f"{t}.parquet")
-            if os.path.exists(src):
-                os.symlink(src, os.path.join(tmp, f"{t}.parquet"))
-    return tmp
-
-
-def _compare(spark, sf_dir: str, name: str):
-    from tools.check_oracle import compare_one, duck_connect
-
-    from syntheticdata_pipeline__spark.plans import load_all
-
-    spec = load_all()[name]
-    con = duck_connect(sf_dir)
-    try:
-        return compare_one(
-            spark, con, name, {name: spec.build}, {name: spec.oracle}, sf_dir
-        )
-    finally:
-        con.close()
+from tests.conftest import SF_ORACLE
+from tests.sweep_membership import STRIPES, striped_dir
+from tools.check_oracle import oracle_verdict
 
 
 def test_q16_null_suppkey_agrees_after_not_exists_fix(spark, tmp_path):
@@ -76,16 +37,8 @@ def test_q16_null_suppkey_agrees_after_not_exists_fix(spark, tmp_path):
     NOT EXISTS (the r9 'unknown ≠ seen' convention), so a NULL
     l_suppkey survives the exclusion on both engines and the sf0.01
     NULL stripe that split them in r12 now hash-matches."""
-    d = _striped_dir(
-        tmp_path,
-        {
-            "lineitem": (
-                "CASE WHEN (l_orderkey*10 + l_linenumber) % 31 = 0 "
-                "THEN NULL ELSE l_suppkey END AS l_suppkey"
-            )
-        },
-    )
-    assert _compare(spark, d, "tpch_q16_supplier_relationship") is True
+    d = striped_dir(SF_ORACLE, str(tmp_path), STRIPES["nullfacts(lineitem.l_suppkey)"])
+    assert oracle_verdict(spark, d, "tpch_q16_supplier_relationship") is True
 
 
 def test_kmv_users_null_keys_agree_after_drop_fix(spark, tmp_path):
@@ -93,12 +46,5 @@ def test_kmv_users_null_keys_agree_after_drop_fix(spark, tmp_path):
     build on both engines (DIVERGENCES 'sketch kernels must drop NULL
     keys'), so the NULLS-FIRST/NULLS-LAST rank split the r12 depth
     sweep found is gone — the striped fixture now hash-matches."""
-    d = _striped_dir(
-        tmp_path,
-        {
-            "events": (
-                "CASE WHEN event_id % 17 = 0 THEN NULL ELSE user_id END AS user_id"
-            )
-        },
-    )
-    assert _compare(spark, d, "kmv_distinct_users") is True
+    d = striped_dir(SF_ORACLE, str(tmp_path), STRIPES["nullevents(events.user_id)"])
+    assert oracle_verdict(spark, d, "kmv_distinct_users") is True

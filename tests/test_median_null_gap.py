@@ -20,48 +20,12 @@ pins it as a regression test.
 
 from __future__ import annotations
 
-import os
-import shutil
-
-import pytest
-
-_SRC = "/root/testdata/sf0.001"
+from tests.sweep_membership import striped_fixture
+from tools.check_oracle import oracle_verdict
 
 
-@pytest.fixture(scope="module")
-def median_gap_dir(tmp_path_factory):
-    import duckdb
-
-    tmp = str(tmp_path_factory.mktemp("median_gap"))
-    con = duckdb.connect()
-    con.execute(
-        f"""COPY (
-          SELECT * REPLACE (
-            CASE WHEN event_type = 'click' AND event_id % 5 IN (0, 1) THEN 'nan'::DOUBLE
-                 WHEN event_type = 'click' AND event_id % 5 = 2 THEN 1.0
-                 WHEN event_type = 'click' THEN 1000.0
-                 ELSE value END AS value)
-          FROM read_parquet('{_SRC}/events.parquet'))
-        TO '{tmp}/events.parquet' (FORMAT PARQUET)"""
-    )
-    con.close()
-    for t in "region nation customer supplier part orders lineitem documents embeddings".split():
-        os.symlink(os.path.join(_SRC, f"{t}.parquet"), os.path.join(tmp, f"{t}.parquet"))
-    yield tmp
-    shutil.rmtree(tmp, ignore_errors=True)
+median_gap_dir = striped_fixture("median-gap(events.value)")
 
 
 def test_median_excludes_nulled_nonfinite_from_selection(spark, median_gap_dir):
-    from tools.check_oracle import compare_one, duck_connect
-
-    from syntheticdata_pipeline__spark.plans import load_all
-
-    registry = load_all()
-    name = "exact_median_two_pass"
-    qs = {name: registry[name].build}
-    oracles = {name: registry[name].oracle}
-    con = duck_connect(median_gap_dir)
-    try:
-        assert compare_one(spark, con, name, qs, oracles, median_gap_dir) is not False
-    finally:
-        con.close()
+    assert oracle_verdict(spark, median_gap_dir, "exact_median_two_pass") is not False

@@ -31,156 +31,42 @@ measures".
 
 from __future__ import annotations
 
-import os
-import shutil
-
 import pytest
 
-_SRC = "/root/testdata/sf0.001"
-
-_NF = (
-    "CASE WHEN {k} % 23 = 7 THEN 'nan'::DOUBLE"
-    " WHEN {k} % 23 = 8 THEN 'inf'::DOUBLE"
-    " WHEN {k} % 23 = 9 THEN '-inf'::DOUBLE"
-    " ELSE {c} END"
-)
-
-
-from tests.sweep_membership import sweep_members as _members  # noqa: E402
+from tests.sweep_membership import striped_fixture, sweep_members as _members
+from tools.check_oracle import oracle_verdict
 
 pytestmark = pytest.mark.slow  # deep battery: default run skips;
 # SPARK_GRAFT_FULL_TESTS=1 (run_gates.sh full) runs it (r15 suite split)
 
 
-def _build(tmp_path_factory, label, copies, tables):
-    import duckdb
-
-    tmp = str(tmp_path_factory.mktemp(label))
-    con = duckdb.connect()
-    for tbl, replaces in copies.items():
-        rep = ", ".join(
-            _NF.format(k=k, c=c) + f" AS {c}" for c, k in replaces
-        )
-        con.execute(
-            f"""COPY (SELECT * REPLACE ({rep})
-                FROM read_parquet('{_SRC}/{tbl}.parquet'))
-                TO '{tmp}/{tbl}.parquet' (FORMAT PARQUET)"""
-        )
-    con.close()
-    for t in "region nation customer supplier part orders lineitem events documents embeddings".split():
-        if t not in copies:
-            os.symlink(os.path.join(_SRC, f"{t}.parquet"), os.path.join(tmp, f"{t}.parquet"))
-    return tmp
-
-
-@pytest.fixture(scope="module")
-def nonfinite_events_dir(tmp_path_factory):
-    tmp = _build(
-        tmp_path_factory,
-        "nonfinite_events",
-        {"events": [("value", "event_id")]},
-        ("events",),
-    )
-    yield tmp
-    shutil.rmtree(tmp, ignore_errors=True)
-
-
-@pytest.fixture(scope="module")
-def nonfinite_facts_dir(tmp_path_factory):
-    tmp = _build(
-        tmp_path_factory,
-        "nonfinite_facts",
-        {
-            "lineitem": [
-                ("l_quantity", "(l_orderkey*10+l_linenumber)"),
-                ("l_extendedprice", "(l_orderkey*10+l_linenumber+3)"),
-                ("l_discount", "(l_orderkey*10+l_linenumber+11)"),
-                ("l_tax", "(l_orderkey*10+l_linenumber+17)"),
-            ],
-            "orders": [("o_totalprice", "o_orderkey")],
-        },
-        ("lineitem", "orders"),
-    )
-    yield tmp
-    shutil.rmtree(tmp, ignore_errors=True)
-
-
-@pytest.fixture(scope="module")
-def nonfinite_emb_dir(tmp_path_factory):
-    """NaN/±Inf planted as vector COMPONENTS (element 0, %23 stripes).
-    Valid-vector rule (plans/vectors_q._E): a vector with any
-    non-finite component carries no geometry — a NaN dot product would
-    rank FIRST under DESC in both engines, topping every ANN list — so
-    it is nullified at load and the NULL-embedding semantics take
-    over."""
-    import duckdb
-
-    tmp = str(tmp_path_factory.mktemp("nonfinite_emb"))
-    con = duckdb.connect()
-    con.execute(
-        f"""COPY (SELECT * REPLACE (
-            CASE WHEN vec_id % 23 = 7 THEN list_concat(['nan'::FLOAT], embedding[2:])
-                 WHEN vec_id % 23 = 8 THEN list_concat(['inf'::FLOAT], embedding[2:])
-                 WHEN vec_id % 23 = 9 THEN list_concat(['-inf'::FLOAT], embedding[2:])
-                 ELSE embedding END AS embedding)
-            FROM read_parquet('{_SRC}/embeddings.parquet'))
-            TO '{tmp}/embeddings.parquet' (FORMAT PARQUET)"""
-    )
-    con.close()
-    for t in "region nation customer supplier part orders lineitem events documents".split():
-        os.symlink(os.path.join(_SRC, f"{t}.parquet"), os.path.join(tmp, f"{t}.parquet"))
-    yield tmp
-    shutil.rmtree(tmp, ignore_errors=True)
-
-
-@pytest.fixture(scope="module")
-def nonfinite_dims_dir(tmp_path_factory):
-    tmp = _build(
-        tmp_path_factory,
-        "nonfinite_dims",
-        {
-            "customer": [("c_acctbal", "c_custkey")],
-            "supplier": [("s_acctbal", "s_suppkey")],
-            "part": [("p_retailprice", "p_partkey")],
-        },
-        ("customer", "supplier", "part"),
-    )
-    yield tmp
-    shutil.rmtree(tmp, ignore_errors=True)
-
-
-def _check(spark, sf_dir, name):
-    from tools.check_oracle import compare_one, duck_connect
-
-    from syntheticdata_pipeline__spark.plans import load_all
-
-    registry = load_all()
-    qs = {name: registry[name].build}
-    oracles = {name: registry[name].oracle} if registry[name].oracle else {}
-    con = duck_connect(sf_dir)
-    try:
-        assert compare_one(spark, con, name, qs, oracles, sf_dir) is not False
-    finally:
-        con.close()
+nonfinite_events_dir = striped_fixture("nonfinite(events.value)")
+nonfinite_facts_dir = striped_fixture("nonfinite(lineitem+orders measures)")
+nonfinite_dims_dir = striped_fixture("nonfinite(customer+supplier+part measures)")
+# Valid-vector rule (plans/vectors_q._E): a vector with any non-finite
+# component carries no geometry — a NaN dot product would rank FIRST
+# under DESC in both engines, topping every ANN list — so it is
+# nullified at load and the NULL-embedding semantics take over.
+nonfinite_emb_dir = striped_fixture("nonfinite(embedding components)")
 
 
 @pytest.mark.parametrize("name", _members(("events",), floor=37))
 def test_nonfinite_event_values_match_oracle(spark, nonfinite_events_dir, name):
-    _check(spark, nonfinite_events_dir, name)
+    assert oracle_verdict(spark, nonfinite_events_dir, name) is not False
 
 
 @pytest.mark.parametrize("name", _members(("lineitem", "orders"), floor=45))
 def test_nonfinite_fact_measures_match_oracle(spark, nonfinite_facts_dir, name):
-    _check(spark, nonfinite_facts_dir, name)
+    assert oracle_verdict(spark, nonfinite_facts_dir, name) is not False
 
 
 @pytest.mark.parametrize("name", _members(("customer", "supplier", "part"), floor=43))
 def test_nonfinite_dim_measures_match_oracle(spark, nonfinite_dims_dir, name):
-    _check(spark, nonfinite_dims_dir, name)
+    assert oracle_verdict(spark, nonfinite_dims_dir, name) is not False
 
 
 @pytest.mark.parametrize(
     "name", _members(("embeddings",), extra_src_markers=("_E(spark",), floor=22)
 )
 def test_nonfinite_vector_components_match_oracle(spark, nonfinite_emb_dir, name):
-    _check(spark, nonfinite_emb_dir, name)
+    assert oracle_verdict(spark, nonfinite_emb_dir, name) is not False

@@ -16,16 +16,10 @@ NULL blocks only, not identical sets in a real block)."""
 
 from __future__ import annotations
 
-import os
-import shutil
-
 import pytest
 
-_SRC = "/root/testdata/sf0.001"
-
-_PLANT = (
-    "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu"
-)
+from tests.sweep_membership import striped_fixture
+from tools.check_oracle import oracle_verdict
 
 # every query whose plan blocks pairs on lang/source AND runs (or ran)
 # the identical-set collapse; ngram_containment_pairs is collapse-free
@@ -40,45 +34,12 @@ _QUERIES = (
 )
 
 
-@pytest.fixture(scope="module")
-def nullblock_sf_dir(tmp_path_factory):
-    import duckdb
-
-    tmp = str(tmp_path_factory.mktemp("nullblock_sf"))
-    con = duckdb.connect()
-    con.execute(
-        f"""COPY (SELECT * REPLACE (
-            CASE WHEN doc_id < 6 THEN '{_PLANT}' ELSE text END AS text,
-            CASE WHEN doc_id IN (0, 1) THEN NULL
-                 WHEN doc_id IN (4, 5) THEN 'en' ELSE lang END AS lang,
-            CASE WHEN doc_id IN (2, 3) THEN NULL
-                 WHEN doc_id IN (4, 5) THEN 'src0' ELSE source END AS source)
-            FROM read_parquet('{_SRC}/documents.parquet'))
-            TO '{tmp}/documents.parquet' (FORMAT PARQUET)"""
-    )
-    con.close()
-    for t in "region nation customer supplier part orders lineitem events embeddings".split():
-        src = os.path.join(_SRC, f"{t}.parquet")
-        if os.path.exists(src):
-            os.symlink(src, os.path.join(tmp, f"{t}.parquet"))
-    yield tmp
-    shutil.rmtree(tmp, ignore_errors=True)
+nullblock_sf_dir = striped_fixture("nullblock(documents)")
 
 
 @pytest.mark.parametrize("name", _QUERIES)
 def test_nullblock_docs_match_oracle(spark, nullblock_sf_dir, name):
-    from tools.check_oracle import compare_one, duck_connect
-
-    from syntheticdata_pipeline__spark.plans import load_all
-
-    registry = load_all()
-    qs = {name: registry[name].build}
-    oracles = {name: registry[name].oracle}
-    con = duck_connect(nullblock_sf_dir)
-    try:
-        assert compare_one(spark, con, name, qs, oracles, nullblock_sf_dir) is True
-    finally:
-        con.close()
+    assert oracle_verdict(spark, nullblock_sf_dir, name) is True
 
 
 def test_nullblock_never_pairs_but_real_block_does(spark, nullblock_sf_dir):

@@ -35,15 +35,13 @@ DIVERGENCES.md §"NULL-laced dimension tables" and fixed engine-aligned.
 
 from __future__ import annotations
 
-import os
-import shutil
-
 import pytest
+
+from tests.sweep_membership import striped_fixture
+from tools.check_oracle import oracle_verdict
 
 pytestmark = pytest.mark.slow  # deep battery: default run skips;
 # SPARK_GRAFT_FULL_TESTS=1 (run_gates.sh full) runs it (r15 suite split)
-
-_SRC = "/root/testdata/sf0.001"
 
 
 def _members():
@@ -55,74 +53,9 @@ def _members():
     return sweep_members(("customer", "supplier", "part", "nation", "region"), floor=44)
 
 
-@pytest.fixture(scope="module")
-def null_dims_dir(tmp_path_factory):
-    import duckdb
-
-    tmp = str(tmp_path_factory.mktemp("null_dims"))
-    con = duckdb.connect()
-    con.execute(
-        f"""COPY (SELECT * REPLACE (
-            CASE WHEN c_custkey % 7 = 0 THEN NULL ELSE c_nationkey END AS c_nationkey,
-            CASE WHEN c_custkey % 11 = 0 THEN NULL ELSE c_acctbal END AS c_acctbal,
-            CASE WHEN c_custkey % 13 = 0 THEN NULL ELSE c_mktsegment END AS c_mktsegment,
-            CASE WHEN c_custkey % 17 = 0 THEN NULL ELSE c_name END AS c_name,
-            CASE WHEN c_custkey % 19 = 0 THEN NULL ELSE c_custkey END AS c_custkey)
-            FROM read_parquet('{_SRC}/customer.parquet'))
-            TO '{tmp}/customer.parquet' (FORMAT PARQUET)"""
-    )
-    con.execute(
-        f"""COPY (SELECT * REPLACE (
-            CASE WHEN s_suppkey % 3 = 0 THEN NULL ELSE s_nationkey END AS s_nationkey,
-            CASE WHEN s_suppkey % 4 = 0 THEN NULL ELSE s_acctbal END AS s_acctbal,
-            CASE WHEN s_suppkey % 5 = 0 THEN NULL ELSE s_name END AS s_name)
-            FROM read_parquet('{_SRC}/supplier.parquet'))
-            TO '{tmp}/supplier.parquet' (FORMAT PARQUET)"""
-    )
-    con.execute(
-        f"""COPY (SELECT * REPLACE (
-            CASE WHEN p_partkey % 7 = 0 THEN NULL ELSE p_brand END AS p_brand,
-            CASE WHEN p_partkey % 11 = 0 THEN NULL ELSE p_type END AS p_type,
-            CASE WHEN p_partkey % 13 = 0 THEN NULL ELSE p_size END AS p_size,
-            CASE WHEN p_partkey % 17 = 0 THEN NULL ELSE p_retailprice END AS p_retailprice,
-            CASE WHEN p_partkey % 19 = 0 THEN NULL ELSE p_name END AS p_name)
-            FROM read_parquet('{_SRC}/part.parquet'))
-            TO '{tmp}/part.parquet' (FORMAT PARQUET)"""
-    )
-    con.execute(
-        f"""COPY (SELECT * REPLACE (
-            CASE WHEN n_nationkey % 5 = 0 THEN NULL ELSE n_regionkey END AS n_regionkey,
-            CASE WHEN n_nationkey % 7 = 0 THEN NULL ELSE n_name END AS n_name)
-            FROM read_parquet('{_SRC}/nation.parquet'))
-            TO '{tmp}/nation.parquet' (FORMAT PARQUET)"""
-    )
-    con.execute(
-        f"""COPY (SELECT * REPLACE (
-            CASE WHEN r_regionkey % 2 = 0 THEN NULL ELSE r_regionkey END AS r_regionkey,
-            CASE WHEN r_regionkey % 3 = 0 THEN NULL ELSE r_name END AS r_name)
-            FROM read_parquet('{_SRC}/region.parquet'))
-            TO '{tmp}/region.parquet' (FORMAT PARQUET)"""
-    )
-    con.close()
-    for t in "orders lineitem events documents embeddings".split():
-        src = os.path.join(_SRC, f"{t}.parquet")
-        if os.path.exists(src):
-            os.symlink(src, os.path.join(tmp, f"{t}.parquet"))
-    yield tmp
-    shutil.rmtree(tmp, ignore_errors=True)
+null_dims_dir = striped_fixture("nulldims(customer+supplier+part+nation+region)")
 
 
 @pytest.mark.parametrize("name", _members())
 def test_null_laced_dims_match_oracle(spark, null_dims_dir, name):
-    from tools.check_oracle import compare_one, duck_connect
-
-    from syntheticdata_pipeline__spark.plans import load_all
-
-    registry = load_all()
-    qs = {name: registry[name].build}
-    oracles = {name: registry[name].oracle} if registry[name].oracle else {}
-    con = duck_connect(null_dims_dir)
-    try:
-        assert compare_one(spark, con, name, qs, oracles, null_dims_dir) is not False
-    finally:
-        con.close()
+    assert oracle_verdict(spark, null_dims_dir, name) is not False

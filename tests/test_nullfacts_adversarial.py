@@ -32,15 +32,13 @@ DIVERGENCES.md §"NULL-laced fact tables" and fixed engine-aligned.
 
 from __future__ import annotations
 
-import os
-import shutil
-
 import pytest
+
+from tests.sweep_membership import striped_fixture
+from tools.check_oracle import oracle_verdict
 
 pytestmark = pytest.mark.slow  # deep battery: default run skips;
 # SPARK_GRAFT_FULL_TESTS=1 (run_gates.sh full) runs it (r15 suite split)
-
-_SRC = "/root/testdata/sf0.001"
 
 
 def _members():
@@ -52,53 +50,9 @@ def _members():
     return sweep_members(("lineitem", "orders"), floor=45)
 
 
-@pytest.fixture(scope="module")
-def null_facts_dir(tmp_path_factory):
-    import duckdb
-
-    tmp = str(tmp_path_factory.mktemp("null_facts"))
-    con = duckdb.connect()
-    con.execute(
-        f"""COPY (SELECT * REPLACE (
-            CASE WHEN (l_orderkey*10 + l_linenumber) % 13 = 0 THEN NULL ELSE l_quantity END AS l_quantity,
-            CASE WHEN (l_orderkey*10 + l_linenumber) % 17 = 0 THEN NULL ELSE l_extendedprice END AS l_extendedprice,
-            CASE WHEN (l_orderkey*10 + l_linenumber) % 19 = 0 THEN NULL ELSE l_discount END AS l_discount,
-            CASE WHEN (l_orderkey*10 + l_linenumber) % 23 = 0 THEN NULL ELSE l_returnflag END AS l_returnflag,
-            CASE WHEN (l_orderkey*10 + l_linenumber) % 29 = 0 THEN NULL ELSE l_shipdate END AS l_shipdate,
-            CASE WHEN (l_orderkey*10 + l_linenumber) % 31 = 0 THEN NULL ELSE l_suppkey END AS l_suppkey)
-            FROM read_parquet('{_SRC}/lineitem.parquet'))
-            TO '{tmp}/lineitem.parquet' (FORMAT PARQUET)"""
-    )
-    con.execute(
-        f"""COPY (SELECT * REPLACE (
-            CASE WHEN o_orderkey % 17 = 0 THEN NULL ELSE o_custkey END AS o_custkey,
-            CASE WHEN o_orderkey % 13 = 0 THEN NULL ELSE o_totalprice END AS o_totalprice,
-            CASE WHEN o_orderkey % 19 = 0 THEN NULL ELSE o_orderstatus END AS o_orderstatus,
-            CASE WHEN o_orderkey % 23 = 0 THEN NULL ELSE o_orderdate END AS o_orderdate,
-            CASE WHEN o_orderkey % 29 = 0 THEN NULL ELSE o_orderpriority END AS o_orderpriority)
-            FROM read_parquet('{_SRC}/orders.parquet'))
-            TO '{tmp}/orders.parquet' (FORMAT PARQUET)"""
-    )
-    con.close()
-    for t in "region nation customer supplier part events documents embeddings".split():
-        src = os.path.join(_SRC, f"{t}.parquet")
-        if os.path.exists(src):
-            os.symlink(src, os.path.join(tmp, f"{t}.parquet"))
-    yield tmp
-    shutil.rmtree(tmp, ignore_errors=True)
+null_facts_dir = striped_fixture("nullfacts(lineitem+orders)")
 
 
 @pytest.mark.parametrize("name", _members())
 def test_null_laced_facts_match_oracle(spark, null_facts_dir, name):
-    from tools.check_oracle import compare_one, duck_connect
-
-    from syntheticdata_pipeline__spark.plans import load_all
-
-    registry = load_all()
-    qs = {name: registry[name].build}
-    oracles = {name: registry[name].oracle} if registry[name].oracle else {}
-    con = duck_connect(null_facts_dir)
-    try:
-        assert compare_one(spark, con, name, qs, oracles, null_facts_dir) is not False
-    finally:
-        con.close()
+    assert oracle_verdict(spark, null_facts_dir, name) is not False

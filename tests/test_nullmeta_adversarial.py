@@ -25,15 +25,13 @@ engine-aligned.
 
 from __future__ import annotations
 
-import os
-import shutil
-
 import pytest
+
+from tests.sweep_membership import striped_fixture
+from tools.check_oracle import oracle_verdict
 
 pytestmark = pytest.mark.slow  # deep battery: default run skips;
 # SPARK_GRAFT_FULL_TESTS=1 (run_gates.sh full) runs it (r15 suite split)
-
-_SRC = "/root/testdata/sf0.001"
 
 
 def _members():
@@ -45,40 +43,9 @@ def _members():
     return sweep_members(("documents",), floor=67)
 
 
-@pytest.fixture(scope="module")
-def null_meta_dir(tmp_path_factory):
-    import duckdb
-
-    tmp = str(tmp_path_factory.mktemp("null_meta"))
-    con = duckdb.connect()
-    con.execute(
-        f"""COPY (SELECT * REPLACE (
-            CASE WHEN doc_id % 7 = 0 THEN NULL ELSE lang END AS lang,
-            CASE WHEN doc_id % 11 = 0 THEN NULL ELSE source END AS source,
-            CASE WHEN doc_id % 13 = 0 THEN NULL ELSE n_chars END AS n_chars)
-            FROM read_parquet('{_SRC}/documents.parquet'))
-            TO '{tmp}/documents.parquet' (FORMAT PARQUET)"""
-    )
-    con.close()
-    for t in "region nation customer supplier part orders lineitem events embeddings".split():
-        src = os.path.join(_SRC, f"{t}.parquet")
-        if os.path.exists(src):
-            os.symlink(src, os.path.join(tmp, f"{t}.parquet"))
-    yield tmp
-    shutil.rmtree(tmp, ignore_errors=True)
+null_meta_dir = striped_fixture("nullmeta(documents)")
 
 
 @pytest.mark.parametrize("name", _members())
 def test_null_laced_doc_metadata_match_oracle(spark, null_meta_dir, name):
-    from tools.check_oracle import compare_one, duck_connect
-
-    from syntheticdata_pipeline__spark.plans import load_all
-
-    registry = load_all()
-    qs = {name: registry[name].build}
-    oracles = {name: registry[name].oracle} if registry[name].oracle else {}
-    con = duck_connect(null_meta_dir)
-    try:
-        assert compare_one(spark, con, name, qs, oracles, null_meta_dir) is not False
-    finally:
-        con.close()
+    assert oracle_verdict(spark, null_meta_dir, name) is not False

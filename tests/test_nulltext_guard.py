@@ -14,12 +14,11 @@ whitespace-only documents planted over the sf0.001 corpus.
 
 from __future__ import annotations
 
-import os
-import shutil
-
 import pytest
 
-_SRC = "/root/testdata/sf0.001"
+from tests.sweep_membership import striped_fixture
+from tools.check_oracle import oracle_verdict
+
 # The full-catalog adversarial sweep (round 7) found five divergences of
 # this class; these are the fixed ones, kept under regression. NOT
 # listed: html_selector_extract — its oracle is a generator-twin that
@@ -47,42 +46,12 @@ _QUERIES = (
 )
 
 
-@pytest.fixture(scope="module")
-def nulltext_sf_dir(tmp_path_factory):
-    import duckdb
-
-    tmp = str(tmp_path_factory.mktemp("nulltext_sf"))
-    con = duckdb.connect()
-    con.execute(
-        f"""COPY (SELECT * REPLACE (CASE WHEN doc_id < 2 THEN NULL
-                                         WHEN doc_id < 4 THEN '   '
-                                         ELSE text END AS text)
-                  FROM read_parquet('{_SRC}/documents.parquet'))
-            TO '{tmp}/documents.parquet' (FORMAT PARQUET)"""
-    )
-    con.close()
-    for t in "region nation customer supplier part orders lineitem events embeddings".split():
-        src = os.path.join(_SRC, f"{t}.parquet")
-        if os.path.exists(src):
-            os.symlink(src, os.path.join(tmp, f"{t}.parquet"))
-    yield tmp
-    shutil.rmtree(tmp, ignore_errors=True)
+nulltext_sf_dir = striped_fixture("nulltext(documents.text)")
 
 
 @pytest.mark.parametrize("name", _QUERIES)
 def test_nulltext_docs_match_oracle(spark, nulltext_sf_dir, name):
-    from tools.check_oracle import compare_one, duck_connect
-
-    from syntheticdata_pipeline__spark.plans import load_all
-
-    registry = load_all()
-    qs = {name: registry[name].build}
-    oracles = {name: registry[name].oracle}
-    con = duck_connect(nulltext_sf_dir)
-    try:
-        assert compare_one(spark, con, name, qs, oracles, nulltext_sf_dir) is True
-    finally:
-        con.close()
+    assert oracle_verdict(spark, nulltext_sf_dir, name) is True
 
 
 def test_whitespace_docs_still_pair(spark, nulltext_sf_dir):

@@ -1,14 +1,15 @@
 """Every catalog query must hash-match its DuckDB oracle at sf0.001
-(the driver repeats this at sf0.01 — same comparison)."""
+through the one comparator ``tools/check_oracle.compare_one`` (row
+count, column names and types, and an order-insensitive value hash
+that keeps DECIMAL distinct); ``tools/check_oracle.py`` repeats the
+same comparison at sf0.01."""
 
 from __future__ import annotations
-
-import hashlib
-import math
 
 import pytest
 
 from syntheticdata_pipeline__spark.plans import load_all
+from tools.check_oracle import oracle_verdict
 
 from .conftest import SF_SMOKE
 
@@ -18,37 +19,7 @@ pytestmark = pytest.mark.slow  # deep battery: default run skips;
 REGISTRY = load_all()
 
 
-def _norm(v):
-    if v is None:
-        return "∅"
-    if isinstance(v, float):
-        return "nan" if math.isnan(v) else repr(v)
-    if isinstance(v, bool):
-        return str(v).lower()
-    if isinstance(v, (list, tuple)):
-        return "[" + ",".join(_norm(x) for x in v) + "]"
-    return str(v)
-
-
-def _hash(cols, rows):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    lines = sorted("|".join(_norm(r[i]) for i in order) for r in rows)
-    return hashlib.sha256("\n".join(lines).encode()).hexdigest(), len(rows)
-
-
 @pytest.mark.parametrize("name", sorted(REGISTRY))
-def test_query_matches_oracle(name, spark, duck):
-    spec = REGISTRY[name]
-    sdf = spec.build(spark, SF_SMOKE)
-    srows = [tuple(r) for r in sdf.collect()]
-    shash, sn = _hash(sdf.columns, srows)
-    if spec.oracle is None:
-        assert sn >= 0  # rows-only check
-        return
-    res = duck.execute(spec.oracle)
-    dcols = [d[0] for d in res.description]
-    drows = res.fetchall()
-    dhash, dn = _hash(dcols, drows)
-    assert sorted(sdf.columns) == sorted(dcols), "column names differ"
-    assert sn == dn, f"row count differs: spark={sn} duck={dn}"
-    assert shash == dhash, f"value hash differs ({sn} rows)"
+def test_query_matches_oracle(name, spark):
+    # True = PASS, None = rows-only (no oracle registered)
+    assert oracle_verdict(spark, SF_SMOKE, name) is not False

@@ -22,6 +22,10 @@ Contracts:
  7. One closure path: oracle connected components come only from
     ``clusters.connected_components_sql`` and the near-dup edge rule
     only from its docs_q pair (a source-text check).
+ 8. One fixture builder: no file in ``tests/`` or ``tools/`` writes a
+    hostile fixture table with a DuckDB COPY or links one with
+    ``os.symlink`` outside ``sweep_membership.striped_dir`` (a
+    source-text check).
 """
 
 from __future__ import annotations
@@ -39,10 +43,8 @@ import pytest
 
 from tests.conftest import SF_SMOKE
 
-_PKG = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "syntheticdata_pipeline__spark",
-)
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_PKG = os.path.join(_REPO, "syntheticdata_pipeline__spark")
 
 
 def _explain(df) -> str:
@@ -410,11 +412,18 @@ _CLUSTER_HELPERS = {
 }
 
 
-def _source_sites(patterns) -> dict[str, set[tuple[str, str]]]:
-    """Where each regex matches a package source line: the (file, name)
-    of the innermost enclosing function or module-level assignment."""
+# Writing a fixture table or linking an untouched one.
+_FIXTURE_HELPERS = {
+    r"\bCOPY \(|\bos\.symlink\(": {("tests/sweep_membership.py", "striped_dir")},
+}
+
+
+def _source_sites(patterns, base=_PKG, dirs=(".",)) -> dict[str, set[tuple[str, str]]]:
+    """Where each regex matches a source line under ``dirs`` of ``base``:
+    the (file relative to ``base``, name) of the innermost enclosing
+    function or module-level assignment."""
     found: dict[str, set[tuple[str, str]]] = {p: set() for p in patterns}
-    for root, _, files in os.walk(_PKG):
+    for root, _, files in (w for d in dirs for w in os.walk(os.path.join(base, d))):
         for fn in sorted(files):
             if not fn.endswith(".py"):
                 continue
@@ -436,7 +445,7 @@ def _source_sites(patterns) -> dict[str, set[tuple[str, str]]]:
                     if re.search(pattern, line):
                         inner = [f for f in scopes if f[0] <= lineno <= f[1]]
                         name = max(inner)[2] if inner else "<module>"
-                        found[pattern].add((os.path.relpath(path, _PKG), name))
+                        found[pattern].add((os.path.relpath(path, base), name))
     return found
 
 
@@ -453,3 +462,9 @@ def test_cluster_closure_has_one_home():
     (verified pair with jac >= _CLUSTER_JAC) only from docs_q's engine
     pair ``_near_dup_edges`` / ``_NEAR_DUP_EDGES_ORACLE``."""
     assert _source_sites(_CLUSTER_HELPERS) == _CLUSTER_HELPERS
+
+
+def test_fixtures_have_one_builder():
+    """Every hostile fixture directory in ``tests/`` and ``tools/`` is
+    built by ``sweep_membership.striped_dir`` from a ``STRIPES`` row."""
+    assert _source_sites(_FIXTURE_HELPERS, _REPO, ("tests", "tools")) == _FIXTURE_HELPERS

@@ -31,63 +31,12 @@ affect clean-data results.
 
 from __future__ import annotations
 
-import os
-import shutil
-
 import pytest
 
-_SRC = "/root/testdata/sf0.001"
+from tests.sweep_membership import striped_fixture
+from tools.check_oracle import oracle_verdict
 
-_STRIPES = [
-    '{"k":',                            # truncated object
-    "",                                 # empty string (not NULL)
-    "[]",                               # array root
-    '{"k":1,"k":2}',                    # duplicate keys
-    '{"k": "12"}',                      # quoted number
-    '{"k": 1e999}',                     # double overflow literal
-    '{"k": null}',                      # explicit null value
-    "null",                             # bare null root
-    "{ }",                              # whitespace-only object
-    '{"k": 9223372036854775808}',       # INT64_MAX + 1
-    # round-11 additions (hostile-text battery follow-up): VT is NOT
-    # legal JSON whitespace (spec: space/\t/\n/\r only), so a VT after
-    # the colon must invalidate the payload on BOTH engines — and the
-    # oracle's RE2 '\s*' (which excludes VT) must not extract k either;
-    # the legal-whitespace mix must parse to k=7 on both.
-    '{"k":\u000b7}',            # VT pseudo-whitespace → invalid
-    '{"k":\t 7\r\n}',                   # legal JSON whitespace mix → k=7
-    # pretty-printed object (round-11 regex-flavor sweep): the
-    # oracle's greedy k-extraction prefix was '.*', and RE2's '.'
-    # excludes newline, so a multi-line object parsed k=7 in the
-    # engine but NULL in the oracle; the prefix is now [\s\S]*
-    '{\n  "k": 7,\n  "other": "x"\n}',
-]
-
-
-@pytest.fixture(scope="module")
-def hostile_props_dir(tmp_path_factory):
-    import duckdb
-
-    tmp = str(tmp_path_factory.mktemp("hostile_props"))
-    cases = " ".join(
-        f"WHEN {i} THEN '{s.replace(chr(39), chr(39)*2)}'" for i, s in enumerate(_STRIPES)
-    )
-    con = duckdb.connect()
-    con.execute(
-        f"""COPY (SELECT * REPLACE (
-            CASE event_id % 31 {cases} ELSE props END AS props)
-            FROM read_parquet('{_SRC}/events.parquet'))
-            TO '{tmp}/events.parquet' (FORMAT PARQUET)"""
-    )
-    con.close()
-    for t in (
-        "region nation customer supplier part orders lineitem documents embeddings"
-    ).split():
-        src = os.path.join(_SRC, f"{t}.parquet")
-        if os.path.exists(src):
-            os.symlink(src, os.path.join(tmp, f"{t}.parquet"))
-    yield tmp
-    shutil.rmtree(tmp, ignore_errors=True)
+hostile_props_dir = striped_fixture("hostile-props(events.props)")
 
 
 def _members():
@@ -129,15 +78,4 @@ def _members():
 
 @pytest.mark.parametrize("name", _members())
 def test_hostile_props_match_oracle(spark, hostile_props_dir, name):
-    from tools.check_oracle import compare_one, duck_connect
-
-    from syntheticdata_pipeline__spark.plans import load_all
-
-    registry = load_all()
-    qs = {name: registry[name].build}
-    oracles = {name: registry[name].oracle} if registry[name].oracle else {}
-    con = duck_connect(hostile_props_dir)
-    try:
-        assert compare_one(spark, con, name, qs, oracles, hostile_props_dir) is not False
-    finally:
-        con.close()
+    assert oracle_verdict(spark, hostile_props_dir, name) is not False

@@ -60,81 +60,15 @@ itself as upgrade regression armor.
 
 from __future__ import annotations
 
-import os
-import shutil
-
 import pytest
+
+from tests.sweep_membership import striped_fixture
+from tools.check_oracle import oracle_verdict
 
 pytestmark = pytest.mark.slow  # deep battery: default run skips;
 # SPARK_GRAFT_FULL_TESTS=1 (run_gates.sh full) runs it (r15 suite split)
 
-_SRC = "/root/testdata/sf0.001"
-
-# Explicit escapes — the hostile codepoints are invisible or
-# bidi-reordering, so literals would be unreviewable.
-_STRIPES = [
-    # 0: ZWSP / ZWNJ / ZWJ inside words
-    "zero\u200bwidth\u200bjoined tokens zero\u200cwidth\u200djoined again and again",
-    # 1: RLO ... PDF bidi controls
-    "visible \u202etrick\u202c order visible \u202etrick\u202c order here",
-    # 2: one huge unbroken token
-    ("x" * 2000) + " tail",
-    # 3: doubled/leading/trailing mixed-whitespace runs
-    "  doubled  spaces\tand\ttabs\rplus  trailing  runs   ",
-    # 4: NFC 'caf\u00e9' vs NFD 'cafe' + combining acute in one doc
-    "caf\u00e9 nfc then cafe\u0301 nfd caf\u00e9 nfc then cafe\u0301 nfd",
-    # 5: astral-plane mathematical alphanumerics (non-BMP)
-    "\U0001d54a\U0001d56d\U0001d552\U0001d563\U0001d55c math "
-    "\U0001d54a\U0001d56d\U0001d552\U0001d563\U0001d55c alphanumerics twice",
-    # 6: latin 'a' vs cyrillic U+0430 confusables
-    "pascal p\u0430scal pascal p\u0430scal confusable pair test words",
-    # 7: single repeated character
-    "a" * 600,
-    # 8: empty string (not NULL)
-    "",
-    # 9: C0 controls (BEL/VT/FF) embedded mid-token
-    "bell\u0007tone vt\u000bsplit ff\u000cfeed bell\u0007tone again",
-    # 10: non-space whitespace at the EDGES - trim() removes only ' '
-    #     on both engines, so a leading tab/VT must yield a leading
-    #     EMPTY token identically (round-11 follow-up to the WS_CLASS
-    #     fix: pins the trim/split interaction, not just the class)
-    "\t\u000bleading ws edges trailing\u000b\t",
-    # 11: case-mapping divergers (round 11) — Java/Spark lower() applies
-    #     Unicode FULL lowercase (SpecialCasing: U+0130 'İ' → 'i'+U+0307,
-    #     Final_Sigma Σ → ς) while DuckDB lower() applies the SIMPLE
-    #     per-codepoint map ('İ' → 'i', Σ → σ always); upper() diverges
-    #     wider (ß → SS vs ẞ, ligature ﬁ → FI vs ﬁ). Any query that
-    #     case-folds document text must fold through a twinned
-    #     deterministic fold, not bare lower().
-    "İstanbul ΟΔΟΣ ΣΙΣΥΦΟΣ straße ẞAL ﬁle ﬂow İİ ΑΣ σς İstanbul ΟΔΟΣ",
-]
-
-
-@pytest.fixture(scope="module")
-def hostile_text_dir(tmp_path_factory):
-    import duckdb
-
-    tmp = str(tmp_path_factory.mktemp("hostile_text"))
-    cases = " ".join(
-        f"WHEN {i} THEN '{s.replace(chr(39), chr(39) * 2)}'"
-        for i, s in enumerate(_STRIPES)
-    )
-    con = duckdb.connect()
-    con.execute(
-        f"""COPY (SELECT * REPLACE (
-            CASE doc_id % 37 {cases} ELSE text END AS text)
-            FROM read_parquet('{_SRC}/documents.parquet'))
-            TO '{tmp}/documents.parquet' (FORMAT PARQUET)"""
-    )
-    con.close()
-    for t in (
-        "region nation customer supplier part orders lineitem events embeddings"
-    ).split():
-        src = os.path.join(_SRC, f"{t}.parquet")
-        if os.path.exists(src):
-            os.symlink(src, os.path.join(tmp, f"{t}.parquet"))
-    yield tmp
-    shutil.rmtree(tmp, ignore_errors=True)
+hostile_text_dir = striped_fixture("hostile-text(documents.text)")
 
 
 def _members():
@@ -180,15 +114,4 @@ _QUEUED: dict[str, str] = {}
     ],
 )
 def test_hostile_text_match_oracle(spark, hostile_text_dir, name):
-    from tools.check_oracle import compare_one, duck_connect
-
-    from syntheticdata_pipeline__spark.plans import load_all
-
-    registry = load_all()
-    qs = {name: registry[name].build}
-    oracles = {name: registry[name].oracle} if registry[name].oracle else {}
-    con = duck_connect(hostile_text_dir)
-    try:
-        assert compare_one(spark, con, name, qs, oracles, hostile_text_dir) is not False
-    finally:
-        con.close()
+    assert oracle_verdict(spark, hostile_text_dir, name) is not False

@@ -34,12 +34,10 @@ sub-second bursts are all real inputs there, not synthetic paranoia.
 
 from __future__ import annotations
 
-import os
-import shutil
-
 import pytest
 
-_SRC = "/root/testdata/sf0.001"
+from tests.sweep_membership import striped_fixture
+from tools.check_oracle import oracle_verdict
 
 # Same derivation as the events NULL sweep: every registered query that
 # reads the events table (see test_member_list_is_current).
@@ -49,62 +47,12 @@ pytestmark = pytest.mark.slow  # deep battery: default run skips;
 # SPARK_GRAFT_FULL_TESTS=1 (run_gates.sh full) runs it (r15 suite split)
 
 
-def _make_hostile_ts_fixture(tmp: str) -> str:
-    import duckdb
-
-    os.makedirs(tmp, exist_ok=True)
-    con = duckdb.connect()
-    con.execute(
-        f"""COPY (SELECT * REPLACE (
-            CASE
-              WHEN event_id % 7 = 0 THEN NULL
-              WHEN event_id % 11 = 0 THEN
-                TIMESTAMP '1969-07-20 20:17:40.123456'
-                  - to_days(CAST(event_id % 97 AS INTEGER))
-                  - to_microseconds(CAST(event_id % 999983 AS BIGINT))
-              WHEN event_id % 13 = 0 THEN
-                TIMESTAMP '2342-06-01 00:00:00.999999'
-                  + to_hours(CAST(event_id % 43 AS INTEGER))
-              WHEN event_id % 5 = 0 THEN TIMESTAMP '2024-01-15 12:00:00'
-              ELSE ts
-            END AS ts)
-            FROM read_parquet('{_SRC}/events.parquet'))
-            TO '{tmp}/events.parquet' (FORMAT PARQUET)"""
-    )
-    con.close()
-    for t in "region nation customer supplier part orders lineitem documents embeddings".split():
-        src = os.path.join(_SRC, f"{t}.parquet")
-        if os.path.exists(src):
-            os.symlink(src, os.path.join(tmp, f"{t}.parquet"))
-    return tmp
-
-
-@pytest.fixture(scope="module")
-def hostile_ts_dir(tmp_path_factory):
-    tmp = _make_hostile_ts_fixture(str(tmp_path_factory.mktemp("events_hostile_ts")))
-    yield tmp
-    shutil.rmtree(tmp, ignore_errors=True)
-
-
-def _run_one(spark, sf_dir: str, name: str) -> None:
-    from tools.check_oracle import compare_one, duck_connect
-
-    from syntheticdata_pipeline__spark.plans import load_all
-
-    registry = load_all()
-    qs = {name: registry[name].build}
-    oracles = {name: registry[name].oracle} if registry[name].oracle else {}
-    con = duck_connect(sf_dir)
-    try:
-        # True = PASS, None = rows-only (no oracle registered)
-        assert compare_one(spark, con, name, qs, oracles, sf_dir) is not False
-    finally:
-        con.close()
+hostile_ts_dir = striped_fixture("hostile-ts(events.ts)")
 
 
 @pytest.mark.parametrize("name", EVENTS_QUERIES)
 def test_hostile_ts_events_match_oracle(spark, hostile_ts_dir, name):
-    _run_one(spark, hostile_ts_dir, name)
+    assert oracle_verdict(spark, hostile_ts_dir, name) is not False
 
 
 def test_member_list_is_current():

@@ -10,12 +10,11 @@ event queries against their oracles on that fixture.
 
 from __future__ import annotations
 
-import os
-import shutil
-
 import pytest
 
-_SRC = "/root/testdata/sf0.001"
+from tests.sweep_membership import striped_fixture
+from tools.check_oracle import oracle_verdict
+
 _QUERIES = (
     "stateful_dedup_events",
     "event_transition_matrix",
@@ -26,40 +25,9 @@ _QUERIES = (
 )
 
 
-@pytest.fixture(scope="module")
-def ts_collision_sf_dir(tmp_path_factory):
-    import duckdb
-
-    tmp = str(tmp_path_factory.mktemp("tscol_sf"))
-    con = duckdb.connect()
-    con.execute(
-        f"""COPY (
-              SELECT * FROM read_parquet('{_SRC}/events.parquet')
-              UNION ALL
-              SELECT event_id + 1000 AS event_id, ts, user_id,
-                     CASE WHEN event_type = 'error' THEN 'view' ELSE 'error' END AS event_type,
-                     value + 1.5 AS value, props
-              FROM read_parquet('{_SRC}/events.parquet') WHERE event_id % 3 = 0
-            ) TO '{tmp}/events.parquet' (FORMAT PARQUET)"""
-    )
-    con.close()
-    for t in "region nation customer supplier part orders lineitem documents embeddings".split():
-        os.symlink(os.path.join(_SRC, f"{t}.parquet"), os.path.join(tmp, f"{t}.parquet"))
-    yield tmp
-    shutil.rmtree(tmp, ignore_errors=True)
+ts_collision_sf_dir = striped_fixture("ts-collision(events)")
 
 
 @pytest.mark.parametrize("name", _QUERIES)
 def test_ts_collisions_match_oracle(spark, ts_collision_sf_dir, name):
-    from tools.check_oracle import compare_one, duck_connect
-
-    from syntheticdata_pipeline__spark.plans import load_all
-
-    registry = load_all()
-    qs = {name: registry[name].build}
-    oracles = {name: registry[name].oracle}
-    con = duck_connect(ts_collision_sf_dir)
-    try:
-        assert compare_one(spark, con, name, qs, oracles, ts_collision_sf_dir) is True
-    finally:
-        con.close()
+    assert oracle_verdict(spark, ts_collision_sf_dir, name) is True

@@ -16,12 +16,11 @@ cannot silently change unicode semantics on one side only:
 
 from __future__ import annotations
 
-import os
-import shutil
-
 import pytest
 
-_SRC = "/root/testdata/sf0.001"
+from tests.sweep_membership import striped_fixture
+from tools.check_oracle import oracle_verdict
+
 _QUERIES = (
     "doc_fingerprints",
     "slugify_titles",
@@ -31,43 +30,9 @@ _QUERIES = (
 )
 
 
-@pytest.fixture(scope="module")
-def unicode_sf_dir(tmp_path_factory):
-    import duckdb
-
-    tmp = str(tmp_path_factory.mktemp("unicode_sf"))
-    con = duckdb.connect()
-    con.execute(
-        f"""COPY (SELECT * REPLACE (CASE
-              WHEN doc_id = 0 THEN 'café résumé naïve déjà vu café résumé naïve déjà vu café résumé'
-              WHEN doc_id = 1 THEN '中文 文本 去重 测试 中文 文本 去重 测试 中文 文本 去重'
-              WHEN doc_id = 2 THEN 'emoji 🙂 test 🚀 emoji 🙂 test 🚀 emoji 🙂 test'
-              WHEN doc_id = 3 THEN 'nbsp' || chr(160) || 'joined words nbsp' || chr(160) || 'joined words here now'
-              WHEN doc_id = 4 THEN 'combining e' || chr(769) || ' accent combining e' || chr(769) || ' accent more words'
-              ELSE text END AS text)
-             FROM read_parquet('{_SRC}/documents.parquet'))
-            TO '{tmp}/documents.parquet' (FORMAT PARQUET)"""
-    )
-    con.close()
-    for t in "region nation customer supplier part orders lineitem events embeddings".split():
-        src = os.path.join(_SRC, f"{t}.parquet")
-        if os.path.exists(src):
-            os.symlink(src, os.path.join(tmp, f"{t}.parquet"))
-    yield tmp
-    shutil.rmtree(tmp, ignore_errors=True)
+unicode_sf_dir = striped_fixture("unicode-5doc(documents.text)")
 
 
 @pytest.mark.parametrize("name", _QUERIES)
 def test_unicode_docs_match_oracle(spark, unicode_sf_dir, name):
-    from tools.check_oracle import compare_one, duck_connect
-
-    from syntheticdata_pipeline__spark.plans import load_all
-
-    registry = load_all()
-    qs = {name: registry[name].build}
-    oracles = {name: registry[name].oracle}
-    con = duck_connect(unicode_sf_dir)
-    try:
-        assert compare_one(spark, con, name, qs, oracles, unicode_sf_dir) is True
-    finally:
-        con.close()
+    assert oracle_verdict(spark, unicode_sf_dir, name) is True

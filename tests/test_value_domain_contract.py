@@ -18,12 +18,11 @@ numbers.
 
 from __future__ import annotations
 
-import os
-import shutil
-
 import pytest
 
-_SRC = "/root/testdata/sf0.001"
+from tests.sweep_membership import striped_fixture
+from tools.check_oracle import duck_connect, oracle_verdict
+
 _REJECTING = (
     "event_value_outliers",
     "neyman_allocation_sample",
@@ -34,33 +33,11 @@ _REJECTING = (
 _TOLERANT = ("stateful_dedup_events", "hourly_profile_by_type")
 
 
-@pytest.fixture(scope="module")
-def extreme_sf_dir(tmp_path_factory):
-    import duckdb
-
-    tmp = str(tmp_path_factory.mktemp("extreme_sf"))
-    con = duckdb.connect()
-    con.execute(
-        f"""COPY (SELECT * REPLACE (CASE
-              WHEN event_id = 0 THEN 1e12
-              WHEN event_id = 1 THEN -1e12
-              WHEN event_id = 2 THEN 1e-9
-              WHEN event_id = 3 THEN 0.0
-              ELSE value END AS value)
-             FROM read_parquet('{_SRC}/events.parquet'))
-            TO '{tmp}/events.parquet' (FORMAT PARQUET)"""
-    )
-    con.close()
-    for t in "region nation customer supplier part orders lineitem documents embeddings".split():
-        os.symlink(os.path.join(_SRC, f"{t}.parquet"), os.path.join(tmp, f"{t}.parquet"))
-    yield tmp
-    shutil.rmtree(tmp, ignore_errors=True)
+extreme_sf_dir = striped_fixture("value-domain(events.value)")
 
 
 @pytest.mark.parametrize("name", _REJECTING)
 def test_out_of_domain_rejection_is_symmetric(spark, extreme_sf_dir, name):
-    import duckdb
-
     from syntheticdata_pipeline__spark.plans import load_all
 
     spec = load_all()[name]
@@ -71,13 +48,7 @@ def test_out_of_domain_rejection_is_symmetric(spark, extreme_sf_dir, name):
         for tag in ("NUMERIC_VALUE_OUT_OF_RANGE", "CAST_OVERFLOW", "ARITHMETIC")
     ), f"Spark rejected for an unexpected reason: {str(spark_err.value)[:200]}"
 
-    con = duckdb.connect()
-    for t in (
-        "region nation customer supplier part orders lineitem documents embeddings events"
-    ).split():
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{extreme_sf_dir}/{t}.parquet')"
-        )
+    con = duck_connect(extreme_sf_dir)
     try:
         with pytest.raises(Exception) as duck_err:
             con.execute(spec.oracle).fetchall()
@@ -90,15 +61,4 @@ def test_out_of_domain_rejection_is_symmetric(spark, extreme_sf_dir, name):
 
 @pytest.mark.parametrize("name", _TOLERANT)
 def test_magnitude_insensitive_queries_stay_green(spark, extreme_sf_dir, name):
-    from tools.check_oracle import compare_one, duck_connect
-
-    from syntheticdata_pipeline__spark.plans import load_all
-
-    registry = load_all()
-    qs = {name: registry[name].build}
-    oracles = {name: registry[name].oracle}
-    con = duck_connect(extreme_sf_dir)
-    try:
-        assert compare_one(spark, con, name, qs, oracles, extreme_sf_dir) is True
-    finally:
-        con.close()
+    assert oracle_verdict(spark, extreme_sf_dir, name) is True

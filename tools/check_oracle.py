@@ -185,6 +185,21 @@ def compare_one(spark, con, name: str, qs, oracles, sf_dir: str = SF_DIR, record
     return ok
 
 
+def oracle_verdict(spark, sf_dir: str, name: str):
+    """``compare_one`` for the registered query ``name`` over ``sf_dir``
+    on its own DuckDB connection: True on PASS, None when the query has
+    no oracle (rows-only), False on a mismatch or an error."""
+    from syntheticdata_pipeline__spark.plans import load_all
+
+    spec = load_all()[name]
+    oracles = {name: spec.oracle} if spec.oracle else {}
+    con = duck_connect(sf_dir)
+    try:
+        return compare_one(spark, con, name, {name: spec.build}, oracles, sf_dir)
+    finally:
+        con.close()
+
+
 def main() -> int:
     """``check_oracle.py [--json OUT] [query ...]`` — with ``--json`` the
     per-query results are written as a CORRECTNESS-shaped artifact (the

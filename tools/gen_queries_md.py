@@ -15,16 +15,16 @@ def main() -> None:
     print("# QUERIES — the oracle-checked catalog\n")
     print(
         f"{len(registry)} queries; every one has a DuckDB oracle twin "
-        "(`__spark_entry__.py::oracle_sql`). bench=✓ rows run in `bench.py`.\n"
+        "(`__spark_entry__.py::oracle_sql`); `bench.py` times them all.\n"
     )
-    print("| query | operators (SURVEY §2 tags) | bench | summary |")
-    print("|---|---|---|---|")
+    print("| query | operators (SURVEY §2 tags) | summary |")
+    print("|---|---|---|")
     for name in sorted(registry):
         s = registry[name]
         doc = " ".join((s.doc or "").split())
         first = doc.split(". ")[0][:110]
         tags = ", ".join(s.tags)
-        print(f"| {name} | {tags} | {'✓' if s.bench else ''} | {first} |")
+        print(f"| {name} | {tags} | {first} |")
 
 
 if __name__ == "__main__":

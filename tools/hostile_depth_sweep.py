@@ -1,18 +1,20 @@
 """Hostile-stripe sweeps at DEPTH: the committed adversarial batteries
 stripe NULLs / non-finite doubles / unicode hazards / hostile
-timestamps over sf0.001; this tool re-runs the same stripe layouts
-(four NULL stripes, three non-finite stripes, the unicode-hazard
-stripe, the hostile-ts stripe, and the two all-tables-at-once combos)
-over a LARGER scale factor and oracle-compares every sweep member —
-the same depth axis that found the sf0.1 decimal-halfway split in the
-clean catalog (DIVERGENCES "sf0.1 sweep", r12).
+timestamps over sf0.001; this tool lays twelve of the same stripe
+layouts (``DEPTH_STRIPES``: four NULL stripes, three non-finite
+stripes, the unicode-hazard stripe, the hostile-ts stripe, and the
+three combos that apply several stripes at once) over a LARGER scale
+factor and oracle-compares every sweep member — the same depth axis
+that found the sf0.1 decimal-halfway split in the clean catalog
+(DIVERGENCES "sf0.1 sweep", r12). Every layout lives once in
+``tests/sweep_membership.STRIPES``, shared with the batteries.
 
 One-off evidence runner (results recorded in DIVERGENCES/README, not a
 committed test — sf0.01+ adversarial sweeps would triple suite time).
 Usage::
 
     python tools/hostile_depth_sweep.py [sf_dir] [stripe-label ...]
-    # default sf0.01, all six stripes
+    # default sf0.01, all twelve stripes
 """
 
 from __future__ import annotations
@@ -25,313 +27,48 @@ import tempfile
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
-from tests.sweep_membership import sweep_members  # noqa: E402
-from tools.check_oracle import compare_one, duck_connect  # noqa: E402
+from tests.sweep_membership import STRIPES, striped_dir, sweep_members  # noqa: E402
+from tools.check_oracle import oracle_verdict  # noqa: E402
 
-ALL_TABLES = "region nation customer supplier part orders lineitem events documents embeddings"
-
-
-def _stripe(src: str, tmp: str, rewrites: dict[str, str]) -> None:
-    import duckdb
-
-    con = duckdb.connect()
-    for table, replace_sql in rewrites.items():
-        con.execute(
-            f"COPY (SELECT * REPLACE ({replace_sql}) "
-            f"FROM read_parquet('{src}/{table}.parquet')) "
-            f"TO '{tmp}/{table}.parquet' (FORMAT PARQUET)"
-        )
-    con.close()
-    for t in ALL_TABLES.split():
-        if t in rewrites:
-            continue
-        s = os.path.join(src, f"{t}.parquet")
-        if os.path.exists(s):
-            os.symlink(s, os.path.join(tmp, f"{t}.parquet"))
-
-
-# the EXACT stripe layouts of the committed sf0.001 batteries
-STRIPES = {
-    "nullmeta(documents)": (
-        ("documents",),
-        {
-            "documents": (
-                "CASE WHEN doc_id % 7 = 0 THEN NULL ELSE lang END AS lang, "
-                "CASE WHEN doc_id % 11 = 0 THEN NULL ELSE source END AS source, "
-                "CASE WHEN doc_id % 13 = 0 THEN NULL ELSE n_chars END AS n_chars"
-            )
-        },
-    ),
-    "nullfacts(lineitem+orders)": (
-        ("lineitem", "orders"),
-        {
-            "lineitem": (
-                "CASE WHEN (l_orderkey*10 + l_linenumber) % 13 = 0 THEN NULL ELSE l_quantity END AS l_quantity, "
-                "CASE WHEN (l_orderkey*10 + l_linenumber) % 17 = 0 THEN NULL ELSE l_extendedprice END AS l_extendedprice, "
-                "CASE WHEN (l_orderkey*10 + l_linenumber) % 19 = 0 THEN NULL ELSE l_discount END AS l_discount, "
-                "CASE WHEN (l_orderkey*10 + l_linenumber) % 23 = 0 THEN NULL ELSE l_returnflag END AS l_returnflag, "
-                "CASE WHEN (l_orderkey*10 + l_linenumber) % 29 = 0 THEN NULL ELSE l_shipdate END AS l_shipdate, "
-                "CASE WHEN (l_orderkey*10 + l_linenumber) % 31 = 0 THEN NULL ELSE l_suppkey END AS l_suppkey"
-            ),
-            "orders": (
-                "CASE WHEN o_orderkey % 17 = 0 THEN NULL ELSE o_custkey END AS o_custkey, "
-                "CASE WHEN o_orderkey % 13 = 0 THEN NULL ELSE o_totalprice END AS o_totalprice, "
-                "CASE WHEN o_orderkey % 19 = 0 THEN NULL ELSE o_orderstatus END AS o_orderstatus, "
-                "CASE WHEN o_orderkey % 23 = 0 THEN NULL ELSE o_orderdate END AS o_orderdate, "
-                "CASE WHEN o_orderkey % 29 = 0 THEN NULL ELSE o_orderpriority END AS o_orderpriority"
-            ),
-        },
-    ),
-    "nullevents(events)": (
-        ("events",),
-        {
-            "events": (
-                "CASE WHEN event_id % 17 = 0 THEN NULL ELSE user_id END AS user_id, "
-                "CASE WHEN event_id % 13 = 0 THEN NULL ELSE value END AS value, "
-                "CASE WHEN event_id % 19 = 0 THEN NULL ELSE event_type END AS event_type, "
-                "CASE WHEN event_id % 23 = 0 THEN NULL ELSE props END AS props"
-            )
-        },
-    ),
-}
-
-_NF = (
-    "CASE WHEN {k} % 23 = 7 THEN 'nan'::DOUBLE"
-    " WHEN {k} % 23 = 8 THEN 'inf'::DOUBLE"
-    " WHEN {k} % 23 = 9 THEN '-inf'::DOUBLE"
-    " ELSE {c} END AS {c}"
-)
-
-STRIPES["nulldims(customer+supplier+part+nation+region)"] = (
-    ("customer", "supplier", "part", "nation", "region"),
-    {
-        "customer": (
-            "CASE WHEN c_custkey % 7 = 0 THEN NULL ELSE c_nationkey END AS c_nationkey, "
-            "CASE WHEN c_custkey % 11 = 0 THEN NULL ELSE c_acctbal END AS c_acctbal, "
-            "CASE WHEN c_custkey % 13 = 0 THEN NULL ELSE c_mktsegment END AS c_mktsegment, "
-            "CASE WHEN c_custkey % 17 = 0 THEN NULL ELSE c_name END AS c_name, "
-            "CASE WHEN c_custkey % 19 = 0 THEN NULL ELSE c_custkey END AS c_custkey"
-        ),
-        "supplier": (
-            "CASE WHEN s_suppkey % 3 = 0 THEN NULL ELSE s_nationkey END AS s_nationkey, "
-            "CASE WHEN s_suppkey % 4 = 0 THEN NULL ELSE s_acctbal END AS s_acctbal, "
-            "CASE WHEN s_suppkey % 5 = 0 THEN NULL ELSE s_name END AS s_name"
-        ),
-        "part": (
-            "CASE WHEN p_partkey % 7 = 0 THEN NULL ELSE p_brand END AS p_brand, "
-            "CASE WHEN p_partkey % 11 = 0 THEN NULL ELSE p_type END AS p_type, "
-            "CASE WHEN p_partkey % 13 = 0 THEN NULL ELSE p_size END AS p_size, "
-            "CASE WHEN p_partkey % 17 = 0 THEN NULL ELSE p_retailprice END AS p_retailprice, "
-            "CASE WHEN p_partkey % 19 = 0 THEN NULL ELSE p_name END AS p_name"
-        ),
-        "nation": (
-            "CASE WHEN n_nationkey % 5 = 0 THEN NULL ELSE n_regionkey END AS n_regionkey, "
-            "CASE WHEN n_nationkey % 7 = 0 THEN NULL ELSE n_name END AS n_name"
-        ),
-        "region": (
-            "CASE WHEN r_regionkey % 2 = 0 THEN NULL ELSE r_regionkey END AS r_regionkey, "
-            "CASE WHEN r_regionkey % 3 = 0 THEN NULL ELSE r_name END AS r_name"
-        ),
-    },
-)
-STRIPES["nonfinite(events.value)"] = (
-    ("events",),
-    {"events": _NF.format(k="event_id", c="value")},
-)
-STRIPES["nonfinite(lineitem+orders measures)"] = (
-    ("lineitem", "orders"),
-    {
-        "lineitem": ", ".join(
-            _NF.format(k=k, c=c)
-            for c, k in [
-                ("l_quantity", "(l_orderkey*10+l_linenumber)"),
-                ("l_extendedprice", "(l_orderkey*10+l_linenumber+3)"),
-                ("l_discount", "(l_orderkey*10+l_linenumber+11)"),
-                ("l_tax", "(l_orderkey*10+l_linenumber+17)"),
-            ]
-        ),
-        "orders": _NF.format(k="o_orderkey", c="o_totalprice"),
-    },
-)
-STRIPES["nonfinite(embedding components)"] = (
-    ("embeddings",),
-    {
-        "embeddings": (
-            "CASE WHEN vec_id % 23 = 7 THEN list_concat(['nan'::FLOAT], embedding[2:]) "
-            "WHEN vec_id % 23 = 8 THEN list_concat(['inf'::FLOAT], embedding[2:]) "
-            "WHEN vec_id % 23 = 9 THEN list_concat(['-inf'::FLOAT], embedding[2:]) "
-            "ELSE embedding END AS embedding"
-        )
-    },
-)
-
-# Unicode-hazard stripe (r13): the codepoint battery
-# (tests/test_text_adversarial.py) probes the WS_CLASS / fold_case /
-# regex-flavor contracts on tiny purpose-built docs; this stripe plants
-# the same hazard classes INSIDE real corpus text at depth, so the
-# tokenize → shingle → hash → band/grid machinery sees them colliding
-# with real data (every 13th doc gets one hazard class appended or
-# injected; both engines read the same rewritten parquet, so this is a
-# pure parity probe of the twinned text kernels).
-STRIPES["unicode(documents.text)"] = (
-    ("documents",),
-    {
-        "documents": (
-            "CASE doc_id % 13"
-            " WHEN 0 THEN text || ' nbsp' || chr(160) || 'joined'"
-            " WHEN 1 THEN text || ' e' || chr(769) || ' combining'"
-            " WHEN 2 THEN text || ' 中文文本去重'"
-            " WHEN 3 THEN text || ' \U0001f642\U0001f680 emoji'"
-            " WHEN 4 THEN chr(11) || chr(11) || text"
-            " WHEN 5 THEN 'zero' || chr(8203) || 'width ' || text"
-            " WHEN 6 THEN chr(8207) || text"
-            " WHEN 7 THEN text || ' сопу'"
-            " WHEN 8 THEN 'cafe' || chr(769) || ' ' || text"
-            " WHEN 9 THEN text || chr(1) || 'ctrl'"
-            " WHEN 10 THEN text || ' ' || chr(304) || 'stanbul'"
-            " WHEN 11 THEN text || ' \U0001d7cf\U0001d7d0'"
-            " ELSE text END AS text"
-        )
-    },
-)
-
-# Hostile-timestamp stripe (r14, verdict #5 — the streaming axis): the
-# EXACT ts-rewrite of the committed sf0.001 battery
-# (tests/test_timestamp_adversarial.py): NULL ts (%7), pre-epoch 1969
-# µs-laden (%11), far-future 2342 past the datetime64[ns] ceiling
-# (%13), one shared duplicate instant (%5). Every events-reading sweep
-# member runs under it — which includes the batch twins of the whole
-# streaming family (session_windows_batch, stateful_dedup_events,
-# stream_tumbling_counts, the tumbling/sliding/interarrival stats), so
-# the streaming semantics carry the same scale-decade evidence as the
-# rest of the catalog.
-STRIPES["hostile-ts(events.ts)"] = (
-    ("events",),
-    {
-        "events": (
-            "CASE"
-            " WHEN event_id % 7 = 0 THEN NULL"
-            " WHEN event_id % 11 = 0 THEN"
-            " TIMESTAMP '1969-07-20 20:17:40.123456'"
-            " - to_days(CAST(event_id % 97 AS INTEGER))"
-            " - to_microseconds(CAST(event_id % 999983 AS BIGINT))"
-            " WHEN event_id % 13 = 0 THEN"
-            " TIMESTAMP '2342-06-01 00:00:00.999999'"
-            " + to_hours(CAST(event_id % 43 AS INTEGER))"
-            " WHEN event_id % 5 = 0 THEN TIMESTAMP '2024-01-15 12:00:00'"
-            " ELSE ts END AS ts"
-        )
-    },
-)
-
-# Combined events stripe (r14): hostile-ts and nullevents touch the
-# SAME table on DISJOINT columns (ts vs user_id/value/event_type/
-# props), so their composition is an events table where every hostility
-# co-occurs — NULL users with far-future stamps, non-NULL-keyed rows at
-# the shared duplicate instant, NULL values inside pre-epoch sessions —
-# interaction coverage neither per-column stripe can give (the ts
-# moduli 5/7/11/13 vs the NULL moduli 13/17/19/23 guarantee combined
-# rows at any SF).
-STRIPES["combo-events(hostile-ts + null columns at once)"] = (
-    ("events",),
-    {
-        "events": (
-            STRIPES["hostile-ts(events.ts)"][1]["events"]
-            + ", "
-            + STRIPES["nullevents(events)"][1]["events"]
-        )
-    },
-)
-
-# Combined stripes (r13): the four NULL stripes touch DISJOINT table
-# sets (documents / lineitem+orders / events / the five dims), so their
-# union is a world where EVERY table is NULL-laced SIMULTANEOUSLY —
-# interaction coverage the per-axis stripes cannot give (a query that
-# joins a NULL-striped fact to a NULL-striped dim exercises both
-# conventions in one plan). Same construction for the three non-finite
-# stripes (events / facts / embeddings, also disjoint).
-_COMBO_NULL_TABLES = tuple(
-    t
-    for label in (
-        "nullmeta(documents)",
-        "nullfacts(lineitem+orders)",
-        "nullevents(events)",
-        "nulldims(customer+supplier+part+nation+region)",
-    )
-    for t in STRIPES[label][0]
-)
-STRIPES["combo-null(all nine tables at once)"] = (
-    _COMBO_NULL_TABLES,
-    {
-        t: rw
-        for label in (
-            "nullmeta(documents)",
-            "nullfacts(lineitem+orders)",
-            "nullevents(events)",
-            "nulldims(customer+supplier+part+nation+region)",
-        )
-        for t, rw in STRIPES[label][1].items()
-    },
-)
-_COMBO_NF_TABLES = tuple(
-    t
-    for label in (
-        "nonfinite(events.value)",
-        "nonfinite(lineitem+orders measures)",
-        "nonfinite(embedding components)",
-    )
-    for t in STRIPES[label][0]
-)
-STRIPES["combo-nonfinite(events+facts+embeddings at once)"] = (
-    _COMBO_NF_TABLES,
-    {
-        t: rw
-        for label in (
-            "nonfinite(events.value)",
-            "nonfinite(lineitem+orders measures)",
-            "nonfinite(embedding components)",
-        )
-        for t, rw in STRIPES[label][1].items()
-    },
+DEPTH_STRIPES = (
+    "nullmeta(documents)",
+    "nullfacts(lineitem+orders)",
+    "nullevents(events)",
+    "nulldims(customer+supplier+part+nation+region)",
+    "nonfinite(events.value)",
+    "nonfinite(lineitem+orders measures)",
+    "nonfinite(embedding components)",
+    "unicode(documents.text)",
+    "hostile-ts(events.ts)",
+    "combo-events(hostile-ts + null columns at once)",
+    "combo-null(all nine tables at once)",
+    "combo-nonfinite(events+facts+embeddings at once)",
 )
 
 
 def main() -> None:
     src = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    from syntheticdata_pipeline__spark.plans import load_all
     from syntheticdata_pipeline__spark.session import get_spark
 
     spark = get_spark("hostile-depth", cpus=os.environ.get("SPARK_GRAFT_CPUS", "8"))
     spark.sparkContext.setLogLevel("ERROR")
-    registry = load_all()
     total_pass = total_skip = total_fail = 0
     only = set(sys.argv[2:])  # optional stripe-label filter
-    for label, (tables, rewrites) in STRIPES.items():
+    for label in DEPTH_STRIPES:
         if only and label not in only:
             continue
+        rewrites = STRIPES[label]
         tmp = tempfile.mkdtemp(prefix="hostile_depth_")
         try:
-            _stripe(src, tmp, rewrites)
-            markers = ("_E(spark",) if "embeddings" in tables else ()
-            members = sweep_members(tables, extra_src_markers=markers)
-            con = duck_connect(tmp)
+            striped_dir(src, tmp, rewrites)
+            markers = ("_E(spark",) if "embeddings" in rewrites else ()
+            members = sweep_members(tuple(rewrites), extra_src_markers=markers)
             # Count True/None/False SEPARATELY (r12 ADVICE #2): a member
             # without an oracle returns None (rows-only), and folding
             # that into npass would overstate oracle-verified coverage
             # in the recorded evidence lines.
-            npass = nskip = nfail = 0
-            for name in members:
-                spec = registry[name]
-                qs = {name: spec.build}
-                oracles = {name: spec.oracle} if spec.oracle else {}
-                ok = compare_one(spark, con, name, qs, oracles, tmp)
-                if ok is False:
-                    nfail += 1
-                elif ok is None:
-                    nskip += 1
-                else:
-                    npass += 1
-            con.close()
+            verdicts = [oracle_verdict(spark, tmp, name) for name in members]
+            npass, nskip, nfail = (verdicts.count(v) for v in (True, None, False))
             total_pass += npass
             total_skip += nskip
             total_fail += nfail
