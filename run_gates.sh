@@ -125,7 +125,7 @@ if [ "$MODE" = "full" ] && [ $fail -eq 0 ]; then
   fi
 
   echo "== refresh plan audit + query index =="
-  python tools/explain_audit.py > PLANS_AUDIT.md && echo "PLANS_AUDIT.md refreshed"
+  python tools/plan_walk.py audit > PLANS_AUDIT.md && echo "PLANS_AUDIT.md refreshed"
   python tools/gen_queries_md.py > QUERIES.md && echo "QUERIES.md refreshed"
 fi
 

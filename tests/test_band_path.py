@@ -15,37 +15,13 @@ import re
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMOKE
-
-
-def _plan_nodes(plan) -> list:
-    """Every node of a logical plan: children and inner children
-    (subqueries, the cached plan under an InMemoryRelation)."""
-    out, stack = [], [plan]
-    while stack:
-        node = stack.pop()
-        out.append(node)
-        for kids in (node.children(), node.innerChildren()):
-            it = kids.iterator()
-            while it.hasNext():
-                stack.append(it.next())
-    return out
+from tools.plan_walk import seq, walk
 
 
 def _count_exprs(plan, cls: str) -> int:
     """Expression nodes of class ``cls`` anywhere in a logical plan."""
-    n = 0
-    for node in _plan_nodes(plan):
-        it = node.expressions().iterator()
-        stack = []
-        while it.hasNext():
-            stack.append(it.next())
-        while stack:
-            e = stack.pop()
-            n += e.getClass().getSimpleName() == cls
-            kids = e.children().iterator()
-            while kids.hasNext():
-                stack.append(kids.next())
-    return n
+    exprs = (e for _, _, node in walk(plan) for e in seq(node.expressions()))
+    return sum(c == cls for e in exprs for _, c, _ in walk(e))
 
 
 def test_band_key_matches_sql_twin(spark, duck):
@@ -143,7 +119,7 @@ def test_incremental_dedup_plans_one_band_join(spark):
     band_join = re.compile(r"\(bh#\d+ = bh#\d+\)")
     joins = [
         n
-        for n in _plan_nodes(survivors._jdf.queryExecution().optimizedPlan())
-        if n.nodeName() == "Join" and band_join.search(n.simpleString(1000))
+        for _, cls, n in walk(survivors._jdf.queryExecution().optimizedPlan())
+        if cls == "Join" and band_join.search(n.simpleString(1000))
     ]
     assert len(joins) == 1, [j.simpleString(1000) for j in joins]

@@ -2,6 +2,10 @@
 refactor can't silently regress them. PLANS_AUDIT.md reports these
 properties; this file ASSERTS them on a representative set.
 
+Every plan property is read from one walk of the physical plan tree
+(``tools/plan_walk.py``), the same walk that writes PLANS_AUDIT.md and
+the plan dumps.
+
 Contracts:
  1. No unlisted query may contain a CartesianProduct /
     BroadcastNestedLoopJoin — only the intentionally bounded ones
@@ -12,8 +16,10 @@ Contracts:
     table schema (column pruning reaches the parquet scan).
  4. De-skewed quantile family: no windowspecdefinition partitioned by a
     low-cardinality group directly over per-doc rows (the histogram-CDF
-    invariant) — checked structurally: every Window in the perplexity
-    gate consumes an aggregate (its input is the histogram), not a scan.
+    invariant) — checked structurally: on every path down from each
+    Window of the perplexity gate, the first aggregate or scan met is an
+    aggregate grouped by the window's own columns (its input is the value
+    histogram), not a scan or a per-doc aggregate.
  5. Pins earn their keep: every ``session.pin`` call site is referenced
     at least twice in some catalog query that reaches it (PERF.md log
     #7), and nothing else in the package calls ``localCheckpoint``.
@@ -26,42 +32,38 @@ Contracts:
     hostile fixture table with a DuckDB COPY or links one with
     ``os.symlink`` outside ``sweep_membership.striped_dir`` (a
     source-text check).
+ 9. Plan fingerprints ignore expression ids: a query built again later
+    in the session dumps the same text, and ``plan_walk.py --diff``
+    names exactly the query whose dump changed.
 """
 
 from __future__ import annotations
 
 import ast
-import io
 import os
 import re
 import sys
 from collections import Counter
-from contextlib import redirect_stdout
 from dataclasses import dataclass, field
 
 import pytest
 
 from tests.conftest import SF_SMOKE
+from tools.plan_walk import AGGREGATES, NESTED_LOOPS, Walked, capture, print_diff, seq
+from tools.plan_walk import walk, walk_physical, write_dumps
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 _PKG = os.path.join(_REPO, "syntheticdata_pipeline__spark")
 
 
-def _explain(df) -> str:
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue().split("== Initial Plan ==")[0]
-
-
-def _final(catalog, name: str) -> str:
+def _final(catalog, name: str) -> Walked:
     b = catalog[name]
     assert not b.error, f"{name} failed to build: {b.error}"
-    return b.text
+    return b.plan
 
 
-def _nodes(txt: str, pattern: str) -> int:
-    return len(re.findall(rf"^\(\d+\) {pattern}", txt, re.MULTILINE))
+def _nlj(plan: Walked) -> int:
+    return sum(plan.counts[cls] for cls in NESTED_LOOPS)
 
 
 # Queries ALLOWED to contain NLJ/cartesian nodes: 1-row broadcast-scalar
@@ -165,52 +167,66 @@ _STRICT_NO_NLJ = [
 
 @pytest.mark.parametrize("name", _STRICT_NO_NLJ)
 def test_no_cartesian_in_strict_queries(catalog, name):
-    txt = _final(catalog, name)
-    nlj = _nodes(txt, "BroadcastNestedLoopJoin") + _nodes(txt, "CartesianProduct")
-    assert nlj == 0, f"{name} grew a nested-loop/cartesian node"
+    assert _nlj(_final(catalog, name)) == 0, f"{name} grew a nested-loop/cartesian node"
 
 
 def test_dims_stay_broadcast_in_tpch_q5(catalog):
     """Q5's four dim joins must all be BHJ; the only SMJ permitted is the
     fact-fact join (orders x lineitem) — none today."""
-    txt = _final(catalog, "tpch_q5_local_supplier_revenue")
-    assert _nodes(txt, "BroadcastHashJoin") >= 3
-    assert _nodes(txt, "SortMergeJoin") <= 1
+    counts = _final(catalog, "tpch_q5_local_supplier_revenue").counts
+    assert counts["BroadcastHashJoinExec"] >= 3
+    assert counts["SortMergeJoinExec"] <= 1
 
 
 def test_q1_scan_prunes_columns(catalog):
     """TPC-H Q1 reads 7 of lineitem's 11 columns — the ReadSchema must
     not contain the join keys it never touches."""
-    txt = _final(catalog, "tpch_q1_pricing_summary")
-    schemas = re.findall(r"ReadSchema: ([^\n]*)", txt)
+    schemas = [s["ReadSchema"] for s in _final(catalog, "tpch_q1_pricing_summary").scans]
     assert schemas, "no parquet scan found"
     for s in schemas:
         assert "l_orderkey" not in s and "l_partkey" not in s, s
 
 
 def test_q6_pushes_every_predicate(catalog):
-    txt = _final(catalog, "tpch_q6_forecast_revenue")
-    pushed = " ".join(re.findall(r"PushedFilters: \[([^\]]*)\]", txt))
+    pushed = " ".join(s["PushedFilters"] for s in _final(catalog, "tpch_q6_forecast_revenue").scans)
     for frag in ("l_shipdate", "l_discount", "l_quantity"):
         assert frag in pushed, f"{frag} not pushed to scan"
 
 
-def test_perplexity_gate_windows_consume_aggregates(catalog):
-    """The de-skew invariant, structurally: every Window node's subtree
-    must contain a HashAggregate BELOW it closer than any parquet scan —
-    i.e., windows run over histogram aggregates, never raw doc rows."""
-    txt = _final(catalog, "unigram_perplexity_gate")
-    # formatted explain: tree section first; for each Window detail id,
-    # its input is the node it references. Cheap structural proxy: the
-    # plan must contain at least one aggregate, and the number of Window
-    # nodes must not exceed the number of aggregates feeding them.
-    n_window = _nodes(txt, "Window")
-    n_agg = _nodes(txt, "HashAggregate") + _nodes(txt, "SortAggregate") + _nodes(
-        txt, "ObjectHashAggregate"
-    )
-    assert n_window >= 1 and n_agg >= 2 * n_window, (
-        f"windows={n_window} aggregates={n_agg}: window no longer histogram-fed?"
-    )
+def _first_below(node, stop) -> list[tuple[str, object]]:
+    """On each path down from ``node``, the first node whose class is in
+    ``stop``, as (class, node)."""
+    out = []
+    for kid in seq(node.children()):
+        cls = kid.getClass().getSimpleName()
+        out += [(cls, kid)] if cls in stop else _first_below(kid, stop)
+    return out
+
+
+def test_perplexity_gate_windows_consume_aggregates(spark):
+    """The de-skew invariant, structurally: on every path down from each
+    Window node, the first aggregate or scan (parquet or pinned) met is an
+    aggregate grouped by exactly the window's partition and order columns.
+    The window runs over a value histogram, never over raw or per-doc
+    rows."""
+    from syntheticdata_pipeline__spark.plans import load_all
+
+    df = load_all()["unigram_perplexity_gate"].build(spark, SF_SMOKE)
+    plan = df._jdf.queryExecution().executedPlan()
+    windows = [n for _, cls, n in walk(plan) if cls == "WindowExec"]
+    assert windows, "the perplexity gate lost its CDF window"
+    stop = (*AGGREGATES, "FileSourceScanExec", "RDDScanExec")
+    for window in windows:
+        cols = sorted(
+            [e.name() for e in seq(window.partitionSpec())]
+            + [o.child().name() for o in seq(window.orderSpec())]
+        )
+        below = _first_below(window, stop)
+        assert below, f"window over {cols} reads no aggregate or scan"
+        for cls, node in below:
+            assert cls in AGGREGATES, f"window over {cols} reads a {cls}, not a histogram"
+            keys = sorted(e.name() for e in seq(node.groupingExpressions()))
+            assert keys == cols, f"window over {cols} reads an aggregate by {keys}, not a histogram"
 
 
 @dataclass
@@ -222,7 +238,7 @@ class _Pin:
 
 @dataclass
 class _Built:
-    text: str = ""  # formatted final plan ("" when the build raised)
+    plan: Walked | None = None  # the walked final physical plan (None when the build raised)
     error: str = ""
     pins: list[_Pin] = field(default_factory=list)
     final_rdds: list[int] = field(default_factory=list)
@@ -230,24 +246,14 @@ class _Built:
 
 def _rdd_refs(plan) -> list[int]:
     """Ids of the existing RDDs (pins among them) a plan reads, once per
-    reference. Walks children and inner children (subqueries, and the
-    cached plan under an InMemoryRelation)."""
-    out, stack = [], [plan]
-    while stack:
-        node = stack.pop()
-        if node.nodeName() in ("LogicalRDD", "Scan ExistingRDD"):
-            out.append(node.rdd().id())
-        for kids in (node.children(), node.innerChildren()):
-            it = kids.iterator()
-            while it.hasNext():
-                stack.append(it.next())
-    return out
+    reference."""
+    return [node.rdd().id() for _, cls, node in walk(plan) if cls in ("LogicalRDD", "RDDScanExec")]
 
 
 @pytest.fixture(scope="module")
 def catalog(spark) -> dict[str, _Built]:
-    """Build every batch query once at smoke scale, keeping its final
-    plan text and, for contract 5, every pin it made and the pinned
+    """Build every batch query once at smoke scale, keeping its walked
+    final physical plan and, for contract 5, every pin it made and the pinned
     RDDs its final optimized plan reads."""
     from pyspark.sql.classic.dataframe import DataFrame
 
@@ -285,12 +291,47 @@ def catalog(spark) -> dict[str, _Built]:
             b = built[name] = _Built()
             try:
                 df = spec.build(spark, SF_SMOKE)
-                b.text = _explain(df)
+                b.plan = walk_physical(df)
                 b.final_rdds = _rdd_refs(df._jdf.queryExecution().optimizedPlan())
             except Exception as e:
                 b.error = type(e).__name__
             b.pins = list(current)
     return built
+
+
+# Queries whose plans hold text that depends on expression ids: the
+# distinct-aggregate rewrite's groups (q21, report), scan filters past
+# Spark's 100-character metadata cut (q22) and lambda variables (ann_lsh).
+_ID_SENSITIVE = [
+    "tpch_q21_waiting_suppliers",
+    "report_order_fulfillment",
+    "tpch_q22_dormant_customers",
+    "ann_lsh_topk",
+]
+
+
+@pytest.fixture(scope="module")
+def rebuilt(spark, catalog) -> dict[str, Walked]:
+    """The id-sensitive queries built again, at later expression ids."""
+    return capture(spark, SF_SMOKE, set(_ID_SENSITIVE))
+
+
+@pytest.mark.parametrize("name", _ID_SENSITIVE)
+def test_fingerprint_ignores_expression_ids(catalog, rebuilt, name):
+    first = _final(catalog, name)
+    assert "..." not in first.dump, "scan metadata abbreviated"
+    assert rebuilt[name].dump == first.dump
+    assert rebuilt[name].fingerprint == first.fingerprint
+
+
+def test_diff_names_exactly_the_changed_query(catalog, rebuilt, tmp_path, capsys):
+    write_dumps({name: _final(catalog, name) for name in _ID_SENSITIVE}, str(tmp_path))
+    assert print_diff(rebuilt, str(tmp_path)) == 0
+    assert capsys.readouterr().out.splitlines()[-1] == "plans unchanged (4 queries)"
+    with open(tmp_path / "ann_lsh_topk.txt", "a") as f:
+        f.write("Filter false\n")
+    assert print_diff(rebuilt, str(tmp_path)) == 1
+    assert capsys.readouterr().out.splitlines()[-1] == "plans unchanged except 1 of 4: ann_lsh_topk"
 
 
 def test_catalog_wide_nlj_whitelist(catalog):
@@ -305,7 +346,7 @@ def test_catalog_wide_nlj_whitelist(catalog):
         if b.error:
             raised.append(f"{name}: {b.error}")
             continue
-        if _nodes(b.text, "BroadcastNestedLoopJoin") + _nodes(b.text, "CartesianProduct"):
+        if _nlj(b.plan):
             flagged.append(name)
     # A query whose build raises silently drops out of the NLJ guard, so
     # raising is itself a failure unless the query is on a known

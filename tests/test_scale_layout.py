@@ -6,17 +6,9 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 
+from tools.plan_walk import walk_physical
+
 from .conftest import SF_SMOKE
-
-
-def _plan(df) -> str:
-    import io
-    from contextlib import redirect_stdout
-
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
 
 
 def test_bucketed_join_has_no_shuffle(spark, tmp_path):
@@ -45,11 +37,9 @@ def test_bucketed_join_has_no_shuffle(spark, tmp_path):
             spark.table("lineitem_b"),
             F.col("o_orderkey") == F.col("l_orderkey"),
         )
-        txt = _plan(j)
-        assert "SortMergeJoin" in txt
-        import re
-
-        assert not re.search(r"^\(\d+\) Exchange", txt, re.MULTILINE), "bucketed join shuffled!"
+        counts = walk_physical(j).counts
+        assert counts["SortMergeJoinExec"]
+        assert not counts["ShuffleExchangeExec"], "bucketed join shuffled!"
         assert j.count() == li.count()
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
@@ -66,8 +56,8 @@ def test_partitioned_write_prunes(spark, tmp_path):
     )
     orders.write.mode("overwrite").partitionBy("order_year").parquet(path)
     back = spark.read.parquet(path).filter(F.col("order_year") == 1995)
-    txt = _plan(back)
-    assert "PartitionFilters" in txt and "order_year" in txt.split("PartitionFilters")[1][:200]
+    (scan,) = walk_physical(back).scans
+    assert "order_year" in scan["PartitionFilters"]
     expected = orders.filter(F.col("order_year") == 1995).count()
     assert back.count() == expected
 
