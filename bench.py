@@ -14,9 +14,11 @@ record (all timings, vs_baseline, stress curves, recheck provenance)
 is written to /tmp/spark_graft_bench_full.json, which run_gates.sh
 installs as the committed BENCH_local.json.
 
-The 2x gate is falsifiable: per-query targets live in
-bench_baseline.json (round-1 measured numbers); "vs_baseline" reports
-this-run/target per query and "regressions_gt_2x" lists violations.
+The 2x gate is falsifiable: per-query targets live in the versioned
+"anchors_v2" block of bench_baseline.json (the per-query median of three
+fresh runs of this runner, SPARK_GRAFT_NO_STRESS=1); "vs_baseline"
+reports this-run/target per query and "regressions_gt_2x" lists the
+breaches that a second measurement in the same warm session reproduces.
 
 Scale-stress: the dedup family is re-run against a 10x-replicated
 documents table (50k docs at sf0.1) and "scale_stress" reports the
@@ -24,9 +26,13 @@ runtime growth factor per query — sub-linear-in-pairs growth is the
 evidence that the LSH/inverted-index shapes (not quadratic ones) are on
 the data path. Skip with SPARK_GRAFT_NO_STRESS=1.
 
-Every timing here and in tools/ goes through ``measure``: a count-style
-action (no driver collect of payload rows), best of two runs. One
-warm-up run of the first benched query amortizes JVM startup.
+Every timing here and in tools/ goes through ``measure``: best of two
+``session.materialize`` runs of the DataFrame the query built, which
+computes every output column (the plan the oracle checks) without
+collecting rows to the driver. One warm-up run of the first benched
+query amortizes JVM startup. The sidecar's "host" header records the
+CPUs, RAM, a load canary before and after the main loop, and the
+session's confs.
 """
 
 from __future__ import annotations
@@ -34,11 +40,13 @@ from __future__ import annotations
 import json
 import os
 import shutil
-import subprocess
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+from perfbench.run import host_ram_mb, load_canary_ms, session_facts  # noqa: E402
+from syntheticdata_pipeline__spark.session import materialize  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 REPO = os.path.dirname(os.path.abspath(__file__))
@@ -148,11 +156,13 @@ DETAIL_PATH = "/tmp/spark_graft_bench_full.json"
 
 
 def _load_baseline() -> tuple[dict[str, float], str]:
-    """(per-query anchor seconds, anchor sf) from bench_baseline.json."""
+    """(per-query anchor seconds, anchor sf) from the method-v2 anchors in
+    bench_baseline.json; the older keys time ``.count()`` and stay only
+    as history."""
     try:
         with open(os.path.join(REPO, "bench_baseline.json")) as f:
-            b = json.load(f)
-        return b["queries"], str(b.get("sf", "0.1"))
+            v2 = json.load(f)["anchors_v2"]
+        return v2["queries"], str(v2["sf"])
     except Exception:
         return {}, "0.1"
 
@@ -205,65 +215,42 @@ def _build_stress_dir(spark, sf_dir: str, factor: int) -> str:
 
 
 def measure(spark, build, sf_dir: str, repeats: int = 2) -> tuple[float, int]:
-    """Best-of-``repeats`` seconds of ``build(spark, sf_dir).count()`` and
-    the last row count — the one timing path of this runner and tools/.
-    ``build`` is any ``(spark, sf_dir) -> DataFrame``, rebuilt inside every
-    timed repeat."""
+    """Best-of-``repeats`` seconds of ``materialize(build(spark, sf_dir))``
+    and the last row count — the one timing path of this runner and
+    tools/. ``build`` is any ``(spark, sf_dir) -> DataFrame``, rebuilt
+    inside every timed repeat."""
     # best-of-N: the first execution of a multi-join plan pays one-time
     # whole-stage-codegen compilation (~2x on the 6-join TPC-H shapes),
     # which is not a property of the plan
     best, rows = float("inf"), 0
     for _ in range(repeats):
         t0 = time.perf_counter()
-        rows = build(spark, sf_dir).count()
+        rows = materialize(build(spark, sf_dir))
         best = min(best, time.perf_counter() - t0)
     return best, rows
 
 
-def _fresh_process_best(name: str, sf_dir: str, repeats: int = 2) -> float:
-    """Best-of-``repeats`` in a truly fresh PROCESS (cold JVM via
-    tools/time_queries.py). r15 measurement-bug fix (documented in
-    OPTIMIZATION_r15.md): a recheck inside the same JVM let a degraded
-    JVM/machine CONFIRM false >2x breaches on untouched sub-second
-    queries. Raises on any failure (nonzero exit, timeout, unparsable
-    output)."""
-    env = dict(
-        os.environ, SPARK_GRAFT_SF_DIR=sf_dir, SPARK_GRAFT_REPEATS=str(repeats)
-    )
-    out = subprocess.run(
-        [sys.executable, os.path.join(REPO, "tools", "time_queries.py"), name],
-        env=env,
-        capture_output=True,
-        text=True,
-        timeout=600,
-    )
-    if out.returncode != 0:
-        raise RuntimeError(
-            f"time_queries.py exited {out.returncode}: {out.stderr.strip()[-200:]}"
-        )
-    return float(json.loads(out.stdout.strip().splitlines()[-1])[name])
-
-
 def _confirm_regressions(
+    spark,
+    registry: dict,
     candidates: list[str],
     baseline: dict[str, float],
     timings: dict[str, float],
     vs_baseline: dict[str, float],
     recheck: dict[str, dict],
-    sf_dir: str = SF_DIR,
 ) -> list[str]:
-    """Fresh-process confirmation of would-be 2x gate breaches: only a
-    breach that REPRODUCES outside the warm session counts. The fresh
-    best-of-2 replaces the in-context timing/ratio and both values are
-    recorded in ``recheck`` for provenance; returns the confirmed subset.
-    Tested in tests/test_bench_reclaim.py."""
+    """Re-time each would-be 2x gate breach with ``measure`` in the bench's
+    own warm session, right after the main loop — the protocol the anchors
+    were measured under — and return the breaches the recheck reproduces.
+    The recheck replaces the main-loop timing/ratio and both values are
+    recorded in ``recheck``. Tested in tests/test_bench_reclaim.py."""
     confirmed = []
     for name in candidates:
         try:
-            fresh = _fresh_process_best(name, sf_dir)
+            again = measure(spark, registry[name].build, SF_DIR)[0]
         except Exception as e:
             # A recheck crash (transient Spark failure, OOM) must not sink
-            # the bench line (r10 ADVICE): keep the in-context breach as
+            # the bench line (r10 ADVICE): keep the main-loop breach as
             # confirmed — the conservative reading — and record the error.
             recheck[name] = {
                 "in_context_sec": timings[name],
@@ -274,20 +261,19 @@ def _confirm_regressions(
             continue
         # gate on the UNROUNDED ratio (r10 ADVICE: 2.0049 must not pass a
         # 2.0 gate); round only the recorded artifact values
-        ratio = fresh / baseline[name]
+        ratio = again / baseline[name]
         recheck[name] = {
             "in_context_sec": timings[name],
-            "fresh_sec": round(fresh, 3),
+            "recheck_sec": round(again, 3),
             "vs_baseline": round(ratio, 2),
-            "fresh_process": True,
         }
-        timings[name] = round(fresh, 3)
+        timings[name] = round(again, 3)
         vs_baseline[name] = round(ratio, 2)
         if ratio > 2.0:
             confirmed.append(name)
         print(
-            f"# recheck {name}: fresh-process {fresh:.3f}s vs anchor ratio {ratio:.3f}"
-            f" ({'CONFIRMED regression' if ratio > 2.0 else 'in-context noise'})",
+            f"# recheck {name}: {again:.3f}s vs anchor ratio {ratio:.3f}"
+            f" ({'CONFIRMED regression' if ratio > 2.0 else 'not reproduced'})",
             file=sys.stderr,
         )
     return confirmed
@@ -299,8 +285,15 @@ def main() -> None:
 
     registry = load_all()
 
+    host = {
+        "date": time.strftime("%Y-%m-%d"),
+        "cpus": len(os.sched_getaffinity(0)),
+        "ram_mb": host_ram_mb(),
+        "canary_ms_start": round(load_canary_ms(), 2),
+    }
     spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
+    host["session"] = session_facts(spark)
 
     # Warm-up: JVM + codegen + parquet footer caches.
     measure(spark, registry[next(iter(registry))].build, SF_DIR, repeats=1)
@@ -310,9 +303,7 @@ def main() -> None:
         best, n = measure(spark, registry[name].build, SF_DIR)
         timings[name] = round(best, 3)
         print(f"# {name}: {timings[name]:.3f}s rows={n}", file=sys.stderr)
-    # Neither the recheck subprocess nor the stress phase uses this
-    # session; an idle JVM beside them would only contend for memory.
-    spark.stop()
+    host["canary_ms_end"] = round(load_canary_ms(), 2)
 
     baseline, baseline_sf = _load_baseline()
     # gate on UNROUNDED ratios (r10 ADVICE: a true 2.0049 must not slip a
@@ -324,7 +315,7 @@ def main() -> None:
         if name in baseline and baseline[name] > 0
     }
     vs_baseline = {name: round(r, 2) for name, r in ratios.items()}
-    # The anchors are sf0.1/local[32] measurements; at other SFs fixed
+    # The anchors are sf0.1 measurements; at other SFs fixed
     # per-job overhead dominates sub-second queries and the ratio is
     # meaningless, so the 2x gate only binds when run-sf == anchor-sf.
     sf_str = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
@@ -333,35 +324,28 @@ def main() -> None:
         sorted(n for n, r in ratios.items() if r > 2.0) if gate_active else []
     )
 
-    # Fresh-process confirmation of gate breaches: late in the ~190-query
-    # main loop, compute-heavy queries have measured 2-3x their fresh-
-    # session time with NO plan change. That slowdown was first blamed
-    # on accumulated session state; the r15 session-state probe found no
-    # block accumulation and negligible GC and closed it as host noise
-    # (plans/r15/evidence/README.md, ROADMAP "Recent"). The 2x gate is
-    # about plan shape, so a breach only counts if a fresh process
-    # reproduces it; the recheck value replaces the in-context one and
-    # is recorded under "recheck" for provenance. ROADMAP open item 1
-    # owns this recheck protocol (a cold recheck against warm anchors).
+    # A breach counts only if a second best-of-2 in this same warm
+    # session, right after the loop, reproduces it: the anchors were
+    # measured that way, so the recheck compares like with like. The
+    # recheck value replaces the main-loop one and both are recorded
+    # under "recheck".
     recheck: dict[str, dict] = {}
     if regressions:
         regressions = _confirm_regressions(
-            regressions, baseline, timings, vs_baseline, recheck
+            spark, registry, regressions, baseline, timings, vs_baseline, recheck
         )
+    # The stress phase runs in its own session; an idle JVM beside it
+    # would only contend for memory.
+    spark.stop()
 
     stress: dict = {}
     if not os.environ.get("SPARK_GRAFT_NO_STRESS"):
         try:
-            # The stress phase runs in a RESTARTED session with its own
-            # re-measured base: after the ~100-query main loop, the first
-            # stress entries measured 4-7x slower best-of-2 at identical
-            # output rows than the same query in a fresh session
-            # (minhash@10x 17.5-26.7 s in-context vs 3.9-4.2 s solo,
-            # 2026-08-15). The r15 probe traced such slowdowns to host
-            # noise, not session state (plans/r15/evidence/README.md;
-            # ROADMAP open item 1). Growth curves are evidence about plan
-            # SHAPE, so both sides of each ratio are measured inside the
-            # same session, close together. Best-of-2 like the main loop:
+            # Growth curves are evidence about plan SHAPE, so both sides
+            # of each ratio are measured inside one session, close
+            # together (the r15 probe traced the 4-7x main-loop-vs-solo
+            # gaps of 2026-08-15 to host noise, not session state;
+            # plans/r15/evidence/README.md). Best-of-2 like the main loop:
             # the first stress execution pays cold codegen + cold
             # stress-dir file cache, which previously made growth curves
             # cold-vs-warm noise (a 30x point measuring FASTER than its
@@ -404,8 +388,8 @@ def main() -> None:
         except Exception as e:  # stress must never sink the bench line
             stress = {"error": f"{type(e).__name__}: {e}"}
 
-    # A query the fresh-session recheck forgives in CONSECUTIVE committed
-    # runs is a repeat offender (r10 ADVICE): a plan regression that only
+    # A query the recheck forgives in CONSECUTIVE committed runs is a
+    # repeat offender (r10 ADVICE): a plan regression that only
     # shows up late in a long run would be silently forgiven forever, so
     # surface the overlap with the previously committed run.
     prior_forgiven: set[str] = set()
@@ -435,8 +419,8 @@ def main() -> None:
         "value": round(sum(timings.values()), 3),
     }
     # Full per-query detail (all queries + vs_baseline + stress curves +
-    # recheck provenance) goes to the sidecar, which run_gates.sh installs
-    # as the committed BENCH_local.json.
+    # recheck provenance + host facts) goes to the sidecar, which
+    # run_gates.sh installs as the committed BENCH_local.json.
     with open(DETAIL_PATH, "w") as f:
         json.dump(
             {
@@ -444,6 +428,7 @@ def main() -> None:
                 "vs_baseline": vs_baseline,
                 "scale_stress": stress,
                 "recheck": recheck,
+                "host": host,
                 **summary,
             },
             f,

@@ -46,10 +46,11 @@ def get_spark(
 ) -> SparkSession:
     """Build a local session shaped like a cluster deployment.
 
-    local[$SPARK_GRAFT_CPUS] for tests/bench; on a real cluster the same
-    code runs unchanged — only master/resource confs differ.
+    local[``cpus``], else local[$SPARK_GRAFT_CPUS], else one core per CPU
+    this process may run on; on a real cluster the same code runs
+    unchanged — only master/resource confs differ.
     """
-    cpus = str(cpus or os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = str(cpus or os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     shuffle = str(shuffle_partitions or int(cpus))
     driver_mem = os.environ.get("SPARK_DRIVER_MEM") or _default_driver_mem()
     builder = (
@@ -89,6 +90,14 @@ def pin(df: DataFrame) -> DataFrame:
     The pin is lazy: the first action that reads it materializes it.
     """
     return df.localCheckpoint(eager=False)
+
+
+def materialize(df: DataFrame) -> int:
+    """Run ``df``'s own physical plan and return its row count. Every
+    output column is computed: the RDD of rows is counted after the
+    projection, so no column can be pruned (``DataFrame.count`` would plan
+    a new query that reads no columns)."""
+    return int(df._jdf.queryExecution().toRdd().count())
 
 
 def _default_driver_mem() -> str:

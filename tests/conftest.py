@@ -38,7 +38,7 @@ def pytest_collection_modifyitems(config, items):
 def spark():
     from syntheticdata_pipeline__spark.session import get_spark
 
-    s = get_spark("tests", cpus=os.environ.get("SPARK_GRAFT_TEST_CPUS", "8"))
+    s = get_spark("tests")
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()

@@ -1,13 +1,20 @@
 """bench.py pins: the superseded stress layouts are reclaimed (r8
 ADVICE: the original guard only removed v1 while v2 still needed
 building, so on a machine with a READY v2 the stale replicated parquet
-under /tmp lived forever), ``bench.measure`` is a best-of-N, and the
->2x recheck confirms only breaches a fresh process reproduces."""
+under /tmp lived forever), ``bench.measure`` is a best-of-N over the
+DataFrame the query built with every output column computed, and the
+>2x recheck confirms only breaches a second in-session measurement
+reproduces."""
 
 from __future__ import annotations
 
 import os
 import shutil
+from types import SimpleNamespace
+
+import pytest
+
+from tests.conftest import SF_SMOKE
 
 
 def test_superseded_stress_dirs_reclaimed_even_when_current_ready(tmp_path):
@@ -51,26 +58,19 @@ class _FakeClock:
         return self._values.pop(0)
 
 
-class _FakeDF:
-    def __init__(self, rows):
-        self._rows = rows
-
-    def count(self):
-        return self._rows
-
-
 def test_measure_returns_min_over_repeats_and_last_row_count(monkeypatch):
     """bench.measure is the one timing path: it rebuilds the DataFrame
-    inside every timed repeat, keeps the fastest repeat and reports the
-    row count of the last one."""
+    inside every timed repeat, materializes it, keeps the fastest repeat
+    and reports the row count of the last one."""
     import bench
 
     calls = []
 
     def build(spark, sf_dir):
         calls.append((spark, sf_dir))
-        return _FakeDF(10 + len(calls))
+        return 10 + len(calls)  # stands in for the DataFrame
 
+    monkeypatch.setattr(bench, "materialize", lambda df: df)
     # three (t0, t1) pairs: 2.0s, 0.5s, 1.25s
     monkeypatch.setattr(bench, "time", _FakeClock([0.0, 2.0, 5.0, 5.5, 9.0, 10.25]))
 
@@ -81,62 +81,90 @@ def test_measure_returns_min_over_repeats_and_last_row_count(monkeypatch):
     assert calls == [("spark", "/sf")] * 3
 
 
-def _fake_fresh(values):
-    """_fresh_process_best stub: a float is the fresh best-of-2, an
-    exception instance is raised as the subprocess failure."""
+@pytest.mark.parametrize(
+    "name", ["doc_quality_scores", "simhash_signatures", "tpch_q1_pricing_summary"]
+)
+def test_measure_times_the_built_plan_with_every_column(spark, name, monkeypatch):
+    """The DataFrame ``bench.measure`` times is the very one ``build``
+    returned, and its optimized and executed plans output every column the
+    query returns (``DataFrame.count`` would plan a new query from which
+    Spark prunes every unread column; these three lose most of their work
+    that way)."""
+    import bench
+    from syntheticdata_pipeline__spark.plans import load_all
 
-    def fresh(name, sf_dir, repeats=2):
-        v = values[name]
-        if isinstance(v, Exception):
-            raise v
-        return v
+    built, timed = [], []
+    real = bench.materialize
+    monkeypatch.setattr(bench, "materialize", lambda df: timed.append(df) or real(df))
 
-    return fresh
+    def build(spark, sf_dir, _build=load_all()[name].build):
+        built.append(_build(spark, sf_dir))
+        return built[-1]
+
+    bench.measure(spark, build, SF_SMOKE)
+
+    assert len(timed) == len(built) == 2
+    assert all(t is b for t, b in zip(timed, built))
+    qe = timed[-1]._jdf.queryExecution()
+    for plan in (qe.optimizedPlan(), qe.executedPlan()):
+        out = plan.output()
+        assert [out.apply(i).name() for i in range(out.size())] == timed[-1].columns
 
 
-def test_fresh_session_recheck_confirms_only_reproduced_breaches(monkeypatch):
-    """r10 methodology pin: an in-context >2x reading only counts as a
-    regression when a fresh-process best-of-2 reproduces it; the fresh
-    value replaces the in-context one and both land in `recheck`."""
+def _registry(values):
+    """A registry whose builds the stubbed ``bench.measure`` times: a float
+    is the recheck's best-of-2, an exception instance is raised as the
+    recheck's failure."""
+    return {name: SimpleNamespace(build=v) for name, v in values.items()}
+
+
+def _fake_measure(spark, build, sf_dir, repeats=2):
+    if isinstance(build, Exception):
+        raise build
+    return build, 1
+
+
+def test_recheck_confirms_only_reproduced_breaches(monkeypatch):
+    """r10 methodology pin: a main-loop >2x reading only counts as a
+    regression when a second in-session best-of-2 reproduces it; the
+    recheck value replaces the main-loop one and both land in
+    `recheck`."""
     import bench
 
     baseline = {"slow_q": 1.0, "noisy_q": 1.0}
-    # in-context both read as 3x their anchor
+    # in the main loop both read as 3x their anchor
     timings = {"slow_q": 3.0, "noisy_q": 3.0}
     vs_baseline = {"slow_q": 3.0, "noisy_q": 3.0}
     recheck: dict = {}
-    # slow_q reproduces at 2.5s, noisy_q comes back at 0.5s (in-context
-    # session-state noise)
-    monkeypatch.setattr(
-        bench, "_fresh_process_best", _fake_fresh({"slow_q": 2.5, "noisy_q": 0.5})
-    )
+    # slow_q reproduces at 2.5s, noisy_q comes back at 0.5s
+    monkeypatch.setattr(bench, "measure", _fake_measure)
 
     confirmed = bench._confirm_regressions(
+        "spark",
+        _registry({"slow_q": 2.5, "noisy_q": 0.5}),
         candidates=["slow_q", "noisy_q"],
         baseline=baseline,
         timings=timings,
         vs_baseline=vs_baseline,
         recheck=recheck,
-        sf_dir="/nonexistent",
     )
 
     assert confirmed == ["slow_q"]
     assert recheck["slow_q"] == {
         "in_context_sec": 3.0,
-        "fresh_sec": 2.5,
+        "recheck_sec": 2.5,
         "vs_baseline": 2.5,
-        "fresh_process": True,
     }
     assert recheck["noisy_q"]["in_context_sec"] == 3.0
-    assert recheck["noisy_q"]["fresh_sec"] == 0.5
-    # the fresh values replace the in-context readings in the artifact
+    assert recheck["noisy_q"]["recheck_sec"] == 0.5
+    # the recheck values replace the main-loop readings in the artifact
     assert timings == {"slow_q": 2.5, "noisy_q": 0.5}
     assert vs_baseline == {"slow_q": 2.5, "noisy_q": 0.5}
 
 
 def test_recheck_error_keeps_breach_and_records_it(monkeypatch):
     """r10 ADVICE: a recheck crash must not sink the bench line — the
-    in-context breach stays confirmed (conservative) and the error is
+    main-loop breach stays confirmed (conservative) and the error is
     recorded under recheck[name] for triage."""
     import bench
 
@@ -144,19 +172,16 @@ def test_recheck_error_keeps_breach_and_records_it(monkeypatch):
     timings = {"crash_q": 3.0, "noisy_q": 3.0}
     vs_baseline = {"crash_q": 3.0, "noisy_q": 3.0}
     recheck: dict = {}
-    monkeypatch.setattr(
-        bench,
-        "_fresh_process_best",
-        _fake_fresh({"crash_q": RuntimeError("executor lost"), "noisy_q": 0.5}),
-    )
+    monkeypatch.setattr(bench, "measure", _fake_measure)
 
     confirmed = bench._confirm_regressions(
+        "spark",
+        _registry({"crash_q": RuntimeError("executor lost"), "noisy_q": 0.5}),
         candidates=["crash_q", "noisy_q"],
         baseline=baseline,
         timings=timings,
         vs_baseline=vs_baseline,
         recheck=recheck,
-        sf_dir="/nonexistent",
     )
 
     assert confirmed == ["crash_q"]
@@ -164,11 +189,11 @@ def test_recheck_error_keeps_breach_and_records_it(monkeypatch):
         "in_context_sec": 3.0,
         "error": "RuntimeError: executor lost",
     }
-    # the crashed query's in-context reading is NOT replaced
+    # the crashed query's main-loop reading is NOT replaced
     assert timings["crash_q"] == 3.0
     assert vs_baseline["crash_q"] == 3.0
     # the healthy candidate still rechecks normally after the crash
-    assert recheck["noisy_q"]["fresh_sec"] == 0.5
+    assert recheck["noisy_q"]["recheck_sec"] == 0.5
 
 
 def test_gate_compares_unrounded_ratio(monkeypatch):
@@ -177,64 +202,20 @@ def test_gate_compares_unrounded_ratio(monkeypatch):
     2.00x, i.e. the effective gate threshold was 2.005x)."""
     import bench
 
-    baseline = {"edge_q": 1.0}
-    timings = {"edge_q": 3.0}
-    vs_baseline = {"edge_q": 3.0}
     recheck: dict = {}
-    # fresh best-of-2 = 2.0049s against a 1.0s anchor: rounds to 2.00 but
-    # the unrounded ratio breaches
-    monkeypatch.setattr(bench, "_fresh_process_best", _fake_fresh({"edge_q": 2.0049}))
+    # recheck best-of-2 = 2.0049s against a 1.0s anchor: rounds to 2.00
+    # but the unrounded ratio breaches
+    monkeypatch.setattr(bench, "measure", _fake_measure)
 
     confirmed = bench._confirm_regressions(
+        "spark",
+        _registry({"edge_q": 2.0049}),
         candidates=["edge_q"],
-        baseline=baseline,
-        timings=timings,
-        vs_baseline=vs_baseline,
+        baseline={"edge_q": 1.0},
+        timings={"edge_q": 3.0},
+        vs_baseline={"edge_q": 3.0},
         recheck=recheck,
-        sf_dir="/nonexistent",
     )
 
     assert confirmed == ["edge_q"]
     assert recheck["edge_q"]["vs_baseline"] == 2.0  # display value rounds
-
-
-def test_failed_fresh_process_keeps_breach_and_records_error(monkeypatch):
-    """A recheck subprocess that exits nonzero leaves no in-process
-    fallback: the breach stays confirmed, the in-context reading stays,
-    and the exit code plus the stderr tail land in recheck[name]."""
-    import subprocess
-
-    import bench
-
-    seen = {}
-
-    def fake_run(cmd, env, **kwargs):
-        seen["cmd"], seen["env"] = cmd, env
-        return subprocess.CompletedProcess(cmd, 1, stdout="", stderr="boom: OOM\n")
-
-    monkeypatch.setattr(subprocess, "run", fake_run)
-    timings = {"proc_q": 3.0}
-    vs_baseline = {"proc_q": 3.0}
-    recheck: dict = {}
-
-    confirmed = bench._confirm_regressions(
-        candidates=["proc_q"],
-        baseline={"proc_q": 1.0},
-        timings=timings,
-        vs_baseline=vs_baseline,
-        recheck=recheck,
-        sf_dir="/nonexistent",
-    )
-
-    assert confirmed == ["proc_q"]
-    assert seen["cmd"][-2:] == [
-        os.path.join(bench.REPO, "tools", "time_queries.py"),
-        "proc_q",
-    ]
-    assert seen["env"]["SPARK_GRAFT_SF_DIR"] == "/nonexistent"
-    assert recheck["proc_q"] == {
-        "in_context_sec": 3.0,
-        "error": "RuntimeError: time_queries.py exited 1: boom: OOM",
-    }
-    assert timings == {"proc_q": 3.0}
-    assert vs_baseline == {"proc_q": 3.0}

@@ -21,11 +21,12 @@ def test_pagerank_invariant_under_repartition(spark):
     from syntheticdata_pipeline__spark.plans.vectors_q import similarity_pagerank
 
     base = _rows(similarity_pagerank(spark, SF_SMOKE), "vec_id", "pagerank")
+    partitions = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "7")
     try:
         again = _rows(similarity_pagerank(spark, SF_SMOKE), "vec_id", "pagerank")
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
+        spark.conf.set("spark.sql.shuffle.partitions", partitions)
     assert base == again
     # sanity: ranks deviate from the teleport floor somewhere (graph non-empty)
     assert any(abs(r - 0.15) > 1e-9 for _, r in base)

@@ -220,7 +220,7 @@ def main() -> int:
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
 
-    spark = get_spark("oracle-check", cpus=os.environ.get("SPARK_GRAFT_CPUS", "8"))
+    spark = get_spark("oracle-check")
     spark.sparkContext.setLogLevel("ERROR")
 
     con = duck_connect()

@@ -4,7 +4,8 @@ verdict #6), plus the incremental-dedup state/compaction extras.
 Methodology matches the bench stress section: fresh session, in-session
 base measurement at $SPARK_GRAFT_SF_DIR, then the replicated stress
 layout from bench._build_stress_dir at each requested factor, timed with
-``bench.measure`` (best-of-2; first execution pays whole-stage-codegen
+``bench.measure`` (best-of-2 ``session.materialize``, which computes
+every output column; the first execution pays whole-stage-codegen
 compilation). Prints ONE JSON line: {"date", "query", "sf_dir",
 "base": {...}, "points": [{"factor", "sec", "rows", "growth_x"}...]}.
 

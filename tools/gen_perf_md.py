@@ -3,7 +3,8 @@
 Round 5 and round 6 both shipped PERF prose quoting a different bench run
 than the committed artifact (VERDICT r6 "What's wrong" #1). This tool
 makes that impossible: the section between the BENCH_AUTO markers in
-PERF.md is generated from the committed ``BENCH_local.json`` +
+PERF.md is generated from the committed ``BENCH_local.json`` (its scale
+factor and its "host" header) + the method-v2 anchors of
 ``bench_baseline.json``, and ``--check`` (run by run_gates.sh and
 tests/test_perf_md_sync.py) fails whenever the committed prose differs
 from what the committed artifact generates.
@@ -35,7 +36,7 @@ def render() -> str:
         b = json.load(f)
     try:
         with open(BASELINE) as f:
-            anchors = json.load(f)["queries"]
+            anchors = json.load(f)["anchors_v2"]["queries"]
     except Exception:
         anchors = {}
 
@@ -45,16 +46,18 @@ def render() -> str:
     stress = {k: v for k, v in b.get("scale_stress", {}).items() if isinstance(v, dict)}
     factor = b.get("scale_stress", {}).get("factor", "?")
 
+    host = b["host"]
     lines = [BEGIN, ""]
     lines.append(
-        f"### Committed bench artifact (`BENCH_local.json`, sf{b['sf']}, local[32])"
+        f"### Committed bench artifact (`BENCH_local.json`, sf{b['sf']}, "
+        f"{host['session']['spark.master']} on a {host['cpus']}-CPU host, {host['date']})"
     )
     lines.append("")
     total = round(sum(q.values()), 3)
     lines.append(
         f"**{len(q)} queries, total {total} s.** "
         + (
-            f"Versus the {len(vs)} anchored targets in `bench_baseline.json`: "
+            f"Versus the {len(vs)} method-v2 anchors in `bench_baseline.json`: "
             f"mean ratio {round(sum(vs.values()) / len(vs), 3)}x, "
             f"worst {max(vs.values()):.2f}x (`{max(vs, key=vs.get)}`), "
             + (
@@ -86,9 +89,7 @@ def render() -> str:
         lines.append(
             f"Scale-stress at {factor}x-replicated documents+embeddings "
             f"(runtime growth factor vs a base_sec sf{b['sf']} run "
-            "re-measured inside the same fresh stress session — both "
-            "sides of every ratio share one session, so growth measures "
-            "plan shape, not main-loop session-state adjacency; "
+            "re-measured inside the same stress session; "
             "sub-linear-in-pairs growth = the non-quadratic acceptance shape):"
         )
         lines.append("")
@@ -104,11 +105,7 @@ def render() -> str:
             "minhash_lsh_candidates 1.08x committed vs 2.91x on the r8 "
             "driver run; semantic_dedup_stats 3.02x vs 3.93x; "
             "cosine_neardup_lsh 2.75x vs 3.32x — all output-bound, same "
-            "emitted-pair counts; r10 traced the largest component of "
-            "that spread to main-loop session-state adjacency — "
-            "minhash@10x 17.5-26.7 s after the ~100-query loop vs "
-            "3.9-4.2 s in a fresh session at identical rows — which the "
-            "fresh stress session + in-session base_sec now removes). "
+            "emitted-pair counts). "
             "Read the CURVE (10x -> 30x -> the dated 100x deep points "
             "below), not any one factor, as the non-quadratic evidence."
         )

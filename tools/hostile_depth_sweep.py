@@ -50,7 +50,7 @@ def main() -> None:
     src = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     from syntheticdata_pipeline__spark.session import get_spark
 
-    spark = get_spark("hostile-depth", cpus=os.environ.get("SPARK_GRAFT_CPUS", "8"))
+    spark = get_spark("hostile-depth")
     spark.sparkContext.setLogLevel("ERROR")
     total_pass = total_skip = total_fail = 0
     only = set(sys.argv[2:])  # optional stripe-label filter

@@ -106,7 +106,7 @@ class Walked:
 
     counts: Counter = field(default_factory=Counter)  # class name -> nodes
     scans: list[dict[str, str]] = field(default_factory=list)  # file-scan metadata
-    window_specs: list[str] = field(default_factory=list)  # windowspecdefinition args
+    window_specs: list[str] = field(default_factory=list)  # id-free windowspecdefinition args
     dump: str = ""  # one normalized line per node, indented by depth
     error: str = ""  # why the build raised
 
@@ -131,7 +131,7 @@ def walk_physical(df) -> Walked:
             line = node.simpleString(100_000)
         if cls == "WindowExec":
             spec = r"windowspecdefinition\(([^)]*)\)"
-            w.window_specs += re.findall(spec, node.windowExpression().toString())
+            w.window_specs += map(normalize, re.findall(spec, node.windowExpression().toString()))
         lines.append("  " * depth + normalize(line))
     w.dump = "\n".join(lines) + "\n"
     return w
