@@ -57,7 +57,7 @@ if [ "$MODE" = "full" ]; then
   # batteries provably could not see — scale is itself an adversarial
   # axis, so they run every round-end, not as one-offs.
   echo "== gate 2c: full-catalog oracle sweep at sf0.1 =="
-  if ! SPARK_GRAFT_ORACLE_SF=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=16 \
+  if ! SPARK_GRAFT_ORACLE_SF=/root/testdata/sf0.1 \
        python tools/check_oracle.py --json /tmp/SELFCHECK_sf01.json; then
     echo "GATE FAIL: sf0.1 catalog sweep" >&2
     fail=1
@@ -78,7 +78,7 @@ fi
 
 echo "== gate 3: bench JSON line =="
 if [ "$MODE" = "quick" ]; then
-  BENCH_ENV="SPARK_GRAFT_SF_DIR=/root/testdata/sf0.001 SPARK_GRAFT_CPUS=8 SPARK_GRAFT_NO_STRESS=1"
+  BENCH_ENV="SPARK_GRAFT_SF_DIR=/root/testdata/sf0.001 SPARK_GRAFT_NO_STRESS=1"
 else
   BENCH_ENV=""
 fi

@@ -13,6 +13,14 @@ across partitionings:
 - **Event time** is integer microseconds (``BIGINT``), never raw
   timestamps, because parquet NANOS + session timezones diverge between
   engines.
+- **Sums of computed doubles** (regression moments, entropy terms,
+  vector means) go through :func:`fixed_sum`: each term truncated
+  toward zero to a BIGINT count of 10^-scale units, summed exactly,
+  then divided back. A decimal cast would round, and float32-derived
+  doubles can sit exactly halfway on a decimal grid, where Spark
+  rounds HALF_UP and DuckDB half-to-even; truncation has no tie. The
+  BIGINT term is also the value-domain envelope: a term past 2^63
+  units raises on both engines.
 
 Verified bit-equal against DuckDB 1.0 on /root/testdata (see tests).
 """
@@ -160,6 +168,42 @@ def dsum(col: Column, scale: int = 2, precision: int = 38) -> Column:
 def dsum_sql(col_sql: str, scale: int = 2, precision: int = 38) -> str:
     g = finite_or_null_sql(col_sql)
     return f"CAST(SUM(CAST({g} AS DECIMAL({precision},{scale}))) AS DOUBLE)"
+
+
+def fixed_term(x: Column, scale: int = 9) -> Column:
+    """``x`` in units of 10^-scale, truncated toward zero to BIGINT: the
+    summand of :func:`fixed_sum` (Spark's cast truncates toward zero)."""
+    return (x * F.lit(10.0**scale)).cast("bigint")
+
+
+def fixed_term_sql(x_sql: str, scale: int = 9) -> str:
+    """DuckDB twin of :func:`fixed_term` (DuckDB's cast rounds, so the
+    truncation is spelled out)."""
+    return f"CAST(trunc(({x_sql}) * {10**scale}.0) AS BIGINT)"
+
+
+def fixed_unscale(s: Column, scale: int = 9) -> Column:
+    """A sum of :func:`fixed_term` values back to a DOUBLE."""
+    return s.cast("double") / F.lit(10.0**scale)
+
+
+def fixed_unscale_sql(s_sql: str, scale: int = 9) -> str:
+    """DuckDB twin of :func:`fixed_unscale`."""
+    return f"(CAST({s_sql} AS DOUBLE) / {10**scale}.0)"
+
+
+def fixed_sum(x: Column, scale: int = 9) -> Column:
+    """Order-independent SUM of a computed double: exact BIGINT sum of
+    the terms truncated to ``scale`` decimals, exported as DOUBLE.
+    NULL terms are skipped. A term outside BIGINT raises on both
+    engines (Spark's ANSI cast, DuckDB's Conversion Error); a sum past
+    BIGINT raises in Spark only, as DuckDB sums BIGINT into HUGEINT."""
+    return fixed_unscale(F.sum(fixed_term(x, scale)), scale)
+
+
+def fixed_sum_sql(x_sql: str, scale: int = 9) -> str:
+    """DuckDB twin of :func:`fixed_sum`."""
+    return fixed_unscale_sql(f"SUM({fixed_term_sql(x_sql, scale)})", scale)
 
 
 def davg(col: Column, scale: int = 2, precision: int = 38) -> Column:

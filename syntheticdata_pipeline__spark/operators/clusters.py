@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.determinism import fixed_sum
 from ..session import pin
 
 
@@ -210,13 +211,7 @@ def kmeans_fixed_iters(
     for _ in range(iters):
         flat = assigned.select("cid", F.posexplode(vec_col).alias("dim", "x"))
         means = flat.groupBy("cid", "dim").agg(
-            (
-                F.sum(F.expr("CAST(CAST(x AS DOUBLE) * 1000000000.0 AS BIGINT)")).cast(
-                    "double"
-                )
-                / F.lit(1e9)
-                / F.count("*")
-            ).alias("mv")
+            (fixed_sum(F.col("x").cast("double")) / F.count("*")).alias("mv")
         )
         # pin the k-row codebook: it is referenced by the next assignment
         # AND by every downstream consumer (probe ranking, the final

@@ -15,7 +15,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.determinism import unit_rand
+from ..functions.determinism import fixed_term, fixed_unscale, unit_rand
 
 
 def split_bounds(
@@ -174,9 +174,9 @@ def dsir_log_weights(
     contrib = per_doc_bucket.join(F.broadcast(lw), "__b").select(
         "doc_id",
         F.col("__n"),
-        F.expr("CAST(__n * __lw * 1000000000.0 AS BIGINT)").alias("__c"),
+        fixed_term(F.col("__n") * F.col("__lw")).alias("__c"),
     )
     return contrib.groupBy("doc_id").agg(
         F.sum("__n").cast("bigint").alias("n_features"),
-        (F.sum("__c").cast("double") / F.lit(1e9)).alias("log_w"),
+        fixed_unscale(F.sum("__c")).alias("log_w"),
     )

@@ -83,6 +83,17 @@ def quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
+def quality_score_sql() -> str:
+    """DuckDB twin of :func:`quality_score`'s ``quality``, over the columns
+    ``text`` and ``toks`` (``tokens_sql`` of the text)."""
+    stops = list(LANG_STOPWORDS["en"])
+    return f"""((CASE WHEN len(toks) >= 20 AND len(toks) <= 10000 THEN 1.0
+         WHEN len(toks) >= 5 THEN 0.5 ELSE 0.0 END) * 0.4
+  + least(CAST(len(list_intersect(toks, {stops!r})) AS DOUBLE) / 4.0, 1.0) * 0.3
+  + coalesce(CAST(len(regexp_extract_all(text, '[A-Za-z]')) AS DOUBLE)
+               / nullif(CAST(length(text) AS DOUBLE), 0.0), 0.0) * 0.3)"""
+
+
 def lang_scores(text_col: Column) -> dict[str, Column]:
     """Per-language stopword-hit score (distinct-token overlap count)."""
     toks = F.array_distinct(tokens(text_col))

@@ -8,7 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.determinism import hash_bucket_sql, unit_rand, unit_rand_sql
+from ..functions.determinism import fixed_sum_sql, hash_bucket_sql, unit_rand, unit_rand_sql
 from ..functions.text import fold_case, fold_case_sql, tokens, tokens_sql
 from ..operators.datasetprep import (
     deterministic_split,
@@ -800,8 +800,7 @@ per_db AS (SELECT doc_id, b, COUNT(*) AS n FROM bucketed GROUP BY 1, 2),
 w AS (
   SELECT p.doc_id,
          CAST(SUM(p.n) AS BIGINT) AS n_features,
-         CAST(SUM(CAST(trunc(p.n * l.lw * 1000000000.0) AS BIGINT)) AS DOUBLE)
-           / 1000000000.0 AS log_w
+         {fixed_sum_sql('p.n * l.lw')} AS log_w
   FROM per_db p JOIN lw l USING (b) GROUP BY 1),
 keyed AS (
   SELECT w.doc_id, d.lang, d.source, w.n_features, w.log_w,
@@ -1073,7 +1072,7 @@ def dataset_version_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 # then average — scores on incomparable scales become comparable ranks.
 # --------------------------------------------------------------------------
 
-from ..operators.textops import LANG_STOPWORDS as _RB_STOPS  # noqa: E402
+from ..operators.textops import quality_score_sql  # noqa: E402
 
 _RANKBLEND_ORACLE = f"""
 WITH t AS (
@@ -1085,13 +1084,7 @@ WITH t AS (
          -- full-catalog sweep's one mismatch. floor(q*1e4 + 0.5) is
          -- pure double arithmetic, bit-identical on both engines; the
          -- grid key never reaches the output.
-         CAST(floor((
-           (CASE WHEN len(toks) >= 20 AND len(toks) <= 10000 THEN 1.0
-                 WHEN len(toks) >= 5 THEN 0.5 ELSE 0.0 END) * 0.4
-           + least(CAST(len(list_intersect(toks, {list(_RB_STOPS['en'])!r})) AS DOUBLE) / 4.0, 1.0) * 0.3
-           + coalesce(CAST(len(regexp_extract_all(text, '[A-Za-z]')) AS DOUBLE)
-                        / nullif(CAST(length(text) AS DOUBLE), 0.0), 0.0) * 0.3
-         ) * 10000.0 + 0.5) AS BIGINT) AS qv
+         CAST(floor({quality_score_sql()} * 10000.0 + 0.5) AS BIGINT) AS qv
   FROM (SELECT doc_id, n_chars, text, {tokens_sql('text')} AS toks
         FROM documents WHERE n_chars IS NOT NULL)),
 n AS (SELECT COUNT(*) AS n_docs FROM t),

@@ -5,10 +5,18 @@ fuzzy dedup, text quality/stats, language-ID, fingerprints — over the
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.determinism import unit_rand_sql
+from ..functions.determinism import (
+    fixed_sum,
+    fixed_sum_sql,
+    fixed_term,
+    fixed_term_sql,
+    fixed_unscale,
+    fixed_unscale_sql,
+    unit_rand_sql,
+)
 from ..functions.text import (
     fold_case,
     fold_case_sql,
@@ -37,6 +45,7 @@ from ..operators.textops import (
     fingerprint_sql,
     predict_lang,
     quality_score,
+    quality_score_sql,
     token_stats,
 )
 from ..session import pin
@@ -930,18 +939,8 @@ def doc_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 _QUALITY_ORACLE = f"""
-WITH t AS (
-  SELECT doc_id, {tokens_sql('text')} AS toks, text FROM documents),
-q AS (
-  SELECT doc_id,
-    CASE WHEN len(toks) >= 20 AND len(toks) <= 10000 THEN 1.0
-         WHEN len(toks) >= 5 THEN 0.5 ELSE 0.0 END AS len_band,
-    least(CAST(len(list_intersect(toks, {list(LANG_STOPWORDS['en'])!r})) AS DOUBLE) / 4.0, 1.0) AS stop_sig,
-    coalesce(CAST(len(regexp_extract_all(text, '[A-Za-z]')) AS DOUBLE)
-               / nullif(CAST(length(text) AS DOUBLE), 0.0), 0.0) AS alpha_ratio
-  FROM t)
-SELECT doc_id, (len_band * 0.4 + stop_sig * 0.3 + alpha_ratio * 0.3) AS quality
-FROM q
+SELECT doc_id, {quality_score_sql()} AS quality
+FROM (SELECT doc_id, {tokens_sql('text')} AS toks, text FROM documents)
 """
 
 
@@ -1644,10 +1643,8 @@ pts AS (
   FROM ranked WHERE rnk <= {_ZIPF_TOPK}),
 s AS (
   SELECT lang, COUNT(*) AS n,
-         CAST(SUM(CAST(trunc(x * 1000000000.0) AS BIGINT)) AS DOUBLE) / 1000000000.0 AS sx,
-         CAST(SUM(CAST(trunc(y * 1000000000.0) AS BIGINT)) AS DOUBLE) / 1000000000.0 AS sy,
-         CAST(SUM(CAST(trunc(x * y * 1000000000.0) AS BIGINT)) AS DOUBLE) / 1000000000.0 AS sxy,
-         CAST(SUM(CAST(trunc(x * x * 1000000000.0) AS BIGINT)) AS DOUBLE) / 1000000000.0 AS sxx
+         {fixed_sum_sql('x')} AS sx, {fixed_sum_sql('y')} AS sy,
+         {fixed_sum_sql('x * y')} AS sxy, {fixed_sum_sql('x * x')} AS sxx
   FROM pts GROUP BY lang)
 SELECT lang, CAST(n AS BIGINT) AS n_points,
        round((n * sxy - sx * sy) / (n * sxx - sx * sx), 6) AS zipf_slope
@@ -1686,18 +1683,13 @@ def zipf_slope_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.log(F.col("rnk").cast("double")).alias("x"),
         F.log(F.col("cnt").cast("double")).alias("y"),
     )
-
-    def tsum(expr: str) -> Column:
-        return F.sum(F.expr(f"CAST({expr} * 1000000000.0 AS BIGINT)")).cast(
-            "double"
-        ) / F.lit(1e9)
-
+    x, y = F.col("x"), F.col("y")
     s = pts.groupBy("lang").agg(
         F.count("*").alias("n"),
-        tsum("x").alias("sx"),
-        tsum("y").alias("sy"),
-        tsum("x * y").alias("sxy"),
-        tsum("x * x").alias("sxx"),
+        fixed_sum(x).alias("sx"),
+        fixed_sum(y).alias("sy"),
+        fixed_sum(x * y).alias("sxy"),
+        fixed_sum(x * x).alias("sxx"),
     )
     return s.select(
         "lang",
@@ -2157,16 +2149,14 @@ freq AS (SELECT source, tok, COUNT(*) AS n FROM tok GROUP BY source, tok),
 tot AS (SELECT source, SUM(n) AS total, COUNT(*) AS v FROM freq GROUP BY source),
 terms AS (
   SELECT f.source, t.total, t.v,
-         CAST(trunc((CAST(f.n AS DOUBLE) / t.total)
-                    * ln(CAST(f.n AS DOUBLE) / t.total)
-                    * 1000000000.0) AS BIGINT) AS term9
+         {fixed_term_sql('(CAST(f.n AS DOUBLE) / t.total) * ln(CAST(f.n AS DOUBLE) / t.total)')}
+           AS term9
   FROM freq f JOIN tot t ON f.source = t.source)
 SELECT source,
   CAST(MAX(total) AS BIGINT) AS total_tokens,
   CAST(MAX(v) AS BIGINT) AS distinct_tokens,
-  round(-(CAST(SUM(term9) AS DOUBLE) / 1000000000.0), 6) AS entropy,
-  round(-(CAST(SUM(term9) AS DOUBLE) / 1000000000.0) / ln(CAST(MAX(v) AS DOUBLE)), 6)
-    AS norm_entropy
+  round(-{fixed_unscale_sql('SUM(term9)')}, 6) AS entropy,
+  round(-{fixed_unscale_sql('SUM(term9)')} / ln(CAST(MAX(v) AS DOUBLE)), 6) AS norm_entropy
 FROM terms GROUP BY source
 """
 
@@ -2199,9 +2189,9 @@ def token_entropy_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source",
         "total",
         "v",
-        (p * F.log(p) * F.lit(1e9)).cast("bigint").alias("term9"),
+        fixed_term(p * F.log(p)).alias("term9"),
     )
-    h = -(F.sum("term9").cast("double") / F.lit(1e9))
+    h = -fixed_unscale(F.sum("term9"))
     return terms.groupBy("source").agg(
         F.max("total").cast("bigint").alias("total_tokens"),
         F.max("v").cast("bigint").alias("distinct_tokens"),
@@ -2472,10 +2462,8 @@ pts AS (
   FROM vocab v JOIN ntok n ON v.frac = n.frac AND v.cut = n.cut),
 s AS (
   SELECT COUNT(*) AS k,
-    CAST(SUM(CAST(trunc(x * 1000000000.0) AS BIGINT)) AS DOUBLE) / 1000000000.0 AS sx,
-    CAST(SUM(CAST(trunc(y * 1000000000.0) AS BIGINT)) AS DOUBLE) / 1000000000.0 AS sy,
-    CAST(SUM(CAST(trunc(x * y * 1000000000.0) AS BIGINT)) AS DOUBLE) / 1000000000.0 AS sxy,
-    CAST(SUM(CAST(trunc(x * x * 1000000000.0) AS BIGINT)) AS DOUBLE) / 1000000000.0 AS sxx
+    {fixed_sum_sql('x')} AS sx, {fixed_sum_sql('y')} AS sy,
+    {fixed_sum_sql('x * y')} AS sxy, {fixed_sum_sql('x * x')} AS sxx
   FROM pts)
 SELECT p.frac, p.cut AS prefix_docs, p.n_tokens, CAST(p.vocab AS BIGINT) AS vocab,
   round((s.k * s.sxy - s.sx * s.sy) / (s.k * s.sxx - s.sx * s.sx), 6) AS heaps_beta
@@ -2532,19 +2520,13 @@ def heaps_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.log(F.col("n_tokens").cast("double")).alias("x"),
         F.log(F.col("vocab").cast("double")).alias("y"),
     )
-
-    def tsum(expr: str) -> Column:
-        return (
-            F.sum(F.expr(f"CAST({expr} * 1000000000.0 AS BIGINT)")).cast("double")
-            / 1000000000.0
-        )
-
+    x, y = F.col("x"), F.col("y")
     s = pts.agg(
         F.count("*").alias("k"),
-        tsum("x").alias("sx"),
-        tsum("y").alias("sy"),
-        tsum("x * y").alias("sxy"),
-        tsum("x * x").alias("sxx"),
+        fixed_sum(x).alias("sx"),
+        fixed_sum(y).alias("sy"),
+        fixed_sum(x * y).alias("sxy"),
+        fixed_sum(x * x).alias("sxx"),
     )
     beta = (F.col("k") * F.col("sxy") - F.col("sx") * F.col("sy")) / (
         F.col("k") * F.col("sxx") - F.col("sx") * F.col("sx")
@@ -3069,19 +3051,10 @@ def lsh_param_chooser(spark: SparkSession, sf_dir: str) -> DataFrame:
 # boundary at sf0.1), but any data drift could surface it. floor(q*1e4
 # + 0.5) is pure double arithmetic, bit-identical on both engines; the
 # grid key never reaches the output.
-_LIFT_QUALITY_EXPR = """CAST(floor((
-  (CASE WHEN len(toks) >= 20 AND len(toks) <= 10000 THEN 1.0
-        WHEN len(toks) >= 5 THEN 0.5 ELSE 0.0 END) * 0.4
-  + least(CAST(len(list_intersect(toks, {stops})) AS DOUBLE) / 4.0, 1.0) * 0.3
-  + coalesce(CAST(len(regexp_extract_all(text, '[A-Za-z]')) AS DOUBLE)
-               / nullif(CAST(length(text) AS DOUBLE), 0.0), 0.0) * 0.3
-) * 10000.0 + 0.5) AS BIGINT)"""
+_LIFT_QUALITY_EXPR = f"CAST(floor({quality_score_sql()} * 10000.0 + 0.5) AS BIGINT)"
 
 
 def _lift_oracle() -> str:
-    from ..operators.textops import LANG_STOPWORDS
-
-    qexpr = _LIFT_QUALITY_EXPR.format(stops=repr(list(LANG_STOPWORDS["en"])))
     return f"""
 WITH {_NEAR_DUP_EDGES_ORACLE},
 members AS (
@@ -3090,7 +3063,7 @@ members AS (
     UNION ALL
     SELECT id_b AS m FROM near_dup_edges)),
 q AS (
-  SELECT doc_id, {qexpr} AS qv
+  SELECT doc_id, {_LIFT_QUALITY_EXPR} AS qv
   FROM (SELECT doc_id, text, {tokens_sql('text')} AS toks FROM documents)),
 hist AS (SELECT qv, COUNT(*) AS c FROM q GROUP BY qv),
 cdf AS (

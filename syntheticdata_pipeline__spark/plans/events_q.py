@@ -20,6 +20,8 @@ from ..functions.determinism import (
     dstddev_sql,
     finite_or_null,
     finite_or_null_sql,
+    fixed_sum,
+    fixed_sum_sql,
     floor_bucket_start,
     floor_bucket_start_sql,
     unit_rand_sql,
@@ -559,10 +561,7 @@ WITH stats AS (
   SELECT event_type, COUNT(*) AS n_rows, {dstddev_sql('value')} AS sd
   FROM events GROUP BY event_type),
 w AS (SELECT event_type, n_rows, sd, CAST(n_rows AS DOUBLE) * sd AS wt FROM stats),
-tot AS (
-  SELECT CAST(SUM(CAST(trunc(wt * 1000000000.0) AS BIGINT)) AS DOUBLE)
-         / 1000000000.0 AS wsum
-  FROM w),
+tot AS (SELECT {fixed_sum_sql('wt')} AS wsum FROM w),
 alloc AS (
   SELECT event_type, n_rows, sd,
          CAST(floor({_NEYMAN_BUDGET} * wt / t.wsum + 0.5) AS BIGINT) AS alloc_n
@@ -603,11 +602,7 @@ def neyman_allocation_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n_rows"), dstddev(F.col("value")).alias("sd")
     )
     w = stats.withColumn("wt", F.col("n_rows").cast("double") * F.col("sd"))
-    tot = w.agg(
-        (
-            F.sum((F.col("wt") * F.lit(1e9)).cast("bigint")).cast("double") / F.lit(1e9)
-        ).alias("wsum")
-    )
+    tot = w.agg(fixed_sum(F.col("wt")).alias("wsum"))
     alloc = w.crossJoin(F.broadcast(tot)).withColumn(
         "alloc_n",
         F.floor(F.lit(_NEYMAN_BUDGET) * F.col("wt") / F.col("wsum") + F.lit(0.5)).cast(
@@ -1020,7 +1015,7 @@ def exact_median_two_pass(spark: SparkSession, sf_dir: str) -> DataFrame:
 # type? The least-squares slope per group — feed-regression detection.
 # --------------------------------------------------------------------------
 
-_TREND_ORACLE = """
+_TREND_ORACLE = f"""
 WITH span AS (
   SELECT event_type, MIN(epoch_us(ts)) AS mn, MAX(epoch_us(ts)) AS mx
   FROM events GROUP BY 1),
@@ -1033,10 +1028,8 @@ pts AS (
   FROM events e JOIN span s ON e.event_type = s.event_type),
 agg AS (
   SELECT event_type, COUNT(*) AS n,
-    CAST(SUM(CAST(trunc(x * 1000000000.0) AS BIGINT)) AS DOUBLE) / 1000000000.0 AS sx,
-    CAST(SUM(CAST(trunc(y * 1000000000.0) AS BIGINT)) AS DOUBLE) / 1000000000.0 AS sy,
-    CAST(SUM(CAST(trunc(x * y * 1000000000.0) AS BIGINT)) AS DOUBLE) / 1000000000.0 AS sxy,
-    CAST(SUM(CAST(trunc(x * x * 1000000000.0) AS BIGINT)) AS DOUBLE) / 1000000000.0 AS sxx
+    {fixed_sum_sql('x')} AS sx, {fixed_sum_sql('y')} AS sy,
+    {fixed_sum_sql('x * y')} AS sxy, {fixed_sum_sql('x * x')} AS sxx
   FROM pts GROUP BY event_type)
 SELECT event_type, CAST(n AS BIGINT) AS n,
   round((n * sxy - sx * sy) / (n * sxx - sx * sx), 6) AS slope
@@ -1070,19 +1063,13 @@ def value_trend_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("x"),
         finite_or_null(F.col("value")).alias("y"),
     )
-
-    def tsum(expr: str):
-        return (
-            F.sum(F.expr(f"CAST({expr} * 1000000000.0 AS BIGINT)")).cast("double")
-            / 1000000000.0
-        )
-
+    x, y = F.col("x"), F.col("y")
     agg = pts.groupBy("event_type").agg(
         F.count("*").alias("n"),
-        tsum("x").alias("sx"),
-        tsum("y").alias("sy"),
-        tsum("x * y").alias("sxy"),
-        tsum("x * x").alias("sxx"),
+        fixed_sum(x).alias("sx"),
+        fixed_sum(y).alias("sy"),
+        fixed_sum(x * y).alias("sxy"),
+        fixed_sum(x * x).alias("sxx"),
     )
     slope = (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")) / (
         F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
@@ -1462,9 +1449,8 @@ tc AS (SELECT user_id, event_type, COUNT(*) AS c FROM events GROUP BY 1, 2),
 un AS (SELECT user_id, SUM(c) AS n FROM tc GROUP BY 1),
 ent AS (
   SELECT t.user_id,
-    round(-CAST(SUM(CAST(trunc((CAST(t.c AS DOUBLE) / u.n)
-        * ln(CAST(t.c AS DOUBLE) / u.n) * 1000000000.0) AS BIGINT)) AS DOUBLE)
-      / 1000000000.0, 6) AS type_entropy
+    round(-{fixed_sum_sql('(CAST(t.c AS DOUBLE) / u.n) * ln(CAST(t.c AS DOUBLE) / u.n)')}, 6)
+      AS type_entropy
   FROM tc t JOIN un u ON t.user_id = u.user_id
   GROUP BY t.user_id)
 SELECT b.user_id, b.max_burst,
@@ -1522,16 +1508,7 @@ def user_behavior_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     ent = (
         tc.join(un, "user_id")
         .groupBy("user_id")
-        .agg(
-            F.round(
-                -F.sum(F.expr(
-                    "CAST((CAST(c AS DOUBLE) / n) * ln(CAST(c AS DOUBLE) / n)"
-                    " * 1000000000.0 AS BIGINT)"
-                )).cast("double")
-                / 1000000000.0,
-                6,
-            ).alias("type_entropy")
-        )
+        .agg(F.round(-fixed_sum(p * F.log(p)), 6).alias("type_entropy"))
     )
     return (
         bursts.join(dwell, "user_id")

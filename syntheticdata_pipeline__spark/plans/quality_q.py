@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.determinism import fixed_sum, fixed_sum_sql
 from ..functions.text import tokens, tokens_sql, ws_normalize, ws_normalize_sql
 from ..operators.textops import (
     GOPHER_MIN_WORDS,
@@ -24,6 +25,7 @@ from ..operators.textops import (
     LANG_STOPWORDS,
     gopher_flags,
     quality_score,
+    quality_score_sql,
 )
 from ..session import pin
 from . import register
@@ -253,14 +255,7 @@ _QUOTA_K = 10
 _QUOTA_ORACLE = f"""
 WITH t AS (
   SELECT doc_id, source, {tokens_sql('text')} AS toks, text FROM documents),
-q AS (
-  SELECT doc_id, source,
-    (CASE WHEN len(toks) >= 20 AND len(toks) <= 10000 THEN 1.0
-          WHEN len(toks) >= 5 THEN 0.5 ELSE 0.0 END) * 0.4
-    + least(CAST(len(list_intersect(toks, {list(_EN_STOPS)!r})) AS DOUBLE) / 4.0, 1.0) * 0.3
-    + coalesce(CAST(len(regexp_extract_all(text, '[A-Za-z]')) AS DOUBLE)
-                 / nullif(CAST(length(text) AS DOUBLE), 0.0), 0.0) * 0.3 AS quality
-  FROM t),
+q AS (SELECT doc_id, source, {quality_score_sql()} AS quality FROM t),
 r AS (
   SELECT source, doc_id, quality,
          row_number() OVER (PARTITION BY source ORDER BY quality DESC, doc_id) AS rk
@@ -683,7 +678,7 @@ def ks_length_drift_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 # source? Big residuals expose feeds that over/under-sample a language.
 # --------------------------------------------------------------------------
 
-_CHI2_ORACLE = """
+_CHI2_ORACLE = f"""
 WITH cells AS (
   SELECT lang, source, COUNT(*) AS o FROM documents GROUP BY 1, 2),
 margins AS (
@@ -698,8 +693,7 @@ resid AS (
   FROM margins),
 stat AS (
   SELECT COUNT(*) AS n_cells,
-    CAST(SUM(CAST(trunc((o - e) * (o - e) / e * 1000000000.0) AS BIGINT)) AS DOUBLE)
-      / 1000000000.0 AS chi2
+    {fixed_sum_sql('(o - e) * (o - e) / e')} AS chi2
   FROM resid)
 SELECT r.lang, r.source, r.o AS n_docs, round(r.e, 6) AS expected,
   round((r.o - r.e) / sqrt(r.e), 6) AS std_residual,
@@ -736,14 +730,7 @@ def lang_source_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     stat = resid.agg(
         F.count("*").cast("bigint").alias("n_cells"),
-        (
-            F.sum(
-                F.expr(
-                    "CAST((o - e) * (o - e) / e * 1000000000.0 AS BIGINT)"
-                )
-            ).cast("double")
-            / 1000000000.0
-        ).alias("chi2"),
+        fixed_sum(F.expr("(o - e) * (o - e) / e")).alias("chi2"),
     )
     return resid.crossJoin(F.broadcast(stat)).select(
         "lang",

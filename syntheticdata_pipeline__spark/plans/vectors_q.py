@@ -7,7 +7,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.determinism import hash_bucket_sql, unit_rand_sql
+from ..functions.determinism import (
+    fixed_sum,
+    fixed_sum_sql,
+    fixed_term,
+    fixed_term_sql,
+    fixed_unscale,
+    fixed_unscale_sql,
+    hash_bucket_sql,
+    unit_rand_sql,
+)
 from ..functions.vectors import (
     cosine_sql,
     dot_sql,
@@ -440,18 +449,14 @@ def array_error_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 # A8: per-dimension moments (FID-style feature statistics).
 # --------------------------------------------------------------------------
 
-# Truncate-scaled-integer sums, NOT decimal casts: float32-derived doubles
+# Fixed-point sums (fixed_sum), NOT decimal casts: float32-derived doubles
 # can land exactly half-way on a decimal grid (e.g. odd multiples of 2^-10
-# at scale 9), where Spark rounds HALF_UP but DuckDB half-to-even — one
-# such tie flipped a sum at sf0.1. trunc(v·10^9) has no tie: both engines
-# perform the identical IEEE multiply and truncation, and the bigint sums
-# are exact and order-independent.
-_MOMENTS_ORACLE = """
+# at scale 9), where the engines round the tie apart.
+_MOMENTS_ORACLE = f"""
 WITH flat AS (
   SELECT generate_subscripts(embedding, 1) AS dim, CAST(unnest(embedding) AS DOUBLE) AS v
   FROM embeddings)
-SELECT dim, COUNT(*) AS n,
-  (CAST(SUM(CAST(trunc(v * 1000000000.0) AS BIGINT)) AS DOUBLE) / 1000000000.0) / COUNT(*) AS mean_v
+SELECT dim, COUNT(*) AS n, {fixed_sum_sql('v')} / COUNT(*) AS mean_v
 FROM flat GROUP BY dim
 """
 
@@ -459,16 +464,15 @@ FROM flat GROUP BY dim
 @register("embedding_moments", oracle=_MOMENTS_ORACLE, tags=("A8",))
 def embedding_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Feature mean vector (the FID μ term, metrics.py:254-274) via
-    posexplode + exact decimal sums; covariance follows the same plan with
+    posexplode + exact fixed-point sums; covariance follows the same plan with
     pair columns."""
     e = _E(spark, sf_dir)
     flat = e.select(F.posexplode("embedding").alias("pos", "x")).select(
         (F.col("pos") + 1).alias("dim"), F.col("x").cast("double").alias("v")
     )
-    scaled = F.expr("CAST(v * 1000000000.0 AS BIGINT)")  # ANSI cast truncates
     return flat.groupBy("dim").agg(
         F.count("*").alias("n"),
-        ((F.sum(scaled).cast("double") / F.lit(1e9)) / F.count("*")).alias("mean_v"),
+        (fixed_sum(F.col("v")) / F.count("*")).alias("mean_v"),
     )
 
 
@@ -499,9 +503,7 @@ flat AS (
   SELECT split, vec_id, generate_subscripts(probs, 1) AS dim, unnest(probs) AS pr
   FROM p),
 meanp AS (
-  SELECT split, dim,
-    CAST(SUM(CAST(trunc(pr * 1000000000.0) AS BIGINT)) AS DOUBLE) / 1000000000.0
-      / COUNT(*) AS mp
+  SELECT split, dim, {fixed_sum_sql('pr')} / COUNT(*) AS mp
   FROM flat GROUP BY split, dim),
 kl AS (
   SELECT f.split, f.vec_id,
@@ -509,9 +511,7 @@ kl AS (
   FROM flat f JOIN meanp m ON f.split = m.split AND f.dim = m.dim
   GROUP BY f.split, f.vec_id),
 agg AS (
-  SELECT split,
-    CAST(SUM(CAST(trunc(kl_row * 1000000000.0) AS BIGINT)) AS DOUBLE) / 1000000000.0
-      / COUNT(*) AS mean_kl
+  SELECT split, {fixed_sum_sql('kl_row')} / COUNT(*) AS mean_kl
   FROM kl GROUP BY split)
 SELECT split, round(exp(mean_kl), 6) AS inception_score FROM agg
 """
@@ -541,24 +541,14 @@ def inception_score_splits(spark: SparkSession, sf_dir: str) -> DataFrame:
         "split", "vec_id", F.posexplode("probs").alias("pos", "pr")
     ).select("split", "vec_id", (F.col("pos") + 1).alias("dim"), "pr")
     meanp = flat.groupBy("split", "dim").agg(
-        (
-            F.sum(F.expr("CAST(pr * 1000000000.0 AS BIGINT)")).cast("double")
-            / F.lit(1e9)
-            / F.count("*")
-        ).alias("mp")
+        (fixed_sum(F.col("pr")) / F.count("*")).alias("mp")
     )
     kl = (
         flat.join(meanp, ["split", "dim"])
         .groupBy("split", "vec_id")
         .agg(F.sum(F.col("pr") * F.log(F.col("pr") / F.col("mp"))).alias("kl_row"))
     )
-    agg = kl.groupBy("split").agg(
-        (
-            F.sum(F.expr("CAST(kl_row * 1000000000.0 AS BIGINT)")).cast("double")
-            / F.lit(1e9)
-            / F.count("*")
-        ).alias("mean_kl")
-    )
+    agg = kl.groupBy("split").agg((fixed_sum(F.col("kl_row")) / F.count("*")).alias("mean_kl"))
     return agg.select("split", F.round(F.exp("mean_kl"), 6).alias("inception_score"))
 
 
@@ -749,9 +739,8 @@ p AS (
   SELECT a.dim AS dim_i, b.dim AS dim_j, a.v AS x, b.v AS y
   FROM f a JOIN f b ON a.vec_id = b.vec_id AND a.dim <= b.dim)
 SELECT dim_i, dim_j, COUNT(*) AS n,
-  ((CAST(SUM(CAST(trunc(x * y * 1000000000000.0) AS BIGINT)) AS DOUBLE) / 1000000000000.0
-     - (CAST(SUM(CAST(trunc(x * 1000000000.0) AS BIGINT)) AS DOUBLE) / 1000000000.0)
-       * (CAST(SUM(CAST(trunc(y * 1000000000.0) AS BIGINT)) AS DOUBLE) / 1000000000.0) / COUNT(*))
+  (({fixed_sum_sql('x * y', 12)}
+     - {fixed_sum_sql('x')} * {fixed_sum_sql('y')} / COUNT(*))
     / (COUNT(*) - 1)) AS cov
 FROM p GROUP BY dim_i, dim_j
 """
@@ -760,7 +749,7 @@ FROM p GROUP BY dim_i, dim_j
 @register("embedding_covariance", oracle=_COV_ORACLE, tags=("A8",))
 def embedding_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sample covariance entries (upper triangle, dims 1..16) from exact
-    decimal sums — the FID Σ statistic (metrics.py:254-274) as a
+    fixed-point sums — the FID Σ statistic (metrics.py:254-274) as a
     posexplode self-join + one aggregation. The full-matrix scale path is
     a mapInPandas partial Xᵀ X (partition-local numpy) + driver combine;
     this SQL form is the oracle-checkable kernel."""
@@ -774,9 +763,8 @@ def embedding_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = flat.select("vec_id", F.col("dim").alias("dim_j"), F.col("v").alias("y"))
     p = a.join(b, ["vec_id"]).filter(F.col("dim_i") <= F.col("dim_j"))
     n = F.count("*")
-    sxy = F.sum(F.expr("CAST(x * y * 1000000000000.0 AS BIGINT)")).cast("double") / F.lit(1e12)
-    sx = F.sum(F.expr("CAST(x * 1000000000.0 AS BIGINT)")).cast("double") / F.lit(1e9)
-    sy = F.sum(F.expr("CAST(y * 1000000000.0 AS BIGINT)")).cast("double") / F.lit(1e9)
+    x, y = F.col("x"), F.col("y")
+    sxy, sx, sy = fixed_sum(x * y, 12), fixed_sum(x), fixed_sum(y)
     return p.groupBy("dim_i", "dim_j").agg(
         n.alias("n"),
         ((sxy - sx * sy / n) / (n - F.lit(1))).alias("cov"),
@@ -913,9 +901,7 @@ assign0 AS ({assign.format(sq=sq, src=src, cents='init')}),
     for i in range(1, iters + 1):
         sql += f"""cent{i} AS (
   SELECT cid, list(mv ORDER BY dim) AS cv FROM (
-    SELECT cid, dim,
-           CAST(SUM(CAST(trunc(CAST(x AS DOUBLE) * 1000000000.0) AS BIGINT)) AS DOUBLE)
-             / 1000000000.0 / COUNT(*) AS mv
+    SELECT cid, dim, {fixed_sum_sql('CAST(x AS DOUBLE)')} / COUNT(*) AS mv
     FROM (SELECT cid, generate_subscripts(embedding, 1) AS dim, unnest(embedding) AS x
           FROM assign{i - 1})
     GROUP BY cid, dim) GROUP BY cid),
@@ -930,9 +916,7 @@ assign{i} AS ({assign.format(sq=sq, src=src, cents=f'cent{i}')}),
 def _km_oracle(k: int, iters: int) -> str:
     sql = _km_cte_prefix(k, iters)
     sql += f"""sizes AS (
-  SELECT cid AS cluster_id, COUNT(*) AS n_members,
-         CAST(SUM(CAST(trunc(dist * 1000000000.0) AS BIGINT)) AS DOUBLE)
-           / 1000000000.0 AS inertia
+  SELECT cid AS cluster_id, COUNT(*) AS n_members, {fixed_sum_sql('dist')} AS inertia
   FROM assign{iters} GROUP BY cid)
 SELECT cluster_id, n_members, round(inertia, 6) AS inertia FROM sizes"""
     return sql
@@ -961,11 +945,7 @@ def kmeans_embedding_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     assigned = kmeans_fixed_iters(e, k=_KM_K, iters=_KM_ITERS)
     return assigned.groupBy("cluster_id").agg(
         F.count("*").alias("n_members"),
-        F.round(
-            F.sum(F.expr("CAST(dist * 1000000000.0 AS BIGINT)")).cast("double")
-            / F.lit(1e9),
-            6,
-        ).alias("inertia"),
+        F.round(fixed_sum(F.col("dist")), 6).alias("inertia"),
     )
 
 
@@ -1033,7 +1013,6 @@ def semantic_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 _PC_ITERS = 3
-_SCALE9 = "1000000000.0"
 
 
 def _pc_oracle(iters: int) -> str:
@@ -1042,8 +1021,7 @@ def _pc_oracle(iters: int) -> str:
          CAST(unnest(embedding) AS DOUBLE) AS x
   FROM embeddings),
 mu AS (
-  SELECT dim, CAST(SUM(CAST(trunc(x * {_SCALE9}) AS BIGINT)) AS DOUBLE)
-              / {_SCALE9} / COUNT(*) AS m
+  SELECT dim, {fixed_sum_sql('x')} / COUNT(*) AS m
   FROM flat GROUP BY dim),
 marr AS (SELECT list(m ORDER BY dim) AS marr FROM mu),
 cen AS (
@@ -1058,15 +1036,12 @@ v0 AS (SELECT list_transform(range(1, {_DIM} + 1),
         sql += f"""ci{t} AS (
   SELECT vec_id, cen, {dot_sql('cen', 'cv')} AS ci FROM cen CROSS JOIN v{t - 1}),
 w{t} AS (
-  SELECT dim, CAST(SUM(CAST(trunc(ci * cval * {_SCALE9}) AS BIGINT)) AS DOUBLE)
-              / {_SCALE9} AS wv
+  SELECT dim, {fixed_sum_sql('ci * cval')} AS wv
   FROM (SELECT ci, generate_subscripts(cen, 1) AS dim, unnest(cen) AS cval
         FROM ci{t})
   GROUP BY dim),
 n{t} AS (
-  SELECT list(wv ORDER BY dim) AS w,
-         CAST(SUM(CAST(trunc(wv * wv * {_SCALE9}) AS BIGINT)) AS DOUBLE)
-           / {_SCALE9} AS norm2
+  SELECT list(wv ORDER BY dim) AS w, {fixed_sum_sql('wv * wv')} AS norm2
   FROM w{t}),
 v{t} AS (SELECT list_transform(w, t -> t / sqrt(norm2)) AS cv, norm2 FROM n{t}),
 """
@@ -1108,13 +1083,10 @@ def embedding_top_pc_power(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = _E(spark, sf_dir)
 
-    def tsum(expr: F.Column) -> F.Column:
-        return F.sum((expr * F.lit(1e9)).cast("bigint")).cast("double") / F.lit(1e9)
-
     flat = e.select("vec_id", F.posexplode("embedding").alias("dim", "xf")).select(
         "vec_id", "dim", F.col("xf").cast("double").alias("x")
     )
-    mu = flat.groupBy("dim").agg((tsum(F.col("x")) / F.count("*")).alias("m"))
+    mu = flat.groupBy("dim").agg((fixed_sum(F.col("x")) / F.count("*")).alias("m"))
     marr = mu.agg(
         F.transform(F.array_sort(F.collect_list(F.struct("dim", "m"))), lambda s: s["m"]).alias(
             "marr"
@@ -1138,16 +1110,13 @@ def embedding_top_pc_power(spark: SparkSession, sf_dir: str) -> DataFrame:
         w = (
             ci.select("ci", F.posexplode("cen").alias("dim", "cval"))
             .groupBy("dim")
-            .agg(tsum(F.col("ci") * F.col("cval")).alias("wv"))
+            .agg(fixed_sum(F.col("ci") * F.col("cval")).alias("wv"))
         )
         n = w.agg(
             F.transform(
                 F.array_sort(F.collect_list(F.struct("dim", "wv"))), lambda s: s["wv"]
             ).alias("w"),
-            (
-                F.sum((F.col("wv") * F.col("wv") * F.lit(1e9)).cast("bigint")).cast("double")
-                / F.lit(1e9)
-            ).alias("norm2"),
+            fixed_sum(F.col("wv") * F.col("wv")).alias("norm2"),
         )
         norm2_df = n
         v = F.broadcast(
@@ -1510,14 +1479,14 @@ def _pagerank_oracle() -> str:
     for k in range(1, _PR_ITERS + 1):
         iters.append(f"""c{k} AS (
   SELECT e.dst,
-    SUM(CAST(trunc((p.r / d.deg) * 1000000000.0) AS BIGINT)) AS s
+    SUM({fixed_term_sql('p.r / d.deg')}) AS s
   FROM edges e
   JOIN {prev} p ON e.src = p.vec_id
   JOIN deg d ON e.src = d.vec_id
   GROUP BY e.dst),
 r{k} AS (
   SELECT v.vec_id,
-    {1 - _PR_DAMP} + {_PR_DAMP} * (CAST(COALESCE(c.s, 0) AS DOUBLE) / 1000000000.0) AS r
+    {1 - _PR_DAMP} + {_PR_DAMP} * {fixed_unscale_sql('COALESCE(c.s, 0)')} AS r
   FROM verts v LEFT JOIN c{k} c ON v.vec_id = c.dst)""")
         prev = f"r{k}"
     body = ",\n".join(iters)
@@ -1583,7 +1552,7 @@ def similarity_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             ej.join(ranks.withColumnRenamed("vec_id", "src"), "src")
             .select(
                 "dst",
-                F.expr("CAST((r / deg) * 1000000000.0 AS BIGINT)").alias("sc"),
+                fixed_term(F.col("r") / F.col("deg")).alias("sc"),
             )
             .groupBy("dst")
             .agg(F.sum("sc").alias("s"))
@@ -1597,7 +1566,7 @@ def similarity_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             (
                 F.lit(1 - _PR_DAMP)
                 + F.lit(_PR_DAMP)
-                * (F.coalesce(F.col("s"), F.lit(0)).cast("double") / F.lit(1e9))
+                * fixed_unscale(F.coalesce(F.col("s"), F.lit(0)))
             ).alias("r"),
         )
     return ranks.select("vec_id", F.round("r", 6).alias("pagerank"))

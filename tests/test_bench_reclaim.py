@@ -4,7 +4,7 @@ building, so on a machine with a READY v2 the stale replicated parquet
 under /tmp lived forever), ``bench.measure`` is a best-of-N over the
 DataFrame the query built with every output column computed, and the
 >2x recheck confirms only breaches a second in-session measurement
-reproduces."""
+reproduces, against anchors that must load."""
 
 from __future__ import annotations
 
@@ -219,3 +219,28 @@ def test_gate_compares_unrounded_ratio(monkeypatch):
 
     assert confirmed == ["edge_q"]
     assert recheck["edge_q"]["vs_baseline"] == 2.0  # display value rounds
+
+
+def test_committed_anchors_load():
+    import bench
+
+    anchors, sf = bench._load_baseline()
+    assert sf == "0.1" and len(anchors) > 100
+    assert all(v > 0 for v in anchors.values())
+
+
+@pytest.mark.parametrize(
+    "content",
+    [None, "not json", "{}", '{"anchors_v2": {"sf": 0.1}}'],
+    ids=["missing", "garbled", "no-block", "no-queries"],
+)
+def test_missing_or_malformed_anchors_fail_loudly(tmp_path, monkeypatch, content):
+    """An absent or malformed anchors_v2 block raises: an empty baseline
+    would compute no ratio, so the 2x gate would pass without checking."""
+    import bench
+
+    if content is not None:
+        (tmp_path / "bench_baseline.json").write_text(content)
+    monkeypatch.setattr(bench, "REPO", str(tmp_path))
+    with pytest.raises((OSError, KeyError, ValueError)):
+        bench._load_baseline()

@@ -202,3 +202,49 @@ def test_floor_bucket_start_cross_engine_parity(spark):
         else:
             assert b <= p < b + w, (p, b)
             assert b % w == 0
+
+
+def test_fixed_sum_cross_engine_parity(spark):
+    """fixed_sum/fixed_sum_sql agree bit-for-bit, at 1 and at N
+    partitions, on signed terms: each term truncates toward zero (so
+    magnitudes below 10^-scale add 0, and -1.6e-9 adds -1 unit, not -2
+    as a rounding cast would give), NULL terms are skipped, and the
+    1e12 scale follows the same rule."""
+    import math
+
+    import duckdb
+
+    from syntheticdata_pipeline__spark.functions.determinism import (
+        fixed_sum,
+        fixed_sum_sql,
+        fixed_term,
+        fixed_term_sql,
+    )
+
+    base = [
+        0.5, -0.5, 4e-10, -4e-10, 9.99e-10, -9.99e-10, 1.6e-9, -1.6e-9,
+        1.9999999999e-9, -1.9999999999e-9, 3.141592653589793, -2.718281828459045,
+        0.72125, -123456.789012345, 0.0, -0.0, None,
+    ]  # fmt: skip
+    vals = [None if v is None else v * (1 + k % 7) * (-1) ** k for k in range(40) for v in base]
+    # 680 rows in insertion order (rowid) on both engines
+    sdf = spark.createDataFrame([(v,) for v in vals], "v double")
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (v DOUBLE)")
+    con.executemany("INSERT INTO t VALUES (?)", [(v,) for v in vals])
+    for scale in (9, 12):
+        terms = [math.trunc(v * 10.0**scale) for v in vals if v is not None]
+        want = float(sum(terms)) / 10.0**scale
+        got_terms = [r.t for r in sdf.select(fixed_term(F.col("v"), scale).alias("t")).collect()]
+        duck_terms = [
+            r[0]
+            for r in con.execute(f"SELECT {fixed_term_sql('v', scale)} FROM t ORDER BY rowid")
+            .fetchall()
+        ]
+        assert [t for t in got_terms if t is not None] == terms
+        assert got_terms == duck_terms
+        duck = con.execute(f"SELECT {fixed_sum_sql('v', scale)} FROM t").fetchone()[0]
+        for n in (1, 7):
+            s = sdf.repartition(n).select(fixed_sum(F.col("v"), scale).alias("s"))
+            assert s.collect()[0].s == duck == want, (scale, n)
+    con.close()

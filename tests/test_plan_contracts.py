@@ -35,6 +35,10 @@ Contracts:
  9. Plan fingerprints ignore expression ids: a query built again later
     in the session dumps the same text, and ``plan_walk.py --diff``
     names exactly the query whose dump changed.
+10. One fixed-point sum: the 1e9/1e12 scale of the order-free double
+    sum and DuckDB's truncating BIGINT cast are spelled only in the
+    ``fixed_*`` helpers of ``functions/determinism.py`` (a source-text
+    check over the whole package).
 """
 
 from __future__ import annotations
@@ -459,6 +463,19 @@ _FIXTURE_HELPERS = {
 }
 
 
+# The fixed-point sum's scale as a literal (SQL decimal, or a Python
+# float multiplied, divided or lit; a bare ``or 1e9`` default is another
+# rule), a computed power of ten, and DuckDB's truncating BIGINT cast.
+_FIXED_POINT_HELPERS = {
+    r"\b10{9}(?:0{3})?\b|(?:[*/]\s*|lit\()1e(?:9|12)\b": set(),
+    r"\b10(?:\.0)?\s*\*\*": {
+        ("functions/determinism.py", f)
+        for f in ("fixed_term", "fixed_term_sql", "fixed_unscale", "fixed_unscale_sql")
+    },
+    r"CAST\(\s*trunc\(": {("functions/determinism.py", "fixed_term_sql")},
+}
+
+
 def _source_sites(patterns, base=_PKG, dirs=(".",)) -> dict[str, set[tuple[str, str]]]:
     """Where each regex matches a source line under ``dirs`` of ``base``:
     the (file relative to ``base``, name) of the innermost enclosing
@@ -503,6 +520,13 @@ def test_cluster_closure_has_one_home():
     (verified pair with jac >= _CLUSTER_JAC) only from docs_q's engine
     pair ``_near_dup_edges`` / ``_NEAR_DUP_EDGES_ORACLE``."""
     assert _source_sites(_CLUSTER_HELPERS) == _CLUSTER_HELPERS
+
+
+def test_fixed_point_sum_has_one_home():
+    """Every order-free sum of computed doubles goes through
+    ``determinism.fixed_sum``/``fixed_sum_sql`` (or their term and
+    unscale halves): no query spells the scale or the truncating cast."""
+    assert _source_sites(_FIXED_POINT_HELPERS) == _FIXED_POINT_HELPERS
 
 
 def test_fixtures_have_one_builder():

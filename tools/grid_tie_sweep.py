@@ -67,20 +67,6 @@ import sys
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
-# the quality expression shared by both (former) round-keyed grids —
-# kept in sync with operators/textops.py::quality_score via the oracle
-# twins of rank_normalized_quality / quality_duplication_lift
-_QUALITY_SQL = """
-SELECT doc_id,
-  (CASE WHEN len(toks) >= 20 AND len(toks) <= 10000 THEN 1.0
-        WHEN len(toks) >= 5 THEN 0.5 ELSE 0.0 END) * 0.4
-  + least(CAST(len(list_intersect(toks, {stops})) AS DOUBLE) / 4.0, 1.0) * 0.3
-  + coalesce(CAST(len(regexp_extract_all(text, '[A-Za-z]')) AS DOUBLE)
-               / nullif(CAST(length(text) AS DOUBLE), 0.0), 0.0) * 0.3 AS q
-FROM (SELECT doc_id, text, {toks} AS toks
-      FROM read_parquet('{sf}/documents.parquet'))
-"""
-
 _HALFWAY_4DP = re.compile(r"^-?\d+\.\d{4}5$")
 
 
@@ -88,12 +74,13 @@ def scan_sf(sf_dir: str) -> tuple[int, list[tuple[int, float]]]:
     import duckdb
 
     from syntheticdata_pipeline__spark.functions.text import tokens_sql
-    from syntheticdata_pipeline__spark.operators.textops import LANG_STOPWORDS
+    from syntheticdata_pipeline__spark.operators.textops import quality_score_sql
 
     con = duckdb.connect()
-    sql = _QUALITY_SQL.format(
-        stops=repr(list(LANG_STOPWORDS["en"])), toks=tokens_sql("text"), sf=sf_dir
-    )
+    # the quality score both (former) round-keyed grids were keyed on
+    sql = f"""SELECT doc_id, {quality_score_sql()} AS q
+FROM (SELECT doc_id, text, {tokens_sql('text')} AS toks
+      FROM read_parquet('{sf_dir}/documents.parquet'))"""
     rows = con.execute(sql).fetchall()
     con.close()
     hits = [(i, q) for i, q in rows if q is not None and _HALFWAY_4DP.match(repr(q))]
