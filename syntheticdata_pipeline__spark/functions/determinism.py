@@ -19,8 +19,8 @@ across partitionings:
   then divided back. A decimal cast would round, and float32-derived
   doubles can sit exactly halfway on a decimal grid, where Spark
   rounds HALF_UP and DuckDB half-to-even; truncation has no tie. The
-  BIGINT term is also the value-domain envelope: a term past 2^63
-  units raises on both engines.
+  BIGINT term and sum are also the value-domain envelope: a term or a
+  sum past 2^63 units raises on both engines.
 
 Verified bit-equal against DuckDB 1.0 on /root/testdata (see tests).
 """
@@ -188,16 +188,18 @@ def fixed_unscale(s: Column, scale: int = 9) -> Column:
 
 
 def fixed_unscale_sql(s_sql: str, scale: int = 9) -> str:
-    """DuckDB twin of :func:`fixed_unscale`."""
-    return f"(CAST({s_sql} AS DOUBLE) / {10**scale}.0)"
+    """DuckDB twin of :func:`fixed_unscale`. DuckDB sums BIGINT into
+    HUGEINT, so the sum is cast back to BIGINT first: a sum past BIGINT
+    then raises, as Spark's ANSI ``sum`` does."""
+    return f"(CAST(CAST({s_sql} AS BIGINT) AS DOUBLE) / {10**scale}.0)"
 
 
 def fixed_sum(x: Column, scale: int = 9) -> Column:
     """Order-independent SUM of a computed double: exact BIGINT sum of
     the terms truncated to ``scale`` decimals, exported as DOUBLE.
-    NULL terms are skipped. A term outside BIGINT raises on both
-    engines (Spark's ANSI cast, DuckDB's Conversion Error); a sum past
-    BIGINT raises in Spark only, as DuckDB sums BIGINT into HUGEINT."""
+    NULL terms are skipped. A term or a sum outside BIGINT raises on
+    both engines (Spark's ANSI cast and ``sum``, DuckDB's Conversion
+    Error, the sum via :func:`fixed_unscale_sql`'s BIGINT cast)."""
     return fixed_unscale(F.sum(fixed_term(x, scale)), scale)
 
 

@@ -13,6 +13,19 @@ Two plans for approximate-nearest-neighbor over ``embeddings.embedding``:
 Dot products are strict sequential folds (functions.vectors) so the DuckDB
 oracle matches bit-for-bit and top-k order is stable. For very wide
 vectors, swap the fold for the Arrow/Pandas-UDF kernel below.
+
+Two rules have one home per engine here:
+
+- **Query rank** (:func:`rank_topk` / :func:`rank_topk_sql`): over scored
+  (query_id, neighbor_id, score) rows, ``row_number()`` per query_id
+  ordered by ``score DESC, neighbor_id``, kept while ``rank <= k`` and
+  returned as INT. Ties go to the lower neighbor id; a NULL score ranks
+  last in both engines. Every top-k search arm and its oracle ends in
+  this rank.
+- **Probe list** (:func:`probe_buckets` / :func:`probe_buckets_sql`): a
+  query probes its own LSH bucket, then the bucket with each plane bit
+  flipped in turn (``bucket XOR 2^h``, h = 0..n_planes-1): the n_planes+1
+  buckets at Hamming distance <= 1, all distinct.
 """
 
 from __future__ import annotations
@@ -21,6 +34,39 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.vectors import dot
+
+
+def rank_topk(scored: DataFrame, k: int) -> DataFrame:
+    """The query rank: each query's ``k`` best (query_id, neighbor_id,
+    score) rows with their INT ``rank`` (see the module docstring)."""
+    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("neighbor_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "score", F.col("rank").cast("int").alias("rank"))
+    )
+
+
+def rank_topk_sql(scored_rel: str, k: int) -> str:
+    """DuckDB twin of :func:`rank_topk` over the relation ``scored_rel``:
+    a SELECT of (query_id, neighbor_id, score, rank INTEGER)."""
+    return (
+        "SELECT query_id, neighbor_id, score, CAST(rn AS INTEGER) AS rank FROM (\n"
+        "    SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY score DESC, neighbor_id) rn\n"
+        f"    FROM {scored_rel}) WHERE rn <= {k}"
+    )
+
+
+def probe_buckets(bucket: Column, n_planes: int) -> Column:
+    """The probe list: ``bucket`` and its n_planes Hamming-1 neighbors, as
+    an array (see the module docstring)."""
+    return F.array(bucket, *[bucket.bitwiseXOR(F.lit(1 << h)) for h in range(n_planes)])
+
+
+def probe_buckets_sql(bucket_sql: str, n_planes: int) -> str:
+    """DuckDB twin of :func:`probe_buckets`: a list literal."""
+    flips = "".join(f", xor({bucket_sql}, {1 << h})" for h in range(n_planes))
+    return f"[{bucket_sql}{flips}]"
 
 
 def brute_force_topk(
@@ -48,12 +94,7 @@ def brute_force_topk(
             dot(F.col("__qvec"), F.col("__cvec")).alias("score"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "score", F.col("rank").cast("int").alias("rank"))
-    )
+    return rank_topk(scored, k)
 
 
 def _hyperplane_component(h: int, i: int, salt: str = "hp") -> float:
@@ -129,22 +170,14 @@ def lsh_bucketed_topk(
         lsh_bucket(F.col(vec_col), planes).alias("bucket"),
     )
     if multi_probe:
-        probes = F.array(
-            F.col("bucket"),
-            *[F.col("bucket").bitwiseXOR(F.lit(1 << h)) for h in range(n_planes)],
-        )
+        probes = probe_buckets(F.col("bucket"), n_planes)
         q = q.select("query_id", "__qvec", F.explode(probes).alias("bucket"))
     scored = (
         c.join(F.broadcast(q), "bucket")
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .select("query_id", "neighbor_id", dot(F.col("__qvec"), F.col("__cvec")).alias("score"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "score", F.col("rank").cast("int").alias("rank"))
-    )
+    return rank_topk(scored, k)
 
 
 def lsh_neardup_pairs(
@@ -207,10 +240,7 @@ def lsh_neardup_pairs(
     # --- candidate generation + exact verification over DISTINCT vectors
     a_cols = [F.col("id").alias("ra"), F.col("vec").alias("__va")]
     if multi_probe:
-        probes = F.array(
-            F.col("bucket"),
-            *[F.col("bucket").bitwiseXOR(F.lit(1 << h)) for h in range(n_planes)],
-        )
+        probes = probe_buckets(F.col("bucket"), n_planes)
         a_side = reps.select(*a_cols, F.explode(probes).alias("bucket"))
     else:
         a_side = reps.select(*a_cols, "bucket")
@@ -551,9 +581,4 @@ def topk_pandas_kernel(
     out = corpus.select(id_col, vec_col).mapInPandas(
         score_batches, schema="query_id long, neighbor_id long, score double"
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("neighbor_id"))
-    return (
-        out.filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return rank_topk(out.filter(F.col("query_id") != F.col("neighbor_id")), k)

@@ -36,6 +36,9 @@ from ..operators.similarity import (
     hyperplanes,
     lsh_bucket_sql,
     lsh_bucketed_topk,
+    probe_buckets_sql,
+    rank_topk,
+    rank_topk_sql,
 )
 from ..session import pin
 from . import register
@@ -141,21 +144,13 @@ def _E(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Brute-force cosine top-k (correctness baseline for ANN).
+# The ANN search arms. Each arm's oracle is one CTE builder ending in a
+# named relation out(query_id, neighbor_id, score, rank): it defines its
+# query side {out}_q(query_id, qv[, key]) and corpus side
+# {out}_c(neighbor_id, cv[, key]), and `_topk_sql` scores and ranks them
+# (similarity.rank_topk_sql). The recall queries splice the builders they
+# compare and end in `_recall_sql`; the Spark arms are the kernels below.
 # --------------------------------------------------------------------------
-
-_BRUTE_ORACLE = f"""
-WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < {_N_QUERIES}),
-c AS (SELECT vec_id AS neighbor_id, embedding AS cv FROM embeddings),
-scored AS (
-  SELECT q.query_id, c.neighbor_id, {dot_sql('q.qv', 'c.cv')} AS score
-  FROM c CROSS JOIN q WHERE c.neighbor_id != q.query_id),
-ranked AS (
-  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY score DESC, neighbor_id) rn
-  FROM scored)
-SELECT query_id, neighbor_id, score, CAST(rn AS INTEGER) AS rank
-FROM ranked WHERE rn <= {_K}
-"""
 
 
 def _valid_vecs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -167,11 +162,40 @@ def _valid_vecs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _E(spark, sf_dir).filter(F.col("embedding").isNotNull())
 
 
+def _topk_sql(out: str, key: str | None = None, score: str | None = None) -> str:
+    """Score every {out}_q x {out}_c pair (sharing ``key``, or all pairs)
+    except self-pairs and keep each query's top _K: the CTEs
+    {out}_scored and {out}. ``score`` is over q.qv/c.cv, default the
+    fold dot."""
+    score = score or dot_sql("q.qv", "c.cv")
+    pairs = f"JOIN {out}_q q USING ({key})" if key else f"CROSS JOIN {out}_q q"
+    return f"""{out}_scored AS (
+  SELECT q.query_id, c.neighbor_id, {score} AS score
+  FROM {out}_c c {pairs} WHERE c.neighbor_id != q.query_id),
+{out} AS ({rank_topk_sql(f"{out}_scored", _K)})"""
+
+
+# --------------------------------------------------------------------------
+# Brute-force cosine top-k (correctness baseline for ANN).
+# --------------------------------------------------------------------------
+
+
+def _brute_sql(out: str, score: str | None = None) -> str:
+    """Exact top-k of the first _N_QUERIES vectors over the corpus."""
+    return f"""{out}_q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < {_N_QUERIES}),
+{out}_c AS (SELECT vec_id AS neighbor_id, embedding AS cv FROM embeddings),
+{_topk_sql(out, score=score)}"""
+
+
 def _ann_brute_kernel(e: DataFrame) -> DataFrame:
     return brute_force_topk(e, e.filter(F.col("vec_id") < _N_QUERIES), k=_K)
 
 
-@register("ann_brute_topk", oracle=_nonnull_vec_oracle(_BRUTE_ORACLE), tags=("similarity", "J1"))
+@register(
+    "ann_brute_topk",
+    oracle=_nonnull_vec_oracle(f"WITH {_brute_sql('topk')}\nSELECT * FROM topk"),
+    tags=("similarity", "J1"),
+)
 def ann_brute_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact cosine top-5 for 10 query vectors: broadcast queries × one
     corpus scan; sequential-fold dot products keep ranks bit-stable."""
@@ -185,26 +209,22 @@ def ann_brute_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 _N_PLANES = 4
 _planes = hyperplanes(_N_PLANES, _DIM)
 
-_probe_list = "[b.bucket, " + ", ".join(
-    f"xor(b.bucket, {1 << h})" for h in range(_N_PLANES)
-) + "]"
 
-_LSH_ORACLE = f"""
-WITH b AS (
-  SELECT vec_id, embedding, {lsh_bucket_sql('embedding', _planes)} AS bucket FROM embeddings),
-q AS (
-  SELECT vec_id AS query_id, embedding AS qv, unnest({_probe_list}) AS bucket
-  FROM b WHERE vec_id < {_N_QUERIES}),
-c AS (SELECT vec_id AS neighbor_id, embedding AS cv, bucket FROM b),
-scored AS (
-  SELECT q.query_id, c.neighbor_id, {dot_sql('q.qv', 'c.cv')} AS score
-  FROM c JOIN q USING (bucket) WHERE c.neighbor_id != q.query_id),
-ranked AS (
-  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY score DESC, neighbor_id) rn
-  FROM scored)
-SELECT query_id, neighbor_id, score, CAST(rn AS INTEGER) AS rank
-FROM ranked WHERE rn <= {_K}
-"""
+def _lsh_buckets_sql(out: str) -> str:
+    """The LSH bucket table out(vec_id, label, embedding, bucket)."""
+    return f"""{out} AS (
+  SELECT vec_id, label, embedding, {lsh_bucket_sql('embedding', _planes)} AS bucket
+  FROM embeddings)"""
+
+
+def _lsh_sql(out: str) -> str:
+    """Multi-probe LSH top-k: each query searches its probe list."""
+    return f"""{_lsh_buckets_sql(f"{out}_b")},
+{out}_q AS (
+  SELECT vec_id AS query_id, embedding AS qv, unnest({probe_buckets_sql('bucket', _N_PLANES)}) AS bucket
+  FROM {out}_b WHERE vec_id < {_N_QUERIES}),
+{out}_c AS (SELECT vec_id AS neighbor_id, embedding AS cv, bucket FROM {out}_b),
+{_topk_sql(out, key="bucket")}"""
 
 
 def _ann_lsh_kernel(e: DataFrame) -> DataFrame:
@@ -218,7 +238,11 @@ def _ann_lsh_kernel(e: DataFrame) -> DataFrame:
     )
 
 
-@register("ann_lsh_topk", oracle=_nonnull_vec_oracle(_LSH_ORACLE), tags=("similarity", "lsh"))
+@register(
+    "ann_lsh_topk",
+    oracle=_nonnull_vec_oracle(f"WITH {_lsh_sql('topk')}\nSELECT * FROM topk"),
+    tags=("similarity", "lsh"),
+)
 def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Random-hyperplane LSH: 4 deterministic planes → 16 sign buckets;
     top-k within the query's bucket plus every Hamming-1 probe bucket
@@ -239,25 +263,20 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _N_CELLS = 8
 
-_IVF_ORACLE = f"""
-WITH cents AS (SELECT vec_id AS cid, embedding AS cv FROM embeddings WHERE vec_id < {_N_CELLS}),
-assign AS (
-  SELECT e.vec_id, e.embedding, c.cid,
-         row_number() OVER (PARTITION BY e.vec_id
-                            ORDER BY {dot_sql('e.embedding', 'c.cv')} DESC, c.cid) AS rn
-  FROM embeddings e CROSS JOIN cents c),
-cells AS (SELECT vec_id, embedding, cid AS cell FROM assign WHERE rn = 1),
-q AS (SELECT vec_id AS query_id, embedding AS qv, cell FROM cells WHERE vec_id < {_N_QUERIES}),
-c AS (SELECT vec_id AS neighbor_id, embedding AS cv, cell FROM cells),
-scored AS (
-  SELECT q.query_id, c.neighbor_id, {dot_sql('q.qv', 'c.cv')} AS score
-  FROM c JOIN q USING (cell) WHERE c.neighbor_id != q.query_id),
-ranked AS (
-  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY score DESC, neighbor_id) rn
-  FROM scored)
-SELECT query_id, neighbor_id, score, CAST(rn AS INTEGER) AS rank
-FROM ranked WHERE rn <= {_K}
-"""
+
+def _ivf_sql(out: str) -> str:
+    """First-k-centroid IVF top-k: each vector's cell is its best
+    centroid (ties to the lower id); a query searches its own cell."""
+    return f"""{out}_cents AS (SELECT vec_id AS cid, embedding AS cv FROM embeddings WHERE vec_id < {_N_CELLS}),
+{out}_cells AS (
+  SELECT vec_id, embedding, cid AS cell FROM (
+    SELECT e.vec_id, e.embedding, c.cid,
+           row_number() OVER (PARTITION BY e.vec_id
+                              ORDER BY {dot_sql('e.embedding', 'c.cv')} DESC, c.cid) AS rn
+    FROM embeddings e CROSS JOIN {out}_cents c) WHERE rn = 1),
+{out}_q AS (SELECT vec_id AS query_id, embedding AS qv, cell FROM {out}_cells WHERE vec_id < {_N_QUERIES}),
+{out}_c AS (SELECT vec_id AS neighbor_id, embedding AS cv, cell FROM {out}_cells),
+{_topk_sql(out, key="cell")}"""
 
 
 def _ann_ivf_kernel(e: DataFrame) -> DataFrame:
@@ -290,15 +309,14 @@ def _ann_ivf_kernel(e: DataFrame) -> DataFrame:
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .select("query_id", "neighbor_id", dot(F.col("qv"), F.col("cv")).alias("score"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _K)
-        .select("query_id", "neighbor_id", "score", F.col("rank").cast("int").alias("rank"))
-    )
+    return rank_topk(scored, _K)
 
 
-@register("ann_ivf_topk", oracle=_nonnull_vec_oracle(_IVF_ORACLE), tags=("similarity", "ivf"))
+@register(
+    "ann_ivf_topk",
+    oracle=_nonnull_vec_oracle(f"WITH {_ivf_sql('topk')}\nSELECT * FROM topk"),
+    tags=("similarity", "ivf"),
+)
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF cell assignment (argmax centroid dot, deterministic tiebreak)
     → top-k within the query's cell. Cell join replaces the cross join;
@@ -312,59 +330,55 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # — the metric that decides whether an ANN pre-filter is usable at all.
 # --------------------------------------------------------------------------
 
+
+def _recall(cand: DataFrame, truth: DataFrame, *keys: str) -> DataFrame:
+    """Recall of the candidate (query_id, neighbor_id) rows against the
+    truth's, per ``keys`` group: n_hits, n_true, round(n_hits/n_true, 6).
+    Without keys it is one row even over no candidates, with a NULL recall
+    when the truth is empty (an empty corpus); grouped, no candidates give
+    no rows. Oracle twin: `_recall_sql`."""
+    hit = truth.select("query_id", "neighbor_id", F.lit(1).alias("__hit"))
+    hits = (
+        cand.join(F.broadcast(hit), ["query_id", "neighbor_id"], "left")
+        .groupBy(*keys)
+        .agg(F.count("__hit").alias("n_hits"))
+    )
+    tot = truth.agg(F.count("*").alias("n_true"))
+    return hits.crossJoin(F.broadcast(tot)).select(
+        *keys,
+        "n_hits",
+        "n_true",
+        # try_divide: an empty truth (n_true=0) gives NULL recall, like
+        # DuckDB's x/0, where ANSI division would kill the job
+        F.round(F.try_divide(F.col("n_hits").cast("double"), F.col("n_true")), 6).alias(
+            "recall"
+        ),
+    )
+
+
+def _recall_sql(cand: str, truth: str, *keys: str) -> str:
+    """DuckDB twin of `_recall`: the final SELECT over relations ``cand``
+    and ``truth``."""
+    by = ", ".join(f"t.{k}" for k in keys)
+    n_hits = "COUNT(x.neighbor_id)"
+    n_true = f"(SELECT COUNT(*) FROM {truth})"
+    group = f"\nGROUP BY {by}" if keys else ""
+    return f"""SELECT {by + ', ' if keys else ''}CAST({n_hits} AS BIGINT) AS n_hits,
+  CAST({n_true} AS BIGINT) AS n_true,
+  round(CAST({n_hits} AS DOUBLE) / {n_true}, 6) AS recall
+FROM {cand} t
+LEFT JOIN {truth} x ON t.query_id = x.query_id AND t.neighbor_id = x.neighbor_id{group}"""
+
+
 _RECALL_ORACLE = f"""
-WITH bq AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < {_N_QUERIES}),
-brute_scored AS (
-  SELECT q.query_id, c.vec_id AS neighbor_id, {dot_sql('q.qv', 'c.embedding')} AS score
-  FROM embeddings c CROSS JOIN bq q WHERE c.vec_id != q.query_id),
-brute AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY score DESC, neighbor_id) rn
-    FROM brute_scored) WHERE rn <= {_K}),
-lb AS (
-  SELECT vec_id, embedding, {lsh_bucket_sql('embedding', _planes)} AS bucket FROM embeddings),
-lprobe AS (
-  SELECT vec_id, embedding, unnest({_probe_list}) AS bucket
-  FROM lb b WHERE vec_id < {_N_QUERIES}),
-lsh_scored AS (
-  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         {dot_sql('q.embedding', 'c.embedding')} AS score
-  FROM lb c JOIN lprobe q USING (bucket)
-  WHERE c.vec_id != q.vec_id),
-lsh_topk AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY score DESC, neighbor_id) rn
-    FROM lsh_scored) WHERE rn <= {_K}),
-cents AS (SELECT vec_id AS cid, embedding AS cv FROM embeddings WHERE vec_id < {_N_CELLS}),
-assign AS (
-  SELECT e.vec_id, e.embedding, c.cid,
-         row_number() OVER (PARTITION BY e.vec_id
-                            ORDER BY {dot_sql('e.embedding', 'c.cv')} DESC, c.cid) AS rn
-  FROM embeddings e CROSS JOIN cents c),
-cells AS (SELECT vec_id, embedding, cid AS cell FROM assign WHERE rn = 1),
-ivf_scored AS (
-  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         {dot_sql('q.embedding', 'c.embedding')} AS score
-  FROM cells c JOIN cells q USING (cell)
-  WHERE q.vec_id < {_N_QUERIES} AND c.vec_id != q.vec_id),
-ivf_topk AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY score DESC, neighbor_id) rn
-    FROM ivf_scored) WHERE rn <= {_K}),
+WITH {_brute_sql('brute')},
+{_lsh_sql('lsh')},
+{_ivf_sql('ivf')},
 cand AS (
-  SELECT 'lsh' AS method, query_id, neighbor_id FROM lsh_topk
+  SELECT 'lsh' AS method, query_id, neighbor_id FROM lsh
   UNION ALL
-  SELECT 'ivf' AS method, query_id, neighbor_id FROM ivf_topk),
-methods AS (SELECT DISTINCT method FROM cand),
-hits AS (
-  SELECT method, COUNT(*) AS n_hits
-  FROM cand JOIN brute USING (query_id, neighbor_id) GROUP BY 1),
-tot AS (SELECT COUNT(*) AS n_true FROM brute)
-SELECT m.method,
-       CAST(COALESCE(h.n_hits, 0) AS BIGINT) AS n_hits,
-       CAST(t.n_true AS BIGINT) AS n_true,
-       round(CAST(COALESCE(h.n_hits, 0) AS DOUBLE) / t.n_true, 6) AS recall
-FROM methods m LEFT JOIN hits h ON m.method = h.method CROSS JOIN tot t
+  SELECT 'ivf' AS method, query_id, neighbor_id FROM ivf)
+{_recall_sql('cand', 'brute', 'method')}
 """
 
 
@@ -390,24 +404,7 @@ def ann_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     ivf = _ann_ivf_kernel(e).select(
         F.lit("ivf").alias("method"), "query_id", "neighbor_id"
     )
-    cand = lsh.unionByName(ivf)
-    methods = cand.select("method").distinct()
-    hits = cand.join(F.broadcast(brute), ["query_id", "neighbor_id"]).groupBy(
-        "method"
-    ).agg(F.count("*").alias("n_hits"))
-    tot = brute.groupBy().agg(F.count("*").alias("n_true"))
-    return (
-        methods.join(hits, "method", "left")
-        .crossJoin(F.broadcast(tot))
-        .select(
-            "method",
-            F.coalesce(F.col("n_hits"), F.lit(0)).cast("bigint").alias("n_hits"),
-            F.col("n_true").cast("bigint").alias("n_true"),
-            F.round(
-                F.coalesce(F.col("n_hits"), F.lit(0)).cast("double") / F.col("n_true"), 6
-            ).alias("recall"),
-        )
-    )
+    return _recall(lsh.unionByName(ivf), brute, "method")
 
 
 # --------------------------------------------------------------------------
@@ -602,9 +599,7 @@ def embedding_cosine_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 _NEARDUP_LSH_ORACLE = f"""
-WITH b AS (
-  SELECT vec_id, label, embedding, {lsh_bucket_sql('embedding', _planes)} AS bucket
-  FROM embeddings),
+WITH {_lsh_buckets_sql('b')},
 p AS (
   SELECT a.vec_id AS id_a, b2.vec_id AS id_b,
          {dot_sql('a.embedding', 'b2.embedding')} AS cos_sim,
@@ -617,14 +612,10 @@ SELECT id_a, id_b, cos_sim, same_label FROM p WHERE cos_sim >= {_COS_THRESH}
 # Multi-probe variant: the a-side probes its home bucket plus every
 # Hamming-1 neighbor (recall 12%→47% on the fixture at cos≥0.25, see
 # tests/test_similarity_kernel.py) — candidates stay Σ|bucket|²-bounded.
-_PROBE_LIST = "[bucket" + "".join(f", xor(bucket, {1 << h})" for h in range(_N_PLANES)) + "]"
-
 _NEARDUP_MP_ORACLE = f"""
-WITH b AS (
-  SELECT vec_id, label, embedding, {lsh_bucket_sql('embedding', _planes)} AS bucket
-  FROM embeddings),
+WITH {_lsh_buckets_sql('b')},
 probed AS (
-  SELECT vec_id, label, embedding, unnest({_PROBE_LIST}) AS bucket FROM b),
+  SELECT vec_id, label, embedding, unnest({probe_buckets_sql('bucket', _N_PLANES)}) AS bucket FROM b),
 p AS (
   SELECT DISTINCT a.vec_id AS id_a, b2.vec_id AS id_b,
          {dot_sql('a.embedding', 'b2.embedding')} AS cos_sim,
@@ -659,9 +650,7 @@ def cosine_neardup_lsh_probed(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 _SEMDEDUP_ORACLE = f"""
-WITH RECURSIVE b AS (
-  SELECT vec_id, label, embedding, {lsh_bucket_sql('embedding', _planes)} AS bucket
-  FROM embeddings),
+WITH RECURSIVE {_lsh_buckets_sql('b')},
 pairs AS (
   SELECT a.vec_id AS id_a, b2.vec_id AS id_b
   FROM b a JOIN b b2 ON a.bucket = b2.bucket AND a.vec_id < b2.vec_id
@@ -823,11 +812,7 @@ def embedding_int8_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output contract: exploded to one (vec_id, pos, q) row per element —
     scalar ints hash deterministically in the driver's canonicalizer
     (array<int> columns do not), and every element is still checked."""
-    e = _E(spark, sf_dir).filter(
-        # a NULL vector is not searchable/pairable (oracle twin:
-        # _nonnull_vec_oracle)
-        F.col("embedding").isNotNull()
-    )
+    e = _valid_vecs(spark, sf_dir)
     ex = e.select(F.posexplode("embedding").alias("pos", "v"))
     scales = ex.groupBy("pos").agg(
         F.greatest(F.max(F.abs(F.col("v").cast("double"))), F.lit(1e-12)).alias("s")
@@ -941,7 +926,7 @@ def kmeans_embedding_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.clusters import kmeans_fixed_iters
 
     # only valid vectors are clusterable (oracle twin: kvecs CTE)
-    e = _E(spark, sf_dir).filter(F.col("embedding").isNotNull())
+    e = _valid_vecs(spark, sf_dir)
     assigned = kmeans_fixed_iters(e, k=_KM_K, iters=_KM_ITERS)
     return assigned.groupBy("cluster_id").agg(
         F.count("*").alias("n_members"),
@@ -1154,37 +1139,17 @@ def _ivf_trained_oracle() -> str:
     sq = sqdist_sql("e.embedding", "c.cv")
     train_pred = f"{unit_rand_sql('vec_id', _IVF_TRAIN_SALT)} < {_IVF_TRAIN_RATE}"
     sql = _km_cte_prefix(_KM_K, _KM_ITERS, train_pred=train_pred)
-    sql += f"""cells AS (SELECT vec_id, embedding, cid AS cell FROM assignfull),
-probe AS (
+    sql += f"""topk_c AS (SELECT vec_id AS neighbor_id, embedding AS cv, cid AS cell FROM assignfull),
+topk_q AS (
   SELECT query_id, qv, cell FROM (
     SELECT e.vec_id AS query_id, e.embedding AS qv, c.cid AS cell,
            row_number() OVER (PARTITION BY e.vec_id ORDER BY {sq}, c.cid) AS rn
     FROM embeddings e CROSS JOIN cent{_KM_ITERS} c
     WHERE e.vec_id < {_N_QUERIES}) WHERE rn <= {_KM_NPROBE}),
-scored AS (
-  SELECT q.query_id, c.vec_id AS neighbor_id,
-         {dot_sql('q.qv', 'c.embedding')} AS score
-  FROM cells c JOIN probe q USING (cell)
-  WHERE c.vec_id != q.query_id),
-topk AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY score DESC, neighbor_id) rn
-    FROM scored) WHERE rn <= {_K}),
-bq AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < {_N_QUERIES}),
-brute_scored AS (
-  SELECT q.query_id, c.vec_id AS neighbor_id, {dot_sql('q.qv', 'c.embedding')} AS score
-  FROM embeddings c CROSS JOIN bq q WHERE c.vec_id != q.query_id),
-brute AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY score DESC, neighbor_id) rn
-    FROM brute_scored) WHERE rn <= {_K}),
-hits AS (SELECT COUNT(*) AS n_hits FROM topk JOIN brute USING (query_id, neighbor_id)),
-tot AS (SELECT COUNT(*) AS n_true FROM brute)
-SELECT 'ivf_trained' AS method,
-       CAST(h.n_hits AS BIGINT) AS n_hits,
-       CAST(t.n_true AS BIGINT) AS n_true,
-       round(CAST(h.n_hits AS DOUBLE) / t.n_true, 6) AS recall
-FROM hits h CROSS JOIN tot t"""
+{_topk_sql('topk', key='cell')},
+{_brute_sql('brute')}
+SELECT 'ivf_trained' AS method, * FROM (
+{_recall_sql('topk', 'brute')})"""
     return sql
 
 
@@ -1219,64 +1184,42 @@ def ann_ivf_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.vectors import dot, sqdist
     from ..operators.clusters import kmeans_fixed_iters
 
-    e = _E(spark, sf_dir).filter(
-        # a NULL vector is not searchable/pairable (oracle twin:
-        # _nonnull_vec_oracle)
-        F.col("embedding").isNotNull()
-    )
+    e = _valid_vecs(spark, sf_dir)
     train = e.filter(unit_rand(F.col("vec_id"), _IVF_TRAIN_SALT) < _IVF_TRAIN_RATE)
     assigned, cents = kmeans_fixed_iters(
         e, k=_KM_K, iters=_KM_ITERS, return_centroids=True, train_vecs=train
     )
-    # r14 (guide §2.4): the assignment carries the vector (it rides the
-    # argmin struct), so the inverted file is a projection of the
-    # assignment — the old corpus re-join (one more scan + exchange of
-    # every embedding) is gone.
-    cells = assigned.select(
-        "vec_id", "embedding", F.col("cluster_id").alias("cell")
+    # the assignment carries the vector (it rides the argmin struct), so
+    # the inverted file is a projection of the assignment: no corpus
+    # re-join (one more scan + exchange of every embedding).
+    c = assigned.select(
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("cv"),
+        F.col("cluster_id").alias("cell"),
     )
-    pw = Window.partitionBy("query_id").orderBy(
-        sqdist(F.col("qv"), F.col("cv")), F.col("cid")
+    # each query's _KM_NPROBE nearest cells, ranked per query vector
+    pw = Window.partitionBy("vec_id").orderBy(
+        sqdist(F.col("embedding"), F.col("cv")), F.col("cid")
     )
     probe = (
         e.filter(F.col("vec_id") < _N_QUERIES)
-        .select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv"))
         .crossJoin(F.broadcast(cents))
         .withColumn("rn", F.row_number().over(pw))
         .filter(F.col("rn") <= _KM_NPROBE)
-        .select("query_id", "qv", F.col("cid").alias("cell"))
-    )
-    c = cells.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("cv"), "cell"
+        .select(
+            F.col("vec_id").alias("query_id"),
+            F.col("embedding").alias("qv"),
+            F.col("cid").alias("cell"),
+        )
     )
     scored = (
         c.join(F.broadcast(probe), "cell")
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .select("query_id", "neighbor_id", dot(F.col("qv"), F.col("cv")).alias("score"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("neighbor_id"))
-    topk = (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= _K)
-        .select("query_id", "neighbor_id")
-    )
-    brute = ann_brute_topk(spark, sf_dir).select("query_id", "neighbor_id")
-    hits = topk.join(F.broadcast(brute), ["query_id", "neighbor_id"]).agg(
-        F.count("*").alias("n_hits")
-    )
-    tot = brute.agg(F.count("*").alias("n_true"))
-    return hits.crossJoin(F.broadcast(tot)).select(
-        F.lit("ivf_trained").alias("method"),
-        F.col("n_hits").cast("bigint").alias("n_hits"),
-        F.col("n_true").cast("bigint").alias("n_true"),
-        # try_divide: an empty corpus has n_true=0, and ANSI division
-        # would kill the whole job where the oracle (DuckDB x/0) and a
-        # production pipeline both expect NULL recall for "nothing to
-        # search".
-        F.round(
-            F.try_divide(F.col("n_hits").cast("double"), F.col("n_true")), 6
-        ).alias("recall"),
-    )
+    topk = rank_topk(scored, _K).select("query_id", "neighbor_id")
+    brute = _ann_brute_kernel(e).select("query_id", "neighbor_id")
+    return _recall(topk, brute).select(F.lit("ivf_trained").alias("method"), "*")
 
 
 # --------------------------------------------------------------------------
@@ -1333,11 +1276,7 @@ def cosine_pair_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.determinism import BUCKET_CLAMP, clamped_floor, hash_bucket
     from ..functions.vectors import dot
 
-    e = _E(spark, sf_dir).filter(
-        # a NULL vector is not searchable/pairable (oracle twin:
-        # _nonnull_vec_oracle)
-        F.col("embedding").isNotNull()
-    ).select(
+    e = _valid_vecs(spark, sf_dir).select(
         "vec_id", "embedding", hash_bucket(F.col("vec_id"), _CPH_BUCKETS, "cph").alias("bkt")
     )
     a = e.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("va"), "bkt")
@@ -1364,36 +1303,22 @@ _TRUNC_DIMS = (8, 16, 32)
 
 
 def _trunc_oracle() -> str:
-    per_dim = []
-    for d in _TRUNC_DIMS:
-        per_dim.append(
-            f"""SELECT {d} AS dim, query_id, neighbor_id FROM (
-  SELECT q.query_id, c.neighbor_id,
-    row_number() OVER (PARTITION BY q.query_id
-      ORDER BY {cosine_sql('list_slice(q.qv, 1, ' + str(d) + ')', 'list_slice(c.cv, 1, ' + str(d) + ')')} DESC,
-               c.neighbor_id) AS rn
-  FROM c CROSS JOIN q WHERE c.neighbor_id != q.query_id)
-WHERE rn <= {_K}"""
-        )
-    union = "\nUNION ALL\n".join(per_dim)
+    def head(v: str, d: int) -> str:
+        return f"list_slice({v}, 1, {d})"
+
+    passes = ",\n".join(
+        _brute_sql(f"trunc{d}", score=cosine_sql(head("q.qv", d), head("c.cv", d)))
+        for d in _TRUNC_DIMS
+    )
+    union = "\n  UNION ALL\n".join(
+        f"  SELECT {d} AS dim, query_id, neighbor_id FROM trunc{d}" for d in _TRUNC_DIMS
+    )
     return f"""
-WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < {_N_QUERIES}),
-c AS (SELECT vec_id AS neighbor_id, embedding AS cv FROM embeddings),
-full_rank AS (
-  SELECT q.query_id, c.neighbor_id,
-    row_number() OVER (PARTITION BY q.query_id
-      ORDER BY {dot_sql('q.qv', 'c.cv')} DESC, c.neighbor_id) AS rn
-  FROM c CROSS JOIN q WHERE c.neighbor_id != q.query_id),
-truth AS (SELECT query_id, neighbor_id FROM full_rank WHERE rn <= {_K}),
-trunc AS ({union})
-SELECT t.dim,
-  CAST(COUNT(x.neighbor_id) AS BIGINT) AS n_hits,
-  CAST((SELECT COUNT(*) FROM truth) AS BIGINT) AS n_true,
-  round(CAST(COUNT(x.neighbor_id) AS DOUBLE)
-        / (SELECT COUNT(*) FROM truth), 6) AS recall
-FROM trunc t
-LEFT JOIN truth x ON t.query_id = x.query_id AND t.neighbor_id = x.neighbor_id
-GROUP BY t.dim
+WITH {_brute_sql('truth')},
+{passes},
+trunc AS (
+{union})
+{_recall_sql('trunc', 'truth', 'dim')}
 """
 
 
@@ -1412,54 +1337,28 @@ def ann_dim_truncation_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     a broadcast join on (query, neighbor)."""
     from ..functions.vectors import cosine, dot
 
-    e = _E(spark, sf_dir).filter(
-        # a NULL vector is not searchable/pairable (oracle twin:
-        # _nonnull_vec_oracle)
-        F.col("embedding").isNotNull()
-    )
+    e = _valid_vecs(spark, sf_dir)
     q = e.filter(F.col("vec_id") < _N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
     )
     c = e.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("cv"))
-    from pyspark.sql import Window
-
     # base feeds the truth pass plus one pass per truncation dim
     base = pin(
         c.crossJoin(F.broadcast(q)).filter(F.col("neighbor_id") != F.col("query_id"))
     )
-    w = lambda s: Window.partitionBy("query_id").orderBy(F.col(s).desc(), "neighbor_id")  # noqa: E731
-    truth = (
-        base.select("query_id", "neighbor_id", dot(F.col("qv"), F.col("cv")).alias("s"))
-        .withColumn("rn", F.row_number().over(w("s")))
-        .filter(F.col("rn") <= _K)
-        .select("query_id", "neighbor_id")
-    )
+
+    def topk(score) -> DataFrame:
+        scored = base.select("query_id", "neighbor_id", score.alias("score"))
+        return rank_topk(scored, _K).select("query_id", "neighbor_id")
+
+    truth = topk(dot(F.col("qv"), F.col("cv")))
     out = None
     for d in _TRUNC_DIMS:
-        sc = cosine(F.slice("qv", 1, d), F.slice("cv", 1, d))
-        tr = (
-            base.select("query_id", "neighbor_id", sc.alias("s"))
-            .withColumn("rn", F.row_number().over(w("s")))
-            .filter(F.col("rn") <= _K)
-            .select(F.lit(d).alias("dim"), "query_id", "neighbor_id")
+        tr = topk(cosine(F.slice("qv", 1, d), F.slice("cv", 1, d))).select(
+            F.lit(d).alias("dim"), "query_id", "neighbor_id"
         )
         out = tr if out is None else out.unionByName(tr)
-    tot = truth.agg(F.count("*").cast("bigint").alias("n_true"))
-    hits = (
-        out.join(
-            F.broadcast(truth.withColumn("__hit", F.lit(1))),
-            ["query_id", "neighbor_id"],
-            "left",
-        )
-        .groupBy("dim")
-        .agg(F.sum(F.coalesce(F.col("__hit"), F.lit(0))).cast("bigint").alias("n_hits"))
-    )
-    return hits.crossJoin(F.broadcast(tot)).select(
-        "dim",
-        "n_hits",
-        "n_true",
-        F.round(F.col("n_hits").cast("double") / F.col("n_true"), 6).alias("recall"),
-    )
+    return _recall(out, truth, "dim")
 
 
 # --------------------------------------------------------------------------

@@ -248,3 +248,26 @@ def test_fixed_sum_cross_engine_parity(spark):
             s = sdf.repartition(n).select(fixed_sum(F.col("v"), scale).alias("s"))
             assert s.collect()[0].s == duck == want, (scale, n)
     con.close()
+
+
+def test_fixed_sum_overflow_raises_on_both_engines(spark):
+    """A sum whose terms fit BIGINT but whose total does not (two rows of
+    5e9: 5e18 units each, 1e19 together) is rejected by both engines:
+    Spark's ANSI ``sum`` raises, and DuckDB's HUGEINT sum raises when
+    ``fixed_unscale_sql`` casts it back to BIGINT."""
+    import duckdb
+    import pytest
+
+    from syntheticdata_pipeline__spark.functions.determinism import fixed_sum, fixed_sum_sql
+
+    vals = [(5e9,), (5e9,)]
+    sdf = spark.createDataFrame(vals, "v double")
+    for n in (1, 2):
+        with pytest.raises(Exception, match="ARITHMETIC_OVERFLOW"):
+            sdf.repartition(n).select(fixed_sum(F.col("v")).alias("s")).collect()
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (v DOUBLE)")
+    con.executemany("INSERT INTO t VALUES (?)", vals)
+    with pytest.raises(duckdb.Error, match="out of range"):
+        con.execute(f"SELECT {fixed_sum_sql('v')} FROM t").fetchone()
+    con.close()

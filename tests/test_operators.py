@@ -276,3 +276,58 @@ def test_minhash_mins_agg_matches_hof(spark):
         j = old.join(new, "id", "full")
         assert j.count() == d.count()  # explode_outer keeps every id
         assert j.filter(~F.col("sig_old").eqNullSafe(F.col("sig_new"))).count() == 0
+
+
+def test_rank_topk_matches_sql_twin(spark):
+    """similarity.rank_topk and rank_topk_sql keep the same rows with the
+    same INT rank: tied scores go to the lower neighbor id, and a NULL
+    score ranks after every number in both engines."""
+    import duckdb
+
+    from syntheticdata_pipeline__spark.operators.similarity import rank_topk, rank_topk_sql
+
+    rows = [
+        (1, 5, 0.9), (1, 3, 0.9), (1, 4, 0.9), (1, 2, 0.5), (1, 6, None), (1, 7, 0.1),
+        (2, 1, None), (2, 3, 0.2),
+    ]  # fmt: skip
+    sdf = spark.createDataFrame(rows, "query_id long, neighbor_id long, score double")
+    con = duckdb.connect()
+    con.execute("CREATE TABLE scored (query_id BIGINT, neighbor_id BIGINT, score DOUBLE)")
+    con.executemany("INSERT INTO scored VALUES (?, ?, ?)", rows)
+    want = {
+        3: [(1, 3, 0.9, 1), (1, 4, 0.9, 2), (1, 5, 0.9, 3), (2, 3, 0.2, 1), (2, 1, None, 2)],
+        6: [
+            (1, 3, 0.9, 1), (1, 4, 0.9, 2), (1, 5, 0.9, 3), (1, 2, 0.5, 4), (1, 7, 0.1, 5),
+            (1, 6, None, 6), (2, 3, 0.2, 1), (2, 1, None, 2),
+        ],
+    }  # fmt: skip
+    for k, rows_k in want.items():
+        got = rank_topk(sdf, k)
+        assert dict(got.dtypes)["rank"] == "int"
+        duck = con.execute(rank_topk_sql("scored", k) + " ORDER BY query_id, rank").fetchall()
+        assert [tuple(r) for r in got.orderBy("query_id", "rank").collect()] == rows_k
+        assert duck == rows_k, k
+    con.close()
+
+
+def test_probe_buckets_matches_sql_twin(spark):
+    """similarity.probe_buckets and probe_buckets_sql list the same
+    bucket and Hamming-1 neighbors, in the same order."""
+    import duckdb
+
+    from syntheticdata_pipeline__spark.operators.similarity import (
+        probe_buckets,
+        probe_buckets_sql,
+    )
+
+    ids = spark.range(16).select(F.col("id").cast("int").alias("b"))
+    got = [r.p for r in ids.orderBy("b").select(probe_buckets(F.col("b"), 4).alias("p")).collect()]
+    con = duckdb.connect()
+    duck = [
+        r[0]
+        for r in con.execute(
+            f"SELECT {probe_buckets_sql('b', 4)} FROM range(16) t(b) ORDER BY b"
+        ).fetchall()
+    ]
+    con.close()
+    assert got == duck == [[b] + [b ^ (1 << h) for h in range(4)] for b in range(16)]

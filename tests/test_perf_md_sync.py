@@ -23,3 +23,19 @@ def test_perf_md_matches_bench_artifact():
         "PERF.md bench section is out of sync with BENCH_local.json — "
         "run: python tools/gen_perf_md.py --write"
     )
+
+
+def test_render_fails_on_malformed_anchors(tmp_path, monkeypatch):
+    """A malformed ``anchors_v2`` block in the baseline raises instead of
+    rendering every query as unanchored."""
+    import json
+
+    import pytest
+
+    from tools import gen_perf_md
+
+    bad = tmp_path / "bench_baseline.json"
+    bad.write_text(json.dumps({"anchors_v2": {"sf": "0.1"}}))
+    monkeypatch.setattr(gen_perf_md, "BASELINE", str(bad))
+    with pytest.raises(KeyError):
+        gen_perf_md.render()

@@ -39,6 +39,11 @@ Contracts:
     sum and DuckDB's truncating BIGINT cast are spelled only in the
     ``fixed_*`` helpers of ``functions/determinism.py`` (a source-text
     check over the whole package).
+11. One ANN top-k: the per-query rank window (partitioned by
+    ``query_id``) and the Hamming-1 probe XOR are spelled only in
+    ``similarity.rank_topk``/``rank_topk_sql`` and
+    ``similarity.probe_buckets``/``probe_buckets_sql`` (a source-text
+    check over the whole package).
 """
 
 from __future__ import annotations
@@ -476,6 +481,21 @@ _FIXED_POINT_HELPERS = {
 }
 
 
+# A window partitioned by query_id (the per-query top-k rank) in either
+# engine, and a bucket XOR with a shifted plane bit (the multi-probe
+# list). neardup's SimHash popcount XORs two hashes, not a plane bit.
+_ANN_HELPERS = {
+    r"PARTITION BY (?:\w+\.)?query_id\b|partitionBy\(\s*[\"']query_id\b": {
+        ("operators/similarity.py", "rank_topk"),
+        ("operators/similarity.py", "rank_topk_sql"),
+    },
+    r"(?:\bxor|bitwiseXOR)\([^)]*\b1\s*<<": {
+        ("operators/similarity.py", "probe_buckets"),
+        ("operators/similarity.py", "probe_buckets_sql"),
+    },
+}
+
+
 def _source_sites(patterns, base=_PKG, dirs=(".",)) -> dict[str, set[tuple[str, str]]]:
     """Where each regex matches a source line under ``dirs`` of ``base``:
     the (file relative to ``base``, name) of the innermost enclosing
@@ -527,6 +547,14 @@ def test_fixed_point_sum_has_one_home():
     ``determinism.fixed_sum``/``fixed_sum_sql`` (or their term and
     unscale halves): no query spells the scale or the truncating cast."""
     assert _source_sites(_FIXED_POINT_HELPERS) == _FIXED_POINT_HELPERS
+
+
+def test_ann_topk_has_one_home():
+    """Every ANN top-k ends in ``similarity.rank_topk``/``rank_topk_sql``
+    and every multi-probe list comes from ``similarity.probe_buckets``/
+    ``probe_buckets_sql``: no query spells the rank window or the probe
+    XOR."""
+    assert _source_sites(_ANN_HELPERS) == _ANN_HELPERS
 
 
 def test_fixtures_have_one_builder():

@@ -34,11 +34,10 @@ END = "<!-- BENCH_AUTO:END -->"
 def render() -> str:
     with open(BENCH) as f:
         b = json.load(f)
-    try:
-        with open(BASELINE) as f:
-            anchors = json.load(f)["anchors_v2"]["queries"]
-    except Exception:
-        anchors = {}
+    # the baseline is committed: a missing or malformed anchors_v2 block
+    # is an error, not a PERF.md with every query unanchored
+    with open(BASELINE) as f:
+        anchors = json.load(f)["anchors_v2"]["queries"]
 
     q = b["queries"]
     vs = b.get("vs_baseline", {})
